@@ -1,6 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
@@ -62,6 +64,51 @@ object Sinks {
     /** Jar-gated: requires spark-cassandra-connector on the classpath. */
     def writer(df: DataFrame) =
       df.write.format("org.apache.spark.sql.cassandra").options(options).mode("append")
+  }
+
+  /** The FileSystem that owns `path`, resolved by Hadoop's own path parser
+    * (`new java.net.URI(path)` rejects legal local paths, e.g. one with a
+    * space).
+    */
+  private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Run one job's independent sink writes concurrently and return their
+    * results in the order given. Each write is `tablePath -> write`.
+    *
+    * A sink write is a handful of small Spark jobs separated by driver work
+    * (planning, commit, renames); run one after another, the executors sit
+    * idle between them. Run side by side, their jobs share the cores.
+    *
+    * - The pool is created per call, one thread per write, so every thread
+    *   inherits the caller's Spark local properties (job group, SQL
+    *   execution root inside `foreachBatch`, scheduler pool) and active
+    *   session; it is shut down before the call returns.
+    * - The call waits for every write, so no table is still being written
+    *   when it returns. If any failed, the first failure in the given
+    *   order is rethrown with the others attached as suppressed. If the
+    *   caller is interrupted while waiting (a stopped streaming query),
+    *   the writes are interrupted too.
+    * - Table paths must be distinct: each table keeps [[swapIn]]'s single
+    *   writer.
+    */
+  def fanOut[T](writes: Seq[(String, () => T)]): Seq[T] = {
+    val paths = writes.map(_._1)
+    require(paths.distinct.size == paths.size,
+      s"fanOut: each table needs a single writer, got ${paths.mkString(", ")}")
+    val pool = Executors.newFixedThreadPool(math.max(1, writes.size))
+    try {
+      val futures = writes.map { case (_, write) =>
+        pool.submit(new Callable[T] { def call(): T = write() })
+      }
+      val outcomes = futures.map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      outcomes.collect { case Left(e) => e } match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => outcomes.collect { case Right(v) => v }
+      }
+    } finally pool.shutdownNow()
   }
 
   /** Keyed idempotent write: last-writer-wins per key, deterministically. */
@@ -135,8 +182,7 @@ object Sinks {
       df: DataFrame, root: String, dirName: String,
       partitionBy: Seq[String] = Nil): Boolean = {
     val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, root)
     val rootP = new org.apache.hadoop.fs.Path(root)
     val target = new org.apache.hadoop.fs.Path(rootP, dirName)
     if (fs.exists(target)) return false
@@ -252,8 +298,7 @@ object Sinks {
   def resolveTablePath(
       spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     if (fs.exists(new org.apache.hadoop.fs.Path(path))) path else path + OldSuffix
   }
 
@@ -271,8 +316,7 @@ object Sinks {
       path: String,
       key: Seq[String],
       sums: Seq[String]): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
@@ -294,12 +338,14 @@ object Sinks {
     * micro-batch. Fine for small keyed doc stores (the ES-upsert model);
     * for growing tables use [[upsertBatchPartitioned]], which touches only
     * the partitions present in the batch.
+    *
+    * Returns the table's row count after the merge, observed in the write
+    * job itself (no re-read).
     */
-  def upsertBatch(batch: DataFrame, key: Seq[String], path: String, version: Long): Unit = {
+  def upsertBatch(batch: DataFrame, key: Seq[String], path: String, version: Long): Long = {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
@@ -307,9 +353,12 @@ object Sinks {
       if (fs.exists(target))
         spark.read.parquet(path).unionByName(withVer, allowMissingColumns = true)
       else withVer
+    val written = Observation()
     Cleaning.dedupByKey(merged, key, Seq(col("__ver").desc))
+      .observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(tmp.toString)
     swapIn(fs, tmp, target)
+    written.get("rows").asInstanceOf[Long]
   }
 
   /** Partition-scoped keyed upsert: merges the micro-batch into ONLY the
@@ -331,8 +380,7 @@ object Sinks {
       version: Long): Unit = {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(target)) {
       withVer.write.partitionBy(partitionCol).parquet(path)
@@ -405,8 +453,7 @@ object Sinks {
       targetRecordsPerFile: Long = 1000000L,
       sortWithin: Seq[String] = Nil): Unit = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val dirName = s"$partitionCol=$partitionValue"
     val live = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), dirName)
     val trash = new org.apache.hadoop.fs.Path(path + OldSuffix, dirName)
@@ -441,8 +488,7 @@ object Sinks {
   def recoverPartitions(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(spark, path)
     val trashRoot = new org.apache.hadoop.fs.Path(path + OldSuffix)
     if (fs.exists(trashRoot)) {
       fs.listStatus(trashRoot).foreach { st =>

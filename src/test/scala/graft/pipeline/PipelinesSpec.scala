@@ -39,11 +39,21 @@ class PipelinesSpec extends SparkSpec {
     assert(tiers.columns.contains("report_date"))
   }
 
+  private val aggTables = Seq(
+    "type_stats", "region_stats", "category_percentiles", "temporal_stats", "tier_distribution")
+
+  /** What [[BatchPipeline.Result]] must report: a re-read of every table. */
+  private def reread(out: String): BatchPipeline.Result =
+    BatchPipeline.Result(spark.read.parquet(s"$out/detail").count(),
+      aggTables.map(t => t -> spark.read.parquet(s"$out/$t").count()).toMap)
+
   test("daily batch runs ACCUMULATE: day N+1 upserts, never wipes day N") {
     val lake = tmpDir() + "/lake"
     val out = tmpDir() + "/out"
     mkLake(lake)
-    BatchPipeline.run(spark, lake, out, "2024-01-01")
+    val r1 = BatchPipeline.run(spark, lake, out, "2024-01-01")
+    // the counts come from the write jobs, and must equal the tables
+    assert(r1 == reread(out))
     val day1Detail = spark.read.parquet(s"$out/detail").count()
     val day1Types = spark.read.parquet(s"$out/type_stats")
       .select("event_type_clean").as[String].collect().toSet
@@ -59,6 +69,51 @@ class PipelinesSpec extends SparkSpec {
     // re-running a date is idempotent (same version wins per key)
     val r2again = BatchPipeline.run(spark, lake, out, "2024-01-02")
     assert(r2again.detailRows == r2.detailRows)
+    assert(r2 == r2again && r2again == reread(out))
+  }
+
+  test("batch and stream sinks write into an output dir whose name has a space") {
+    val root = tmpDir() + "/out dir"
+    mkLake(s"$root/lake")
+    val r = BatchPipeline.run(spark, s"$root/lake", s"$root/batch", "2024-01-01")
+    assert(r == reread(s"$root/batch") && r.detailRows == 2)
+    implicit val ctx = spark.sqlContext
+    val stream = MemoryStream[String]
+    val query = StreamPipeline.startFanOut(
+      StreamPipeline.decode(stream.toDF().toDF("value")), s"$root/stream", s"$root/ckpt")
+    try {
+      stream.addData(
+        """{"event_id": 1, "ts": "2024-01-01 10:01:00", "user_id": 3, "event_type": "click", "value": 42.0, "props": "{}"}""")
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(StreamPipeline.readDetail(spark, s"$root/stream").count() == 1)
+    Seq("type_stats", "category_stats").foreach(t =>
+      assert(spark.read.parquet(s"$root/stream/$t").count() == 1, t))
+  }
+
+  test("a failing batch sink fails the run; the other sinks land whole and the cache is released") {
+    val lake = tmpDir() + "/lake"
+    val clean = tmpDir() + "/clean"
+    val out = tmpDir() + "/out"
+    mkLake(lake)
+    BatchPipeline.run(spark, lake, clean, "2024-01-01")
+    // a plain file where the region_stats table should be: its upsert
+    // cannot read the "table" it merges into
+    Files.createDirectories(java.nio.file.Paths.get(out))
+    Files.writeString(java.nio.file.Paths.get(s"$out/region_stats"), "not a table")
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[Exception](BatchPipeline.run(spark, lake, out, "2024-01-01"))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("region_stats")), e.toString)
+    assert(spark.sparkContext.getPersistentRDDs.size == cached, "enriched stayed cached")
+    // every other table holds exactly one complete generation: the same
+    // rows as the clean run, and no staged or parked copy beside it
+    for (t <- "detail" +: aggTables.filterNot(_ == "region_stats")) {
+      val (got, want) = (spark.read.parquet(s"$out/$t"), spark.read.parquet(s"$clean/$t"))
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, t)
+      Seq("__tmp", Sinks.OldSuffix).foreach(sfx =>
+        assert(!Files.exists(java.nio.file.Paths.get(s"$out/$t$sfx")), s"$t$sfx left behind"))
+    }
   }
 
   test("stddev aggregate survives a single >$30M measure (no long overflow in c*c)") {

@@ -41,10 +41,51 @@ class SinksSpec extends SparkSpec {
 
   test("upsertBatch: newer batch wins per key, new keys accumulate") {
     val dir = tmpDir() + "/table"
-    Sinks.upsertBatch(Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v"), Seq("k"), dir, version = 0L)
-    Sinks.upsertBatch(Seq(("b", 20.0), ("c", 3.0)).toDF("k", "v"), Seq("k"), dir, version = 1L)
+    // the returned count is the table's size after the merge
+    assert(Sinks.upsertBatch(Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v"), Seq("k"), dir, version = 0L) == 2L)
+    assert(Sinks.upsertBatch(Seq(("b", 20.0), ("c", 3.0)).toDF("k", "v"), Seq("k"), dir, version = 1L) == 3L)
     val out = spark.read.parquet(dir).select("k", "v").as[(String, Double)].collect().toMap
     assert(out == Map("a" -> 1.0, "b" -> 20.0, "c" -> 3.0))
+    // an empty first batch (e.g. a no-data micro-batch) still reports
+    val empty = Seq.empty[(String, Double)].toDF("k", "v")
+    assert(Sinks.upsertBatch(empty, Seq("k"), tmpDir() + "/empty", version = 0L) == 0L)
+  }
+
+  test("fanOut runs the writes side by side, in the caller's local properties, results in order") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty("graft.test.tag", "fan-out-caller")
+    try {
+      // each write waits until BOTH are running: a sequential runner would
+      // time out on the first
+      val bothRunning = new java.util.concurrent.CountDownLatch(2)
+      val seen = Sinks.fanOut(Seq("a", "b").map { path =>
+        path -> { () =>
+          bothRunning.countDown()
+          assert(bothRunning.await(30, java.util.concurrent.TimeUnit.SECONDS), "writes ran one by one")
+          s"$path:${sc.getLocalProperty("graft.test.tag")}"
+        }
+      })
+      assert(seen == Seq("a:fan-out-caller", "b:fan-out-caller"))
+    } finally sc.setLocalProperty("graft.test.tag", null)
+  }
+
+  test("fanOut waits for every write, then throws the first failure with the rest suppressed") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException](Sinks.fanOut(Seq(
+      "t1" -> (() => throw new IllegalStateException("t1 failed")),
+      "t2" -> { () => Thread.sleep(300); slowDone.set(true) },
+      "t3" -> (() => throw new IllegalArgumentException("t3 failed")))))
+    assert(e.getMessage == "t1 failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("t3 failed"))
+    assert(slowDone.get, "fanOut returned before every write had finished")
+  }
+
+  test("fanOut refuses two writes to one table before running any") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[IllegalArgumentException](Sinks.fanOut(Seq(
+      "x/t" -> (() => ran.incrementAndGet()), "x/t" -> (() => ran.incrementAndGet()))))
+    assert(e.getMessage.contains("single writer"))
+    assert(ran.get == 0)
   }
 
   test("upsertBatchPartitioned merges touched partitions, never rewrites the rest") {
