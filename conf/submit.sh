@@ -8,7 +8,9 @@
 #                           out=s3a://out checkpoint=s3a://ckpt
 #   ./conf/submit.sh ingest in=s3a://incoming root=s3a://corpus \
 #                           checkpoint=s3a://ckpt neardup=true \
-#                           maintainEvery=8 ivfHealth=true
+#                           maintainEvery=8 ivfHealth=true pqHealth=true
+#     (ivfHealth / pqHealth run the drift monitor over the int8 / IVF-PQ
+#      serving index on the maintenance cadence; either one implies it)
 #
 # Kafka jobs add the connector at submit time (config, not code):
 #   EXTRA_PACKAGES=org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2

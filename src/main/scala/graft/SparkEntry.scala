@@ -69,54 +69,21 @@ object SparkEntry {
     * a ~0.17 s Spark job at sf0.1 INSIDE the timed body, ~30 executions
     * per bench pass — yet the sources are immutable for the life of a
     * bench/verify JVM (testdata is read-only by contract). The memo is
-    * guarded by a filesystem signature (every file's path+size+mtime
-    * under the source path), so a soak/spec that regenerates its corpus
-    * in place invalidates mechanically instead of being served a stale
-    * fingerprint; a changed SF is a different path, i.e. a different key.
+    * guarded by the source's [[Tables.sourceSignature]], so a soak/spec
+    * that regenerates its corpus in place invalidates mechanically instead
+    * of being served a stale fingerprint, and a source the signature
+    * cannot see is recomputed every time; a changed SF is a different
+    * path, i.e. a different key.
     */
   private val sourceFpMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.Row)]()
 
-  /** Filesystem signature of a source path: SHA-256 over the sorted
-    * `path:size:mtime;` listing (r18, was 32-bit `String.hashCode` — a
-    * birthday-collision or a crafted listing could silently alias two
-    * states; the digest makes aliasing cryptographically impossible while
-    * the listing itself stays the cheap part). The mtime-granularity
-    * assumption stands and is documented: an in-place regeneration that
-    * preserves every file's byte length AND millisecond mtime (e.g. a
-    * timestamp-preserving restore of different bytes) is indistinguishable
-    * by design — the memo trades that window for not re-reading gigabytes
-    * per stamp check; a caller that needs content-level certainty clears
-    * the JVM (the memo is per-process) or touches the files.
-    */
-  private def fsSignature(path: String): String = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return "absent"
-    val sb = new StringBuilder
-    val stream = java.nio.file.Files.walk(root)
-    try {
-      stream.sorted(java.util.Comparator.comparing[java.nio.file.Path, String](_.toString))
-        .forEach { p =>
-          val f = p.toFile
-          if (f.isFile) {
-            sb.append(p.toString).append(':')
-              .append(f.length).append(':').append(f.lastModified).append(';')
-          }
-        }
-    } finally stream.close()
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    digest.map(b => f"$b%02x").mkString
-  }
-
   private def memoSourceFp(key: String, file: String)(
       compute: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {
-    val sig = fsSignature(file)
-    val hit = sourceFpMemo.get(key)
-    if (hit != null && hit._1 == sig) hit._2
-    else {
+    val sig = Tables.sourceSignature(file)
+    Option(sourceFpMemo.get(key)).filter(h => sig.contains(h._1)).map(_._2).getOrElse {
       val r = compute
-      sourceFpMemo.put(key, (sig, r))
+      sig.foreach(s => sourceFpMemo.put(key, (s, r)))
       r
     }
   }
@@ -1573,8 +1540,7 @@ object SparkEntry {
         // the root carries the manifest high-water mark, so a stale fixture
         // must be wiped, not overwritten — a leftover manifest would gate
         // the rebuild's batches out as "already applied"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(fixture), s.sparkContext.hadoopConfiguration)
+        val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
         fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
@@ -1609,8 +1575,7 @@ object SparkEntry {
       val stamp =
         s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}|ingest-compact-v1"
       if (!fixtureReady(fixture, stamp)) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(fixture), s.sparkContext.hadoopConfiguration)
+        val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
         fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
@@ -2203,8 +2168,7 @@ object SparkEntry {
       // pathology the stamp claims, so both bench passes and later
       // sessions all pay the real small-file work.
       val scratch = scopedFixture(dir, "frag_lake_scratch")
-      val fsys = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(scratch), s.sparkContext.hadoopConfiguration)
+      val fsys = graft.functions.IndexProtocol.fileSystem(s, scratch)
       fsys.delete(new org.apache.hadoop.fs.Path(scratch), true)
       org.apache.hadoop.fs.FileUtil.copy(
         fsys, new org.apache.hadoop.fs.Path(s"$fixture/event_date=2024-01-16"),

@@ -27,8 +27,7 @@ object StressGen {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.functions.IndexProtocol.fileSystem(spark, outDir)
     val reps = spark.range(copies).select(F.col("id").as("__rep"))
     // PER-OUTPUT existence checks: a single guard on documents.parquet let
     // a run killed between the two writes permanently skip regenerating the
@@ -638,7 +637,8 @@ object StressGen {
       lake.unpersist()
       time("  maintenance round (lake fold + index fold + IVF health)") {
         val report = pipeline.IngestPipeline.maintain(spark, paths,
-          Some(pipeline.IngestPipeline.IvfHealthConfig(nProbe = 2)))
+          Seq(pipeline.IngestPipeline.HealthConfig(
+            pipeline.IngestPipeline.IvfFamily.Int8, nProbe = 2)))
         val lakeDirs = fs.listStatus(new org.apache.hadoop.fs.Path(paths.docLake))
           .count(_.getPath.getName.startsWith("__ver="))
         val afterFold = spark.read.parquet(paths.docLake).count()

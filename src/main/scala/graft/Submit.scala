@@ -77,20 +77,17 @@ object Submit {
       val nearDup =
         if (boolOpt(opt, "neardup")) Some(IngestPipeline.NearDupConfig())
         else None
-      // ivfHealth runs on the maintenance cadence, so asking for it implies
-      // maintenance: construct the config when EITHER option is present —
-      // `ivfHealth=true` without `maintainEvery` used to be silently ignored
-      // (the operator believed the monitor was running; review finding)
-      val ivfHealth =
-        if (boolOpt(opt, "ivfHealth"))
-          Some(IngestPipeline.IvfHealthConfig())
-        else None
-      // the PQ serving index's monitor follows the same implied-maintenance
-      // contract as the int8 one
-      val pqHealth =
-        if (boolOpt(opt, "pqHealth"))
-          Some(IngestPipeline.PqHealthConfig())
-        else None
+      // a drift monitor runs on the maintenance cadence, so asking for one
+      // implies maintenance: construct the config when EITHER option is
+      // present — `ivfHealth=true` without `maintainEvery` used to be
+      // silently ignored (the operator believed the monitor was running;
+      // review finding). `ivfHealth=true` watches the int8 index,
+      // `pqHealth=true` the IVF-PQ one.
+      val health = Seq(
+        "ivfHealth" -> IngestPipeline.IvfFamily.Int8,
+        "pqHealth" -> IngestPipeline.IvfFamily.IvfPq).collect {
+        case (key, family) if boolOpt(opt, key) => IngestPipeline.HealthConfig(family)
+      }
       // the span scrub's hot list refreshes ONLY inside maintenance, so
       // asking for the scrub implies maintenance too — without it the
       // stage would arm but never fire (the ivfHealth failure mode again)
@@ -98,13 +95,11 @@ object Submit {
         if (boolOpt(opt, "spanscrub")) Some(IngestPipeline.SpanScrubConfig())
         else None
       val maintenance =
-        if (opt.contains("maintainEvery") || ivfHealth.isDefined ||
-            pqHealth.isDefined || spanScrub.isDefined)
+        if (opt.contains("maintainEvery") || health.nonEmpty || spanScrub.isDefined)
           Some(IngestPipeline.MaintenanceConfig(
             everyNBatches = opt.get("maintainEvery").map(_.toInt)
               .getOrElse(IngestPipeline.MaintenanceConfig().everyNBatches),
-            ivfHealth = ivfHealth,
-            pqHealth = pqHealth))
+            health = health))
         else None
       val decontam =
         if (boolOpt(opt, "decontam")) Some(IngestPipeline.DecontamConfig())

@@ -888,8 +888,7 @@ object Dedup {
       bpMod: Option[Int] = None,
       fpCol: Option[String] = None): Unit = {
     val spark = history.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     val fpExpr = fpCol.map(col).getOrElse(Text.fingerprintBinary(col(textCol)))
     val rows = history.select(col(idCol), fpExpr.as("fp"))
@@ -1051,8 +1050,7 @@ object Dedup {
       generation: Long = 0L,
       bpMod: Option[Int] = None): Unit = {
     val spark = history.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     // band rows per doc = nBands, so the modulus derives from docs × nBands
     // (or the install's explicit growth sizing) — see the layout note above
@@ -1350,8 +1348,7 @@ object Dedup {
 
   private def evalGenSignature(
       spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, path)
     fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .filter(_.getPath.getName.startsWith("batch="))
       .map(st => s"${st.getPath.getName}@${st.getModificationTime}")
@@ -1629,8 +1626,7 @@ object Dedup {
       minCount: Long = 3L,
       generation: Long = 0L): Unit = {
     val spark = history.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(path))
     writeSpanLayout(spark, path, k, minCount)

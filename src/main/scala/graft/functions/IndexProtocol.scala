@@ -45,8 +45,12 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object IndexProtocol {
 
+  /** The FileSystem that owns `path` — the one lookup the engine uses.
+    * Resolved by Hadoop's own path parser: `new java.net.URI(path)` rejects
+    * legal local paths, e.g. one with a space.
+    */
   def fileSystem(spark: SparkSession, path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ------------------------------------------------------------- layout
 

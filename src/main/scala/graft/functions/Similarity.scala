@@ -381,8 +381,7 @@ object Similarity {
       targetRecordsPerFile: Long = 1000000L,
       minFilesToCompact: Int = 2): Unit = {
     val lists = s"$path/lists"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(lists), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, lists)
     val listsP = new org.apache.hadoop.fs.Path(lists)
     if (!fs.exists(listsP)) return
     graft.sinks.Sinks.recoverPartitions(spark, lists)

@@ -29,8 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * This is the attribution-window / sensor-enrichment shape of a
   * training-data pipeline (label every impression with the conversions in
-  * the following hour), and the batch sibling of
-  * [[graft.streaming.StreamJoins.joinWithinBand]].
+  * the following hour).
   */
 object RangeJoin {
 

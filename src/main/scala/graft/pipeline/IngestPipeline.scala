@@ -285,49 +285,101 @@ object IngestPipeline {
     * O(10) while paying the fold ~12% of cycles. Runs inside foreachBatch
     * (serial, single-writer — the lock-free protocols' standing
     * assumption) and is crash-safe mid-fold: the lake fold is intent-
-    * logged, the index folds are swap-in + startup recovery.
+    * logged, the index folds are swap-in + startup recovery. `health`
+    * lists the drift monitors ([[HealthConfig]]) each round runs.
     */
   final case class MaintenanceConfig(
       everyNBatches: Int = 8,
-      ivfHealth: Option[IvfHealthConfig] = None,
-      pqHealth: Option[PqHealthConfig] = None) {
+      health: Seq[HealthConfig] = Nil) {
     // a zero cadence would divide-by-zero inside foreachBatch and kill the
     // stream on its first committed batch; fail at construction instead
     require(everyNBatches > 0, s"everyNBatches must be positive, got $everyNBatches")
   }
 
-  /** Drift monitor thresholds for the served IVF index, run on the
-    * maintenance cadence. Two trips, matching q79's gates:
+  /** The two IVF-family serving indexes the drift monitor watches: int8
+    * lists (q67) and 16-byte PQ codes (q92). Both serve from frozen coarse
+    * centroids over the same `cell_id=` list layout and both rebuild from
+    * the float-embedding lake, so the monitor is one computation
+    * ([[checkIndexHealth]]); a family supplies only what differs — where
+    * its index lives, its readable check, its sampled recall re-gate, its
+    * rebuild, and its default recall floor.
+    */
+  sealed abstract class IvfFamily(val name: String, val defaultMinRecallPct: Int) {
+    def path(paths: IngestPaths): String
+    def readable(spark: SparkSession, path: String): Boolean
+    def recall(spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame
+    def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit
+  }
+
+  object IvfFamily {
+
+    /** Recall is the pruned serve against the exhaustive int8 ranking. */
+    case object Int8 extends IvfFamily("IVF", 60) {
+      def path(paths: IngestPaths): String = paths.ivfIndex
+      def readable(spark: SparkSession, path: String): Boolean =
+        Similarity.ivfIndexReadable(spark, path)
+      def recall(
+          spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame =
+        Similarity.ivfIndexRecall(spark, path, probe, nProbe, k)
+      def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit =
+        Similarity.migrateIvfIndex(spark, path, corpus, nCells, iters = 5)
+    }
+
+    /** Recall is the pruned serve against exhaustive ADC over the same
+      * codes, so the monitor isolates what cell pruning loses (quantization
+      * quality is fixed at install/migration time). The floor is lower than
+      * int8's: ADC recall feeds a re-ranking tier, so the serving contract
+      * is shortlist quality, not final-rank quality. The rebuild retrains
+      * BOTH models — codes cannot be re-encoded from themselves.
+      */
+    case object IvfPq extends IvfFamily("IVF-PQ", 50) {
+      def path(paths: IngestPaths): String = paths.ivfPqIndex
+      def readable(spark: SparkSession, path: String): Boolean =
+        Pq.ivfPqIndexReadable(spark, path)
+      def recall(
+          spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame =
+        Pq.ivfPqIndexRecall(spark, path, probe, nProbe, k)
+      def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit =
+        Pq.migrateIvfPqIndex(spark, path, corpus, nCells = nCells, kmIters = 5, pqIters = 3)
+    }
+  }
+
+  /** Drift monitor thresholds for one IVF family's serving index, run on
+    * the maintenance cadence. Two trips, matching q79's gates:
     *   - SKEW: `max_list × n_cells > maxSkewRatio × n_vecs` — frozen
     *     centroids under a drifting corpus concentrate appends into few
     *     cells, creeping probe cost toward O(corpus);
-    *   - RECALL: a sampled re-gate ([[Similarity.ivfIndexRecall]], the
-    *     `sampleQueries` lowest vec_ids of the float-embedding lake as the
-    *     deterministic probe set) below `minRecallPct` of k per query.
-    * Either trip triggers [[Similarity.migrateIvfIndex]] — retrain NEW
-    * centroids on the float-embedding lake (the int8 index cannot be
-    * re-quantized from itself; retaining the floats is the price of being
-    * able to migrate at all) and swap the rebuilt index in crash-safely.
-    * `retrainK = None` keeps the serving index's current cell count.
+    *   - RECALL: a sampled re-gate (the family's recall function over the
+    *     [[HealthSampleQueries]] lowest vec_ids of the float-embedding lake
+    *     as the deterministic probe set, top-[[HealthK]]) below
+    *     `minRecallPct` of the achievable hits per query; None takes the
+    *     family's floor.
+    * Either trip triggers the family's rebuild — retrain NEW centroids
+    * (keeping the index's current cell count) on the float-embedding lake
+    * (quantized lists cannot be re-quantized from themselves; retaining the
+    * floats is the price of being able to migrate at all) and swap the
+    * rebuilt index in crash-safely.
     *
     * Cost model at 100 TB: the skew stats are an ids-only aggregate over
-    * the lists table; the recall re-gate is one pass over the (4×-smaller)
-    * int8 lists per Ο(sample) probe rows — both bounded, run every
+    * the lists table; the recall re-gate is one pass over the quantized
+    * lists per O(sample) probe rows — both bounded, run every
     * `MaintenanceConfig.everyNBatches` cycles, not per serve. The
     * migration is the one O(corpus) repair and only runs when tripped.
     */
-  final case class IvfHealthConfig(
+  final case class HealthConfig(
+      family: IvfFamily,
       nProbe: Int = 4,
-      k: Int = 10,
-      sampleQueries: Int = 8,
       maxSkewRatio: Int = 10,
-      minRecallPct: Int = 60,
-      retrainIters: Int = 5,
-      retrainK: Option[Int] = None)
+      minRecallPct: Option[Int] = None)
+
+  /** Neighbors per recall probe and probes per re-gate of [[checkIndexHealth]]. */
+  private val HealthK = 10
+  private val HealthSampleQueries = 8
 
   /** One health-check outcome: the pre-repair telemetry plus whether the
     * monitor tripped and the migration ran. */
-  final case class IvfHealthReport(
+  final case class HealthReport(
+      family: IvfFamily,
       nCells: Long,
       nVecs: Long,
       maxList: Long,
@@ -338,16 +390,16 @@ object IngestPipeline {
       migrated: Boolean)
 
   /** One maintenance round: fold committed lake partitions and index
-    * generations up to the current manifest high-water mark. Idempotent;
-    * callable from any single-writer context (the streaming loop on its
-    * [[MaintenanceConfig]] cadence, or a batch driver between ingest
-    * calls).
+    * generations up to the current manifest high-water mark, then run each
+    * configured drift monitor. Idempotent; callable from any single-writer
+    * context (the streaming loop on its [[MaintenanceConfig]] cadence, or a
+    * batch driver between ingest calls). Returns one report per monitored
+    * family that has an index and a landed corpus to check.
     */
   def maintain(
       spark: SparkSession,
       paths: IngestPaths,
-      health: Option[IvfHealthConfig] = None,
-      pqHealth: Option[PqHealthConfig] = None): Option[IvfHealthReport] = {
+      health: Seq[HealthConfig] = Nil): Seq[HealthReport] = {
     val upTo = lastApplied(spark, paths)
     if (upTo >= 0L) {
       compactCommitted(spark, paths, upTo)
@@ -356,56 +408,43 @@ object IngestPipeline {
       // span index): the scrub stage's replay-invariance argument rests on
       // the list being frozen between maintenance rounds
       Dedup.refreshHotSpanList(spark, paths.spanIndex)
-      // the PQ monitor repairs as a side effect; its report is logged by
-      // checkIvfPqHealth's callers that want it (the specs call it
-      // directly) — maintain's return stays the int8 family's report
-      pqHealth.foreach(checkIvfPqHealth(spark, paths, _))
-      health.flatMap(checkIvfHealth(spark, paths, _))
-    } else None
+      health.flatMap(checkIndexHealth(spark, paths, _))
+    } else Nil
   }
 
-  /** Run the drift monitor over the served IVF index and, when it trips,
-    * the [[Similarity.migrateIvfIndex]] repair — closing the loop frozen
-    * centroids leave open (q70 grows the index, q79 measures the cost of
-    * freezing, this wires measurement to repair). No-op (None) when no
-    * index is installed or no float-embedding corpus has been landed.
-    * Single-writer contract as the rest of the loop: runs from the
-    * foreachBatch cadence or a batch driver, never concurrent with appends.
+  /** Run the drift monitor over one family's served index and, when it
+    * trips, the family's rebuild — closing the loop frozen centroids leave
+    * open (q70/q92 grow the indexes, q79/q93 measure the cost of freezing,
+    * this wires measurement to repair). No-op (None) when no index is
+    * installed or no float-embedding corpus has been landed. Single-writer
+    * contract as the rest of the loop: runs from the foreachBatch cadence
+    * or a batch driver, never concurrent with appends.
     */
-  def checkIvfHealth(
+  def checkIndexHealth(
       spark: SparkSession,
       paths: IngestPaths,
-      cfg: IvfHealthConfig): Option[IvfHealthReport] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.ivfIndex), spark.sparkContext.hadoopConfiguration)
+      cfg: HealthConfig): Option[HealthReport] = {
+    val family = cfg.family
+    val index = family.path(paths)
     // readable-index detection, not bare fs.exists — a build that crashed
-    // mid-cells-write must read as "no index", like the dedup indexes
-    val hasIndex = Similarity.ivfIndexReadable(spark, paths.ivfIndex)
-    // same argument for the lake: an all-rejected embedding batch's
+    // mid-cells-write must read as "no index", like the dedup indexes.
+    // Same argument for the lake: an all-rejected embedding batch's
     // appendVersioned creates the root with NO data files, and a bare
     // fs.exists would send the recall gate onto a schema-less read that
     // throws inside foreachBatch and kills the stream on every restart
     // until float rows land (review finding)
     val hasCorpus = {
+      val fs = IndexProtocol.fileSystem(spark, paths.embLake)
       val root = new org.apache.hadoop.fs.Path(paths.embLake)
-      fs.exists(root) && {
-        val it = fs.listFiles(root, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next()
-          found = f.isFile && f.getPath.getName.endsWith(".parquet")
-        }
-        found
-      }
+      fs.exists(root) && IndexProtocol.hasParquetDeep(fs, root)
     }
-    if (!hasIndex || !hasCorpus) return None
+    if (!family.readable(spark, index) || !hasCorpus) return None
 
     // skew: ids-only distinct (the at-least-once append absorber) then an
     // exact int64 aggregate — cheap relative to any serve
-    val sizes = spark.read.parquet(s"${paths.ivfIndex}/lists")
+    val residents = spark.read.parquet(s"$index/lists")
       .select(col("cell_id"), col("vec_id")).distinct()
-      .groupBy("cell_id").agg(count(lit(1)).as("n"))
-    val s = sizes.agg(
+    val s = residents.groupBy("cell_id").agg(count(lit(1)).as("n")).agg(
       count(lit(1)).as("n_cells"), sum(col("n")).as("n_vecs"),
       max(col("n")).as("max_list")).head()
     val (nCells, nVecs, maxList) = (s.getLong(0), s.getLong(1), s.getLong(2))
@@ -413,8 +452,8 @@ object IngestPipeline {
 
     // recall re-gate: deterministic sample — the lowest-id corpus vectors
     val corpus = spark.read.parquet(paths.embLake).drop("__ver")
-    val probe = corpus.orderBy("vec_id").limit(cfg.sampleQueries)
-    val r = Similarity.ivfIndexRecall(spark, paths.ivfIndex, probe, cfg.nProbe, cfg.k)
+    val probe = corpus.orderBy("vec_id").limit(HealthSampleQueries)
+    val r = family.recall(spark, index, probe, cfg.nProbe, HealthK)
       .agg(coalesce(sum(col("hits")), lit(0L)), count(lit(1))).head()
     val (hits, nq) = (r.getLong(0), r.getLong(1))
     // denominator clamped to the ACHIEVABLE hits: an index with R residents
@@ -422,148 +461,45 @@ object IngestPipeline {
     // on a flat k would make any index with R ≤ k·minRecallPct/100+1
     // residents fail forever and re-migrate on every maintenance cycle —
     // an O(corpus) rebuild loop that cannot raise the score (review finding)
-    val achievable = math.min(cfg.k.toLong, math.max(nVecs - 1, 0L))
-    val recallOk = hits * 100 >= nq * achievable * cfg.minRecallPct
+    val achievable = math.min(HealthK.toLong, math.max(nVecs - 1, 0L))
+    val floor = cfg.minRecallPct.getOrElse(family.defaultMinRecallPct)
+    val recallOk = hits * 100 >= nq * achievable * floor
 
     val tripped = !skewOk || !recallOk
-    // Migration rebuilds the index FROM THE FLOAT LAKE (int8 lists cannot be
-    // re-quantized from themselves), so it is only safe when the lake covers
-    // every resident: an index installed offline over a corpus that never
-    // flowed through this loop's embLake would be REPLACED by a rebuild
-    // containing only the loop-ingested vectors — the "repair" would drop
-    // the original corpus from serving, silently (review finding). Guard on
-    // coverage; an uncovered install gets the report (so operators see the
-    // trip) and a loud warning instead of data loss.
+    // Migration rebuilds the index FROM THE FLOAT LAKE, so it is only safe
+    // when the lake covers every resident: an index installed offline over
+    // a corpus that never flowed through this loop's embLake would be
+    // REPLACED by a rebuild containing only the loop-ingested vectors — the
+    // "repair" would drop the original corpus from serving, silently
+    // (review finding). Guard on coverage; an uncovered install gets the
+    // report (so operators see the trip) and a loud warning instead of
+    // data loss.
     val corpusCovers = tripped && {
       // MEMBERSHIP, not row counts: a lake with >= nVecs rows under the
       // wrong vec_id namespace would pass a count comparison and the
       // rebuild would still drop every resident not in the lake — the
       // anti-join asks the actual question (review finding). Cost is one
-      // ids-only join on the (already-computed) distinct resident ids.
-      val uncovered = spark.read.parquet(s"${paths.ivfIndex}/lists")
-        .select("vec_id").distinct()
+      // ids-only join on the distinct resident ids.
+      val uncovered = residents.select("vec_id").distinct()
         .join(corpus.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
         .count()
       if (uncovered > 0) {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"IVF health tripped but the embedding lake is missing $uncovered of $nVecs " +
-            s"index residents — migration SKIPPED (it would drop the uncovered vectors). " +
-            s"Backfill ${paths.embLake} with the install corpus's float vectors to enable repair.")
+          s"${family.name} health tripped but the embedding lake is missing $uncovered of " +
+            s"$nVecs index residents — migration SKIPPED (it would drop the uncovered " +
+            s"vectors). Backfill ${paths.embLake} with the install corpus's float vectors " +
+            "to enable repair.")
       }
       uncovered == 0
     }
     if (corpusCovers) {
       // the model's true cell count comes from the CELLS table, not from the
       // non-empty lists partitions: emptied cells would otherwise silently
-      // shrink k on every migration (review finding)
-      val k = cfg.retrainK.getOrElse(
-        Similarity.readIvfCentroids(spark, paths.ivfIndex).length)
-      Similarity.migrateIvfIndex(spark, paths.ivfIndex, corpus, k, cfg.retrainIters)
+      // shrink the cell count on every migration (review finding)
+      family.rebuild(spark, index, corpus,
+        nCells = Similarity.readIvfCentroids(spark, index).length)
     }
-    Some(IvfHealthReport(nCells, nVecs, maxList, skewOk, hits, nq, recallOk,
-      migrated = corpusCovers))
-  }
-
-  /** Drift monitor thresholds for the IVF-PQ serving index — the
-    * [[IvfHealthConfig]] contract for the PQ family (q93's monitor). Same
-    * two trips: list SKEW under frozen coarse centroids, and a sampled
-    * RECALL re-gate ([[Pq.ivfPqIndexRecall]] — pruned serve vs exhaustive
-    * ADC over the same codes, so the monitor isolates what cell pruning
-    * loses; quantization quality is fixed at install/migration time).
-    * Either trip triggers [[Pq.migrateIvfPqIndex]]: retrain BOTH models
-    * on the float-embedding lake (codes cannot be re-encoded from
-    * themselves — the lake is what makes repair possible, exactly as for
-    * the int8 family) and swap crash-safely. The default recall floor is
-    * lower than the int8 monitor's: ADC recall feeds a re-ranking tier,
-    * so the serving contract is shortlist quality, not final-rank
-    * quality.
-    */
-  final case class PqHealthConfig(
-      nProbe: Int = 4,
-      k: Int = 10,
-      sampleQueries: Int = 8,
-      maxSkewRatio: Int = 10,
-      minRecallPct: Int = 50,
-      retrainKmIters: Int = 5,
-      retrainPqIters: Int = 3,
-      retrainCells: Option[Int] = None)
-
-  /** One PQ health-check outcome — shape-identical to [[IvfHealthReport]]. */
-  final case class PqHealthReport(
-      nCells: Long,
-      nVecs: Long,
-      maxList: Long,
-      skewOk: Boolean,
-      hits: Long,
-      nQueries: Long,
-      recallOk: Boolean,
-      migrated: Boolean)
-
-  /** Run the drift monitor over the IVF-PQ serving index and, when it
-    * trips, the [[Pq.migrateIvfPqIndex]] repair. Mirrors [[checkIvfHealth]]
-    * guard-for-guard: readable-index + data-bearing-lake detection, the
-    * achievable-hits recall clamp, and the lake-coverage anti-join that
-    * refuses a migration which would drop residents the lake never saw.
-    */
-  def checkIvfPqHealth(
-      spark: SparkSession,
-      paths: IngestPaths,
-      cfg: PqHealthConfig): Option[PqHealthReport] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.ivfPqIndex), spark.sparkContext.hadoopConfiguration)
-    val hasIndex = Pq.ivfPqIndexReadable(spark, paths.ivfPqIndex)
-    val hasCorpus = {
-      val root = new org.apache.hadoop.fs.Path(paths.embLake)
-      fs.exists(root) && {
-        val it = fs.listFiles(root, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next()
-          found = f.isFile && f.getPath.getName.endsWith(".parquet")
-        }
-        found
-      }
-    }
-    if (!hasIndex || !hasCorpus) return None
-
-    val sizes = spark.read.parquet(s"${paths.ivfPqIndex}/lists")
-      .select(col("cell_id"), col("vec_id")).distinct()
-      .groupBy("cell_id").agg(count(lit(1)).as("n"))
-    val s = sizes.agg(
-      count(lit(1)).as("n_cells"), sum(col("n")).as("n_vecs"),
-      max(col("n")).as("max_list")).head()
-    val (nCells, nVecs, maxList) = (s.getLong(0), s.getLong(1), s.getLong(2))
-    val skewOk = maxList * nCells <= nVecs * cfg.maxSkewRatio
-
-    val corpus = spark.read.parquet(paths.embLake).drop("__ver")
-    val probe = corpus.orderBy("vec_id").limit(cfg.sampleQueries)
-    val r = Pq.ivfPqIndexRecall(spark, paths.ivfPqIndex, probe, cfg.nProbe, cfg.k)
-      .agg(coalesce(sum(col("hits")), lit(0L)), count(lit(1))).head()
-    val (hits, nq) = (r.getLong(0), r.getLong(1))
-    val achievable = math.min(cfg.k.toLong, math.max(nVecs - 1, 0L))
-    val recallOk = hits * 100 >= nq * achievable * cfg.minRecallPct
-
-    val tripped = !skewOk || !recallOk
-    val corpusCovers = tripped && {
-      val uncovered = spark.read.parquet(s"${paths.ivfPqIndex}/lists")
-        .select("vec_id").distinct()
-        .join(corpus.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-        .count()
-      if (uncovered > 0) {
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"IVF-PQ health tripped but the embedding lake is missing $uncovered of $nVecs " +
-            s"index residents — migration SKIPPED (it would drop the uncovered vectors). " +
-            s"Backfill ${paths.embLake} with the install corpus's float vectors to enable repair.")
-      }
-      uncovered == 0
-    }
-    if (corpusCovers) {
-      val k = cfg.retrainCells.getOrElse(
-        Similarity.readIvfCentroids(spark, paths.ivfPqIndex).length)
-      Pq.migrateIvfPqIndex(spark, paths.ivfPqIndex, corpus,
-        nCells = k, kmIters = cfg.retrainKmIters, pqIters = cfg.retrainPqIters)
-    }
-    Some(PqHealthReport(nCells, nVecs, maxList, skewOk, hits, nq, recallOk,
+    Some(HealthReport(family, nCells, nVecs, maxList, skewOk, hits, nq, recallOk,
       migrated = corpusCovers))
   }
 
@@ -613,9 +549,12 @@ object IngestPipeline {
     // compaction crossing the pin"). Loud, driver-side (one directory
     // listing, no job): the caller either pins >= the fold boundary (the
     // loop's own read points) or serves from a SnapshotLake generation.
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.docLake), spark.sparkContext.hadoopConfiguration)
-    val vers = fs.listStatus(new org.apache.hadoop.fs.Path(paths.docLake))
+    val fs = IndexProtocol.fileSystem(spark, paths.docLake)
+    val lake = new org.apache.hadoop.fs.Path(paths.docLake)
+    if (!fs.exists(lake)) throw new IllegalStateException(
+      s"ingest lake at ${paths.docLake} is missing, but the manifest records batch " +
+        s"$applied as committed")
+    val vers = fs.listStatus(lake)
       .map(_.getPath.getName).filter(_.startsWith("__ver="))
       .map(_.stripPrefix("__ver=").toLong)
     if (vers.nonEmpty) require(pin >= vers.min,
@@ -705,8 +644,7 @@ object IngestPipeline {
     * heal lives only on the writer path ([[recordApplied]]).
     */
   def lastApplied(spark: SparkSession, paths: IngestPaths): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.manifest), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, paths.manifest)
     val p = new org.apache.hadoop.fs.Path(paths.manifest)
     val old = new org.apache.hadoop.fs.Path(paths.manifest + "__old")
     def read(path: org.apache.hadoop.fs.Path): Option[Long] =
@@ -747,8 +685,7 @@ object IngestPipeline {
     * replaced, and [[recoverManifest]] heals the parked state.
     */
   private def recordApplied(spark: SparkSession, paths: IngestPaths, batchId: Long): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.manifest), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, paths.manifest)
     val p = new org.apache.hadoop.fs.Path(paths.manifest)
     val tmp = new org.apache.hadoop.fs.Path(paths.manifest + "__tmp")
     val old = new org.apache.hadoop.fs.Path(paths.manifest + "__old")
@@ -892,8 +829,7 @@ object IngestPipeline {
         cleaned.withColumn("__fp", Text.fingerprintBinary(col(textCol))),
         Seq("__fp"), Seq(col(idCol).asc))
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(paths.fpIndex), spark.sparkContext.hadoopConfiguration)
+    val fs = IndexProtocol.fileSystem(spark, paths.fpIndex)
     // readable-index detection, NOT bare fs.exists: a build that crashed
     // between its layout write and the first generation's atomic publish
     // leaves a layout-only directory, and probing it throws on the
@@ -1146,8 +1082,7 @@ object IngestPipeline {
   private def embLakeRef(paths: IngestPaths) = LakeRef(paths.embLake, "_compact_intent_emb")
 
   private def lakeFs(spark: SparkSession, lake: LakeRef) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(lake.lakePath), spark.sparkContext.hadoopConfiguration)
+    IndexProtocol.fileSystem(spark, lake.lakePath)
 
   private def intentPath(paths: IngestPaths, lake: LakeRef) =
     new org.apache.hadoop.fs.Path(paths.root, lake.intentName)
@@ -1378,7 +1313,7 @@ object IngestPipeline {
         // drifting the schedule.
         maintenance.foreach { m =>
           if (batchId > 0 && batchId % m.everyNBatches.toLong == 0) {
-            maintain(batch.sparkSession, paths, m.ivfHealth, m.pqHealth)
+            maintain(batch.sparkSession, paths, m.health)
           }
         }
         ()

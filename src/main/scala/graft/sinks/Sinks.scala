@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.functions.IndexProtocol
 import graft.ops.Cleaning
 
 /** Sink abstractions mirroring the reference's three sink families behind
@@ -65,13 +66,6 @@ object Sinks {
     def writer(df: DataFrame) =
       df.write.format("org.apache.spark.sql.cassandra").options(options).mode("append")
   }
-
-  /** The FileSystem that owns `path`, resolved by Hadoop's own path parser
-    * (`new java.net.URI(path)` rejects legal local paths, e.g. one with a
-    * space).
-    */
-  private def fsFor(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Run one job's independent sink writes concurrently and return their
     * results in the order given. Each write is `tablePath -> write`.
@@ -182,7 +176,7 @@ object Sinks {
       df: DataFrame, root: String, dirName: String,
       partitionBy: Seq[String] = Nil): Boolean = {
     val spark = df.sparkSession
-    val fs = fsFor(spark, root)
+    val fs = IndexProtocol.fileSystem(spark, root)
     val rootP = new org.apache.hadoop.fs.Path(root)
     val target = new org.apache.hadoop.fs.Path(rootP, dirName)
     if (fs.exists(target)) return false
@@ -298,7 +292,7 @@ object Sinks {
   def resolveTablePath(
       spark: org.apache.spark.sql.SparkSession,
       path: String): String = {
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     if (fs.exists(new org.apache.hadoop.fs.Path(path))) path else path + OldSuffix
   }
 
@@ -316,7 +310,7 @@ object Sinks {
       path: String,
       key: Seq[String],
       sums: Seq[String]): Unit = {
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
@@ -345,7 +339,7 @@ object Sinks {
   def upsertBatch(batch: DataFrame, key: Seq[String], path: String, version: Long): Long = {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
     recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
@@ -380,7 +374,7 @@ object Sinks {
       version: Long): Unit = {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     val target = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(target)) {
       withVer.write.partitionBy(partitionCol).parquet(path)
@@ -453,7 +447,7 @@ object Sinks {
       targetRecordsPerFile: Long = 1000000L,
       sortWithin: Seq[String] = Nil): Unit = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     val dirName = s"$partitionCol=$partitionValue"
     val live = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), dirName)
     val trash = new org.apache.hadoop.fs.Path(path + OldSuffix, dirName)
@@ -488,7 +482,7 @@ object Sinks {
   def recoverPartitions(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val fs = fsFor(spark, path)
+    val fs = IndexProtocol.fileSystem(spark, path)
     val trashRoot = new org.apache.hadoop.fs.Path(path + OldSuffix)
     if (fs.exists(trashRoot)) {
       fs.listStatus(trashRoot).foreach { st =>

@@ -33,7 +33,7 @@ object Tables {
     }
 
   /** JVM-local memo of each parquet source's INFERRED SCHEMA, keyed by path
-    * and guarded by a size+mtime listing signature (r18, the q19 fixed-cost
+    * and guarded by the source's [[sourceSignature]] (r18, the q19 fixed-cost
     * decomposition — verdict #6). `spark.read.parquet(path)` runs a footer
     * schema-inference Spark job on EVERY call: ~86 ms of the ~130 ms it
     * costs to merely CONSTRUCT a cheap registry query at sf0.1, paid by
@@ -50,22 +50,48 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[
       String, (String, org.apache.spark.sql.types.StructType)]()
 
-  private def sourceSig(path: String): String = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return "absent"
-    val sb = new StringBuilder
-    val stream = java.nio.file.Files.walk(root)
+  /** Source-state signature behind every JVM-local source memo (the schema
+    * memo here and [[graft.SparkEntry]]'s fixture-stamp fingerprints):
+    * SHA-256 over the sorted `path:size:mtime;` listing of every file under
+    * `path`. None when `java.nio` cannot see the path — absent, not on the
+    * local filesystem, or failing mid-walk — and a caller then computes
+    * without memoizing: an unknowable state must never serve a memo. A
+    * `file:` URI is read as the local path it names.
+    *
+    * The mtime-granularity assumption stands and is documented: an
+    * in-place regeneration that preserves every file's byte length AND
+    * millisecond mtime (e.g. a timestamp-preserving restore of different
+    * bytes) is indistinguishable by design — the memos trade that window
+    * for not re-reading gigabytes per check; a caller that needs
+    * content-level certainty clears the JVM (the memos are per-process) or
+    * touches the files.
+    */
+  private[graft] def sourceSignature(path: String): Option[String] =
     try {
-      stream.sorted(java.util.Comparator.comparing[java.nio.file.Path, String](_.toString))
-        .forEach { p =>
-          val f = p.toFile
-          if (f.isFile)
-            sb.append(p.toString).append(':')
-              .append(f.length).append(':').append(f.lastModified).append(';')
+      val uri = new org.apache.hadoop.fs.Path(path).toUri
+      Some(uri).filter(u => u.getScheme == null || u.getScheme == "file")
+        .map(u => java.nio.file.Paths.get(u.getPath))
+        .filter(java.nio.file.Files.exists(_))
+        .map { root =>
+          val sb = new StringBuilder
+          val stream = java.nio.file.Files.walk(root)
+          try {
+            stream.sorted(java.util.Comparator.comparing[java.nio.file.Path, String](_.toString))
+              .forEach { p =>
+                val f = p.toFile
+                if (f.isFile)
+                  sb.append(p.toString).append(':')
+                    .append(f.length).append(':').append(f.lastModified).append(';')
+              }
+          } finally stream.close()
+          java.security.MessageDigest.getInstance("SHA-256")
+            .digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            .map(b => f"$b%02x").mkString
         }
-    } finally stream.close()
-    sb.toString
-  }
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException |
+          _: IllegalArgumentException => None
+    }
 
   /** A parquet scan that infers its schema at most once per (JVM, source
     * state): first read infers and memoizes, later reads supply the cached
@@ -73,13 +99,13 @@ object Tables {
     * the one inference produced for the same bytes.
     */
   private[graft] def parquetScan(spark: SparkSession, path: String): DataFrame = {
-    val sig = sourceSig(path)
-    val hit = schemaMemo.get(path)
-    if (hit != null && hit._1 == sig) spark.read.schema(hit._2).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaMemo.put(path, (sig, df.schema))
-      df
+    val sig = sourceSignature(path)
+    Option(schemaMemo.get(path)).filter(h => sig.contains(h._1)) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        sig.foreach(s => schemaMemo.put(path, (s, df.schema)))
+        df
     }
   }
 

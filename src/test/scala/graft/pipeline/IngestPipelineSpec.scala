@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.{Dedup, Pq, Similarity}
-import graft.pipeline.IngestPipeline.IngestPaths
+import graft.pipeline.IngestPipeline.{IngestPaths, IvfFamily}
 
-class IngestPipelineSpec extends SparkSpec {
+class IngestPipelineSpec extends SparkSpec with org.scalatest.LoneElement {
   import spark.implicits._
+
+  private val int8Health = IngestPipeline.HealthConfig(IvfFamily.Int8)
 
   private def tmpRoot(): IngestPaths =
     IngestPaths(Files.createTempDirectory("graft-ingest").toString)
@@ -331,6 +333,14 @@ class IngestPipelineSpec extends SparkSpec {
       IngestPipeline.readCommitted(spark, tmpRoot()))
   }
 
+  test("readCommitted on a vanished lake fails with the curated message") {
+    val p = tmpRoot()
+    assert(IngestPipeline.ingestBatch(spark, p, batch0, 0L) == 2L)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p.docLake))
+    val e = intercept[IllegalStateException](IngestPipeline.readCommitted(spark, p))
+    assert(e.getMessage.contains(s"ingest lake at ${p.docLake} is missing"), e.getMessage)
+  }
+
   test("compaction crash BEFORE the swap recovers to the compacted state") {
     val p = tmpRoot()
     ingestThree(p)
@@ -548,8 +558,7 @@ class IngestPipelineSpec extends SparkSpec {
 
     val before = spark.read.parquet(s"${p.ivfIndex}/lists")
       .select("vec_id").as[Long].collect().toSeq.sorted
-    val report = IngestPipeline.checkIvfHealth(
-      spark, p, IngestPipeline.IvfHealthConfig()).get
+    val report = IngestPipeline.checkIndexHealth(spark, p, int8Health).get
     assert(!report.skewOk, s"skew must trip: $report")
     assert(!report.migrated,
       "migration from a 1-vector lake would DROP the 76 installed vectors — it must be skipped")
@@ -772,8 +781,7 @@ class IngestPipelineSpec extends SparkSpec {
 
     // the maintenance cadence runs the monitor: skew trips
     // (49 × 16 = 784 > 10 × 64), the loop migrates
-    val report = IngestPipeline.maintain(
-      spark, p, Some(IngestPipeline.IvfHealthConfig())).get
+    val report = IngestPipeline.maintain(spark, p, Seq(int8Health)).loneElement
     assert(!report.skewOk && report.migrated)
     assert(report.nCells == 16 && report.nVecs == 64 && report.maxList == 49)
 
@@ -784,8 +792,7 @@ class IngestPipelineSpec extends SparkSpec {
     val migrated = spark.read.parquet(s"${p.ivfIndex}/lists")
     assert(migrated.select("vec_id").as[Long].collect().toSeq.sorted ==
       ((0L until 48L) ++ initIds).sorted)
-    val after = IngestPipeline.checkIvfHealth(
-      spark, p, IngestPipeline.IvfHealthConfig()).get
+    val after = IngestPipeline.checkIndexHealth(spark, p, int8Health).get
     assert(after.skewOk && after.recallOk && !after.migrated,
       s"monitor must be healthy after migration: $after")
 
@@ -840,8 +847,8 @@ class IngestPipelineSpec extends SparkSpec {
     // structurally ~35-40% — the realistic-corpus floors live in q93
     // (measured 0.71-0.83); what this test pins is trip → migrate →
     // healthy, not an absolute recall
-    val cfg = IngestPipeline.PqHealthConfig(minRecallPct = 30)
-    val report = IngestPipeline.checkIvfPqHealth(spark, p, cfg).get
+    val cfg = IngestPipeline.HealthConfig(IvfFamily.IvfPq, minRecallPct = Some(30))
+    val report = IngestPipeline.checkIndexHealth(spark, p, cfg).get
     assert(!report.skewOk && report.migrated)
     assert(report.nCells == 16 && report.nVecs == 64 && report.maxList == 49)
 
@@ -852,7 +859,7 @@ class IngestPipelineSpec extends SparkSpec {
       ((0L until 48L) ++ initIds).sorted)
     val newModel = Pq.readPqModel(spark, p.ivfPqIndex)
     assert(newModel.dims == dims && newModel.m == 4 && newModel.k == 8)
-    val after = IngestPipeline.checkIvfPqHealth(spark, p, cfg).get
+    val after = IngestPipeline.checkIndexHealth(spark, p, cfg).get
     assert(after.skewOk && after.recallOk && !after.migrated,
       s"monitor must be healthy after migration: $after")
 
@@ -884,12 +891,84 @@ class IngestPipelineSpec extends SparkSpec {
       Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"), 0L,
       embedBatch = Some(Seq(emb(1L, Seq(0.1f, 0.9f, 0f, 0f)))
         .toDF("vec_id", "embedding").select(col("vec_id"), col("embedding").cast("array<float>"))))
-    val report = IngestPipeline.checkIvfPqHealth(
-      spark, p, IngestPipeline.PqHealthConfig(maxSkewRatio = 1)).get
+    val report = IngestPipeline.checkIndexHealth(
+      spark, p, IngestPipeline.HealthConfig(IvfFamily.IvfPq, maxSkewRatio = 1)).get
     assert(!report.skewOk && !report.migrated,
       s"uncovered lake must skip migration: $report")
     // the offline residents still serve — nothing was dropped
     assert(spark.read.parquet(s"${p.ivfPqIndex}/lists").count() == 5L)
+  }
+
+  test("maintain monitors both IVF families over one drifted lake and reports each") {
+    val p = tmpRoot()
+    val dims = 16
+    def oneHot(i: Int): Seq[Float] =
+      Seq.tabulate(dims)(d => if (d == i) 1f else 0f)
+    def drift(j: Int): Seq[Float] = {
+      val sec = 1 + (j % (dims - 1))
+      val w = 0.85f + 0.005f * (j / (dims - 1))
+      Seq.tabulate(dims)(d => if (d == 0) 1f else if (d == sec) w else 0f)
+    }
+    def docsDf(ids: Seq[Long]) =
+      ids.map(i => (i, (0 until 7).map(t => s"bx${i}t$t").mkString(" "))).toDF("doc_id", "text")
+    def embDf(rows: Seq[(Long, Seq[Float])]) =
+      rows.toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding").cast("array<float>"))
+
+    // one balanced corpus, both serving indexes installed over it
+    val initIds = (0 until dims).map(i => 1000L + i)
+    IngestPipeline.ingestBatch(spark, p, docsDf(initIds), 0L,
+      embedBatch = Some(embDf(initIds.zipWithIndex.map { case (id, i) => (id, oneHot(i)) })))
+    val install = spark.read.parquet(p.embLake).drop("__ver")
+    val centroids = (0 until dims).map(i => oneHot(i).toArray).toArray
+    Similarity.writeIvfIndex(install, centroids, p.ivfIndex)
+    val model = Pq.train(install, Pq.initCodebooks(install, dims, m = 4, k = 8), iters = 2)
+    Pq.writeIvfPqIndex(install, centroids, model, p.ivfPqIndex)
+
+    // the corpus drifts: every append concentrates into cell 0 of BOTH indexes
+    for (b <- 1 to 3) {
+      val ids = (0 until dims).map(i => ((b - 1) * dims + i).toLong)
+      IngestPipeline.ingestBatch(spark, p, docsDf(ids), b.toLong,
+        embedBatch = Some(embDf(ids.map(id => (id, drift(id.toInt))))))
+    }
+
+    val reports = IngestPipeline.maintain(spark, p,
+      Seq(int8Health, IngestPipeline.HealthConfig(IvfFamily.IvfPq)))
+    assert(reports.map(_.family) == Seq(IvfFamily.Int8, IvfFamily.IvfPq))
+    reports.foreach { r =>
+      assert(!r.skewOk && r.migrated, s"both monitors must trip and migrate: $r")
+      assert(r.nCells == 16 && r.nVecs == 64 && r.maxList == 49, r.toString)
+    }
+    val corpus = ((0L until 48L) ++ initIds).sorted
+    Seq(p.ivfIndex, p.ivfPqIndex).foreach { ix =>
+      assert(spark.read.parquet(s"$ix/lists").select("vec_id").as[Long]
+        .collect().toSeq.sorted == corpus, ix)
+    }
+  }
+
+  test("ingest, both health monitors and readCommitted work under a root whose name has a space") {
+    val p = IngestPaths(Files.createTempDirectory("graft-ingest").toString + "/ingest root")
+    val dims = 4
+    def embDf(rows: Seq[(Long, Seq[Float])]) =
+      rows.toDF("vec_id", "embedding")
+        .select(col("vec_id"), col("embedding").cast("array<float>"))
+    val nearDup = Some(IngestPipeline.NearDupConfig())
+    assert(IngestPipeline.ingestBatch(spark, p, batch0, 0L, nearDup = nearDup,
+      embedBatch = Some(embDf(Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)))))) == 2L)
+    val install = spark.read.parquet(p.embLake).drop("__ver")
+    val centroids = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    Similarity.writeIvfIndex(install, centroids, p.ivfIndex)
+    Pq.writeIvfPqIndex(install, centroids,
+      Pq.train(install, Pq.initCodebooks(install, dims, m = 2, k = 2), iters = 1), p.ivfPqIndex)
+    assert(IngestPipeline.ingestBatch(spark, p, batch1, 1L, nearDup = nearDup,
+      embedBatch = Some(embDf(Seq((11L, Seq(0f, 0f, 1f, 0f)), (13L, Seq(0f, 0f, 0f, 1f)))))) == 2L)
+
+    val reports = IngestPipeline.maintain(spark, p,
+      Seq(int8Health, IngestPipeline.HealthConfig(IvfFamily.IvfPq)))
+    assert(reports.map(_.family) == Seq(IvfFamily.Int8, IvfFamily.IvfPq))
+    assert(reports.forall(_.nVecs == 4L), reports.toString)
+    assert(IngestPipeline.readCommitted(spark, p).select("doc_id").as[Long]
+      .collect().toSeq.sorted == Seq(1L, 2L, 11L, 13L))
   }
 
   test("span-scrub stage: a span going hot is scrubbed from later batches, counted post-scrub, crash-replay stable") {
