@@ -21,94 +21,6 @@ import graft.streaming.StreamingAggs
   */
 object SparkEntry {
 
-  /** Root for query-written fixtures (q47's JSON-array lake). Env-overridable
-    * so the entry point isn't bound to this repo's absolute path; the DuckDB
-    * oracle SQL interpolates the SAME value, keeping both engines pointed at
-    * one location (a harness contract, not a hardcode).
-    */
-  private val fixtureRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_FIXTURE_ROOT", "/root/repo/target/fixtures")
-
-  /** SF-scoped fixture path: `<root>/<name>_<sanitized sfDir>`.
-    *
-    * Every fixture a query writes is keyed by the source dir it was built
-    * from (the `Bucketing` tag pattern). Without the tag, verify (sf0.01)
-    * and bench (sf0.1) share ONE mutable path and the write-once stamp
-    * makes "whichever ran last" own it — the round-8 q79 hash-fail was the
-    * sf0.1 bench rewriting `ivf_index_append` between the sf0.01 Spark
-    * dump and the DuckDB oracle's file read. With the tag, each SF owns a
-    * distinct directory and concurrent phases can never invalidate each
-    * other's on-disk state.
-    */
-  private[graft] def sfTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]", "_")
-
-  private[graft] def scopedFixture(dir: String, name: String): String =
-    s"$fixtureRoot/${name}_${sfTag(dir)}"
-
-  /** Write-once fixture stamp: a fixture directory is reusable when its
-    * `_GRAFT_STAMP` file records the exact (sfDir, source-fingerprint)
-    * string the caller derived from the CURRENT source slice. Rebuild on
-    * any mismatch — an SF switch or regenerated testdata must never be
-    * served a stale fixture — and skip the (expensive) write otherwise, so
-    * bench passes time the fixture's READ path, not its build (round-5
-    * verdict: q61's "ORC read" number was mostly write; with the stamp,
-    * pass A rebuilds at most once after an SF switch and pass B always
-    * reads only, so the min-of-two is a pure read). `_`-prefixed files are
-    * invisible to Spark's file listing and to the oracle's `*.parquet`
-    * glob alike.
-    */
-  private[graft] def fixtureReady(path: String, stamp: String): Boolean = {
-    val m = java.nio.file.Paths.get(path, "_GRAFT_STAMP")
-    java.nio.file.Files.exists(m) && java.nio.file.Files.readString(m) == stamp
-  }
-
-  /** JVM-local memo of the SOURCE fingerprints the fixture stamps derive
-    * from (r17). Every fixture-backed query re-derived its stamp with a
-    * count + bit_xor(xxhash64(...)) aggregation over the source table —
-    * a ~0.17 s Spark job at sf0.1 INSIDE the timed body, ~30 executions
-    * per bench pass — yet the sources are immutable for the life of a
-    * bench/verify JVM (testdata is read-only by contract). The memo is
-    * guarded by the source's [[Tables.sourceSignature]], so a soak/spec
-    * that regenerates its corpus in place invalidates mechanically instead
-    * of being served a stale fingerprint, and a source the signature
-    * cannot see is recomputed every time; a changed SF is a different
-    * path, i.e. a different key.
-    */
-  private val sourceFpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.Row)]()
-
-  private def memoSourceFp(key: String, file: String)(
-      compute: => org.apache.spark.sql.Row): org.apache.spark.sql.Row = {
-    val sig = Tables.sourceSignature(file)
-    Option(sourceFpMemo.get(key)).filter(h => sig.contains(h._1)).map(_._2).getOrElse {
-      val r = compute
-      sig.foreach(s => sourceFpMemo.put(key, (s, r)))
-      r
-    }
-  }
-
-  /** The shared (count, bit_xor(xxhash64(doc_id, text))) fingerprint of the
-    * documents table — the stamp ingredient of every documents-derived
-    * fixture, memoized per JVM (see [[memoSourceFp]]).
-    */
-  private[graft] def documentsFp(s: SparkSession, dir: String): org.apache.spark.sql.Row =
-    memoSourceFp(s"docs|$dir", s"$dir/documents.parquet") {
-      Tables.documents(s, dir).agg(
-        count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("text")))).head()
-    }
-
-  /** [[documentsFp]]'s analogue for the embeddings table. */
-  private[graft] def embeddingsFp(s: SparkSession, dir: String): org.apache.spark.sql.Row =
-    memoSourceFp(s"emb|$dir", s"$dir/embeddings.parquet") {
-      Tables.embeddings(s, dir).agg(
-        count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    }
-
-  private[graft] def stampFixture(path: String, stamp: String): Unit =
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_GRAFT_STAMP"), stamp)
-
   /** IVF model hyperparameters for the persisted-index queries (q67, q70).
     * Constants here, not inline at call sites: they are part of the index
     * FIXTURE's identity — [[ivfIndexStamp]] folds them into the stamp so a
@@ -118,48 +30,25 @@ object SparkEntry {
   private[graft] val IvfCells = 16
   private[graft] val IvfIters = 2
 
-  /** Stamp for a persisted IVF index fixture. Three ingredient classes,
-    * each covering a distinct staleness mode:
-    *   - the source slice identity (sfDir + row count);
-    *   - a CONTENT hash (bit_xor of xxhash64 over (vec_id, embedding) —
-    *     order-insensitive like sum, but overflow-free under ANSI mode) —
-    *     the round-6 advice: count + sum(vec_id) is determined by the row
-    *     count under sequential ids, so regenerated fixtures with the same
-    *     cardinality but different VECTORS would serve a stale index;
-    *   - the model hyperparameters + quantizer scheme version, which live
-    *     in code where no data fingerprint can see them.
+  /** Stamp for a persisted IVF index fixture: the embeddings' source stamp
+    * (`source`, a [[Fixture.sourceStamp]] — sfDir + row count + content
+    * hash) plus the model hyperparameters and quantizer scheme version,
+    * which live in code where no data fingerprint can see them.
     */
-  private[graft] def ivfIndexStamp(
-      emb: DataFrame, dir: String, k: Int, iters: Int,
-      canonicalSource: Boolean = false): String = {
-    // `canonicalSource` is the registry queries' opt-in: they always pass
-    // the FULL embeddings table of `dir`, so the memoized whole-table
-    // fingerprint ([[embeddingsFp]]) is the identical value without the
-    // per-execution aggregation. Arbitrary frames (specs fingerprint
-    // in-memory corpora under fake dirs) keep the direct computation.
-    val fp =
-      if (canonicalSource) embeddingsFp(emb.sparkSession, dir)
-      else emb.agg(
-        count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
-    s"$dir|${fp.get(0)}|${fp.get(1)}|k=$k|iters=$iters|quant=${graft.functions.Int8Ops.QuantizerVersion}|km=${Similarity.KmeansVersion}"
-  }
+  private[graft] def ivfIndexStamp(source: String, k: Int, iters: Int): String =
+    s"$source|k=$k|iters=$iters|quant=${graft.functions.Int8Ops.QuantizerVersion}|km=${Similarity.KmeansVersion}"
 
   /** Train + persist the IVF index at `fixture` unless the stamp already
-    * matches the current corpus slice AND model hyperparameters (write-once
-    * semantics, same family as the q61/q65 lake fixtures). Extracted from
+    * matches the current corpus AND model hyperparameters. Extracted from
     * q67 so the rebuild-on-hyperparameter-change behavior is directly
     * spec-testable (`IvfIndexSpec` flips k and observes the rebuild).
     */
   private[graft] def ensureIvfIndex(
-      emb: DataFrame, dir: String, fixture: String, k: Int, iters: Int,
-      canonicalSource: Boolean = false): Unit = {
-    val stamp = ivfIndexStamp(emb, dir, k, iters, canonicalSource)
-    if (!fixtureReady(fixture, stamp)) {
+      emb: DataFrame, source: String, fixture: String, k: Int, iters: Int): Unit =
+    Fixture.ensure(emb.sparkSession, fixture, ivfIndexStamp(source, k, iters)) {
       Similarity.writeIvfIndex(
         emb, Similarity.kmeansCentroids(emb, k = k, iters = iters), fixture)
-      stampFixture(fixture, stamp)
     }
-  }
 
   /** Stamped build of the q92 IVF-PQ index fixture — the [[ensureIvfIndex]]
     * contract with the PQ model folded into the identity: both models'
@@ -167,16 +56,15 @@ object SparkEntry {
     * are stamp ingredients, so changing any of them rebuilds instead of
     * serving codes trained under the old scheme.
     */
-  private[graft] def ensureIvfPqIndex(
-      emb: DataFrame, dir: String, fixture: String,
-      canonicalSource: Boolean = false): Unit = {
-    val stamp = ivfIndexStamp(emb, dir, IvfCells, IvfIters, canonicalSource) +
-      s"|pq_m=$PqM|pq_k=$PqK|pq_iters=$PqIters|pq=${Pq.PqVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
+    val emb = Tables.embeddings(s, dir)
+    val fixture = Fixture.path(dir, "ivf_pq_index")
+    Fixture.ensure(s, fixture, ivfIndexStamp(
+        Fixture.sourceStamp(s, dir, "embeddings"), IvfCells, IvfIters) +
+        s"|pq_m=$PqM|pq_k=$PqK|pq_iters=$PqIters|pq=${Pq.PqVersion}") {
       val cents = Similarity.kmeansCentroids(emb, k = IvfCells, iters = IvfIters)
       val model = Pq.train(emb, Pq.initCodebooks(emb, dims = 64, m = PqM, k = PqK), iters = PqIters)
       Pq.writeIvfPqIndex(emb, cents, model, fixture)
-      stampFixture(fixture, stamp)
     }
   }
 
@@ -193,16 +81,13 @@ object SparkEntry {
     val emb = Tables.embeddings(s, dir)
     val base = emb.filter(col("vec_id") % 10 =!= 7)
     val batch = emb.filter(col("vec_id") % 10 === 7)
-    val fixture = scopedFixture(dir, "ivf_index_append")
-    val stamp =
-      ivfIndexStamp(emb, dir, IvfCells, IvfIters, canonicalSource = true) + "|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "ivf_index_append")
+    Fixture.ensure(s, fixture, ivfIndexStamp(
+        Fixture.sourceStamp(s, dir, "embeddings"), IvfCells, IvfIters) + "|append-v1") {
       val cents = Similarity.kmeansCentroids(base, k = IvfCells, iters = IvfIters)
       Similarity.writeIvfIndex(base, cents, fixture)
       Similarity.appendToIvfIndex(s, fixture, batch)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q69 fingerprint-index fixture: gen 0 over the
@@ -215,16 +100,13 @@ object SparkEntry {
     val docs = Tables.documents(s, dir)
     val history = docs.filter(col("doc_id") % 2 === 0)
     val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
-    val fixture = scopedFixture(dir, "fp_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "fp_index")
+    Fixture.ensure(s, fixture,
+        Fixture.sourceStamp(s, dir, "documents", Dedup.FingerprintIndexVersion)) {
       Dedup.writeFingerprintIndex(history, fixture)
       val accepted1 = Dedup.dedupAgainstFingerprintIndex(s, fixture, batch1)
       Dedup.appendFingerprintIndex(accepted1, fixture, generation = 1L)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q78 MinHash band-index fixture (gen 0 over
@@ -236,12 +118,10 @@ object SparkEntry {
     val docs = Tables.documents(s, dir)
     val history = docs.filter(col("doc_id") % 2 === 0)
     val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
-    val fixture = scopedFixture(dir, "band_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.BandIndexVersion}" +
-      s"|h=$BandIdxHashes|b=$BandIdxBands|seed=$BandIdxSeed" +
-      s"|minj=$BandIdxMinJ|cap=$BandIdxCap|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "band_index")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        Dedup.BandIndexVersion, s"h=$BandIdxHashes", s"b=$BandIdxBands",
+        s"seed=$BandIdxSeed", s"minj=$BandIdxMinJ", s"cap=$BandIdxCap", "append-v1")) {
       Dedup.writeBandIndex(history, fixture,
         nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
       val accepted1 = Dedup.dedupAgainstBandIndex(s, fixture, batch1,
@@ -250,9 +130,7 @@ object SparkEntry {
         maxBandCollisions = BandIdxCap)
       Dedup.appendBandIndex(accepted1.select("doc_id", "text"), fixture, generation = 1L,
         nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q82 eval-decontamination-index fixture: the
@@ -264,15 +142,12 @@ object SparkEntry {
     */
   private[graft] def ensureEvalIndexFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "eval_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.EvalIndexVersion}|k=3|w=4|append-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "eval_index")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        Dedup.EvalIndexVersion, "k=3", "w=4", "append-v1")) {
       Dedup.writeEvalIndex(docs.filter(col("doc_id") % 20 === 7), fixture)
       Dedup.appendEvalIndex(docs.filter(col("doc_id") % 20 === 8), fixture, generation = 1L)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q86 span-count-index fixture: the doc_id % 5 ∈
@@ -283,10 +158,9 @@ object SparkEntry {
     */
   private[graft] def ensureSpanIndexFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "span_index")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.SpanIndexVersion}|k=4|min=3|gens-2"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "span_index")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        Dedup.SpanIndexVersion, "k=4", "min=3", "gens-2")) {
       Dedup.writeSpanCountIndex(
         docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 2),
         fixture, k = 4, minCount = 3L)
@@ -294,9 +168,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
         fixture, generation = 1L)
       Dedup.refreshHotSpanList(s, fixture)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** q79 diagnostic sidecar (round-9 verdict #1a): one JSON string that
@@ -311,15 +183,13 @@ object SparkEntry {
     */
   private[graft] def q79Diagnostics(s: SparkSession, dir: String): String = {
     val fixture = ensureAppendedIvfIndex(s, dir)
-    val stampPath = java.nio.file.Paths.get(fixture, "_GRAFT_STAMP")
-    val stamp =
-      if (java.nio.file.Files.exists(stampPath))
-        java.nio.file.Files.readString(stampPath)
-      else "<missing>"
+    val stamp = Fixture.readStamp(s, fixture).getOrElse("<missing>")
     val dataFiles = {
-      val it = java.nio.file.Files.walk(java.nio.file.Paths.get(fixture))
-      try it.filter(p => p.toString.endsWith(".parquet")).count()
-      finally it.close()
+      val it = graft.functions.IndexProtocol.fileSystem(s, fixture)
+        .listFiles(new org.apache.hadoop.fs.Path(fixture), true)
+      var n = 0L
+      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+      n
     }
     val cells = Tables.parquetScan(s, s"$fixture/lists")
       .select(col("cell_id"), col("vec_id")).distinct()
@@ -338,14 +208,6 @@ object SparkEntry {
       s""""hits":$hits,"nq":$nq,"k":$k,"recall_e4":$recallE4}"""
   }
 
-  /** Pre-build the expensive write-once index fixtures so a bench run's
-    * pass A times the probe/serve path, not a one-time index build (round-8
-    * advice: q78's first pass carried its 83.6 s fixture build). All builds
-    * are stamped, so this is a cheap fingerprint probe whenever the fixture
-    * already matches the current corpus slice. The lake fixtures (q47/q61/
-    * q65/q71/q72) are NOT pre-built: their builds are sub-5 s and their
-    * stamps amortize identically without warmup help.
-    */
   /** Merge-table size for the q97 BPE fixture — a stamp ingredient (a
     * different merge budget is a different tokenizer).
     */
@@ -363,11 +225,9 @@ object SparkEntry {
     */
   private[graft] def ensureBpeFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bpe")
-    val fp = documentsFp(s, dir)
-    val stamp =
-      s"$dir|${fp.get(0)}|${fp.get(1)}|merges=$BpeMergeCount|bpe=${Bpe.BpeVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bpe")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"merges=$BpeMergeCount", s"bpe=${Bpe.BpeVersion}")) {
       val dict = Bpe.learnDictionary(docs, "text")
       val merges = Bpe.trainFromDictionary(dict, numMerges = BpeMergeCount)
       val vocab = Bpe.buildVocab(dict, merges)
@@ -386,9 +246,7 @@ object SparkEntry {
       Bpe.naiveIdsTable(exoticInjected(docs), "text", "doc_id", merges,
           vocabBytes, byteFallback = true)
         .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** The q106/q113 HTML wrapper: markup injected deterministically around
@@ -431,14 +289,8 @@ object SparkEntry {
     */
   private[graft] def ensureWarcFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "warc_lake")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|warc-v2"
-    if (!fixtureReady(fixture, stamp)) {
-      // container files are written individually (no directory-overwrite
-      // sink), so a re-stamp must clear stale containers itself
-      val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-      fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+    val fixture = Fixture.path(dir, "warc_lake")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "warc-v2")) {
       val d = col("doc_id")
       def rows(shard: Column) = docs.select(
         shard.as("shard"),
@@ -456,9 +308,7 @@ object SparkEntry {
       graft.sources.Warc.writeSharded(s,
         rows(pmod(d, lit(8)) - 4).filter(col("shard") >= 0),
         s"$fixture/warc", shards = 4, gzip = true)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Exotic-script suffixes for the q111 byte-fallback gate, appended to
@@ -483,16 +333,13 @@ object SparkEntry {
     * version.
     */
   private[graft] def ensureQualityModel(s: SparkSession, dir: String): String = {
-    val fixture = scopedFixture(dir, "quality_model")
+    val fixture = Fixture.path(dir, "quality_model")
     val dim = QualityClassifier.DefaultDim
-    val stamp = s"dim=$dim|bias=0|qc=${QualityClassifier.ModelVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    Fixture.ensure(s, fixture, s"dim=$dim|bias=0|qc=${QualityClassifier.ModelVersion}") {
       QualityClassifier.writeModel(s,
         QualityClassifier.Model(QualityClassifier.synthesizeWeights(dim), bias = 0L),
         s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** The declared schema of the q112 CSV lake (the [[CsvLake]] contract:
@@ -514,12 +361,8 @@ object SparkEntry {
     */
   private[graft] def ensureCsvLake(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "csv_lake")
-    val fp = memoSourceFp(s"docs-id|$dir", s"$dir/documents.parquet") {
-      docs.agg(count(lit(1)), bit_xor(xxhash64(col("doc_id")))).head()
-    }
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|csv-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "csv_lake")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "csv-v1")) {
       val d = col("doc_id")
       val idS = d.cast("string")
       val nameS = concat(lit("name_"), (d % 50).cast("string"))
@@ -531,9 +374,7 @@ object SparkEntry {
           .when(d % 13 === 8, concat_ws(",", idS, nameS, metricS, flagS, lit("extra")))
           .otherwise(concat_ws(",", idS, nameS, metricS, flagS))
       docs.select(line.as("value")).write.mode("overwrite").text(s"$fixture/csv")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q115 snapshot-lake fixture: the full
@@ -549,13 +390,8 @@ object SparkEntry {
     */
   private[graft] def ensureSnapshotLake(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "snap_lake")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|snap-v1"
-    if (!fixtureReady(fixture, stamp)) {
-      // generations are file-level state — clear stale ones on re-stamp
-      val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-      fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+    val fixture = Fixture.path(dir, "snap_lake")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "snap-v1")) {
       val base = docs.select("doc_id", "lang", "source", "n_chars")
       val root = s"$fixture/tbl"
       graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 2 === 0), root)
@@ -563,9 +399,7 @@ object SparkEntry {
       graft.sinks.SnapshotLake.compact(s, root, targetRecordsPerFile = 1000000L)
       graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 8 === 3), root)
       graft.sinks.SnapshotLake.vacuum(s, root, keepGenerations = 3)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Marker suffixes of the q109 labeled training corpus: every even doc
@@ -593,21 +427,17 @@ object SparkEntry {
     */
   private[graft] def ensureTrainedQualityModel(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "quality_model_trained")
-    val fp = documentsFp(s, dir)
+    val fixture = Fixture.path(dir, "quality_model_trained")
     // the class markers are trainer inputs: editing either would leave a
     // stale fixture serving old weights while the oracle re-derives with
     // the new markers (round-13 advice) — fold them into the identity
     val markers = Integer.toHexString((QcGoodMark + " " + QcBadMark).hashCode)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dim=${QualityClassifier.DefaultDim}" +
-      s"|scale=${QualityClassifier.TrainScale}|qc=${QualityClassifier.ModelVersion}" +
-      s"|marks=$markers|centroid-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"dim=${QualityClassifier.DefaultDim}", s"scale=${QualityClassifier.TrainScale}",
+        s"qc=${QualityClassifier.ModelVersion}", s"marks=$markers", "centroid-v1")) {
       val model = QualityClassifier.trainCentroid(qcLabeled(docs), "__ltext", "__lbl")
       QualityClassifier.writeModel(s, model, s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q119 BM25 inverted index over the documents
@@ -617,15 +447,16 @@ object SparkEntry {
     */
   private[graft] def ensureBm25Index(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bm25")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bm25")
+    Fixture.ensure(s, fixture, bm25IndexStamp(s, dir)) {
       Bm25.buildIndex(docs, "text", "doc_id", s"$fixture/idx")
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
+
+  /** The q119 index's stamp, also its bucketed layout's identity. */
+  private def bm25IndexStamp(s: SparkSession, dir: String): String =
+    Fixture.sourceStamp(s, dir, "documents", s"bm=${Bm25.Version}")
 
   /** Stamped build of the q124 retrieval-decontamination fixture: the q82
     * eval suites (doc_id % 20 ∈ {7, 8}) indexed as a SHINGLE-grade BM25
@@ -635,36 +466,30 @@ object SparkEntry {
     */
   private[graft] def ensureBm25EvalIndex(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bm25_eval")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}|g=2|eval78"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bm25_eval")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"bm=${Bm25.Version}", "g=2", "eval78")) {
       Bm25.buildIndex(
         docs.filter(col("doc_id") % 20 === 7 || col("doc_id") % 20 === 8),
         "text", "doc_id", s"$fixture/idx", ngram = 2)
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
 
   /** Catalog-registered TERM-BUCKETED copy of the q119 index's postings
     * ([[Bucketing.ensureBm25Postings]]) for the q123 bucket-pruned serve.
-    * The layout identity is the index fixture's WRITTEN stamp verbatim
-    * (read back from `_GRAFT_STAMP`, hashed into the catalog name) — one
-    * source of truth, so anything that rebuilds the index (corpus change,
-    * `Bm25.Version` bump) lands a fresh layout instead of a stale catalog
-    * hit, and no second full-corpus fingerprint scan runs per serve
-    * (review finding: the identity recomputed the aggregate the stamp
-    * already recorded, and omitted the scheme version).
+    * The layout identity is the index fixture's stamp ([[bm25IndexStamp]],
+    * hashed into the catalog name) — one source of truth, so anything that
+    * rebuilds the index (corpus change, `Bm25.Version` bump) lands a fresh
+    * layout instead of a stale catalog hit, and no second full-corpus
+    * fingerprint scan runs per serve (the stamp's fingerprint is memoized).
     */
   private[graft] def ensureBm25BucketedPostings(s: SparkSession, dir: String): String = {
     val idx = ensureBm25Index(s, dir)
-    val stamp = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(scopedFixture(dir, "bm25"), "_GRAFT_STAMP"))
     val identity =
-      s"${sfTag(dir)}_${java.lang.Integer.toHexString(stamp.hashCode)}"
+      s"${Fixture.tag(dir)}_${java.lang.Integer.toHexString(bm25IndexStamp(s, dir).hashCode)}"
     Bucketing.ensureBm25Postings(
-      s, s"$idx/postings", s"$fixtureRoot/bucketed", identity)
+      s, s"$idx/postings", s"${Fixture.root}/bucketed", identity)
   }
 
   /** Stamped build of the q122 INCREMENTAL BM25 index: install generation
@@ -676,16 +501,14 @@ object SparkEntry {
     */
   private[graft] def ensureBm25IncIndex(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bm25_inc")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|bm=${Bm25.Version}|inc"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bm25_inc")
+    Fixture.ensure(s, fixture,
+        Fixture.sourceStamp(s, dir, "documents", s"bm=${Bm25.Version}", "inc")) {
       Bm25.installIndex(docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
         s"$fixture/idx")
       Bm25.appendDocs(docs.filter(col("doc_id") % 2 === 1), s"$fixture/idx",
         generation = 1L)
       Bm25.refreshIndex(s, s"$fixture/idx")
-      stampFixture(fixture, stamp)
     }
     s"$fixture/idx"
   }
@@ -699,10 +522,9 @@ object SparkEntry {
     */
   private[graft] def ensureUnigramFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "unigram")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|uni=${graft.functions.Unigram.Version}|b"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "unigram")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"uni=${graft.functions.Unigram.Version}", "b")) {
       val dict = graft.functions.Unigram.learnDictionary(docs, "text")
       val model = graft.functions.Unigram.trainFromDictionary(dict)
       graft.functions.Unigram.writeModel(s, model, s"$fixture/model")
@@ -719,30 +541,9 @@ object SparkEntry {
       graft.functions.Unigram
         .naiveIdTable(exoticInjected(docs), "text", "doc_id", byteModel)
         .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
-  /** Generated DuckDB oracle for the BM25 retrieval gates (q119/q122):
-    * tokenization, tf, dl, the exact-integer length norm, pseudo-query
-    * selection and the rational tf-normalization all re-derived from the
-    * base table; only idf_e6 joins from `termsPath` — the one persisted
-    * transcendental (q101 shared-artifact discipline). Two gates, one
-    * SQL: the q122 variant only swaps in the incremental artifact's
-    * terms table, which is exactly the claim under test.
-    */
-  /** Generated DuckDB derivation shared by the q124 decontamination and
-    * q127 calibration oracles: the full shingle-BM25 sweep — bigram
-    * terms from the eval slices, bag-of-shingles query scoring over the
-    * caller-supplied CLEAN population (`cleanSql`, always unioned with
-    * the q124 light-edit injection), the exact-integer length norm and
-    * the per-shingle normalization — through the `normed` CTE
-    * (doc_id, eval_id, score_e6, norm_e6). Only idf_e6 joins from the
-    * persisted eval-index artifact (the q119 discipline). One source of
-    * truth: the two consumers append different tails but can never
-    * disagree on the arithmetic.
-    */
   /** Stamped build of the q131 DSIR fixture: train the importance-weight
     * model (target = the %10==3 corpus slice, raw = the rest —
     * "make the raw corpus look like the target domain") and persist it
@@ -754,10 +555,8 @@ object SparkEntry {
   private[graft] def ensureDsirFixture(s: SparkSession, dir: String): String = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "dsir")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dsir=1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "dsir")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "dsir=1")) {
       val target = docs.filter(col("doc_id") % 10 === 3)
       val raw = docs.filter(col("doc_id") % 10 =!= 3)
       val model = graft.functions.Dsir.trainImportance(target, raw, "text")
@@ -765,9 +564,7 @@ object SparkEntry {
       graft.functions.Dsir.gumbelTableE4().zipWithIndex
         .map { case (g, i) => (i.toLong, g) }.toSeq.toDF("i", "g_e4")
         .coalesce(1).write.mode("overwrite").parquet(s"$fixture/gumbel")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** q131 selection size and noise salt — shared between the query and
@@ -865,6 +662,17 @@ object SparkEntry {
        |ORDER BY b.doc_id""".stripMargin
   }
 
+  /** Generated DuckDB derivation shared by the q124 decontamination and
+    * q127 calibration oracles: the full shingle-BM25 sweep — bigram
+    * terms from the eval slices, bag-of-shingles query scoring over the
+    * caller-supplied CLEAN population (`cleanSql`, always unioned with
+    * the q124 light-edit injection), the exact-integer length norm and
+    * the per-shingle normalization — through the `normed` CTE
+    * (doc_id, eval_id, score_e6, norm_e6). Only idf_e6 joins from the
+    * persisted eval-index artifact (the q119 discipline). One source of
+    * truth: the two consumers append different tails but can never
+    * disagree on the arithmetic.
+    */
   private def shingleBm25NormedSql(dir: String, cleanSql: String): String =
     s"""WITH evals AS (
        |  SELECT doc_id, text FROM documents WHERE doc_id % 20 IN (7, 8)),
@@ -884,7 +692,7 @@ object SparkEntry {
        |    CAST(${ExactAgg.Sql.divHalfUp("(3 * l + 9 * dl * n) * 1000000", "10 * l")} AS BIGINT) AS k_e6
        |  FROM dl CROSS JOIN meta),
        |idf AS (SELECT term, idf_e6
-       |  FROM read_parquet('${scopedFixture(dir, "bm25_eval")}/idx/terms/*.parquet')),
+       |  FROM read_parquet('${Fixture.path(dir, "bm25_eval")}/idx/terms/*.parquet')),
        |tsp AS (SELECT doc_id, string_split(text, ' ') AS sp FROM train),
        |tidx AS (SELECT doc_id, GREATEST(len(sp) - 1, 0) AS n_sh,
        |    unnest(range(1, len(sp))) AS i, sp FROM tsp),
@@ -910,6 +718,14 @@ object SparkEntry {
        |    CAST(${ExactAgg.Sql.divHalfUp("score_e6", "n_sh")} AS BIGINT) AS norm_e6
        |  FROM top1)""".stripMargin
 
+  /** Generated DuckDB oracle for the BM25 retrieval gates (q119/q122):
+    * tokenization, tf, dl, the exact-integer length norm, pseudo-query
+    * selection and the rational tf-normalization all re-derived from the
+    * base table; only idf_e6 joins from `termsPath` — the one persisted
+    * transcendental (q101 shared-artifact discipline). Two gates, one
+    * SQL: the q122 variant only swaps in the incremental artifact's
+    * terms table, which is exactly the claim under test.
+    */
   private def bm25RetrievalOracleSql(termsPath: String): String =
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
@@ -980,20 +796,16 @@ object SparkEntry {
     */
   private[graft] def ensureLangIdModel(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "langid_model")
-    val fp = documentsFp(s, dir)
+    val fixture = Fixture.path(dir, "langid_model")
     val markers = Integer.toHexString(
       LangIdMarks.map { case (c, m) => s"$c=$m" }.mkString("|").hashCode)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|dim=${QualityClassifier.DefaultDim}" +
-      s"|scale=${QualityClassifier.TrainScale}|qc=${QualityClassifier.ModelVersion}" +
-      s"|marks=$markers|centroid-multi-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"dim=${QualityClassifier.DefaultDim}", s"scale=${QualityClassifier.TrainScale}",
+        s"qc=${QualityClassifier.ModelVersion}", s"marks=$markers", "centroid-multi-v1")) {
       val models = QualityClassifier.trainCentroidMulti(
         langIdLabeled(docs), "__ltext", "__cls")
       QualityClassifier.writeMultiModel(s, models, s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped train of the q101 bigram-LM fixture ([[LangModel.train]]) —
@@ -1002,14 +814,11 @@ object SparkEntry {
     */
   private[graft] def ensureLmFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bigram_lm")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bigram_lm")
+    Fixture.ensure(s, fixture,
+        Fixture.sourceStamp(s, dir, "documents", s"lm=${LangModel.LmVersion}")) {
       LangModel.train(docs, "text", s"$fixture/model")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped build of the q108 INCREMENTAL LM fixture: generation 0
@@ -1020,18 +829,15 @@ object SparkEntry {
     */
   private[graft] def ensureLmIncFixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "bigram_lm_inc")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}|incr-v1"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "bigram_lm_inc")
+    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+        s"lm=${LangModel.LmVersion}", "incr-v1")) {
       LangModel.installCountIndex(
         docs.filter(col("doc_id") % 2 === 0), "text", s"$fixture/inc")
       LangModel.appendCounts(
         docs.filter(col("doc_id") % 4 === 1), s"$fixture/inc", generation = 1L)
       LangModel.refreshModel(s, s"$fixture/inc")
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
   /** Stamped train of the q110 TRIGRAM fixture — the same artifact family
@@ -1041,16 +847,21 @@ object SparkEntry {
     */
   private[graft] def ensureLm3Fixture(s: SparkSession, dir: String): String = {
     val docs = Tables.documents(s, dir)
-    val fixture = scopedFixture(dir, "trigram_lm")
-    val fp = documentsFp(s, dir)
-    val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}|lm=${LangModel.LmVersion}|n=3"
-    if (!fixtureReady(fixture, stamp)) {
+    val fixture = Fixture.path(dir, "trigram_lm")
+    Fixture.ensure(s, fixture,
+        Fixture.sourceStamp(s, dir, "documents", s"lm=${LangModel.LmVersion}", "n=3")) {
       LangModel.train(docs, "text", s"$fixture/model", order = 3)
-      stampFixture(fixture, stamp)
     }
-    fixture
   }
 
+  /** Pre-build the expensive write-once index fixtures so a bench run's
+    * pass A times the probe/serve path, not a one-time index build (round-8
+    * advice: q78's first pass carried its 83.6 s fixture build). All builds
+    * are stamped, so this is a cheap fingerprint probe whenever the fixture
+    * already matches the current corpus slice. The lake fixtures (q47/q61/
+    * q65/q71/q72) are NOT pre-built: their builds are sub-5 s and their
+    * stamps amortize identically without warmup help.
+    */
   private[graft] def prebuildFixtures(s: SparkSession, dir: String): Unit = {
     ensureFpIndexFixture(s, dir)
     ensureBpeFixture(s, dir)
@@ -1061,13 +872,11 @@ object SparkEntry {
     ensureLm3Fixture(s, dir)
     ensureBandIndexFixture(s, dir)
     ensureEvalIndexFixture(s, dir)
-    ensureIvfIndex(Tables.embeddings(s, dir), dir,
-      scopedFixture(dir, "ivf_index"), k = IvfCells, iters = IvfIters,
-      canonicalSource = true)
+    ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
+      Fixture.path(dir, "ivf_index"), k = IvfCells, iters = IvfIters)
     ensureAppendedIvfIndex(s, dir)
-    ensureIvfPqIndex(Tables.embeddings(s, dir), dir, scopedFixture(dir, "ivf_pq_index"),
-      canonicalSource = true)
-    Bucketing.ensureCustomerOrders(s, dir, s"$fixtureRoot/bucketed")
+    ensureIvfPqIndex(s, dir)
+    Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
     ensureBm25BucketedPostings(s, dir)
     ensureBm25EvalIndex(s, dir)
   }
@@ -1415,9 +1224,9 @@ object SparkEntry {
     // run; a production corpus pays it once and serves from here ----
     "q67_ivf_index_serve" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      val fixture = scopedFixture(dir, "ivf_index")
-      ensureIvfIndex(emb, dir, fixture, k = IvfCells, iters = IvfIters,
-        canonicalSource = true)
+      val fixture = Fixture.path(dir, "ivf_index")
+      ensureIvfIndex(emb, Fixture.sourceStamp(s, dir, "embeddings"), fixture,
+        k = IvfCells, iters = IvfIters)
       Similarity.queryIvfIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = 5)
         .groupBy("query_id")
         .agg(
@@ -1532,22 +1341,18 @@ object SparkEntry {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))) // b0 content replayed
       val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))) // b1 content replayed
-      val fixture = scopedFixture(dir, "ingest_root")
-      val fp = documentsFp(s, dir)
-      val stamp =
-        s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}|ingest-v1"
-      if (!fixtureReady(fixture, stamp)) {
-        // the root carries the manifest high-water mark, so a stale fixture
-        // must be wiped, not overwritten — a leftover manifest would gate
-        // the rebuild's batches out as "already applied"
-        val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-        fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+      // the root carries the manifest high-water mark, so a stale fixture
+      // must be wiped, not overwritten (Fixture.ensure deletes it) — a
+      // leftover manifest would gate the rebuild's batches out as "already
+      // applied"
+      val fixture = Fixture.path(dir, "ingest_root")
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+          Dedup.FingerprintIndexVersion, "ingest-v1")) {
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L) // committed replay: must no-op
         IngestPipeline.ingestBatch(s, paths, b2, 2L)
-        stampFixture(fixture, stamp)
       }
       Tables.parquetScan(s, s"$fixture/doc_lake")
         .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
@@ -1570,19 +1375,14 @@ object SparkEntry {
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
       val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
         .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
-      val fixture = scopedFixture(dir, "ingest_root_c")
-      val fp = documentsFp(s, dir)
-      val stamp =
-        s"$dir|${fp.get(0)}|${fp.get(1)}|${Dedup.FingerprintIndexVersion}|ingest-compact-v1"
-      if (!fixtureReady(fixture, stamp)) {
-        val fs = graft.functions.IndexProtocol.fileSystem(s, fixture)
-        fs.delete(new org.apache.hadoop.fs.Path(fixture), true)
+      val fixture = Fixture.path(dir, "ingest_root_c")
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
+          Dedup.FingerprintIndexVersion, "ingest-compact-v1")) {
         val paths = IngestPipeline.IngestPaths(fixture)
         IngestPipeline.ingestBatch(s, paths, b0, 0L)
         IngestPipeline.ingestBatch(s, paths, b1, 1L)
         IngestPipeline.compactCommitted(s, paths, 1L)
         IngestPipeline.ingestBatch(s, paths, b2, 2L)
-        stampFixture(fixture, stamp)
       }
       Tables.parquetScan(s, s"$fixture/doc_lake")
         .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
@@ -1661,7 +1461,7 @@ object SparkEntry {
     // PlanAuditSpec; this entry carries the value oracle. Revenue in exact
     // cents ----
     "q77_bucketed_join" -> { (s, dir) =>
-      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"$fixtureRoot/bucketed")
+      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
       s.table(o).join(s.table(c), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
         .agg(
@@ -1677,7 +1477,7 @@ object SparkEntry {
     // SortMergeJoin and build nothing (ensureCustomerOrders is a catalog
     // hit; `BucketedJoinSpec` asserts the files are untouched) ----
     "q80_bucketed_reuse" -> { (s, dir) =>
-      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"$fixtureRoot/bucketed")
+      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
       s.table(o).join(s.table(c), col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderpriority")
         .agg(
@@ -2081,24 +1881,20 @@ object SparkEntry {
     // hash-equality to the parquet-backed oracle closes the round-trip ----
     "q61_orc_lake" -> { (s, dir) =>
       import org.apache.spark.sql.types._
-      val fixture = scopedFixture(dir, "orc_events")
+      val fixture = Fixture.path(dir, "orc_events")
       val src = Tables.events(s, dir)
         .filter(col("event_id") < 2000)
         .select("event_id", "user_id", "event_type", "value")
-      // source-slice fingerprint (count + sum of a key column): one cheap
-      // pushed-filter agg per attempt; write the ORC fixture only when the
-      // stamp says the on-disk copy came from different data, so the timed
-      // body is the READ path (write coverage lives in SourceFormatsSpec's
-      // S9 round-trip). The stamp also records the SLICE DEFINITION
-      // (predicate + projected columns + format) — those live in code, so
-      // a data fingerprint alone would keep serving the old layout after
-      // an edit here changed what the fixture should contain (round-6 #8)
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=event_id<2000;cols=event_id,user_id,event_type,value;fmt=orc"
-      if (!fixtureReady(fixture, stamp)) {
+      // write the ORC fixture only when the stamp says the on-disk copy
+      // came from different data, so the timed body is the READ path (write
+      // coverage lives in SourceFormatsSpec's S9 round-trip). The stamp also
+      // records the SLICE DEFINITION (predicate + projected columns +
+      // format) — those live in code, so a data fingerprint alone would keep
+      // serving the old layout after an edit here changed what the fixture
+      // should contain (round-6 #8)
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
+          "slice=event_id<2000;cols=event_id,user_id,event_type,value;fmt=orc")) {
         src.write.mode("overwrite").format("orc").save(fixture)
-        stampFixture(fixture, stamp)
       }
       val schema = StructType(Seq(
         StructField("event_id", LongType), StructField("user_id", LongType),
@@ -2116,18 +1912,15 @@ object SparkEntry {
     // like q61 so the benched body is the pruned READ, not the lake build;
     // the DuckDB oracle reads the same lake through hive partitioning ----
     "q65_lake_partition_scan" -> { (s, dir) =>
-      val fixture = scopedFixture(dir, "lake_events")
+      val fixture = Fixture.path(dir, "lake_events")
       val src = Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .select("event_id", "user_id", "event_type", "value", "event_date")
       // stamp = data fingerprint + the code-resident layout definition
       // (projection + partition column + format), same rationale as q61's
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=cols=event_id,user_id,event_type,value;part=event_date;fmt=parquet"
-      if (!fixtureReady(fixture, stamp)) {
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
+          "slice=cols=event_id,user_id,event_type,value;part=event_date;fmt=parquet")) {
         src.write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-        stampFixture(fixture, stamp)
       }
       sinks.Sinks.readLakePartition(s, fixture, "event_date", "2024-01-15")
         .select("event_id", "user_id", "event_type", "value")
@@ -2145,20 +1938,17 @@ object SparkEntry {
     // preserved content exactly; the file-count + crash-safety claims live
     // in SinksSpec ----
     "q71_lake_compaction" -> { (s, dir) =>
-      val fixture = scopedFixture(dir, "frag_lake")
+      val fixture = Fixture.path(dir, "frag_lake")
       val src = Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .select("event_id", "user_id", "event_type", "value", "event_date")
-      val fp = src.agg(count(lit(1)), sum(col("user_id"))).head()
       // scratch-v2: pre-v2 fixtures were compacted IN PLACE by the first
       // run (the advice finding) — the marker forces one rebuild so the
       // on-disk fixture is actually 40-file fragmented again
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=cols=event_id,user_id,event_type,value;part=event_date;frag=40|scratch-v2"
-      if (!fixtureReady(fixture, stamp)) {
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
+          "slice=cols=event_id,user_id,event_type,value;part=event_date;frag=40", "scratch-v2")) {
         src.repartition(40)
           .write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-        stampFixture(fixture, stamp)
       }
       // The timed body compacts a SCRATCH copy of the fragmented partition,
       // re-made every run (round-7 advice: compacting the stamped fixture
@@ -2167,7 +1957,7 @@ object SparkEntry {
       // already-compact partition). The copy keeps the fixture's 40-file
       // pathology the stamp claims, so both bench passes and later
       // sessions all pay the real small-file work.
-      val scratch = scopedFixture(dir, "frag_lake_scratch")
+      val scratch = Fixture.path(dir, "frag_lake_scratch")
       val fsys = graft.functions.IndexProtocol.fileSystem(s, scratch)
       fsys.delete(new org.apache.hadoop.fs.Path(scratch), true)
       org.apache.hadoop.fs.FileUtil.copy(
@@ -2191,12 +1981,10 @@ object SparkEntry {
     // string→double round trip is exact in both engines because shortest-
     // representation double rendering round-trips by construction ----
     "q72_schema_evolution" -> { (s, dir) =>
-      val fixture = scopedFixture(dir, "evolved_lake")
+      val fixture = Fixture.path(dir, "evolved_lake")
       val ev = Tables.events(s, dir)
-      val fp = ev.agg(count(lit(1)), sum(col("user_id"))).head()
-      val stamp = s"$dir|${fp.get(0)}|${fp.get(1)}" +
-        "|slice=v1:eid%3=0(min_salary:str);v2:eid%3=1(salary_min:dbl,source)"
-      if (!fixtureReady(fixture, stamp)) {
+      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
+          "slice=v1:eid%3=0(min_salary:str);v2:eid%3=1(salary_min:dbl,source)")) {
         ev.filter(col("event_id") % 3 === 0)
           .select(col("event_id").as("job_id"),
             col("value").cast("string").as("min_salary"),
@@ -2208,7 +1996,6 @@ object SparkEntry {
             col("event_type").as("location"),
             lit("v2").as("source"))
           .write.mode("overwrite").parquet(s"$fixture/gen=2")
-        stampFixture(fixture, stamp)
       }
       val merged = sources.SchemaEvolution.readMergedLake(s, fixture)
       sources.SchemaEvolution
@@ -2377,7 +2164,7 @@ object SparkEntry {
     // oracle reads the very same files with read_json ----
     "q47_json_raw_lake" -> { (s, dir) =>
       import org.apache.spark.sql.types._
-      val fixture = scopedFixture(dir, "json_events")
+      val fixture = Fixture.path(dir, "json_events")
       val src = Tables.events(s, dir)
         .filter(col("event_id") < 1000)
         .select("event_id", "user_id", "event_type", "value", "props")
@@ -2758,8 +2545,7 @@ object SparkEntry {
     "q92_ivf_pq_index_serve" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val k = 5
-      val fixture = scopedFixture(dir, "ivf_pq_index")
-      ensureIvfPqIndex(emb, dir, fixture, canonicalSource = true)
+      val fixture = ensureIvfPqIndex(s, dir)
       Pq.queryIvfPqIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = k)
         .groupBy("query_id")
         .agg(
@@ -2784,8 +2570,7 @@ object SparkEntry {
     "q93_ivf_pq_health" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val k = 10
-      val fixture = scopedFixture(dir, "ivf_pq_index")
-      ensureIvfPqIndex(emb, dir, fixture, canonicalSource = true)
+      val fixture = ensureIvfPqIndex(s, dir)
       Pq.ivfPqIndexRecall(s, fixture, emb.filter(col("vec_id") < 10), nProbe = 4, k = k)
         .agg(
           count(lit(1)).as("n_queries"),
@@ -2960,9 +2745,9 @@ object SparkEntry {
     // oracle reads the SAME lists parquet and re-derives the exact carve
     // (full value oracle, q96 family) ----
     "q100_semantic_carve" -> { (s, dir) =>
-      val fixture = scopedFixture(dir, "ivf_index")
-      ensureIvfIndex(Tables.embeddings(s, dir), dir, fixture,
-        k = IvfCells, iters = IvfIters, canonicalSource = true)
+      val fixture = Fixture.path(dir, "ivf_index")
+      ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
+        fixture, k = IvfCells, iters = IvfIters)
       Sampling.semanticCarve(s, fixture, n = 10, salt = "semcarve-v1")
         .orderBy("cell_id", "vec_id")
     },
@@ -4081,7 +3866,7 @@ object SparkEntry {
          |FROM agg ORDER BY doc_id""".stripMargin,
     "q47_json_raw_lake" ->
       s"""SELECT event_id, user_id, event_type, value, CAST(length(props) AS INTEGER) AS props_len
-         |FROM read_json('${scopedFixture(dir, "json_events")}/chunk=*/*.txt', format='array',
+         |FROM read_json('${Fixture.path(dir, "json_events")}/chunk=*/*.txt', format='array',
          |  columns={event_id:'BIGINT', user_id:'BIGINT', event_type:'VARCHAR', value:'DOUBLE', props:'VARCHAR'})
          |ORDER BY event_id""".stripMargin,
     "q26_minhash_pairs" -> minhashOracleSql(nHashes = 64, nBands = 4, seed = 42L,
@@ -4175,7 +3960,7 @@ object SparkEntry {
     "q79_ivf_index_health" ->
       s"""WITH cells AS (
          |  SELECT cell_id, COUNT(DISTINCT vec_id) AS n
-         |  FROM read_parquet('${scopedFixture(dir, "ivf_index_append")}/lists/*/*.parquet', hive_partitioning=1)
+         |  FROM read_parquet('${Fixture.path(dir, "ivf_index_append")}/lists/*/*.parquet', hive_partitioning=1)
          |  GROUP BY cell_id)
          |SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
          |  CAST(SUM(n) AS BIGINT) AS n_vecs,
@@ -4579,7 +4364,7 @@ object SparkEntry {
          |  e.n_tokens AS n_tokens,
          |  array_to_string(regexp_extract_all(d.text, '${Text.BpeishPattern.replace("'", "''")}'), '') AS detok
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "bpe")}/expected/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     // q98: the full classifier path re-derived in SQL — same single-space
@@ -4640,14 +4425,14 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY cell_id ORDER BY
          |      CAST(concat('0x', substring(md5(concat(CAST(vec_id AS VARCHAR), '#semcarve-v1')), 1, 15)) AS BIGINT),
          |      vec_id) AS rk
-         |  FROM read_parquet('${scopedFixture(dir, "ivf_index")}/lists/*/*.parquet', hive_partitioning=1)
+         |  FROM read_parquet('${Fixture.path(dir, "ivf_index")}/lists/*/*.parquet', hive_partitioning=1)
          |  WHERE vec_id IS NOT NULL) t
          |WHERE rk <= 10 ORDER BY cell_id, vec_id""".stripMargin,
     // q101: same single-space transitions, the SAME persisted integer
     // log-prob tables (trained artifact = shared source of truth), same
     // coalesce ladder and half-up mean, same band thresholds
     "q101_lm_perplexity" ->
-      lmScoringOracleSql(s"${scopedFixture(dir, "bigram_lm")}/model", withBand = true),
+      lmScoringOracleSql(s"${Fixture.path(dir, "bigram_lm")}/model", withBand = true),
     // q102: the q75 running-sum shape, budgeted with the BPE expected
     // table's counts (production == naive is q97's already-gated equality)
     "q102_bpe_packing" ->
@@ -4662,7 +4447,7 @@ object SparkEntry {
          |      PARTITION BY d.doc_id % 8 ORDER BY d.doc_id
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumb
          |  FROM documents d
-         |  JOIN read_parquet('${scopedFixture(dir, "bpe")}/expected/*.parquet') e
+         |  JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected/*.parquet') e
          |    ON d.doc_id = e.doc_id) t
          |ORDER BY doc_id""".stripMargin,
     // q103: identical injected suffixes (chr() forms of the same code
@@ -4690,7 +4475,7 @@ object SparkEntry {
     "q105_bpe_token_ids" ->
       s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "bpe")}/expected_ids/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected_ids/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     // q112: DuckDB reads the SAME raw CSV part files with the declared
@@ -4699,7 +4484,7 @@ object SparkEntry {
     // shared contract), so the two engines see the same well-formed set
     "q112_csv_lake" ->
       s"""SELECT id, name, metric, flag
-         |FROM read_csv('${scopedFixture(dir, "csv_lake")}/csv/part-*',
+         |FROM read_csv('${Fixture.path(dir, "csv_lake")}/csv/part-*',
          |  columns={'id':'BIGINT','name':'VARCHAR','metric':'BIGINT','flag':'VARCHAR'},
          |  header=false, ignore_errors=true)
          |ORDER BY id""".stripMargin,
@@ -4843,18 +4628,18 @@ object SparkEntry {
     // ONLY idf_e6 (the transcendental, quantized once at build) joins
     // from the persisted terms artifact (q101 shared-artifact discipline)
     "q119_bm25_retrieval" ->
-      bm25RetrievalOracleSql(s"${scopedFixture(dir, "bm25")}/idx/terms"),
+      bm25RetrievalOracleSql(s"${Fixture.path(dir, "bm25")}/idx/terms"),
     // q122: the IDENTICAL re-derivation pointed at the incremental
     // install+append+refresh artifact's terms table — the gate value is
     // that the generational fold served exactly the one-shot arithmetic
     "q122_bm25_index_append" ->
       bm25RetrievalOracleSql(
-        s"${scopedFixture(dir, "bm25_inc")}/idx/index/terms"),
+        s"${Fixture.path(dir, "bm25_inc")}/idx/index/terms"),
     // q123: layout-only variant of q119 — the bucketed catalog serve must
     // reproduce the identical ranking and integers, so the oracle IS
     // q119's re-derivation against the same one-shot artifact
     "q123_bm25_bucketed_serve" ->
-      bm25RetrievalOracleSql(s"${scopedFixture(dir, "bm25")}/idx/terms"),
+      bm25RetrievalOracleSql(s"${Fixture.path(dir, "bm25")}/idx/terms"),
     // q124: the full shingle-BM25 decontamination sweep re-derived from
     // the base table — bigram terms, bag-of-shingles query scoring, the
     // exact-integer length norm and the per-shingle normalization; only
@@ -4915,7 +4700,7 @@ object SparkEntry {
          |      PARTITION BY d.doc_id % 8 ORDER BY d.doc_id
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumb
          |  FROM documents d
-         |  JOIN read_parquet('${scopedFixture(dir, "unigram")}/expected/*.parquet') e
+         |  JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected/*.parquet') e
          |    ON d.doc_id = e.doc_id) t
          |ORDER BY doc_id""".stripMargin,
     // q120: the q119 re-derivation minus self, restricted to the embedded
@@ -4940,7 +4725,7 @@ object SparkEntry {
          |    FROM tf WHERE doc_id < 8) t
          |  WHERE r <= 3),
          |idf AS (SELECT term, idf_e6
-         |  FROM read_parquet('${scopedFixture(dir, "bm25")}/idx/terms/*.parquet')),
+         |  FROM read_parquet('${Fixture.path(dir, "bm25")}/idx/terms/*.parquet')),
          |scored AS (
          |  SELECT p.query_id, tf.doc_id,
          |    CAST(SUM(CAST(${ExactAgg.Sql.divHalfUp(
@@ -4975,7 +4760,7 @@ object SparkEntry {
     "q121_unigram_tokenize" ->
       s"""SELECT d.doc_id, e.n_tokens, e.n_unk, e.nll_e4, e.tokens
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "unigram")}/expected/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     // q126: the q105 differential extended to the unigram family — the
@@ -4986,7 +4771,7 @@ object SparkEntry {
     "q126_unigram_token_ids" ->
       s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "unigram")}/expected_ids/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected_ids/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     // q128: the byte-fallback story's expected table from the same
@@ -4996,7 +4781,7 @@ object SparkEntry {
     "q128_unigram_byte_ids" ->
       s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "unigram")}/expected_ids_bytes/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected_ids_bytes/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     "q129_repetition_signals" -> repetitionSignalsSql,
@@ -5014,7 +4799,7 @@ object SparkEntry {
          |  SELECT doc_id, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS f
          |  FROM toks, UNNEST(range(1, len(t))) AS u(i)),
          |w AS (SELECT bucket, weight
-         |  FROM read_parquet('${scopedFixture(dir, "dsir")}/model/*.parquet')
+         |  FROM read_parquet('${Fixture.path(dir, "dsir")}/model/*.parquet')
          |  WHERE bucket >= 0),
          |scored AS (
          |  SELECT fb.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
@@ -5029,7 +4814,7 @@ object SparkEntry {
          |  SELECT s.doc_id, s.n_feats, s.logw_e4, g.g_e4 AS gumbel_e4,
          |    s.logw_e4 + g.g_e4 AS key_e4
          |  FROM scored s
-         |  JOIN read_parquet('${scopedFixture(dir, "dsir")}/gumbel/*.parquet') g
+         |  JOIN read_parquet('${Fixture.path(dir, "dsir")}/gumbel/*.parquet') g
          |    ON g.i = CAST(concat('0x', substring(
          |        md5(concat(CAST(s.doc_id AS VARCHAR), '#$DsirSalt')), 1, 15))
          |      AS BIGINT) % ${graft.functions.Dsir.GumbelResolution}),
@@ -5046,7 +4831,7 @@ object SparkEntry {
     "q111_bpe_byte_fallback" ->
       s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
          |FROM documents d
-         |JOIN read_parquet('${scopedFixture(dir, "bpe")}/expected_ids_bytes/*.parquet') e
+         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected_ids_bytes/*.parquet') e
          |  ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin,
     // q106: identical injected wrappers; the extraction chain is
@@ -5064,12 +4849,12 @@ object SparkEntry {
     // subject is the grown model's serve path)
     "q108_lm_incremental" ->
       lmScoringOracleSql(
-        s"${scopedFixture(dir, "bigram_lm_inc")}/inc/model", withBand = false),
+        s"${Fixture.path(dir, "bigram_lm_inc")}/inc/model", withBand = false),
     // q110: the q101 scoring SQL generalized to the order-3 context (the
     // two preceding tokens space-joined) against the trigram artifact
     "q110_lm_trigram" ->
       lmScoringOracleSql(
-        s"${scopedFixture(dir, "trigram_lm")}/model", withBand = false, order = 3),
+        s"${Fixture.path(dir, "trigram_lm")}/model", withBand = false, order = 3),
     // q109: the ENTIRE train→score loop re-derived in SQL — same labels
     // and markers, same feature space and 60-bit md5 buckets (the q98
     // CTEs), the same e6 centroid-share weight formula over the class

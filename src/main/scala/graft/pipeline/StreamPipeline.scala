@@ -10,9 +10,8 @@ import graft.streaming.StreamingAggs
 
 /** The reference's streaming flagship composition (SURVEY §3.1,
   * reference: bigdata-project/src/spark_streaming_v2.py): wire-decode →
-  * shared enrichment → fan-out to an append detail sink plus update-mode
-  * windowed aggregate sinks, each with its own checkpoint, then
-  * `awaitAnyTermination` by the caller.
+  * shared enrichment → fan-out to a detail sink plus windowed aggregate
+  * sinks ([[startFanOut]]), then termination by the caller.
   *
   * The source is any streaming DataFrame with a string `value` column —
   * Kafka in production (`spark.readStream.format("kafka")...selectExpr(
@@ -56,53 +55,16 @@ object StreamPipeline {
     EventsPipeline.enrich(parsed)
   }
 
-  /** Fan out the enriched stream into the reference's sink topology:
-    * append detail + N update-mode windowed aggregates (W4/W6/W7).
-    * Returns the started queries; callers own
-    * `spark.streams.awaitAnyTermination()` (W8).
-    */
-  def start(enriched: DataFrame, outDir: String, checkpointDir: String): Seq[StreamingQuery] = {
-    val detail = enriched.writeStream
-      .format("parquet")
-      .option("path", s"$outDir/detail")
-      .option("checkpointLocation", s"$checkpointDir/detail")
-      .outputMode("append")
-      .start()
-    val byType = StreamingAggs
-      .tumblingStats(enriched, "ts", "5 minutes", Seq("event_type_clean"), "value",
-        watermark = Some("10 minutes"))
-      .writeStream
-      .option("checkpointLocation", s"$checkpointDir/type_stats")
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Sinks.upsertBatch(batch, Seq("doc_id"), s"$outDir/type_stats", batchId)
-        ()
-      }
-      .start()
-    val byCategory = StreamingAggs
-      .tumblingStats(enriched, "ts", "10 minutes", Seq("category"), "value",
-        watermark = Some("15 minutes"))
-      .writeStream
-      .option("checkpointLocation", s"$checkpointDir/category_stats")
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Sinks.upsertBatch(batch, Seq("doc_id"), s"$outDir/category_stats", batchId)
-        ()
-      }
-      .start()
-    Seq(detail, byType, byCategory)
-  }
-
-  /** The same sink topology as [[start]], at a third of the execution cost:
-    * ONE streaming query whose every micro-batch persists the enriched
+  /** Fan out the enriched stream into the reference's sink topology
+    * (append detail + windowed aggregates per event type and per category,
+    * W4/W6/W7) with ONE streaming query, where the reference runs one
+    * query per sink (spark_streaming_v2.py) and Spark semantics re-execute
+    * the shared enrichment prefix once per query per micro-batch (the
+    * reference pays this 6×). Every micro-batch persists the enriched
     * batch once, appends it to the detail lake, and lands each windowed
-    * aggregate as mergeable partials from the cache.
-    *
-    * [[start]] mirrors the reference's N independent queries, and Spark
-    * semantics re-execute the shared enrichment prefix once per query per
-    * micro-batch (the reference pays this 6×, spark_streaming_v2.py). Here
-    * the prefix executes exactly once per batch (asserted by accumulator
-    * in `PipelinesSpec`), although the three sink writes run concurrently
+    * aggregate as mergeable partials from the cache, so the prefix
+    * executes exactly once per batch (asserted by accumulator in
+    * `PipelinesSpec`), although the three sink writes run concurrently
     * ([[Sinks.fanOut]]): concurrent first reads of a cached block are
     * computed by one task under the BlockManager's write lock, and the
     * others read its result. The batch commits only after all three
@@ -115,6 +77,7 @@ object StreamPipeline {
     * at-least-once: foreachBatch has no file-sink commit log to dedup
     * replays). Read the detail with [[readDetail]]; aggregate read sides
     * merge with `readMergedPartials` + `StreamingAggs.finishStats`.
+    * Returns the started query; callers own its termination (W8).
     */
   def startFanOut(enriched: DataFrame, outDir: String, checkpointDir: String): StreamingQuery =
     enriched.writeStream

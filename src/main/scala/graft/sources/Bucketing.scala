@@ -24,8 +24,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bucketing {
 
-  private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9]", "_")
-
   /** A catalog hit alone is not freshness: the session catalog can outlive
     * the backing files (a fixture-root wipe between calls), and a serve
     * against the surviving entry reads an empty/broken table instead of
@@ -54,7 +52,7 @@ object Bucketing {
       dir: String,
       pathRoot: String,
       buckets: Int = 8): (String, String) = {
-    val tag = sanitize(dir)
+    val tag = graft.Fixture.tag(dir)
     val o = s"graft_orders_bkt_${tag}_b$buckets"
     val c = s"graft_customer_bkt_${tag}_b$buckets"
     if (!freshTable(spark, o, s"$pathRoot/orders_${tag}_b$buckets"))
@@ -87,7 +85,7 @@ object Bucketing {
       pathRoot: String,
       identity: String,
       buckets: Int = 16): String = {
-    val tag = sanitize(identity)
+    val tag = graft.Fixture.tag(identity)
     val t = s"graft_bm25_postings_${tag}_b$buckets"
     if (!freshTable(spark, t, s"$pathRoot/bm25_postings_${tag}_b$buckets"))
       spark.read.parquet(postingsDir).write

@@ -68,9 +68,7 @@ object Tables {
     */
   private[graft] def sourceSignature(path: String): Option[String] =
     try {
-      val uri = new org.apache.hadoop.fs.Path(path).toUri
-      Some(uri).filter(u => u.getScheme == null || u.getScheme == "file")
-        .map(u => java.nio.file.Paths.get(u.getPath))
+      localPath(path)
         .filter(java.nio.file.Files.exists(_))
         .map { root =>
           val sb = new StringBuilder
@@ -92,6 +90,14 @@ object Tables {
       case _: java.io.IOException | _: java.io.UncheckedIOException |
           _: IllegalArgumentException => None
     }
+
+  /** The local path a bare or `file:` path names; None for any other
+    * scheme (an object store), which the local filesystem cannot see.
+    */
+  private def localPath(path: String): Option[java.nio.file.Path] =
+    Some(new org.apache.hadoop.fs.Path(path).toUri)
+      .filter(u => u.getScheme == null || u.getScheme == "file")
+      .map(u => java.nio.file.Paths.get(u.getPath))
 
   /** A parquet scan that infers its schema at most once per (JVM, source
     * state): first read infers and memoizes, later reads supply the cached
@@ -130,21 +136,29 @@ object Tables {
     * construction at most a couple of split sizes — tiny); otherwise
     * return the scan untouched, so AT ANY REAL CORPUS SIZE this is a
     * no-op and no exchange is added to the plan. Sizing is read from the
-    * local filesystem and fails toward "no fan-out" (object-store paths
-    * simply never fan out — their scans split upstream).
+    * local filesystem ([[sourceBytes]]) and fails toward "no fan-out"
+    * (object-store paths simply never fan out — their scans split
+    * upstream).
     */
   private[graft] def fanOutIfTiny(
       spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val bytes = try {
-      val p = new java.io.File(path)
-      if (p.isFile) p.length
-      else Option(p.listFiles).map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(Long.MaxValue)
-    } catch { case _: Exception => Long.MaxValue }
-    fanOutWidth(target, bytes, spark.sessionState.conf.filesMaxPartitionBytes)
+    fanOutWidth(target, sourceBytes(path), spark.sessionState.conf.filesMaxPartitionBytes)
       .fold(df)(df.repartition(_))
   }
+
+  /** Bytes of the source at a bare or `file:` path: the file's length, or
+    * the summed lengths of a directory's top-level files. Long.MaxValue
+    * (no fan-out) for any other scheme or an unreadable path.
+    */
+  private[graft] def sourceBytes(path: String): Long =
+    try {
+      localPath(path).map(_.toFile).fold(Long.MaxValue) { p =>
+        if (p.isFile) p.length
+        else Option(p.listFiles).map(_.filter(_.isFile).map(_.length).sum)
+          .getOrElse(Long.MaxValue)
+      }
+    } catch { case _: Exception => Long.MaxValue }
 
   /** The fan-out sizing decision, pure so the policy is spec-pinned:
     * None = leave the scan untouched, Some(w) = round-robin to w.

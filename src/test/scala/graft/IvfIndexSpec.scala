@@ -17,25 +17,31 @@ class IvfIndexSpec extends SparkSpec {
     (i.toLong, v.toSeq)
   }.toDF("vec_id", "embedding")
 
+  // the embeddings source stamp of an in-memory corpus under a fake sf dir
+  private def source(seed: Int) = s"sfX|${Fixture.fingerprint(emb(seed), "embeddings")}"
+
   test("ivf stamp: hyperparameter flip changes the stamp; content change changes the stamp") {
-    val a = SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 1)
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 1) == a,
+    val a = SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 1)
+    assert(SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 1) == a,
       "stamp must be deterministic for identical inputs")
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 3, iters = 1) != a, "k must be stamped")
-    assert(SparkEntry.ivfIndexStamp(emb(0), "sfX", k = 2, iters = 2) != a, "iters must be stamped")
+    assert(SparkEntry.ivfIndexStamp(source(0), k = 3, iters = 1) != a, "k must be stamped")
+    assert(SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 2) != a, "iters must be stamped")
     // same cardinality, same vec_ids, different vector CONTENT — the exact
     // staleness mode count+sum(vec_id) could not see
-    assert(SparkEntry.ivfIndexStamp(emb(1), "sfX", k = 2, iters = 1) != a,
+    assert(SparkEntry.ivfIndexStamp(source(1), k = 2, iters = 1) != a,
       "embedding content must be stamped")
   }
 
-  test("ensureIvfIndex: reused while stamp matches, REBUILT when k flips") {
-    val fixture = java.nio.file.Files.createTempDirectory("graft-ivf-stamp").toString
+  /** Build, re-ensure and k-flip one IVF fixture whose temp dir the index
+    * code addresses as `asFixture(localDir)`. */
+  private def reusedThenRebuilt(asFixture: String => String): Unit = {
+    val local = java.nio.file.Files.createTempDirectory("graft-ivf-stamp").toString
+    val fixture = asFixture(local)
     val df = emb(0)
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 2, iters = 1)
+    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
     assert(spark.read.parquet(s"$fixture/cells").count() == 2)
     def listState(): Set[(String, Long)] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(fixture, "lists"))
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(local, "lists"))
       try {
         import scala.jdk.CollectionConverters._
         s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
@@ -45,13 +51,21 @@ class IvfIndexSpec extends SparkSpec {
     }
     val before = listState()
     // same corpus + same hyperparameters: write-once — no file touched
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 2, iters = 1)
+    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
     assert(listState() == before, "matching stamp must not rewrite the index")
     // hyperparameter change: the stamp mismatches and the index is rebuilt
     // with the new model — the silent-stale-model trap the stamp closes
-    SparkEntry.ensureIvfIndex(df, "sfX", fixture, k = 3, iters = 1)
+    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 3, iters = 1)
     assert(spark.read.parquet(s"$fixture/cells").count() == 3,
       "k flip must rebuild the index under the new model")
+  }
+
+  test("ensureIvfIndex: reused while stamp matches, REBUILT when k flips") {
+    reusedThenRebuilt(identity)
+  }
+
+  test("ensureIvfIndex at a file: URI: reused while stamp matches, REBUILT when k flips") {
+    reusedThenRebuilt(local => s"file:$local")
   }
 
   test("ivfIndexReadable: mid-write debris reads as bootstrap, not as an index") {

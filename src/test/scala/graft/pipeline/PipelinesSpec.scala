@@ -184,31 +184,34 @@ class PipelinesSpec extends SparkSpec {
       s"prefix row-evaluations = ${acc.value}, expected one pass (4) + isEmpty probe")
   }
 
-  test("StreamPipeline: decode -> enrich -> fan-out with upsert agg sinks") {
+  test("StreamPipeline: fan-out drops malformed rows, merges window updates") {
     val out = tmpDir() + "/out"
     val ckpt = tmpDir() + "/ckpt"
     implicit val ctx = spark.sqlContext
     val stream = MemoryStream[String]
     val enriched = StreamPipeline.decode(stream.toDF().toDF("value"))
-    val queries = StreamPipeline.start(enriched, out, ckpt)
+    val query = StreamPipeline.startFanOut(enriched, out, ckpt)
     try {
       stream.addData(
         """{"event_id": 1, "ts": "2024-01-01 10:01:00", "user_id": 3, "event_type": "click", "value": 42.0, "props": "{\"k\": 7}"}""",
         """{"event_id": 2, "ts": "2024-01-01 10:02:00", "user_id": 4, "event_type": "purchase", "value": 99.0, "props": "{\"k\": 1}"}""",
         "not json at all")
-      queries.foreach(_.processAllAvailable())
-      val detail = spark.read.parquet(s"$out/detail")
+      query.processAllAvailable()
+      val detail = StreamPipeline.readDetail(spark, out)
       assert(detail.count() == 2) // malformed row dropped by validation
       assert(detail.filter($"category" === "Commerce").count() == 1)
-      // second micro-batch updates the same 5-min window -> upsert, not append
+      // second micro-batch lands in the same 5-min window: its partials
+      // merge with the first batch's on read, not as a second window row
       stream.addData(
         """{"event_id": 3, "ts": "2024-01-01 10:03:00", "user_id": 5, "event_type": "click", "value": 10.0, "props": "{\"k\": 2}"}""")
-      queries.foreach(_.processAllAvailable())
-      val typeStats = spark.read.parquet(s"$out/type_stats")
-      val clickRow = typeStats.filter($"event_type_clean" === "CLICK")
+      query.processAllAvailable()
+      val clickRow = graft.streaming.StreamingAggs.finishStats(
+        Sinks.readMergedPartials(spark, s"$out/type_stats",
+          Seq("window_start", "event_type_clean", "doc_id"), Seq("cnt", "sum_cents", "n_vals")))
+        .filter($"event_type_clean" === "CLICK")
         .select("cnt").as[Long].collect().toSeq
-      assert(clickRow == Seq(2L), s"expected upserted count 2, got $clickRow")
-    } finally queries.foreach(_.stop())
+      assert(clickRow == Seq(2L), s"expected merged count 2, got $clickRow")
+    } finally query.stop()
   }
 
   test("startFanOut executes the shared enrichment prefix ONCE per micro-batch") {

@@ -44,4 +44,17 @@ class FanOutWidthSpec extends AnyFunSuite {
   test("unreadable sizing (Long.MaxValue sentinel) fails toward no fan-out") {
     assert(Tables.fanOutWidth(32, Long.MaxValue, split).isEmpty)
   }
+
+  test("sourceBytes: a file: URI sizes as its plain path; an object-store path as Long.MaxValue") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout-size")
+    java.nio.file.Files.writeString(dir.resolve("a.parquet"), "12345")
+    java.nio.file.Files.writeString(dir.resolve("b.parquet"), "123")
+    val plain = Tables.sourceBytes(dir.toString)
+    assert(plain == 8L)
+    assert(Tables.sourceBytes(s"file:$dir") == plain)
+    assert(Tables.sourceBytes(dir.toUri.toString) == plain) // file:///…
+    assert(Tables.sourceBytes(s"$dir/a.parquet") == 5L)
+    assert(Tables.sourceBytes(s"file:$dir/a.parquet") == 5L)
+    assert(Tables.sourceBytes("s3a://bucket/lake/documents.parquet") == Long.MaxValue)
+  }
 }
