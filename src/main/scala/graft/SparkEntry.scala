@@ -1603,15 +1603,28 @@ object SparkEntry {
       // stream through its partial aggregate; rolling up from the
       // ~6-row (flag, status) pre-aggregate is exact by associativity
       // (BIGINT counts/cents sums) and type-identical (SUM(BIGINT)).
+      // One zero row (NULL keys, b_cnt 0, NULL sum) joins the
+      // pre-aggregate, so the cube's () set has input even when lineitem
+      // is empty: Spark then returns no row at all, DuckDB the () row with
+      // COUNT(*) = 0. Elsewhere the zero row adds 0 to a count and nothing
+      // to a sum; a group it makes alone has cnt 0 (every real cell counts
+      // >= 1) and is filtered out unless it is the () row (gid 3).
+      val zero = s.range(1).select(
+        lit(null).cast("string").as("l_returnflag"),
+        lit(null).cast("string").as("l_linestatus"),
+        lit(0L).as("b_cnt"), lit(null).cast("long").as("b_sum_qty_c"))
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           count(lit(1)).as("b_cnt"),
           sum(cents(col("l_quantity"))).as("b_sum_qty_c"))
+        .unionByName(zero)
         .cube("l_returnflag", "l_linestatus")
         .agg(
           sum(col("b_cnt")).as("cnt"),
-          sum(col("b_sum_qty_c")).as("sum_qty_c"))
+          sum(col("b_sum_qty_c")).as("sum_qty_c"),
+          grouping_id("l_returnflag", "l_linestatus").as("gid"))
+        .filter(col("cnt") > 0 || col("gid") === 3)
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).as("f"),
           coalesce(col("l_linestatus"), lit("ALL")).as("st"),
@@ -3006,14 +3019,18 @@ object SparkEntry {
       // coarsening of the refinement, and a NULL DATA value stays a
       // grouped value (grouping() = 0) in both forms. Types unchanged
       // (SUM(BIGINT) = BIGINT). The oracle still states the single
-      // GROUPING SETS pass — same rows, hash-verified.
+      // GROUPING SETS pass — same rows, hash-verified. The zero row in
+      // `base` keeps the () row over an empty lineitem, as in q33; HAVING
+      // drops any other group it makes alone.
       s2.sql(
         s"""WITH base AS (
            |  SELECT l_returnflag, l_linestatus, l_shipmonth,
            |    COUNT(*) AS b_cnt,
            |    SUM(${ExactAgg.Sql.cents("l_quantity")}) AS b_sum_qty_c
            |  FROM li
-           |  GROUP BY l_returnflag, l_linestatus, l_shipmonth)
+           |  GROUP BY l_returnflag, l_linestatus, l_shipmonth
+           |  UNION ALL
+           |  SELECT NULL, NULL, NULL, 0L, CAST(NULL AS BIGINT))
            |SELECT COALESCE(l_returnflag, 'ALL') AS f,
            |  COALESCE(l_linestatus, 'ALL') AS st,
            |  COALESCE(l_shipmonth, 'ALL') AS sm,
@@ -3025,6 +3042,7 @@ object SparkEntry {
            |FROM base
            |GROUP BY GROUPING SETS (
            |  (l_returnflag, l_linestatus), (l_returnflag), (l_shipmonth), ())
+           |HAVING SUM(b_cnt) > 0 OR grouping_id() = 7
            |ORDER BY gf, gst, gsm, f, st, sm""".stripMargin)
     },
     // ---- snapshot-isolated lake read (round-13 verdict #1): the reader

@@ -355,12 +355,11 @@ object Text {
     * relation (it feeds the vocabulary aggregate, already materialized by
     * the guard count, AND the scoring join), and Spark offers no hook to
     * unpersist when a lazily-returned DataFrame is finally consumed — so
-    * the cached relation lives until the caller clears it. Callers that
-    * consume the result within one scope should prefer
-    * [[boilerplateStatsManaged]], which unpersists deterministically;
-    * long-lived callers of this form own the cleanup
-    * (`spark.catalog.clearCache()` or unpersisting via the catalog), as
-    * the bench harness does between queries.
+    * the cached relation lives until the caller clears it. Callers own the
+    * cleanup (`spark.catalog.clearCache()` or unpersisting via the
+    * catalog), as the bench harness does between queries; a loop that
+    * calls this form without it keeps one disk-persisted relation per call
+    * for the SparkContext lifetime.
     */
   def boilerplateStats(
       docs: DataFrame,
@@ -369,45 +368,7 @@ object Text {
       n: Int = 3,
       dfThreshold: Long = 10L,
       maxRatioE4: Long = 5000L,
-      maxBroadcastVocab: Long = 5000000L): DataFrame =
-    buildBoilerplateStats(docs, textCol, idCol, n, dfThreshold, maxRatioE4,
-      maxBroadcastVocab)._1
-
-  /** [[boilerplateStats]] with deterministic cache cleanup: `use` runs with
-    * the scored frame (consume it — actions inside the scope hit the shared
-    * `perDoc` cache), and the cached relation is unpersisted on the way
-    * out, success or failure. This is the form for library callers and
-    * soak loops, where the leaked cache of the raw form would accumulate
-    * one disk-persisted relation per call for the SparkContext lifetime
-    * (spec: `TextSpec` "managed boilerplate unpersists").
-    */
-  def boilerplateStatsManaged[T](
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      dfThreshold: Long = 10L,
-      maxRatioE4: Long = 5000L,
-      maxBroadcastVocab: Long = 5000000L)(use: DataFrame => T): T = {
-    val (out, perDoc) = buildBoilerplateStats(docs, textCol, idCol, n,
-      dfThreshold, maxRatioE4, maxBroadcastVocab)
-    // blocking: the contract is "no cache outlives the scope", not "a
-    // cleanup was scheduled" — the async form would let a tight soak loop
-    // race ahead of its own unpersists
-    try use(out) finally perDoc.unpersist(blocking = true)
-  }
-
-  /** Shared body: returns (scored frame, the persisted perDoc relation the
-    * caller is responsible for unpersisting).
-    */
-  private def buildBoilerplateStats(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      dfThreshold: Long,
-      maxRatioE4: Long,
-      maxBroadcastVocab: Long): (DataFrame, DataFrame) = {
+      maxBroadcastVocab: Long = 5000000L): DataFrame = {
     val grams = explodeNgrams(docs.select(col(idCol), col(textCol)), textCol, n)
       .select(col(idCol), Dedup.tokenHash64(col("ng")).as("h"))
     val perDoc = grams.groupBy(idCol, "h").agg(count(lit(1)).as("c")).persist()
@@ -419,7 +380,7 @@ object Text {
     val vocabSide =
       if (boilerVocab.count() <= maxBroadcastVocab) broadcast(boilerVocab)
       else boilerVocab
-    val out = perDoc.join(vocabSide, Seq("h"), "left")
+    perDoc.join(vocabSide, Seq("h"), "left")
       .groupBy(idCol)
       .agg(
         sum(col("c")).as("n_grams"),
@@ -428,7 +389,6 @@ object Text {
       // int64 0/1, not BOOLEAN: oracled output columns stay inside the
       // proven hasher-safe type envelope (see q39's note in SparkEntry)
       .withColumn("keep", (col("boiler_e4") <= maxRatioE4).cast("long"))
-    (out, perDoc)
   }
 
   /** Non-overlapping k-token span segmentation pattern: each match greedily

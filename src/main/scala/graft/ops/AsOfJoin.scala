@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,71 +49,19 @@ object AsOfJoin {
       .partitionBy("__k")
       .orderBy(col("__t").asc, col("__is_right").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    attachAtomicPayload(l.unionByName(r, allowMissingColumns = true), payload, w)
-      .drop("__k", "__t", "__is_right")
-  }
-
-  /** Fill payload columns with the values of the SINGLE most-recent right
-    * row, atomically: ONE `last(_, ignoreNulls)` over a struct of the whole
-    * payload. The earlier per-column fold skipped a matched right row's
-    * NULL payload value (silently falling back to an OLDER row's value)
-    * and, with multiple payload columns, could stitch values from
-    * DIFFERENT right rows onto one left row — both violations of the
-    * documented single-right-row as-of contract (review finding). Left
-    * rows contribute a NULL struct (skipped by ignoreNulls); a right row's
-    * struct is non-null even when every payload field inside is null, so
-    * a matched right row with null values is attached as-is — exactly what
-    * DuckDB ASOF JOIN does.
-    */
-  private def attachAtomicPayload(
-      unioned: DataFrame,
-      payload: Seq[String],
-      w: org.apache.spark.sql.expressions.WindowSpec): DataFrame = {
-    val filled = unioned.withColumn("__pay",
+    // fill the payload from the SINGLE most-recent right row, atomically:
+    // ONE `last(_, ignoreNulls)` over a struct of the whole payload. A
+    // per-column fold would skip a matched right row's NULL value (falling
+    // back to an OLDER row's) and, with several payload columns, could
+    // stitch values from DIFFERENT right rows onto one left row. Left rows
+    // contribute a NULL struct (skipped by ignoreNulls); a right row's
+    // struct is non-null even when every field inside is null, so a matched
+    // right row with null values is attached as-is, as DuckDB ASOF JOIN does.
+    val filled = l.unionByName(r, allowMissingColumns = true).withColumn("__pay",
       last(when(col("__is_right") === 1, struct(payload.map(col): _*)), ignoreNulls = true)
         .over(w))
     payload.foldLeft(filled) { (df, p) => df.withColumn(p, col("__pay").getField(p)) }
       .filter(col("__is_right") === 0)
-      .drop("__pay")
-  }
-
-  /** Skew-resistant variant of [[asOf]]: the per-key window cannot be split
-    * by AQE, so one hot key (a user with 10⁸ events) serializes on one
-    * task. Salting splits it: each LEFT row hashes to one of `nSalts`
-    * sub-partitions, each RIGHT row is replicated into ALL of them, and
-    * the window runs per (key, salt). Every salt partition sees the full
-    * right timeline, so per-row results are identical to [[asOf]]
-    * (spec-asserted); cost is right-side shuffle volume × nSalts — the
-    * standard trade when the left side is the skewed one (events ≫ dims).
-    */
-  def asOfSalted(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      leftTime: String,
-      rightTime: String,
-      payload: Seq[String],
-      nSalts: Int): DataFrame = {
-    require(nSalts >= 1, s"nSalts must be >= 1, got $nSalts")
-    val l = left
-      .withColumn("__k", col(leftKey))
-      .withColumn("__salt", pmod(hash(struct(left.columns.map(col): _*)), lit(nSalts)))
-      .withColumn("__t", col(leftTime).cast("timestamp"))
-      .withColumn("__is_right", lit(0))
-    val r = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .select(
-        col(rightKey).as("__k") +:
-          col(rightTime).cast("timestamp").as("__t") +:
-          lit(1).as("__is_right") +:
-          payload.map(col): _*)
-      .withColumn("__salt", explode(array((0 until nSalts).map(lit): _*)))
-    val w = Window
-      .partitionBy("__k", "__salt")
-      .orderBy(col("__t").asc, col("__is_right").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    attachAtomicPayload(l.unionByName(r, allowMissingColumns = true), payload, w)
-      .drop("__k", "__t", "__is_right", "__salt")
+      .drop("__pay", "__k", "__t", "__is_right")
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -36,14 +36,21 @@ object JsonLake {
     * JSON value (the array), exploding into one row per record.
     */
   def readArrayLake(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .option("multiLine", "true")
-      .schema(schema)
-      .json(s"$path/chunk=*/*.txt")
+    arrayFiles(spark).schema(schema).json(path)
 
   /** Schema-inference variant (the reference's own read path). */
   def readArrayLakeInferred(spark: SparkSession, path: String): DataFrame =
+    arrayFiles(spark).json(path)
+
+  /** Every `.txt` file under the lake root. The root is passed as a plain
+    * directory, not a `chunk=*` glob: Spark probes a glob path for a
+    * streaming-sink log and logs a `FileNotFoundException` at WARN on every
+    * read. Recursive lookup also turns off partition discovery, so `chunk`
+    * stays out of the schema.
+    */
+  private def arrayFiles(spark: SparkSession): DataFrameReader =
     spark.read
       .option("multiLine", "true")
-      .json(s"$path/chunk=*/*.txt")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*.txt")
 }

@@ -213,6 +213,51 @@ class QualityClassifierSpec extends SparkSpec {
     assert(preds == Seq("aa"), preds.toString)
   }
 
+  test("classifyMulti equals per-class featureSum scoring with an alphabetical argmax") {
+    // 8 distinct classes, each with its own dim (2048 + k % 5, so the
+    // per-class modulo runs), plus 4 twins that copy classes 0-3 under
+    // later names: wherever an original wins, its twin ties at the max
+    // and `pred` must be the alphabetically first of the two
+    val distinct = (0 until 8).map { k =>
+      val dim = 2048 + k % 5
+      f"cls$k%02d" -> QualityClassifier.Model(
+        QualityClassifier.synthesizeWeights(dim).map(_ + k), bias = k.toLong)
+    }
+    val twins = (0 until 4).map(k => f"cls${k + 8}%02d" -> distinct(k)._2)
+    val models = distinct ++ twins
+    val classes = models.map(_._1).sorted
+    val docs = (0L until 40L).map { i =>
+      (i, (0L to i % 9).map(j => s"w${(i * 7 + j * 13) % 23}").mkString(" "))
+    }.toDF("doc_id", "text")
+
+    // reference: one single-class featureSum per class, the half-up e4
+    // mean and the argmax, computed here row by row
+    val sums = docs.select(col("doc_id") +: models.map { case (c, m) =>
+      QualityClassifier.featureSum(col("text"), m).as(c) }: _*)
+    val expected = sums.collect().map { r =>
+      val scores = models.map { case (c, m) =>
+        val s = r.getStruct(r.fieldIndex(c)) // (n_feats, wsum)
+        val (n, w) = (s.getLong(0), s.getLong(1))
+        c -> Math.floorDiv((w + m.bias) * 10000 * 2 + n, 2 * n)
+      }.toMap
+      val n = r.getStruct(1).getLong(0)
+      val best = scores.values.max
+      (r.getLong(0), n, classes.map(scores), classes.find(scores(_) == best).get)
+    }.sortBy(_._1).toSeq
+
+    val out = QualityClassifier.classifyMulti(docs, "text", models)
+    val got = out.select(col("doc_id") +: col("n_feats") +: classes.map(c => col(s"score_${c}_e4")) :+
+        col("pred"): _*)
+      .collect().map { r =>
+        (r.getLong(0), r.getLong(1),
+          classes.indices.map(i => r.getLong(2 + i)), r.getString(2 + classes.size))
+      }.sortBy(_._1).toSeq
+    assert(got.size == 40)
+    assert(got == expected)
+    // the tiebreak ran: some row's max is shared by an original and its twin
+    assert(expected.exists { case (_, _, sc, _) => sc.count(_ == sc.max) > 1 })
+  }
+
   test("trainCentroidMulti refuses null class labels") {
     val docs = Seq((1L, "a b", "en"), (2L, "c d", null))
       .toDF("doc_id", "text", "cls")

@@ -188,34 +188,6 @@ class TextSpec extends SparkSpec {
     assert(a.forall(_._5 == 0L), a.toString)
   }
 
-  test("managed boilerplate unpersists its cached intermediate; raw form documents the leak") {
-    // the raw form's returned plan reads a persisted perDoc relation Spark
-    // gives us no consumption hook to release — the managed form owns the
-    // cleanup (round-6 advice: soak/library callers were accumulating one
-    // disk-persisted relation per call for the context lifetime)
-    val docs = (1L to 12L).map(i => (i, s"shared prefix words here unique$i"))
-      .toDF("doc_id", "t")
-    // track RDD IDS, not global counts: the ContextCleaner may unpersist
-    // an earlier suite's dropped cache entries at any moment, so a
-    // count-based before/after comparison is racy (observed flake:
-    // "3 was not greater than 3" when a stale entry was cleaned inside
-    // the scope). The managed scope's OWN ids are the claim under test.
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    var scoped: Set[Int] = Set.empty
-    val rows = Text.boilerplateStatsManaged(docs, "t", "doc_id",
-      n = 3, dfThreshold = 10L) { out =>
-      val r = out.count()
-      // inside the scope the shared intermediate IS cached (both the
-      // vocabulary aggregate and the scoring join read it)
-      scoped = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-      assert(scoped.nonEmpty, "the managed scope must cache its intermediate")
-      r
-    }
-    assert(rows == 12L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet.toSet intersect scoped).isEmpty,
-      "managed scope must not leak its cached intermediate")
-  }
-
   test("bpeishCount segments contractions, space-attached words, digit and punct runs") {
     // "don't stop 123 now!!" -> don | 't | " stop" | " 123" | " now" | !!
     val out = Seq(

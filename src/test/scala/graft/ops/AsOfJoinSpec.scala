@@ -47,9 +47,6 @@ class AsOfJoinSpec extends SparkSpec {
     val out = AsOfJoin.asOf(left, right, "key", "rk", "ts", "rts", Seq("a", "b"))
       .select("a", "b").as[(Option[Int], Option[Int])].head()
     assert(out == ((None, Some(5))), s"torn payload: $out")
-    val salted = AsOfJoin.asOfSalted(left, right, "key", "rk", "ts", "rts", Seq("a", "b"), 3)
-      .select("a", "b").as[(Option[Int], Option[Int])].head()
-    assert(salted == ((None, Some(5))))
   }
 
   test("asOf never matches NULL keys (join-on-equality semantics)") {
@@ -65,21 +62,6 @@ class AsOfJoinSpec extends SparkSpec {
     val out = AsOfJoin.asOf(left, right, "key", "rkey", "ts", "rts", Seq("v"))
       .select("tag", "v").as[(String, Option[Double])].collect().toMap
     assert(out == Map("keyed" -> Some(1.0), "nullkey" -> None))
-  }
-
-  test("asOfSalted produces row-identical results to asOf") {
-    val left = (1L to 200L).map(i =>
-      (i % 3, ts(f"2024-01-01 ${i % 24}%02d:${i % 60}%02d:00"), s"e$i"))
-      .toDF("key", "ts", "tag")
-    val right = (1L to 30L).map(i =>
-      (i % 3, ts(f"2024-01-01 ${(i * 7) % 24}%02d:00:00"), i.toDouble))
-      .toDF("rkey", "rts", "v")
-    val plain = AsOfJoin.asOf(left, right, "key", "rkey", "ts", "rts", Seq("v"))
-      .select("tag", "v").as[(String, Option[Double])].collect().toMap
-    val salted = AsOfJoin.asOfSalted(left, right, "key", "rkey", "ts", "rts", Seq("v"), nSalts = 4)
-      .select("tag", "v").as[(String, Option[Double])].collect().toMap
-    assert(salted == plain)
-    assert(salted.size == 200)
   }
 
   test("asOf keeps every left row exactly once") {

@@ -1187,6 +1187,75 @@ class IngestPipelineSpec extends SparkSpec with org.scalatest.LoneElement {
     assert(spark.read.parquet(p.docLake).select("doc_id").head().getLong(0) == 1L)
   }
 
+  test("all gates in one batch: each drops exactly its own plant, only the control lands") {
+    import graft.functions.{LangModel, QualityClassifier}
+    val p = tmpRoot()
+    def vecs(rows: (Long, Seq[Float])*) = rows.toDF("vec_id", "embedding")
+      .select(col("vec_id"), col("embedding").cast("array<float>"))
+    // history: the fp and band indexes bootstrap from batch 0, then the
+    // eval blocklist and the IVF index over batch 0's vectors are installed
+    val hist = Seq((1L, tA), (2L, tB), (3L, tE)).toDF("doc_id", "text")
+    val histEmb = vecs((1L, Seq(0.9f, 0.1f, 0f, 0f)), (2L, Seq(0.1f, 0.95f, 0.2f, 0f)))
+    assert(IngestPipeline.ingestBatch(spark, p, hist, 0L, embedBatch = Some(histEmb),
+      nearDup = nearCfg) == 3L)
+    Dedup.writeEvalIndex(Seq((900L, tC)).toDF("doc_id", "text"), p.evalIndex)
+    Similarity.writeIvfIndex(histEmb,
+      Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f)), p.ivfIndex)
+
+    // one plant per gate, plus the control
+    val poison = Seq.fill(12)("qpoison").mkString(" ") + " filler words here now"
+    val gibberish = "the zzqa the zzqb the zzqc the zzqd the zzqe"
+    val b1 = Seq(
+      (101L, "completely novel content goes here today"), // control
+      (102L, tA),                                         // exact replay
+      (103L, tB.replace("dog", "cat")),                   // one-word near-replay
+      (104L, s"leaked copy $tC with extra suffix words"), // verbatim eval quote
+      (105L, tD),                                         // copies doc 1's embedding
+      (106L, poison),                                     // poisoned features
+      (107L, gibberish)                                   // out of the LM's distribution
+    ).toDF("doc_id", "text")
+    val b1Emb = vecs((101L, Seq(0f, 0f, 1f, 0f)), (105L, Seq(0.9f, 0.1f, 0f, 0f)))
+
+    // the classifier: +1 everywhere but the two poison buckets, so the
+    // plant (23 of its 31 features poisoned) scores about -4800 and every
+    // other doc +10000
+    val w = Array.fill(QualityClassifier.DefaultDim)(1L)
+    Seq("qpoison", "qpoison qpoison").foreach(f =>
+      w(QualityClassifier.featureBucket(f, w.length)) = -1L)
+    val quality = IngestPipeline.QualityGateConfig(QualityClassifier.Model(w, 0L), -2000L)
+    assert(QualityClassifier.classify(b1, "text", quality.model, quality.minScoreE4)
+      .filter(col("label") =!= "keep").select("doc_id").as[Long].collect().toSeq == Seq(106L))
+    // the LM learns every fluent text of this spec; the threshold sits
+    // midway between the worst fluent doc and the gibberish
+    val fluent = b1.filter(!col("doc_id").isin(106L, 107L)).unionByName(hist)
+    val lm = s"${p.root}/lm"
+    LangModel.train(fluent, "text", lm)
+    def ppl(df: DataFrame) = LangModel.scoreDocs(df, "text", "doc_id", lm)
+      .agg(min("ppl_e4"), max("ppl_e4")).head()
+    val worstFluent = ppl(fluent).getLong(1)
+    val gib = ppl(b1.filter(col("doc_id") === 107L)).getLong(0)
+    assert(worstFluent < gib, s"no perplexity separation: $worstFluent vs $gib")
+    val perplexity = IngestPipeline.PerplexityGateConfig(lm, (worstFluent + gib) / 2)
+
+    var funnel: Option[IngestPipeline.FunnelReport] = None
+    assert(IngestPipeline.ingestBatch(spark, p, b1, 1L,
+      embedBatch = Some(b1Emb),
+      nearDup = nearCfg,
+      semanticDedup = Some(IngestPipeline.SemanticDedupConfig(nProbe = 2, minSim = 0.95)),
+      decontam = Some(IngestPipeline.DecontamConfig()),
+      qualityGate = Some(quality),
+      perplexityGate = Some(perplexity),
+      funnelSink = Some(r => funnel = Some(r))) == 1L)
+    assert(lakeState(p) == Seq((1L, 0L), (2L, 0L), (3L, 0L), (101L, 1L)))
+    val f = funnel.get
+    // input 7: the classifier drops the poison, perplexity the gibberish,
+    // the fp index the replay, decontam the quote, the band index the
+    // near-replay and the vector gate the copied embedding
+    assert(Seq(f.input, f.afterLang, f.afterQuality, f.afterClassifier, f.afterPerplexity,
+      f.afterIntraDedup, f.afterExactIndex, f.afterDecontam, f.afterRetrievalDecontam,
+      f.afterNearDup, f.accepted) == Seq(7L, 7L, 7L, 6L, 5L, 5L, 4L, 3L, 3L, 2L, 1L), f.toString)
+  }
+
   test("feed-cardinality sketch: loop equals full-rescan, duplicate feeds are " +
       "no-ops, k is part of the artifact identity") {
     import graft.functions.Kmv
