@@ -881,8 +881,6 @@ object SparkEntry {
     ensureBm25EvalIndex(s, dir)
   }
 
-  private def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(12,2)")
-
   // Exact-arithmetic aggregate helpers (why-docs in graft.functions.ExactAgg:
   // integer cents/e4/e6 sums and an integer half-up mean, mirrored verbatim
   // in the oracle SQL so no DECIMAL rendering or float rounding ever crosses

@@ -89,20 +89,6 @@ object Dedup {
         MinHash.signatureNative(Text.tokens(col(textCol)), nHashes, seed).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** Wide-column variant of [[minhashSignatures]]: one column per hash
-    * (`m0..m{n-1}`) instead of an array, for callers whose downstream
-    * expressions want plain columns. Item extraction from the native
-    * signature is codegen'd (`GetArrayItem`).
-    */
-  def minhashSignaturesWide(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      nHashes: Int,
-      seed: Long): DataFrame =
-    minhashSignatures(docs, textCol, idCol, nHashes, seed)
-      .select(col("id") +: (0 until nHashes).map(i => col("sig").getItem(i).as(s"m$i")): _*)
-
   /** MinHash/LSH near-duplicate candidate pairs with estimated Jaccard
     * (fraction of matching signature positions), filtered to
     * `minEstJaccard`.

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType}
@@ -217,46 +216,32 @@ object Pq {
       refine: Int = 0,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    val qRows = queries.select(col(idCol), col(embCol)).orderBy(idCol).collect()
-    require(qRows.nonEmpty, "pqTopK needs at least one query")
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-
-    import spark.implicits._
-    val (qTable, adc) = adcKit(spark, model, qIds, qVecs)
-    val coded = corpus.select(col(idCol).as("vec_id"), encodeNative(col(embCol), model).as("codes"))
-    val short = math.max(k, refine)
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    val shortlist = coded
-      .join(qTable, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adc.as("sim"))
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= short)
-    if (refine <= k) {
-      shortlist.select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("sim"), 4).as("sim"), col("rank"))
-    } else {
+    val codec = new AdcCodec(model)
+    val kit = codec.bind(queries, idCol, embCol)
+    val shortlist = Ivf.topK(
+      Ivf.scoreAll(Ivf.encoded(corpus, codec, idCol, embCol), kit), math.max(k, refine))
+    if (refine <= k) shortlist
+    else {
       // exact re-rank: only the shortlist rows fetch their float vectors.
       // The shortlist is bounded at queries × refine BY CONSTRUCTION (the
       // window filter), so it broadcasts — the corpus side streams through
       // a broadcast-hash join with no shuffle, never a corpus-wide SMJ
+      val spark = corpus.sparkSession
+      import spark.implicits._
       val qVecTable = broadcast(
-        qIds.zip(qVecs).toSeq.map { case (id, v) => (id, v.toSeq) }
+        kit.qIds.zip(kit.qVecs).toSeq.map { case (id, v) => (id, v.toSeq) }
           .toDF("query_id", "query_vec")
           .select(col("query_id"), col("query_vec").cast("array<float>")))
-      val wExact = Window.partitionBy("query_id").orderBy(col("esim").desc, col("vec_id"))
-      broadcast(shortlist.select(col("query_id"), col("vec_id")))
-        .join(corpus.select(col(idCol).as("vec_id"), col(embCol).as("cand_vec")), Seq("vec_id"))
-        .join(qVecTable, Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          CosineSimilarity.cosineNative(col("query_vec"), col("cand_vec")).as("esim"))
-        .withColumn("rank", row_number().over(wExact))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(col("esim"), 4).as("sim"), col("rank"))
+      Ivf.topK(
+        broadcast(shortlist.select(col("query_id"), col("neighbor_id").as("vec_id")))
+          .join(corpus.select(col(idCol).as("vec_id"), col(embCol).as("cand_vec")), Seq("vec_id"))
+          .join(qVecTable, Seq("query_id"))
+          .select(col("query_id"), col("vec_id"),
+            CosineSimilarity.cosineNative(col("query_vec"), col("cand_vec")).as("sim")),
+        k)
     }
   }
+
   /** Persist an IVF-PQ index — the billion-scale composition: coarse cells
     * prune the search space (directory pruning, exactly as the int8 index),
     * PQ codes shrink the resident lists to `m` bytes/vector. Layout:
@@ -274,25 +259,8 @@ object Pq {
       corpus: DataFrame,
       centroids: Array[Array[Float]],
       model: PqModel,
-      path: String): Unit = {
-    val centsIdx = centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    corpus.select(
-        col("vec_id"),
-        encodeNative(col("embedding"), model).as("codes"),
-        Similarity.nearestCentroid(col("embedding"), centsIdx).as("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$path/lists")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Seq((model.dims, model.m, model.k, model.codebooks.toSeq, PqVersion))
-      .toDF("dims", "m", "k", "codebooks", "pq_version")
-      .select(col("dims"), col("m"), col("k"),
-        col("codebooks").cast("array<float>"), col("pq_version"))
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    spark.createDataFrame(centsIdx.map { case (i, v) => (i, v.toSeq) }.toSeq)
-      .toDF("cell_id", "cell_vec")
-      .select(col("cell_id"), col("cell_vec").cast("array<float>"))
-      .write.mode("overwrite").parquet(s"$path/cells")
-  }
+      path: String): Unit =
+    Ivf.write(corpus, centroids, new AdcCodec(model), path)
 
   /** Load a persisted index's PQ model. Fails loudly on a scheme-version
     * mismatch: codes written under one training/encoding scheme must never
@@ -328,16 +296,8 @@ object Pq {
   def appendToIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      newBatch: DataFrame): Unit = {
-    val model = readPqModel(spark, path)
-    val centsIdx = Similarity.readIvfCentroids(spark, path).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }
-    newBatch.select(
-        col("vec_id"),
-        encodeNative(col("embedding"), model).as("codes"),
-        Similarity.nearestCentroid(col("embedding"), centsIdx).as("cell_id"))
-      .write.mode("append").partitionBy("cell_id").parquet(s"$path/lists")
-  }
+      newBatch: DataFrame): Unit =
+    Ivf.append(spark, path, new AdcCodec(readPqModel(spark, path)), newBatch)
 
   /** Serve top-k ANN from a persisted [[writeIvfPqIndex]] index. Same
     * serving shape as [[Similarity.queryIvfIndex]] — probes per query
@@ -360,54 +320,9 @@ object Pq {
       nProbe: Int,
       k: Int,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame =
-    queryIvfPqIndexWith(spark, path, readPqModel(spark, path), queries, nProbe, k, idCol, embCol)
-
-  /** [[queryIvfPqIndex]] with a pre-loaded model — lets the recall monitor
-    * (which needs the model for its exhaustive side anyway) pay the
-    * codebooks read once. */
-  private def queryIvfPqIndexWith(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      model: PqModel,
-      queries: DataFrame,
-      nProbe: Int,
-      k: Int,
-      idCol: String,
-      embCol: String): DataFrame = {
-    val qRows = queries.select(col(idCol), col(embCol)).orderBy(idCol).collect()
-    require(qRows.nonEmpty, "queryIvfPqIndex needs at least one query")
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    val (qIdx, adcCol) = adcKit(spark, model, qIds, qVecs)
-
-    val cents = graft.sources.Tables.parquetScan(spark, s"$path/cells")
-    val wProbe = Window.partitionBy(idCol).orderBy(col("csim").desc, col("cell_id"))
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", CosineSimilarity.cosineNative(col(embCol), col("cell_vec")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col(idCol).as("query_id"), col("cell_id"))
-      .join(qIdx, Seq("query_id"))
-    // bounded collect: nQueries × nProbe probe-plan parameters (the
-    // ivfIndexProbeScores contract — recomputing the cheap probe subtree
-    // beats pinning it, A/B-measured there)
-    val probedCells = probes.select("cell_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val lists = graft.sources.Tables.parquetScan(spark, s"$path/lists")
-      .filter(col("cell_id").isInCollection(probedCells))
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    lists
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"), adcCol.as("sim"))
-      // at-least-once absorber for replayed appends, as in the int8 index
-      .distinct()
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("sim"), 4).as("sim"), col("rank"))
+      embCol: String = "embedding"): DataFrame = {
+    val kit = new AdcCodec(readPqModel(spark, path)).bind(queries, idCol, embCol)
+    Ivf.topK(Ivf.probeScores(spark, path, kit, nProbe), k)
   }
 
   /** Re-index migration for a tripped PQ drift monitor — the
@@ -419,7 +334,8 @@ object Pq {
     * new codebooks keep the old model's (dims, m, k) shape: the serving
     * tier's storage budget is the operator's choice, not the monitor's.
     * Crash windows and single-writer contract exactly as the int8
-    * migration (recover with [[recoverIvfPqIndex]] on startup).
+    * migration (`PersistedIndex.Ivf.recover` restores a parked swap on
+    * startup for both families).
     */
   def migrateIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -437,12 +353,6 @@ object Pq {
       val model = train(corpus, initCodebooks(corpus, old.dims, old.m, old.k), iters = pqIters)
       writeIvfPqIndex(corpus, cents, model, next)
     }
-
-  /** Restore an index a crashed [[migrateIvfPqIndex]] swap left parked at
-    * `<path>__old`. No-op when the live path exists. */
-  def recoverIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    IndexProtocol.recoverReplace(spark, path)
 
   /** Recall health of a persisted [[writeIvfPqIndex]] index — the q79
     * monitor's contract for the PQ family: per query, how many of the
@@ -462,53 +372,72 @@ object Pq {
       nProbe: Int,
       k: Int,
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val model = readPqModel(spark, path)
-    val served = queryIvfPqIndexWith(spark, path, model, queries, nProbe, k, idCol, embCol)
-      .select(col("query_id"), col("neighbor_id"))
-    val qRows = queries.select(col(idCol), col(embCol)).orderBy(idCol).collect()
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    val (qIdx, adcCol) = adcKit(spark, model, qIds, qVecs)
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    val exhaustive = graft.sources.Tables.parquetScan(spark, s"$path/lists")
-      .join(qIdx, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), adcCol.as("sim"))
-      .distinct()
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    // an UNHINTED id frame for the preserved side: qIdx carries adcKit's
-    // broadcast hint, which on the left of a left outer join is
-    // unbuildable — silently dropped with a HintErrorLogger WARN. The
-    // per-query hit counts (≤ |queries| rows) are the legal build side.
-    import spark.implicits._
-    qIds.toSeq.toDF("query_id")
-      .join(broadcast(
-        served.join(exhaustive, Seq("query_id", "neighbor_id"), "left_semi")
-          .groupBy("query_id").agg(count(lit(1)).as("hits"))),
-        Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"))
+      embCol: String = "embedding"): DataFrame =
+    Ivf.recall(spark, path, new AdcCodec(readPqModel(spark, path)), queries, nProbe, k, idCol, embCol)
+
+  /** The PQ [[VecCodec]]: [[encodeNative]] codes as the list payload, the
+    * [[PqAdcCosine]] kernel as the score. Its writes add the `codebooks`
+    * leg (the model and its scheme version) before `cells`.
+    */
+  private[graft] final class AdcCodec(model: PqModel) extends VecCodec {
+    val payload = "codes"
+
+    def encode(emb: Column): Column = encodeNative(emb, model)
+
+    override def writeModel(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+      import spark.implicits._
+      Seq((model.dims, model.m, model.k, model.codebooks.toSeq, PqVersion))
+        .toDF("dims", "m", "k", "codebooks", "pq_version")
+        .select(col("dims"), col("m"), col("k"),
+          col("codebooks").cast("array<float>"), col("pq_version"))
+        .write.mode("overwrite").parquet(s"$path/codebooks")
+    }
+
+    /** Collects the query batch to the driver — bounded by contract (the
+      * query vectors become parameters of the generated code, like
+      * centroids; a query BATCH at scale pages through this API) — and
+      * builds its ADC tables once: k·D multiplies per query, independent
+      * of corpus size. */
+    def bind(queries: DataFrame, idCol: String, embCol: String): AdcKit = {
+      val qRows = queries.select(col(idCol), col(embCol)).orderBy(idCol).collect()
+      require(qRows.nonEmpty, "PQ search needs at least one query")
+      val qIds = qRows.map(_.getLong(0))
+      val qVecs = qRows.map(_.getSeq[Float](1).toArray)
+      val (dotLuts, n2Lut, qNorms) = adcTables(model, qVecs)
+      val spark = queries.sparkSession
+      import spark.implicits._
+      val qIdx = broadcast(
+        qIds.zipWithIndex.map { case (id, i) => (id, i) }.toSeq.toDF("query_id", "qidx"))
+      val adc = ColumnBridge.column(PqAdcCosine(
+        ColumnBridge.expression(col("codes")), ColumnBridge.expression(col("qidx")),
+        model.m, model.k, dotLuts, n2Lut, qNorms))
+      new AdcKit(queries, idCol, embCol, qIds, qVecs, qIdx, adc)
+    }
   }
 
-  /** The per-query-batch serving kit every ADC consumer shares: the
-    * broadcastable (query_id, qidx) lookup table and the [[PqAdcCosine]]
-    * score column over `codes`/`qidx` — extracted so [[pqTopK]],
-    * [[queryIvfPqIndex]] and [[ivfPqIndexRecall]] cannot drift apart.
-    */
-  private def adcKit(
-      spark: org.apache.spark.sql.SparkSession,
-      model: PqModel,
-      qIds: Array[Long],
-      qVecs: Array[Array[Float]]): (DataFrame, Column) = {
-    val (dotLuts, n2Lut, qNorms) = adcTables(model, qVecs)
-    import spark.implicits._
-    val qIdx = broadcast(
-      qIds.zipWithIndex.map { case (id, i) => (id, i) }.toSeq.toDF("query_id", "qidx"))
-    val adc = ColumnBridge.column(PqAdcCosine(
-      ColumnBridge.expression(col("codes")), ColumnBridge.expression(col("qidx")),
-      model.m, model.k, dotLuts, n2Lut, qNorms))
-    (qIdx, adc)
+  /** A query batch bound to the ADC codec: the broadcast (query_id, qidx)
+    * table indexes the per-query LUTs the score kernel carries. */
+  private[graft] final class AdcKit(
+      val queries: DataFrame,
+      val idCol: String,
+      val embCol: String,
+      val qIds: Array[Long],
+      val qVecs: Array[Array[Float]],
+      val table: DataFrame,
+      val score: Column) extends QueryKit {
+
+    def attach(probed: DataFrame): DataFrame =
+      probed.select(col(idCol).as("query_id"), col("cell_id")).join(table, Seq("query_id"))
+
+    def everyQuery(perQuery: DataFrame): DataFrame = {
+      // an UNHINTED id frame for the preserved side: `table` carries a
+      // broadcast hint, which on the left of a left outer join is
+      // unbuildable — silently dropped with a HintErrorLogger WARN. The
+      // per-query values (≤ |queries| rows) are the legal build side.
+      val spark = queries.sparkSession
+      import spark.implicits._
+      qIds.toSeq.toDF("query_id").join(broadcast(perQuery), Seq("query_id"), "left")
+    }
   }
 
   /** Driver-side ADC tables for a query batch: per-query dot LUTs (m × k),

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Vector-similarity operators over `array<float>` embedding columns.
@@ -39,20 +38,10 @@ object Similarity {
     * score rows. For corpus-×-corpus joins use [[lshBuckets]] first to cut
     * the candidate space.
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-    // project down to (query_id, vec_id, sim) BEFORE the top-k window so the
-    // per-query exchange carries scores, not embedding payloads
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        CosineSimilarity.cosineNative(col("query_vec"), col("embedding")).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), round(col("sim"), 4).as("sim"), col("rank"))
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    // scores are projected down to (query_id, vec_id, sim) BEFORE the top-k
+    // window, so the per-query exchange carries scores, not embeddings
+    Ivf.topK(Ivf.scoreAll(corpus, VecCodec.Float.bind(queries, "vec_id", "embedding")), k)
 
   /** Brute-force top-k over int8-QUANTIZED vectors ([[Int8Ops]]) — the
     * memory-bandwidth scale path: the corpus-resident vector set shrinks 4×
@@ -63,20 +52,9 @@ object Similarity {
     * [[bruteForceTopK]]: queries broadcast, scores projected narrow before
     * the per-query top-k window.
     */
-  def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("vec_id"), Int8Ops.quantizeInt8Native(col("embedding")).as("qvec"))
-    val q = queries.select(
-      col("vec_id").as("query_id"), Int8Ops.quantizeInt8Native(col("embedding")).as("query_qvec"))
-    val scored = c
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Int8Ops.cosineInt8Native(col("query_qvec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), round(col("sim"), 4).as("sim"), col("rank"))
-  }
+  def int8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    Ivf.topK(Ivf.scoreAll(Ivf.encoded(corpus, VecCodec.Int8),
+      VecCodec.Int8.bind(queries, "vec_id", "embedding")), k)
 
   /** IVF-style ANN: coarse-quantize the corpus into `nCells` inverted
     * lists, probe the `nProbe` closest cells per query, exact-rank only
@@ -155,42 +133,8 @@ object Similarity {
       queries: DataFrame,
       centroids: Array[Array[Float]],
       nProbe: Int,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val centsIdx = centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    // Cell assignment is [[nearestCentroid]] — ZERO corpus shuffle. The
-    // earlier row_number() window on vec_id exchanged the whole corpus
-    // WITH embedding payloads just to pick each row's best cell.
-    val assigned = corpus
-      .withColumn("cell_id", nearestCentroid(col("embedding"), centsIdx))
-      .select(col("vec_id"), col("embedding"), col("cell_id"))
-    // probe selection needs a top-nProbe rank over nCells scores per query;
-    // queries are a small probe set by contract, so a window there is cheap.
-    // The centroid relation is the k × dims model, created locally.
-    val cents = corpus.sparkSession.createDataFrame(
-      centsIdx.map { case (i, v) => (i, v.toSeq) }.toSeq)
-      .toDF("cell_id", "cell_vec")
-      .select(col("cell_id"), col("cell_vec").cast("array<float>"))
-    val wProbe = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell_id"))
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", CosineSimilarity.cosineNative(col("embedding"), col("cell_vec")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"), col("cell_id"))
-    // search: probes broadcast under the corpus (no corpus shuffle), scores
-    // projected narrow before the per-query top-k exchange
-    val scored = assigned
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        CosineSimilarity.cosineNative(col("query_vec"), col("embedding")).as("sim"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), round(col("sim"), 4).as("sim"), col("rank"))
-  }
+      k: Int): DataFrame =
+    ivfInMemory(VecCodec.Float, corpus, queries, centroids, nProbe, k)
 
   /** Trained-centroid IVF over INT8-QUANTIZED inverted lists — the
     * composition a corpus-scale similarity search actually runs, and the
@@ -203,17 +147,11 @@ object Similarity {
     * only those cells' candidates are ranked with the integer-exact
     * [[Int8Cosine]].
     *
-    * Scale shape, stage by stage:
-    *   - list build: ONE linear corpus pass — per-row assignment ladder +
-    *     per-row quantization inside the scan projection; float embeddings
-    *     never leave the scan and the corpus is never shuffled;
-    *   - probing: queries × broadcast(k-centroid relation) — model-sized
-    *     work, top-nProbe per query via a window over nCells scores;
-    *   - search: probes broadcast UNDER the lists (again no corpus
-    *     shuffle); each query touches ~nProbe/nCells of the corpus;
-    *   - top-k: scores projected to narrow (query_id, vec_id, sim) rows
-    *     BEFORE the per-query rank exchange, so the only shuffle in the
-    *     whole plan carries 20-byte score rows.
+    * Scale shape, stage by stage, is the [[Ivf]] core's: one linear list
+    * build in the scan, model-sized probing, probes broadcast UNDER the
+    * lists (each query touches ~nProbe/nCells of the corpus, which is
+    * never shuffled), and a top-k whose only exchange carries 20-byte
+    * score rows.
     *
     * Exactness note: scores are [[Int8Cosine]] over [[QuantizeInt8]] pairs
     * — integer dot/norm sums (exact in any order) with one final
@@ -226,36 +164,22 @@ object Similarity {
       queries: DataFrame,
       centroids: Array[Array[Float]],
       nProbe: Int,
+      k: Int): DataFrame =
+    ivfInMemory(VecCodec.Int8, corpus, queries, centroids, nProbe, k)
+
+  /** The in-memory IVF composition of [[ivfTopKWithCentroids]] (float lists)
+    * and [[ivfInt8TopK]] (int8 lists): lists built in the scan, probes over
+    * the local centroid relation, probed cells scored, per-query top-k. */
+  private def ivfInMemory(
+      codec: VecCodec,
+      corpus: DataFrame,
+      queries: DataFrame,
+      centroids: Array[Array[Float]],
+      nProbe: Int,
       k: Int): DataFrame = {
-    val centsIdx = centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    val lists = corpus.select(
-      col("vec_id"),
-      Int8Ops.quantizeInt8Native(col("embedding")).as("qvec"),
-      nearestCentroid(col("embedding"), centsIdx).as("cell_id"))
-    val cents = corpus.sparkSession.createDataFrame(
-      centsIdx.map { case (i, v) => (i, v.toSeq) }.toSeq)
-      .toDF("cell_id", "cell_vec")
-      .select(col("cell_id"), col("cell_vec").cast("array<float>"))
-    val wProbe = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell_id"))
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", CosineSimilarity.cosineNative(col("embedding"), col("cell_vec")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"),
-        Int8Ops.quantizeInt8Native(col("embedding")).as("query_qvec"),
-        col("cell_id"))
-    val scored = lists
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        Int8Ops.cosineInt8Native(col("query_qvec"), col("qvec")).as("sim"))
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("sim"), 4).as("sim"), col("rank"))
+    val kit = codec.bind(queries, "vec_id", "embedding")
+    val probes = Ivf.probes(kit, Ivf.cells(corpus.sparkSession, centroids), nProbe)
+    Ivf.topK(Ivf.scoreProbed(Ivf.listRows(corpus, codec, centroids), probes, kit), k)
   }
 
   /** Persist an IVF-int8 index: the [[ivfInt8TopK]] inverted lists written
@@ -271,19 +195,8 @@ object Similarity {
   def writeIvfIndex(
       corpus: DataFrame,
       centroids: Array[Array[Float]],
-      path: String): Unit = {
-    val centsIdx = centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    corpus.select(
-        col("vec_id"),
-        Int8Ops.quantizeInt8Native(col("embedding")).as("qvec"),
-        nearestCentroid(col("embedding"), centsIdx).as("cell_id"))
-      .write.mode("overwrite").partitionBy("cell_id").parquet(s"$path/lists")
-    corpus.sparkSession.createDataFrame(
-        centsIdx.map { case (i, v) => (i, v.toSeq) }.toSeq)
-      .toDF("cell_id", "cell_vec")
-      .select(col("cell_id"), col("cell_vec").cast("array<float>"))
-      .write.mode("overwrite").parquet(s"$path/cells")
-  }
+      path: String): Unit =
+    Ivf.write(corpus, centroids, VecCodec.Int8, path)
 
   /** True when a READABLE [[writeIvfIndex]] index exists at `path`: both
     * subtables hold at least one COMMITTED parquet data file (`cells` at its
@@ -348,15 +261,8 @@ object Similarity {
   def appendToIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      newBatch: DataFrame): Unit = {
-    val centsIdx = readIvfCentroids(spark, path).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }
-    newBatch.select(
-        col("vec_id"),
-        Int8Ops.quantizeInt8Native(col("embedding")).as("qvec"),
-        nearestCentroid(col("embedding"), centsIdx).as("cell_id"))
-      .write.mode("append").partitionBy("cell_id").parquet(s"$path/lists")
-  }
+      newBatch: DataFrame): Unit =
+    Ivf.append(spark, path, VecCodec.Int8, newBatch)
 
   /** Fold each inverted-list cell directory of a persisted [[writeIvfIndex]]
     * index into `targetRecordsPerFile`-sized files. [[appendToIvfIndex]]
@@ -395,29 +301,19 @@ object Similarity {
       }
   }
 
-  /** Serve top-k ANN from a persisted [[writeIvfIndex]] index. The centroid
-    * model loads to the driver (k × dims floats — model parameters, the
-    * documented bounded-collect contract), probes are computed per query,
-    * and the DISTINCT probed cell ids — bounded by nQueries × nProbe —
-    * become an `isin` partition predicate on the lists table, so the scan
-    * physically selects only the probed directories (plan-asserted in
-    * PlanAuditSpec). Ranking is the same broadcast-probe + narrow-score
-    * shape as [[ivfInt8TopK]].
+  /** Serve top-k ANN from a persisted [[writeIvfIndex]] index: the
+    * DISTINCT probed cell ids (≤ nQueries × nProbe) become an `isin`
+    * partition predicate on the lists table, so the scan physically selects
+    * only the probed directories (plan-asserted in PlanAuditSpec); ranking
+    * is the same broadcast-probe + narrow-score shape as [[ivfInt8TopK]].
     */
   def queryIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       queries: DataFrame,
       nProbe: Int,
-      k: Int): DataFrame = {
-    val scored = ivfIndexProbeScores(spark, path, queries, nProbe)
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    scored
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("sim"), 4).as("sim"), col("rank"))
-  }
+      k: Int): DataFrame =
+    Ivf.topK(ivfIndexProbeScores(spark, path, queries, nProbe), k)
 
   /** Shared probe core of [[queryIvfIndex]] and [[dedupAgainstIvfIndex]]:
     * assign each query its nProbe nearest cells against the persisted
@@ -432,46 +328,8 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       queries: DataFrame,
-      nProbe: Int): DataFrame = {
-    val cents = graft.sources.Tables.parquetScan(spark, s"$path/cells")
-    val wProbe = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell_id"))
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("csim", CosineSimilarity.cosineNative(col("embedding"), col("cell_vec")))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("vec_id").as("query_id"),
-        Int8Ops.quantizeInt8Native(col("embedding")).as("query_qvec"),
-        col("cell_id"))
-    // bounded collect: nQueries × nProbe cell ids (probe-plan parameters,
-    // not data) — they must reach the driver to become a partition-pruning
-    // predicate the scan can evaluate against directory names.
-    //
-    // The probe subtree IS evaluated twice (once here, once for the
-    // broadcast build below) — deliberately, A/B-measured: pinning the
-    // evaluated rows (localCheckpoint blocks, or a driver-side local
-    // relation) costs MORE than re-running the subtree — q66 paid +0.3 s
-    // to block I/O / +0.5 s to driver re-encoding vs +0 for the recompute,
-    // because the subtree is a broadcast cross join + an O(batch×nCells)
-    // window, cheap relative to its materialization. Both evaluations are
-    // distributed and O(batch); nothing here scales with the corpus.
-    val probedCells = probes.select("cell_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val lists = graft.sources.Tables.parquetScan(spark, s"$path/lists")
-      .filter(col("cell_id").isInCollection(probedCells))
-    lists
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        Int8Ops.cosineInt8Native(col("query_qvec"), col("qvec")).as("sim"))
-      // At-least-once absorber: a crashed-and-replayed appendToIvfIndex (an
-      // ingest loop's crash window — see IngestPipeline) leaves duplicate
-      // list rows; their scored rows are bit-identical (int8 scoring is
-      // deterministic in the model), so one distinct over the NARROW score
-      // rows restores exactly-once serving. Without it a duplicated vector
-      // would occupy two of the k ranks.
-      .distinct()
-  }
+      nProbe: Int): DataFrame =
+    Ivf.probeScores(spark, path, VecCodec.Int8.bind(queries, "vec_id", "embedding"), nProbe)
 
   /** Embedding near-duplicate dedup of a batch against a persisted
     * [[writeIvfIndex]] index — the third persisted-index dedup family,
@@ -562,28 +420,8 @@ object Similarity {
       path: String,
       queries: DataFrame,
       nProbe: Int,
-      k: Int): DataFrame = {
-    val served = queryIvfIndex(spark, path, queries, nProbe, k)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = queries.select(
-      col("vec_id").as("query_id"),
-      Int8Ops.quantizeInt8Native(col("embedding")).as("query_qvec"))
-    val scored = graft.sources.Tables.parquetScan(spark, s"$path/lists")
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Int8Ops.cosineInt8Native(col("query_qvec"), col("qvec")).as("sim"))
-      .distinct()
-    val wTop = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    val exhaustive = scored
-      .withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    q.select("query_id")
-      .join(served.join(exhaustive, Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("hits")),
-        Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-  }
+      k: Int): DataFrame =
+    Ivf.recall(spark, path, VecCodec.Int8, queries, nProbe, k)
 
   /** Re-index migration for when the drift monitor trips: train NEW
     * centroids on the caller-supplied corpus (the float vectors — the index
@@ -672,10 +510,9 @@ object Similarity {
       .orderBy(idCol).limit(k)
       .select(embCol).collect().map(_.getSeq[Float](0).toArray)
     for (_ <- 0 until iters) {
-      val centsIdx = cents.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       val nrm = norm(col(embCol))
       val stats = corpus
-        .withColumn("cell_id", nearestCentroid(col(embCol), centsIdx))
+        .withColumn("cell_id", nearestCentroid(col(embCol), Ivf.indexed(cents)))
         .filter(nrm > 0)
         .select(col("cell_id"),
           posexplode(transform(col(embCol),
@@ -719,10 +556,8 @@ object Similarity {
       corpus: DataFrame,
       centroids: Array[Array[Float]],
       idCol: String = "vec_id",
-      embCol: String = "embedding"): DataFrame = {
-    val centsIdx = centroids.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    corpus.select(col(idCol), nearestCentroid(col(embCol), centsIdx).as("cell_id"))
-  }
+      embCol: String = "embedding"): DataFrame =
+    corpus.select(col(idCol), nearestCentroid(col(embCol), Ivf.indexed(centroids)).as("cell_id"))
 
   /** Cosine inertia of a centroid model over a corpus:
     * Σ (1 − cos(v, centroid(v))) with each row scored against its OWN

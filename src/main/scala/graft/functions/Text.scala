@@ -56,9 +56,6 @@ object Text {
     */
   def bpeishCount(text: Column): Column = regexp_count(text, lit(BpeishPattern))
 
-  /** Distinct-token set (shingle size 1). */
-  def tokenSet(text: Column): Column = array_distinct(tokens(text))
-
   /** Word n-grams (shingles), exploded to one row per n-gram.
     *
     * The per-shingle work is `element_at` + `concat_ws` over an exploded

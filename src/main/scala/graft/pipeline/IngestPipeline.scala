@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.functions.{Dedup, IndexProtocol, Kmv, PersistedIndex, Pq, Similarity, Text}
+import graft.functions.{Dedup, IndexProtocol, Ivf, Kmv, PersistedIndex, Pq, Similarity, Text}
 import graft.ops.Cleaning
 import graft.sinks.Sinks
 
@@ -298,29 +298,23 @@ object IngestPipeline {
 
   /** The two IVF-family serving indexes the drift monitor watches: int8
     * lists (q67) and 16-byte PQ codes (q92). Both serve from frozen coarse
-    * centroids over the same `cell_id=` list layout and both rebuild from
-    * the float-embedding lake, so the monitor is one computation
-    * ([[checkIndexHealth]]); a family supplies only what differs — where
-    * its index lives, its readable check, its sampled recall re-gate, its
-    * rebuild, and its default recall floor.
+    * centroids over the same `cell_id=` list layout, and the index itself
+    * records its codec ([[graft.functions.Ivf.stored]]), so readability and
+    * the sampled recall re-gate are one computation ([[checkIndexHealth]]).
+    * A family supplies only what differs: where its index lives, its
+    * default recall floor, and how its rebuild trains.
     */
   sealed abstract class IvfFamily(val name: String, val defaultMinRecallPct: Int) {
     def path(paths: IngestPaths): String
-    def readable(spark: SparkSession, path: String): Boolean
-    def recall(spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame
     def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit
   }
 
   object IvfFamily {
 
-    /** Recall is the pruned serve against the exhaustive int8 ranking. */
+    /** Recall is the pruned serve against the exhaustive int8 ranking; the
+      * rebuild retrains the coarse centroids. */
     case object Int8 extends IvfFamily("IVF", 60) {
       def path(paths: IngestPaths): String = paths.ivfIndex
-      def readable(spark: SparkSession, path: String): Boolean =
-        Similarity.ivfIndexReadable(spark, path)
-      def recall(
-          spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame =
-        Similarity.ivfIndexRecall(spark, path, probe, nProbe, k)
       def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit =
         Similarity.migrateIvfIndex(spark, path, corpus, nCells, iters = 5)
     }
@@ -334,11 +328,6 @@ object IngestPipeline {
       */
     case object IvfPq extends IvfFamily("IVF-PQ", 50) {
       def path(paths: IngestPaths): String = paths.ivfPqIndex
-      def readable(spark: SparkSession, path: String): Boolean =
-        Pq.ivfPqIndexReadable(spark, path)
-      def recall(
-          spark: SparkSession, path: String, probe: DataFrame, nProbe: Int, k: Int): DataFrame =
-        Pq.ivfPqIndexRecall(spark, path, probe, nProbe, k)
       def rebuild(spark: SparkSession, path: String, corpus: DataFrame, nCells: Int): Unit =
         Pq.migrateIvfPqIndex(spark, path, corpus, nCells = nCells, kmIters = 5, pqIters = 3)
     }
@@ -438,7 +427,11 @@ object IngestPipeline {
       val root = new org.apache.hadoop.fs.Path(paths.embLake)
       fs.exists(root) && IndexProtocol.hasParquetDeep(fs, root)
     }
-    if (!family.readable(spark, index) || !hasCorpus) return None
+    if (!hasCorpus) return None
+    val codec = Ivf.stored(spark, index) match {
+      case Some(c) => c
+      case None => return None
+    }
 
     // skew: ids-only distinct (the at-least-once append absorber) then an
     // exact int64 aggregate — cheap relative to any serve
@@ -453,7 +446,7 @@ object IngestPipeline {
     // recall re-gate: deterministic sample — the lowest-id corpus vectors
     val corpus = spark.read.parquet(paths.embLake).drop("__ver")
     val probe = corpus.orderBy("vec_id").limit(HealthSampleQueries)
-    val r = family.recall(spark, index, probe, cfg.nProbe, HealthK)
+    val r = Ivf.recall(spark, index, codec, probe, cfg.nProbe, HealthK)
       .agg(coalesce(sum(col("hits")), lit(0L)), count(lit(1))).head()
     val (hits, nq) = (r.getLong(0), r.getLong(1))
     // denominator clamped to the ACHIEVABLE hits: an index with R residents

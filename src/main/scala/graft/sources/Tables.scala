@@ -160,10 +160,7 @@ object Tables {
       }
     } catch { case _: Exception => Long.MaxValue }
 
-  /** The fan-out sizing decision, pure so the policy is spec-pinned:
-    * None = leave the scan untouched, Some(w) = round-robin to w.
-    *
-    * Width is CAPPED at 16 partitions per natural split (r18, verdict #3)
+  /** Fan-out width is CAPPED at 16 partitions per natural split (r18, verdict #3)
     * instead of fanning straight to `target`: an uncapped fan turned a
     * sub-MB table into `defaultParallelism` micro-tasks, and the r17
     * 8-core full suite beating the 32-core one was the visible bill — on
@@ -179,8 +176,13 @@ object Tables {
     * At 8 cores the cap is inactive (min(8, 16) = 8), so low-core runs
     * are bit-identical to the uncapped policy.
     */
-  private[graft] def fanOutWidth(
-      target: Int, bytes: Long, maxSplit: Long, widthPerSplit: Long = 16L): Option[Int] = {
+  private val WidthPerSplit = 16L
+
+  /** The fan-out sizing decision, pure so the policy is spec-pinned:
+    * None = leave the scan untouched, Some(w) = round-robin to w, at most
+    * [[WidthPerSplit]] partitions per natural split.
+    */
+  private[graft] def fanOutWidth(target: Int, bytes: Long, maxSplit: Long): Option[Int] = {
     if (target <= 2) return None
     // divide-then-round (never bytes + maxSplit): the unreadable-path
     // sentinel is Long.MaxValue, and adding to it overflowed negative —
@@ -188,7 +190,7 @@ object Tables {
     // silently inverted (caught by this policy's r18 spec)
     val splits = math.max(1L, bytes / maxSplit + (if (bytes % maxSplit == 0) 0L else 1L))
     if (splits * 2 >= target) None
-    else Some(math.min(target.toLong, splits * widthPerSplit).toInt)
+    else Some(math.min(target.toLong, splits * WidthPerSplit).toInt)
   }
 
   def region(spark: SparkSession, dir: String): DataFrame    = apply(spark, dir, "region")

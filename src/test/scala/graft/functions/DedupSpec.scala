@@ -57,16 +57,6 @@ class DedupSpec extends SparkSpec {
     est.foreach(e => assert(math.abs(e - 0.6) < 4 * math.sqrt(0.6 * 0.4 / 64)))
   }
 
-  test("minhashSignatures (array form) matches the wide-column pipeline form") {
-    val d = docs(7L -> "alpha beta gamma delta")
-    val arr = d.transform(Dedup.minhashSignatures(_, "text", "doc_id", 16, 42L))
-      .select("sig").as[Seq[Long]].head()
-    val wide = Dedup.minhashSignaturesWide(d, "text", "doc_id", 16, 42L)
-      .drop("id").as[(Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .head()
-    assert(arr == wide.productIterator.toSeq)
-  }
-
   test("native minhash signature is bit-equal to the explode+aggregate form") {
     // the pre-round-10 shape, inlined as the reference: explode distinct
     // tokens -> h = pmod(tokenHash64, p) -> 64 min(pmod(h*a+b, p)) aggs

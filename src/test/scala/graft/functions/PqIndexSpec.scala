@@ -131,4 +131,19 @@ class PqIndexSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"),
       plan.linesIterator.filter(_.contains("Join")).mkString("\n"))
   }
+
+  test("queryIvfPqIndex at nProbe = nCells equals pqTopK(refine = 0) row for row") {
+    // probing every cell ADC-scores every resident against the same codes
+    // and LUTs the flat pqTopK scan uses, with the same tiebreak — so the
+    // two must agree exactly, ranks, ids and sims
+    val df = clustered(120, seed = 29)
+    val (cents, model) = models(df)
+    val path = Files.createTempDirectory("graft-ivfpq-flat").toString
+    Pq.writeIvfPqIndex(df, cents, model, path)
+    val queries = df.filter(col("vec_id") % 13 === 0)
+    def rows(d: DataFrame) = d.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(3)))
+    val served = rows(Pq.queryIvfPqIndex(spark, path, queries, nProbe = cents.length, k = 7))
+    assert(served.size == 10 * 7)
+    assert(served == rows(Pq.pqTopK(df, queries, model, k = 7, refine = 0)))
+  }
 }

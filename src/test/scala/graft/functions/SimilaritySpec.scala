@@ -329,33 +329,79 @@ class SimilaritySpec extends SparkSpec {
     val grown = Seq((10L, Seq(0.7f, 0.3f, 0f, 0f)), (11L, Seq(0.2f, 0.8f, 0f, 0f)))
       .toDF("vec_id", "embedding").select(col("vec_id"), col("embedding").cast("array<float>"))
     val corpus = base.unionByName(grown)
-    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-mig").toString + "/idx"
-    Similarity.writeIvfIndex(base, Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f)), idx)
-    Similarity.appendToIvfIndex(spark, idx, grown)
+    val cents = Array(Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f))
+    val pq = Pq.initCodebooks(base, dims = 4, m = 2, k = 2)
 
-    Similarity.migrateIvfIndex(spark, idx, corpus, k = 2, iters = 2)
-    // serve-equivalence against a FRESH one-shot build under the migrated
-    // index's own (retrained) model — proves the alongside-build + swap
-    // produced a complete index, independent of k-means ulp concerns
-    val fresh = java.nio.file.Files.createTempDirectory("graft-ivf-mig2").toString + "/idx"
-    Similarity.writeIvfIndex(corpus, Similarity.readIvfCentroids(spark, idx), fresh)
-    val q = corpus.filter(col("vec_id") === 10L)
-    def serve(p: String) = Similarity.queryIvfIndex(spark, p, q, 2, 3)
-      .collect().toSeq.sortBy(_.getInt(3))
-    assert(serve(idx) == serve(fresh))
-    // the migration swallowed the append-era duplicates risk: no vec twice
-    val served = spark.read.parquet(s"$idx/lists").select("vec_id").as[Long].collect().toSeq
-    assert(served.sorted == served.distinct.sorted)
+    /** One index family's install, append, migration, same-model fresh
+      * build and serve. */
+    final case class Family(
+        name: String,
+        install: String => Unit,
+        append: String => Unit,
+        migrate: String => Unit,
+        freshFrom: (String, String) => Unit,
+        serve: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)
+    val families = Seq(
+      Family("int8",
+        Similarity.writeIvfIndex(base, cents, _),
+        Similarity.appendToIvfIndex(spark, _, grown),
+        Similarity.migrateIvfIndex(spark, _, corpus, k = 2, iters = 2),
+        (from, to) => Similarity.writeIvfIndex(corpus, Similarity.readIvfCentroids(spark, from), to),
+        (p, q) => Similarity.queryIvfIndex(spark, p, q, 2, 3)),
+      Family("pq",
+        Pq.writeIvfPqIndex(base, cents, pq, _),
+        Pq.appendToIvfPqIndex(spark, _, grown),
+        Pq.migrateIvfPqIndex(spark, _, corpus, nCells = 2, kmIters = 2, pqIters = 2),
+        (from, to) => Pq.writeIvfPqIndex(
+          corpus, Similarity.readIvfCentroids(spark, from), Pq.readPqModel(spark, from), to),
+        (p, q) => Pq.queryIvfPqIndex(spark, p, q, 2, 3)))
 
-    // crash window: between the swap's renames the index is parked in
-    // __old; startup recovery restores it and serving resumes
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(idx), spark.sparkContext.hadoopConfiguration)
-    fs.rename(
-      new org.apache.hadoop.fs.Path(idx),
-      new org.apache.hadoop.fs.Path(idx + graft.sinks.Sinks.OldSuffix))
-    Similarity.recoverIvfIndex(spark, idx)
-    assert(serve(idx) == serve(fresh), "recovery must restore the parked generation")
+    families.foreach { f =>
+      val idx = java.nio.file.Files.createTempDirectory(s"graft-ivf-mig-${f.name}").toString + "/idx"
+      f.install(idx)
+      f.append(idx)
+      f.migrate(idx)
+      // serve-equivalence against a FRESH one-shot build under the migrated
+      // index's own (retrained) models — proves the alongside-build + swap
+      // produced a complete index, independent of k-means ulp concerns
+      val fresh = java.nio.file.Files.createTempDirectory(s"graft-ivf-mig2-${f.name}").toString + "/idx"
+      f.freshFrom(idx, fresh)
+      val q = corpus.filter(col("vec_id") === 10L)
+      def serve(p: String) = f.serve(p, q).collect().toSeq.sortBy(_.getInt(3))
+      assert(serve(idx).nonEmpty, f.name)
+      assert(serve(idx) == serve(fresh), f.name)
+      // the migration swallowed the append-era duplicates risk: no vec twice
+      val served = spark.read.parquet(s"$idx/lists").select("vec_id").as[Long].collect().toSeq
+      assert(served.sorted == served.distinct.sorted, f.name)
+
+      // crash window: between the swap's renames the index is parked in
+      // __old; startup recovery restores it and serving resumes
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(idx), spark.sparkContext.hadoopConfiguration)
+      fs.rename(
+        new org.apache.hadoop.fs.Path(idx),
+        new org.apache.hadoop.fs.Path(idx + graft.sinks.Sinks.OldSuffix))
+      PersistedIndex.Ivf.recover(spark, idx)
+      assert(serve(idx) == serve(fresh), s"${f.name}: recovery must restore the parked generation")
+    }
+  }
+
+  test("queryIvfIndex at nProbe = nCells equals int8TopK row for row") {
+    // probing every cell scores every resident with the same int8 kernel
+    // and ranks with the same (sim desc, vec_id) tiebreak, so the index
+    // serve and the flat scan must agree exactly — ranks, ids and sims
+    val rnd = new scala.util.Random(11)
+    val df = (0L until 80L).map(i => (i, Seq.fill(8)((rnd.nextDouble() - 0.5).toFloat)))
+      .toDF("vec_id", "embedding").select(col("vec_id"), col("embedding").cast("array<float>"))
+    val cents = Similarity.kmeansCentroids(df, k = 4, iters = 2)
+    val idx = java.nio.file.Files.createTempDirectory("graft-ivf-flat").toString
+    Similarity.writeIvfIndex(df, cents, idx)
+    val queries = df.filter(col("vec_id") % 9 === 0)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.sortBy(r => (r.getLong(0), r.getInt(3)))
+    val served = rows(Similarity.queryIvfIndex(spark, idx, queries, nProbe = cents.length, k = 6))
+    assert(served.size == 9 * 6)
+    assert(served == rows(Similarity.int8TopK(df, queries, 6)))
   }
 
   test("ivfTopK finds the true nearest neighbor when it shares the probed cell") {
