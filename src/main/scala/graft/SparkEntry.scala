@@ -431,7 +431,7 @@ object SparkEntry {
     // the class markers are trainer inputs: editing either would leave a
     // stale fixture serving old weights while the oracle re-derives with
     // the new markers (round-13 advice) — fold them into the identity
-    val markers = Integer.toHexString((QcGoodMark + " " + QcBadMark).hashCode)
+    val markers = Integer.toHexString((QcGoodMark + "\u0000" + QcBadMark).hashCode)
     Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
         s"dim=${QualityClassifier.DefaultDim}", s"scale=${QualityClassifier.TrainScale}",
         s"qc=${QualityClassifier.ModelVersion}", s"marks=$markers", "centroid-v1")) {

@@ -302,7 +302,31 @@ object Bm25 {
     */
   private def scoredCandidates(
       spark: SparkSession, probes: DataFrame, path: String): DataFrame =
-    scoredAgainst(spark, probes, graft.sources.Tables.parquetScan(spark, s"$path/postings"), path)
+    scoredAgainst(spark, collectProbes(spark, probes),
+      graft.sources.Tables.parquetScan(spark, s"$path/postings"), path)
+
+  /** The probe batch, set-deduplicated and collected ONCE to the driver as
+    * a local relation — the bounded side BY CONTRACT, ENFORCED here, not
+    * assumed (r17 advice: searchBucketed checked its cap but the plain
+    * search/hardNegatives path reached the broadcast unchecked — a
+    * corpus-sized probe relation would OOM the driver where the planner
+    * previously fell back to a shuffle). The pairs are collected under a
+    * `limit(cap+1)` — driver memory is bounded by the cap even when a
+    * violating caller feeds a corpus — and the collected rows become the
+    * broadcast's LocalRelation build side directly, so the check costs no
+    * extra pass: the explicit collect replaces the one BroadcastExchange
+    * would have run over the same subtree (the [[graft.functions.Dedup]]
+    * probe-localization pattern). [[searchBucketed]] derives its term
+    * list from the same rows.
+    */
+  private def collectProbes(spark: SparkSession, probes: DataFrame): DataFrame = {
+    val deduped = probes.select("query_id", "term").dropDuplicates("query_id", "term")
+    val probeRows = deduped.limit(MaxProbePairs + 1).collect()
+    require(probeRows.length <= MaxProbePairs,
+      s"BM25 probe batch exceeds $MaxProbePairs distinct (query_id, term) rows — " +
+        "this serve path is for bounded probe batches, not corpus-scale relations")
+    spark.createDataFrame(java.util.Arrays.asList(probeRows: _*), deduped.schema)
+  }
 
   /** The scoring join-aggregate against an EXPLICIT postings relation —
     * the arithmetic shared by the plain artifact read and the
@@ -312,38 +336,20 @@ object Bm25 {
     * retrieval contract here.)
     */
   private def scoredAgainst(
-      spark: SparkSession, probes: DataFrame, postings: DataFrame,
+      spark: SparkSession, local: DataFrame, postings: DataFrame,
       path: String): DataFrame = {
     val terms = graft.sources.Tables.parquetScan(spark, s"$path/terms").select("term", "idf_e6")
     val docNorms = graft.sources.Tables.parquetScan(spark, s"$path/docs").select("doc_id", "k_e6")
     val contribution = ExactAgg.divHalfUp(
       col("idf_e6") * 22L * col("tf") * 100000L,
       col("tf") * IdfScale + col("k_e6"))
-    // The probe batch is the bounded side BY CONTRACT (MaxProbeTerms caps
-    // it; postings are corpus-scale), so pin it as the broadcast build side
-    // instead of leaving the choice to size ESTIMATES: at tiny SFs the
-    // estimate tie flipped with a testdata regeneration and the planner
-    // broadcast the POSTINGS under the streamed probes — a shape that only
-    // exists while the index fits in a broadcast, i.e. never at corpus
-    // scale (guide §3.1: pick the strategy deliberately).
-    //
-    // The contract is ENFORCED here, not assumed (r17 advice: searchBucketed
-    // checks its cap but the plain search/hardNegatives path reached this
-    // broadcast unchecked — a corpus-sized probe relation would OOM the
-    // driver where the planner previously fell back to a shuffle). The
-    // deduped pairs are collected under a `limit(cap+1)` — driver memory is
-    // bounded by the cap even when a violating caller feeds a corpus — and
-    // the collected rows become the broadcast's LocalRelation build side
-    // directly, so the check costs no extra pass: the explicit collect
-    // replaces the one BroadcastExchange would have run over the same
-    // subtree (the [[graft.functions.Dedup]] probe-localization pattern).
-    val deduped = probes.select("query_id", "term").dropDuplicates("query_id", "term")
-    val probeRows = deduped.limit(MaxProbePairs + 1).collect()
-    require(probeRows.length <= MaxProbePairs,
-      s"BM25 probe batch exceeds $MaxProbePairs distinct (query_id, term) rows — " +
-        "this serve path is for bounded probe batches, not corpus-scale relations")
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), deduped.schema)
+    // The collected probe batch ([[collectProbes]]) is the bounded side BY
+    // CONTRACT (postings are corpus-scale), so pin it as the broadcast
+    // build side instead of leaving the choice to size ESTIMATES: at tiny
+    // SFs the estimate tie flipped with a testdata regeneration and the
+    // planner broadcast the POSTINGS under the streamed probes — a shape
+    // that only exists while the index fits in a broadcast, i.e. never at
+    // corpus scale (guide §3.1: pick the strategy deliberately).
     broadcast(local)
       .join(postings, "term")
       .join(terms, "term")
@@ -525,17 +531,6 @@ object Bm25 {
           lit(2L)).as("suggested_e6"))
   }
 
-  /** [[search]] served from a TERM-BUCKETED postings catalog table (the
-    * q77/q80 layout machinery, `Bucketing.ensureBm25Postings`): the
-    * probe's distinct terms — a driver-side list bounded by the probe
-    * batch contract, the IVF `isin` cell-pruning discipline — become a
-    * literal `IN` filter on the bucket column, so the scan reads ONLY the
-    * buckets holding probed terms (`SelectedBucketsCount` in the plan; at
-    * a 100 TB postings table that is the difference between opening
-    * |probe terms| buckets and listing every file). Bucket metadata rides
-    * the catalog, scores are [[search]]'s exact integers, and the
-    * postings side still reaches its join with zero Exchange.
-    */
   /** Hard ceiling on [[searchBucketed]]'s driver-collected distinct probe
     * terms. A probe batch is tens of queries × a handful of terms; a
     * caller feeding a corpus-sized relation would otherwise OOM the driver
@@ -546,7 +541,7 @@ object Bm25 {
 
   /** Hard ceiling on the scoring join's broadcast probe relation — distinct
     * (query_id, term) rows (r18; the pair-level twin of [[MaxProbeTerms]],
-    * enforced in `scoredAgainst` so EVERY serve path — plain [[search]],
+    * enforced in `collectProbes` so EVERY serve path — plain [[search]],
     * [[hardNegatives]], [[searchBucketed]] — fails loudly on a
     * contract-violating probe instead of OOMing the driver). 2^20 rows of
     * (long, short string) is a few tens of MB — far above any real probe
@@ -554,20 +549,33 @@ object Bm25 {
     */
   val MaxProbePairs = 1 << 20
 
+  /** [[search]] served from a TERM-BUCKETED postings catalog table (the
+    * q77/q80 layout machinery, `Bucketing.ensureBm25Postings`): the
+    * probe's distinct terms — a driver-side list bounded by the probe
+    * batch contract, the IVF `isin` cell-pruning discipline — become a
+    * literal `IN` filter on the bucket column, so the scan reads ONLY the
+    * buckets holding probed terms (`SelectedBucketsCount` in the plan; at
+    * a 100 TB postings table that is the difference between opening
+    * |probe terms| buckets and listing every file). Bucket metadata rides
+    * the catalog, scores are [[search]]'s exact integers, and the
+    * postings side still reaches its join with zero Exchange. The probe
+    * relation is evaluated ONCE: the term list is derived on the driver
+    * from the same collected pairs the scoring join broadcasts.
+    */
   def searchBucketed(
       spark: SparkSession, probes: DataFrame, postingsTable: String,
       path: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val capped = probes.select("term").distinct().limit(MaxProbeTerms + 1)
-      .collect().map(_.getString(0))
-    require(capped.length <= MaxProbeTerms,
+    val local = collectProbes(spark, probes)
+    // a driver-local relation: this collect runs no job over the probes
+    val probeTerms = local.collect().map(_.getAs[String]("term")).distinct.sorted
+    require(probeTerms.length <= MaxProbeTerms,
       s"searchBucketed probe batch exceeds $MaxProbeTerms distinct terms — " +
         "this serve path is for probe batches, not corpus-scale relations")
-    val probeTerms = capped.sorted
     val postings = spark.table(postingsTable)
       .filter(col("term").isin(probeTerms.toSeq: _*))
       .select("term", "doc_id", "tf")
-    topK(scoredAgainst(spark, probes, postings, path), k)
+    topK(scoredAgainst(spark, local, postings, path), k)
       .select("query_id", "rank", "doc_id", "score_e6")
   }
 }

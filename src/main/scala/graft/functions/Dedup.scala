@@ -237,75 +237,12 @@ object Dedup {
         SimHash.fingerprintNative(Text.tokens(col(textCol)), nBits).as("simhash"))
       .filter(col("simhash").isNotNull)
 
-  /** Collapse near-duplicate candidate PAIRS into duplicate clusters:
-    * every document connected through the pair graph gets the cluster's
-    * minimum doc id as its representative (connected components).
-    *
-    * Iterative min-label propagation: each round joins (id, label) against
-    * the edge list and keeps the elementwise minimum — two narrow shuffles
-    * of long pairs per round, converging in O(graph diameter) rounds
-    * (near-dup clusters are dense, so the diameter is small). This is the
-    * hash-join CC formulation that scales out with no graph library: state
-    * per round is one (id, label) row per non-isolated document.
-    *
-    * Output: (id, rep) for every document that appears in at least one
-    * pair; isolated documents are their own trivial cluster and are not
-    * emitted.
-    */
-  def duplicateClusters(
-      pairs: DataFrame,
-      aCol: String = "a_id",
-      bCol: String = "b_id",
-      checkpointDir: Option[String] = None): DataFrame = {
-    // Checkpoint after every round: an iterative DataFrame loop otherwise
-    // accumulates the WHOLE upstream pipeline plus every prior round in
-    // each new plan — planning/codegen blows the driver heap long before
-    // the data does. Checkpointing pins the rows and resets the lineage so
-    // each round plans O(1) work. `checkpointDir` picks the durability:
-    // None → localCheckpoint (fast, but blocks die with their executor);
-    // Some(dir) → reliable checkpoint() into dir, surviving executor loss
-    // on a real cluster (see [[pinner]]).
-    val pin = new Pinner(pairs.sparkSession, checkpointDir)
-    // DURABLE pin: every round's min-join reads this edge relation, so it
-    // must survive the whole loop (the transient-pin GC would break it)
-    val edges = isolatedCopy(
-      pin.durable(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-        .distinct(), true))
-    withIterationPartitions(edges) {
-      var labels = pin(edges.select(col("src").as("id")).distinct()
-        .withColumn("rep", col("id")), true)
-      var converged = false
-      while (!converged) {
-        val nbrMin = edges
-          .join(labels.select(col("id").as("dst"), col("rep").as("nbr_rep")), Seq("dst"))
-          .groupBy("src")
-          .agg(min(col("nbr_rep")).as("nbr_rep"))
-          .select(col("src").as("id"), col("nbr_rep"))
-        // ONE action per round: `old_rep` rides along into a LAZY checkpoint,
-        // and the convergence aggregate below is the job that materializes
-        // it — no separate change-detection join/count job on top.
-        val next = pin(labels.withColumnRenamed("rep", "old_rep")
-          .join(nbrMin, Seq("id"), "left")
-          .select(
-            col("id"),
-            least(col("old_rep"), coalesce(col("nbr_rep"), col("old_rep"))).as("rep"),
-            col("old_rep")), false)
-        // coalesce: SUM over ZERO rows is null (empty pair set → empty
-        // labels), and getLong on it NPEs instead of converging
-        val changed = next
-          .agg(coalesce(sum(when(col("rep") < col("old_rep"), 1L).otherwise(0L)), lit(0L)).as("n"))
-          .first().getLong(0)
-        labels = next.drop("old_rep")
-        converged = changed == 0
-      }
-      labels
-    }
-  }
-
-  /** Scale-proof connected components: alternating large-star / small-star
+  /** Collapse near-duplicate candidate PAIRS into duplicate clusters —
+    * the engine's one connected-components algorithm: every document
+    * connected through the pair graph gets the cluster's minimum doc id
+    * as its representative. Alternating large-star / small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond"), converging in O(log n) rounds on ANY graph shape — including
+    * Beyond") converges in O(log n) rounds on ANY graph shape — including
     * the chain-shaped duplicate graphs (serial near-dups with drift) where
     * min-label propagation degrades to O(n) rounds.
     *
@@ -314,17 +251,17 @@ object Dedup {
     *     m = min(Γ(c) ∪ {c});
     *   - small-star: for each center u over its smaller neighbors, every
     *     neighbor and u itself attach to m = min(Γ(u)).
-    * Both are plain groupBy-min + equi-join — the same hash primitives as
-    * min-label, two narrow long-pair shuffles each. Fixed point = a union of
+    * Both are plain groupBy-min + equi-join — hash primitives only, no
+    * graph library; two narrow long-pair shuffles each. Fixed point = a union of
     * stars centered at each component's minimum.
     *
     * Convergence detection costs no extra job: the next edge set is lazily
     * checkpointed and materialized by the full-outer mismatch aggregate
     * itself (exact set comparison, not a hash gamble).
     *
-    * Output contract matches [[duplicateClusters]]: (id, rep) for every
-    * node in at least one pair, with rep = the component's minimum id
-    * (representatives map to themselves); isolated docs are not emitted.
+    * Output: (id, rep) for every node in at least one pair, with rep =
+    * the component's minimum id (representatives map to themselves);
+    * isolated docs are their own trivial cluster and are not emitted.
     *
     * `localFirst` (default ON) runs [[localContract]] — one partition-local
     * union-find pass — before the star rounds. Labels are provably
@@ -539,7 +476,7 @@ object Dedup {
     if (symmetrize) contracted.distinct() else contracted
   }
 
-  /** Lineage-pinning strategy for the iterative CC loops, picked by
+  /** Lineage-pinning strategy for the iterative CC loop, picked by
     * `checkpointDir`:
     *   - None → `localCheckpoint`: blocks live on executor local storage —
     *     fast, but an executor loss mid-loop kills the computation;
@@ -555,14 +492,12 @@ object Dedup {
     * `spark.cleaner.referenceTracking.cleanCheckpoints` (a context-creation
     * setting this library can't assume), so without cleanup a long
     * clustering loop grows `dir` by one edge-set per round, unbounded.
-    * Each pin lands in its own `pin-N` subdirectory; TRANSIENT pins
-    * ([[Pinner.apply]] — a round's state, consumed only by the next round)
-    * are deleted once two younger transient pins exist: by then their one
-    * consumer is itself checkpointed and materialized (the loops run
-    * exactly one action per round), so the files are unreachable. LONG-
-    * LIVED pins ([[Pinner.durable]] — min-label's edge set, joined by
-    * EVERY round) are never GC'd. The last two transient pins stay on
-    * disk deliberately — the returned labels frame still reads the final
+    * Each pin lands in its own `pin-N` subdirectory and holds a round's
+    * state, consumed only by the next round; it is deleted once two
+    * younger pins exist: by then its one consumer is itself checkpointed
+    * and materialized (the loop runs exactly one action per round), so
+    * the files are unreachable. The last two pins stay on disk
+    * deliberately — the returned labels frame still reads the final
     * checkpoint; callers GC `dir` after consuming results
     * (spec: `DedupSpec` "GC spent rounds").
     *
@@ -595,13 +530,8 @@ object Dedup {
     private val instance = Pinner.instanceIds.getAndIncrement()
     private val gcQueue = scala.collection.mutable.Queue[String]()
 
-    /** Pin a transient round — GC-eligible two transient pins later. */
-    def apply(df: DataFrame, eager: Boolean): DataFrame = pin(df, eager, gc = true)
-
-    /** Pin a relation the whole loop keeps reading — never GC'd. */
-    def durable(df: DataFrame, eager: Boolean): DataFrame = pin(df, eager, gc = false)
-
-    private def pin(df: DataFrame, eager: Boolean, gc: Boolean): DataFrame =
+    /** Pin a round's state — GC-eligible two pins later. */
+    def apply(df: DataFrame, eager: Boolean): DataFrame =
       checkpointDir match {
         case None => df.localCheckpoint(eager)
         case Some(dir) =>
@@ -626,12 +556,10 @@ object Dedup {
             try df.checkpoint(eager)
             finally org.apache.spark.graftbridge.CheckpointDirBridge.set(sc, prev)
           }
-          if (gc) {
-            gcQueue.enqueue(sub)
-            if (gcQueue.size > 2) {
-              val stale = new org.apache.hadoop.fs.Path(gcQueue.dequeue())
-              stale.getFileSystem(sc.hadoopConfiguration).delete(stale, true)
-            }
+          gcQueue.enqueue(sub)
+          if (gcQueue.size > 2) {
+            val stale = new org.apache.hadoop.fs.Path(gcQueue.dequeue())
+            stale.getFileSystem(sc.hadoopConfiguration).delete(stale, true)
           }
           out
       }
@@ -675,7 +603,7 @@ object Dedup {
     * partition keeps an iteration partition comfortably in executor memory
     * (16 B a row) while capping task count on small graphs.
     *
-    * The conf is session-scoped, and both CC entry points hand this an
+    * The conf is session-scoped, and the CC loop hands this an
     * [[isolatedCopy]]-rebound relation: the mutation lands on a private
     * `newSession()`, so concurrent planning on the caller's session is
     * unaffected by construction (spec: `DedupSpec` "CC conf isolation").

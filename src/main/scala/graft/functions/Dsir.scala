@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al., NeurIPS
@@ -12,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   *   1. TRAIN ([[trainImportance]]): bag-of-hashed-features unigram+bigram
   *      models of the target and raw samples over the SAME feature space
-  *      the quality classifier uses ([[QualityClassifier.featureCol]] →
-  *      60-bit md5 → dim buckets); per-bucket importance weight
+  *      the quality classifier uses (its [[QualityClassifier.featureCounts]]
+  *      count: 60-bit md5 → dim buckets); per-bucket importance weight
   *      `w_e4 = round(10⁴·(ln p̂_target(b) − ln p̂_raw(b)))` with add-one
   *      smoothing, quantized ONCE at train time (the [[LangModel]]
   *      discipline — transcendentals never cross an engine boundary), and
@@ -48,18 +47,6 @@ object Dsir {
     */
   val GumbelResolution = 10000
 
-  /** Per-bucket counts of the hashed unigram+bigram features. */
-  private def bucketCounts(
-      df: DataFrame, textCol: String, dim: Int): Array[Long] = {
-    val arr = new Array[Long](dim)
-    df.select(explode(QualityClassifier.featureCol(col(textCol))).as("__f"))
-      .select((Dedup.tokenHash64(col("__f")) % dim).cast("int").as("b"))
-      .groupBy("b").agg(count(lit(1)).as("n"))
-      .collect() // bounded by dim
-      .foreach(r => arr(r.getInt(0)) = r.getLong(1))
-    arr
-  }
-
   /** Importance-weight model: `w_e4(b) = round(10⁴·(ln((tc_b+1)/(T+dim))
     * − ln((rc_b+1)/(R+dim))))`. Returned as a [[QualityClassifier.Model]]
     * (zero bias) so the existing codegen scorer, persistence and layout
@@ -68,9 +55,13 @@ object Dsir {
   def trainImportance(
       target: DataFrame, raw: DataFrame, textCol: String,
       dim: Int = QualityClassifier.DefaultDim): QualityClassifier.Model = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val tc = bucketCounts(target, textCol, dim)
-    val rc = bucketCounts(raw, textCol, dim)
+    // both samples in ONE count, told apart by a side label
+    def side(df: DataFrame, name: String) =
+      df.select(col(textCol).as("__text"), lit(name).as("__side"))
+    val counts = QualityClassifier.featureCounts(
+      side(target, "target").unionByName(side(raw, "raw")), "__text", col("__side"), dim)
+    val tc = counts.getOrElse("target", new Array[Long](dim))
+    val rc = counts.getOrElse("raw", new Array[Long](dim))
     val tTot = tc.sum.toDouble + dim
     val rTot = rc.sum.toDouble + dim
     require(tc.sum > 0, "target sample has no features")
@@ -123,7 +114,7 @@ object Dsir {
       .withColumn("__fs", QualityClassifier.featureSum(col(textCol), model))
       .select(col(idCol),
         col("__fs.n_feats").as("n_feats"),
-        col("__fs.wsum").as("logw_e4"),
+        element_at(col("__fs.wsums"), 1).as("logw_e4"),
         element_at(typedLit(g.toSeq),
           (noiseIndex(col(idCol), salt, resolution) + 1).cast("int"))
           .as("gumbel_e4"))

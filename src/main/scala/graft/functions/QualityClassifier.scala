@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -33,6 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * prefix → 60-bit long) mod dim; score_e4 = half-up((bias + Σ weights) ·
   * 10⁴ / n_feats) via [[ExactAgg.divHalfUp]] — integers end to end, no
   * float crosses an engine or replay boundary.
+  *
+  * One hashed-feature core serves every entry point — quality (q98/q109),
+  * lang-id (q116), DSIR ([[Dsir]], q131) and the ingest gates: one
+  * feature list ([[featureCol]]), one count ([[featureCounts]]) under
+  * every trainer, one K-model scorer expression (a single model is K = 1),
+  * one score formula ([[scoreOf]]) and one model codec.
   *
   * Scale design (100 TB): inference is ONE whole-stage-codegen map pass —
   * the weight table (a few thousand ints) rides the plan as a reference
@@ -75,51 +82,69 @@ object QualityClassifier {
     def dim: Int = weights.length
   }
 
-  /** Persist a model as a (bucket, weight) parquet table; the bias rides
-    * as the reserved bucket −1 and the dimension as the reserved bucket
-    * −2, so one table round-trips the whole model. Zero weights may be
-    * omitted — [[readModel]] fills absent buckets with 0.
-    */
-  def writeModel(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
-    (Seq((-2, model.dim.toLong), (-1, model.bias)) ++
-        model.weights.toSeq.zipWithIndex.map(_.swap).filter(_._2 != 0L))
-      .toDF("bucket", "weight")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  // ---------------------------------------------------------------- codec
 
-  /** Read a persisted model. The dimension comes from the reserved −2 row
-    * (falling back to max bucket + 1 for a pre-v2 dense table); buckets
-    * absent from the table read as weight 0, so SPARSE trained tables —
-    * the common production artifact, zero weights omitted — install
-    * directly (round-12 advice: the dense-table assumption threw on the
-    * first missing bucket).
+  /** A model's persisted rows: the dimension as the reserved bucket −2,
+    * the bias as −1, then the non-zero weights — one table round-trips
+    * the whole model, and zero weights are omitted (a production weight
+    * table is commonly SPARSE).
     */
-  def readModel(spark: SparkSession, path: String): Model = {
-    val rows = graft.sources.Tables.parquetScan(spark, path).collect()
-      .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("weight"))).toMap
+  private def encode(m: Model): Seq[(Int, Long)] =
+    Seq((-2, m.dim.toLong), (-1, m.bias)) ++
+      m.weights.toSeq.zipWithIndex.collect { case (w, j) if w != 0L => (j, w) }
+
+  /** Inverse of [[encode]]: absent buckets read as weight 0, so sparse
+    * trained tables install directly (round-12 advice: the dense-table
+    * assumption threw on the first missing bucket); a pre-v2 dense table
+    * without the −2 row takes its dimension from max bucket + 1.
+    */
+  private def decode(rows: Map[Int, Long], what: String): Model = {
     val dim = rows.get(-2).map(_.toInt)
       .getOrElse(rows.keysIterator.filter(_ >= 0).max + 1)
-    require(dim >= 1, s"model at $path has dimension $dim")
+    require(dim >= 1, s"$what has dimension $dim")
     Model(Array.tabulate(dim)(rows.getOrElse(_, 0L)), rows.getOrElse(-1, 0L))
   }
 
-  // ---------------------------------------------------------------- train
+  /** Persist a model as a (bucket, weight) parquet table ([[encode]]). */
+  def writeModel(spark: SparkSession, model: Model, path: String): Unit = {
+    import spark.implicits._
+    encode(model).toDF("bucket", "weight")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
 
-  /** Fixed-point scale of trained weights: a bucket's weight is its e6
-    * share of the good-class feature mass minus its e6 share of the bad
-    * class. Interpolated into the generated oracle SQL.
-    */
-  val TrainScale = 1000000L
+  /** Persist a multi-class model as ONE (class, bucket, weight) table —
+    * [[encode]]'s rows per class. */
+  def writeMultiModel(
+      spark: SparkSession, models: Seq[(String, Model)], path: String): Unit = {
+    import spark.implicits._
+    models.flatMap { case (c, m) => encode(m).map { case (j, w) => (c, j, w) } }
+      .toDF("class", "bucket", "weight")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+  }
 
-  /** Exact half-up integer division (the [[ExactAgg.divHalfUp]] formula,
-    * driver-side). */
-  private def divHalfUpL(p: Long, q: Long): Long =
-    Math.floorDiv(p * 2 + q, q * 2)
+  private def bucketWeights(rows: Iterable[Row]): Map[Int, Long] =
+    rows.map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("weight"))).toMap
+
+  /** Read a persisted model ([[decode]]). */
+  def readModel(spark: SparkSession, path: String): Model =
+    decode(bucketWeights(graft.sources.Tables.parquetScan(spark, path).collect()),
+      s"model at $path")
+
+  /** Read a persisted multi-class model, classes sorted by name (the
+    * serve-side tiebreak order). */
+  def readMultiModel(spark: SparkSession, path: String): Seq[(String, Model)] = {
+    val byClass = graft.sources.Tables.parquetScan(spark, path).collect()
+      .groupBy(_.getAs[String]("class"))
+    require(byClass.nonEmpty, s"multi-class model at $path is empty")
+    byClass.keys.toSeq.sorted.map(c =>
+      c -> decode(bucketWeights(byClass(c)), s"class $c at $path"))
+  }
+
+  // ------------------------------------------------------------- features
 
   /** The scorer's feature list as a column — the engine-contract
     * single-space unigrams plus adjacent space-joined bigrams, exactly
-    * [[QualityScorer.score]]'s iteration re-expressed declaratively so
+    * [[QualityMultiScorer.score]]'s iteration re-expressed declaratively so
     * training and inference consume the same feature space.
     */
   private[functions] def featureCol(text: Column): Column = {
@@ -131,169 +156,156 @@ object QualityClassifier {
     concat(t, bi)
   }
 
+  /** Per-class feature counts — the one aggregation every trainer reads:
+    * class → dense `dim`-length array of how many features of that class's
+    * documents hash into each bucket ([[Dedup.tokenHash64]] mod dim, the
+    * scorer's own bucket). Rows whose class is null count under the null
+    * key.
+    *
+    * Scale shape (100 TB): ONE explode + (class, bucket) hash aggregation
+    * with map-side combine; at most dim × K rows reach the driver (the
+    * same bounded-by-contract collect as the model install), and the
+    * corpus is never touched again.
+    */
+  private[functions] def featureCounts(
+      docs: DataFrame, textCol: String, cls: Column, dim: Int): Map[String, Array[Long]] = {
+    require(dim >= 1, s"dim must be >= 1, got $dim")
+    val counts = scala.collection.mutable.Map.empty[String, Array[Long]]
+    docs
+      .select(cls.cast("string").as("__cls"), explode(featureCol(col(textCol))).as("__f"))
+      .groupBy(col("__cls"), (Dedup.tokenHash64(col("__f")) % dim).cast("int").as("bucket"))
+      .agg(count(lit(1)).as("n"))
+      .collect() // bounded by dim × classes
+      .foreach { r =>
+        counts.getOrElseUpdate(r.getString(0), new Array[Long](dim))(r.getInt(1)) = r.getLong(2)
+      }
+    counts.toMap
+  }
+
+  // ---------------------------------------------------------------- train
+
+  /** Fixed-point scale of trained weights: a bucket's weight is its e6
+    * share of its class's feature mass. Interpolated into the generated
+    * oracle SQL.
+    */
+  val TrainScale = 1000000L
+
+  /** Each class's centroid: w_c(j) = halfUp(c_j·10⁶ / C), the bucket's e6
+    * share of the class's feature mass C. The share arithmetic bounds a
+    * class at ~4.6·10¹² features: the half-up division doubles the e6
+    * product, so the ceiling is Long.MaxValue / TrainScale / 2 (round-13
+    * advice: a naive ceiling let the upper half overflow silently) —
+    * labeled corpora are orders of magnitude smaller, and the guard makes
+    * the ceiling explicit rather than silent.
+    */
+  private def centroids(counts: Map[String, Array[Long]]): Map[String, Array[Long]] = {
+    val ceiling = Long.MaxValue / TrainScale / 2
+    counts.map { case (c, n) =>
+      val total = n.sum
+      require(total <= ceiling,
+        s"class $c too large for e6 fixed point: $total features (ceiling $ceiling)")
+      c -> n.map(x => Math.floorDiv(x * TrainScale * 2 + total, total * 2))
+    }
+  }
+
   /** Deterministic in-engine TRAINING (round-12 verdict #1): a
     * nearest-centroid (Rocchio) linear fit over the same hashed feature
-    * space the scorer consumes. Each bucket's weight is the integer
-    * difference of its class-conditional feature shares:
-    * w(j) = halfUp(g_j·10⁶ / G) − halfUp(b_j·10⁶ / B), where g_j/b_j are
-    * the bucket's feature counts in the good/bad class and G/B the class
-    * totals — the classic centroid-difference discriminant, closed-form
+    * space the scorer consumes — the two-class case of [[centroids]] over
+    * the label cast to boolean. Each bucket's weight is the difference of
+    * its class shares, w(j) = halfUp(g_j·10⁶ / G) − halfUp(b_j·10⁶ / B);
+    * a row whose label casts to null counts for neither class. Closed-form
     * and integer end to end, so the SAME model falls out of any example
-    * order, partitioning or replay (no SGD, no learning-rate schedule,
-    * nothing iterative to pin — the q62 fixed-point discipline without
-    * the iterations).
-    *
-    * Scale shape (100 TB): ONE explode + hash aggregation — features
-    * reduce map-side to (bucket, g, b) partials, at most `dim` rows reach
-    * the driver (the same bounded-by-contract collect as the model
-    * install), and the corpus is never touched again. The e6 share
-    * arithmetic bounds the supported labeled-set size at ~4.6·10¹²
-    * features per class (Long overflow guard below — divHalfUpL doubles
-    * the e6 product, so the ceiling is Long.MaxValue / TrainScale / 2,
-    * half what the share product alone would allow) — labeled quality
-    * corpora are orders of magnitude smaller; the guard makes the ceiling
-    * explicit rather than silent.
+    * order, partitioning or replay (no SGD, nothing iterative to pin — the
+    * q62 fixed-point discipline without the iterations).
     */
   def trainCentroid(
       docs: DataFrame, textCol: String, labelCol: String,
       dim: Int = DefaultDim): Model = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val counts = docs
-      .select(col(labelCol).cast("boolean").as("__lbl"),
-        explode(featureCol(col(textCol))).as("__f"))
-      .select(col("__lbl"),
-        (Dedup.tokenHash64(col("__f")) % dim).cast("int").as("bucket"))
-      .groupBy("bucket").agg(
-        sum(when(col("__lbl"), 1L).otherwise(0L)).as("g"),
-        sum(when(!col("__lbl"), 1L).otherwise(0L)).as("b"))
-      .collect() // bounded by dim
-      .map(r => (r.getAs[Int]("bucket"), (r.getAs[Long]("g"), r.getAs[Long]("b"))))
-      .toMap
-    val good = counts.valuesIterator.map(_._1).sum
-    val bad = counts.valuesIterator.map(_._2).sum
-    require(good > 0 && bad > 0,
-      s"training needs features in BOTH classes, got good=$good bad=$bad")
-    // divHalfUpL doubles the e6 product, so the guard must halve the
-    // naive Long.MaxValue / TrainScale ceiling (round-13 advice: the 2x
-    // headroom gap let values in the upper half overflow silently)
-    val maxClassFeatures = Long.MaxValue / TrainScale / 2
-    require(good <= maxClassFeatures && bad <= maxClassFeatures,
-      s"labeled set too large for e6 fixed point: $good/$bad features " +
-        s"(ceiling $maxClassFeatures per class)")
-    val weights = Array.tabulate(dim) { j =>
-      val (g, b) = counts.getOrElse(j, (0L, 0L))
-      divHalfUpL(g * TrainScale, good) - divHalfUpL(b * TrainScale, bad)
-    }
-    Model(weights, bias = 0L)
+    val shares = centroids(
+      featureCounts(docs, textCol, col(labelCol).cast("boolean"), dim) - null)
+    require(shares.contains("true") && shares.contains("false"),
+      s"training needs features in BOTH classes, got ${shares.keys.toSeq.sorted}")
+    Model(Array.tabulate(dim)(j => shares("true")(j) - shares("false")(j)), bias = 0L)
   }
 
-  // --------------------------------------------------------- multi-class
-
   /** Multi-class sibling of [[trainCentroid]] — the real lang-id /
-    * domain-classifier shape (round-13 verdict #3: q24's alphabet
-    * heuristic stood in for what production pipelines do with a TRAINED
-    * fastText-style classifier). One centroid per class over the same
-    * hashed feature space: w_c(j) = halfUp(c_j·10⁶ / C), the bucket's e6
-    * share of its class's feature mass — closed-form, integer end to
-    * end, example-order/partitioning/replay independent like the binary
-    * trainer. Serving is argmax of the per-class mean weight
-    * ([[classifyMulti]]).
-    *
-    * Scale shape (100 TB): ONE explode + (class, bucket) hash
-    * aggregation with map-side combine; at most dim × K rows reach the
-    * driver (the same bounded-by-contract collect), and the corpus is
-    * never touched again. Returns (class, Model) sorted by class name —
+    * domain-classifier shape (round-13 verdict #3): one [[centroids]]
+    * model per class. Serving is argmax of the per-class mean weight
+    * ([[classifyMulti]]). Returns (class, Model) sorted by class name —
     * the serve-side tiebreak order.
     */
   def trainCentroidMulti(
       docs: DataFrame, textCol: String, labelCol: String,
       dim: Int = DefaultDim): Seq[(String, Model)] = {
-    require(dim >= 1, s"dim must be >= 1, got $dim")
-    val counts = docs
-      .select(col(labelCol).cast("string").as("__cls"),
-        explode(featureCol(col(textCol))).as("__f"))
-      .select(col("__cls"),
-        (Dedup.tokenHash64(col("__f")) % dim).cast("int").as("bucket"))
-      .groupBy("__cls", "bucket").agg(count(lit(1)).as("n"))
-      .collect() // bounded by dim * n_classes
-      .map(r => ((r.getAs[String]("__cls"), r.getAs[Int]("bucket")), r.getAs[Long]("n")))
-      .toMap
-    val classes = counts.keysIterator.map(_._1).toSeq.distinct
-    require(classes.nonEmpty && !classes.contains(null),
-      s"training needs non-null class labels, got $classes")
-    val maxClassFeatures = Long.MaxValue / TrainScale / 2
-    classes.sorted.map { c =>
-      val total = (0 until dim).iterator.map(j => counts.getOrElse((c, j), 0L)).sum
-      require(total > 0, s"class $c has no features")
-      require(total <= maxClassFeatures,
-        s"class $c too large for e6 fixed point: $total features " +
-          s"(ceiling $maxClassFeatures)")
-      c -> Model(
-        Array.tabulate(dim)(j =>
-          divHalfUpL(counts.getOrElse((c, j), 0L) * TrainScale, total)),
-        bias = 0L)
+    val counts = featureCounts(docs, textCol, col(labelCol), dim)
+    require(counts.nonEmpty && !counts.contains(null),
+      s"training needs non-null class labels, got ${counts.keys.toSeq}")
+    val shares = centroids(counts)
+    shares.keys.toSeq.sorted.map(c => c -> Model(shares(c), bias = 0L))
+  }
+
+  // ---------------------------------------------------------------- serve
+
+  /** `struct(n_feats, wsums)` per document: feature count plus the raw
+    * integer weight sum of EVERY model from one tokenize+hash pass
+    * (wsums(k) corresponds to models(k); biases NOT folded in — they join
+    * in [[scoreOf]], keeping the expression a pure function of text and
+    * tables). */
+  def multiFeatureSum(text: Column, models: Seq[Model]): Column =
+    ColumnBridge.column(
+      QualityFeatureSum(ColumnBridge.expression(text), models.map(_.weights).toArray))
+
+  /** [[multiFeatureSum]] of one model: `struct(n_feats, wsums)` with the
+    * model's sum at `wsums[0]`. */
+  def featureSum(text: Column, model: Model): Column = multiFeatureSum(text, Seq(model))
+
+  /** The score formula, e4 fixed point: half-up((bias + Σw) · 10⁴ / n_feats)
+    * via [[ExactAgg.divHalfUp]]. */
+  private def scoreOf(wsum: Column, bias: Long, nFeats: Column): Column =
+    ExactAgg.divHalfUp((wsum + bias) * 10000, nFeats)
+
+  /** Document quality score in e4 fixed point ([[scoreOf]]). */
+  def scoreE4(text: Column, model: Model): Column = {
+    val s = featureSum(text, model)
+    scoreOf(element_at(s.getField("wsums"), 1), model.bias, s.getField("n_feats"))
+  }
+
+  /** Adds the scorer struct as `__q` (the caller drops it), `n_feats` and
+    * one [[scoreOf]] column per (name, model) — every model scored from
+    * the same single pass.
+    */
+  private def scored(df: DataFrame, textCol: String, named: Seq[(String, Model)]): DataFrame = {
+    val base = df.withColumn("__q", multiFeatureSum(col(textCol), named.map(_._2)))
+      .withColumn("n_feats", col("__q.n_feats"))
+    named.zipWithIndex.foldLeft(base) { case (d, ((name, m), k)) =>
+      d.withColumn(name, scoreOf(element_at(col("__q.wsums"), k + 1), m.bias, col("n_feats")))
     }
   }
 
-  /** Persist a multi-class model as ONE (class, bucket, weight) table —
-    * the [[writeModel]] reserved-row scheme per class (dim at bucket −2,
-    * bias at −1, zero weights omitted). */
-  def writeMultiModel(
-      spark: SparkSession, models: Seq[(String, Model)], path: String): Unit = {
-    import spark.implicits._
-    models.flatMap { case (c, m) =>
-      Seq((c, -2, m.dim.toLong), (c, -1, m.bias)) ++
-        m.weights.toSeq.zipWithIndex.collect { case (w, j) if w != 0L => (c, j, w) }
-    }.toDF("class", "bucket", "weight")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
+  /** Score + threshold a corpus: adds `n_feats`, `score_e4` and `label`
+    * ('keep' when score_e4 ≥ minScoreE4). One codegen map stage.
+    */
+  def classify(df: DataFrame, textCol: String, model: Model,
+      minScoreE4: Long = 0L): DataFrame =
+    scored(df, textCol, Seq("score_e4" -> model))
+      .withColumn("label", when(col("score_e4") >= minScoreE4, "keep").otherwise("drop"))
+      .drop("__q")
 
-  /** Read a persisted multi-class model, classes sorted by name (the
-    * serve-side tiebreak order). Sparse like [[readModel]]. */
-  def readMultiModel(spark: SparkSession, path: String): Seq[(String, Model)] = {
-    val rows = graft.sources.Tables.parquetScan(spark, path).collect()
-      .map(r => ((r.getAs[String]("class"), r.getAs[Int]("bucket")),
-        r.getAs[Long]("weight"))).toMap
-    val classes = rows.keysIterator.map(_._1).toSeq.distinct.sorted
-    require(classes.nonEmpty, s"multi-class model at $path is empty")
-    classes.map { c =>
-      val mine = rows.collect { case ((`c`, b), w) => (b, w) }.toMap
-      val dim = mine.get(-2).map(_.toInt)
-        .getOrElse(mine.keysIterator.filter(_ >= 0).max + 1)
-      require(dim >= 1, s"class $c at $path has dimension $dim")
-      c -> Model(Array.tabulate(dim)(mine.getOrElse(_, 0L)), mine.getOrElse(-1, 0L))
-    }
-  }
-
-  /** Argmax serve: adds `n_feats`, one `score_<class>_e4` per class
-    * (halfUp((bias_c + Σw_c)·10⁴ / n_feats) — the [[scoreE4]] formula)
-    * and `pred` = the alphabetically-FIRST class attaining the maximum
-    * score (a deterministic tiebreak both engines express identically).
+  /** Argmax serve: adds `n_feats`, one `score_<class>_e4` per class and
+    * `pred` = the alphabetically-FIRST class attaining the maximum score
+    * (a deterministic tiebreak both engines express identically).
     *
-    * SINGLE-PASS in K (round-14 verdict #4): one
-    * [[QualityMultiFeatureSum]] expression tokenizes and md5-hashes each
-    * document ONCE and scores all K classes inside that one loop — the
-    * 60-bit feature hash is computed once per feature and each class
-    * costs only a modulo + table lookup, so serve cost is near-flat in K
-    * (real lang-id is K≈100+; the previous shape ran K independent
-    * tokenize+hash passes). Still one whole-stage-codegen map pass — the
-    * K weight tables ride the plan as ONE reference object, nothing
-    * shuffles.
+    * SINGLE-PASS in K (round-14 verdict #4): the one scorer expression
+    * tokenizes and md5-hashes each document ONCE and scores all K classes
+    * inside that loop, so serve cost is near-flat in K (real lang-id is
+    * K≈100+). Still one whole-stage-codegen map pass — the K weight tables
+    * ride the plan as ONE reference object, nothing shuffles.
     */
   def classifyMulti(
       df: DataFrame, textCol: String, models: Seq[(String, Model)]): DataFrame = {
     require(models.nonEmpty, "classifyMulti needs at least one class")
     val sorted = models.sortBy(_._1)
-    val withSums = df.withColumn("__q_multi",
-      multiFeatureSum(col(textCol), sorted.map(_._2)))
-    val base = withSums.withColumn("n_feats",
-      col("__q_multi").getField("n_feats"))
-    val scored = sorted.zipWithIndex.foldLeft(base) { case (d, ((c, m), k)) =>
-      d.withColumn(s"score_${c}_e4",
-        ExactAgg.divHalfUp(
-          (element_at(col("__q_multi").getField("wsums"), k + 1) + m.bias) * 10000,
-          col("n_feats")))
-    }
+    val scoredDf = scored(df, textCol, sorted.map { case (c, m) => s"score_${c}_e4" -> m })
     // `best` is HOISTED into its own column on purpose: inlined into the
     // K-branch ladder it would be duplicated K times, and at K≈64 the
     // generated compare method blows past HotSpot's JIT size ceiling and
@@ -303,53 +315,12 @@ object QualityClassifier {
     // so a multiply-referenced alias of it is never re-inlined.
     val best = sorted.map { case (c, _) => col(s"score_${c}_e4") }
       .reduceLeft((a, b) => greatest(a, b))
-    val withBest = scored.withColumn("__q_best", best)
+    val withBest = scoredDf.withColumn("__q_best", best)
     val pred = sorted.init.foldRight(lit(sorted.last._1): Column) {
       case ((c, _), acc) =>
         when(col(s"score_${c}_e4") === col("__q_best"), lit(c)).otherwise(acc)
     }
-    withBest.withColumn("pred", pred).drop("__q_multi", "__q_best")
-  }
-
-  /** `struct(n_feats, wsums)` per document: feature count plus the raw
-    * integer weight sum of EVERY class from one tokenize+hash pass
-    * (wsums(k) corresponds to models(k); biases NOT folded in — they
-    * join in the score formula, keeping the expression a pure function
-    * of text and tables). */
-  def multiFeatureSum(text: Column, models: Seq[Model]): Column =
-    ColumnBridge.column(
-      QualityMultiFeatureSum(ColumnBridge.expression(text),
-        models.map(_.weights).toArray))
-
-  /** `struct(n_feats, wsum)` per document: feature count and raw integer
-    * weight sum (bias NOT folded in — it joins in the score formula below,
-    * so the expression stays a pure function of text and table).
-    */
-  def featureSum(text: Column, model: Model): Column =
-    ColumnBridge.column(
-      QualityFeatureSum(ColumnBridge.expression(text), model.weights))
-
-  /** Document quality score in e4 fixed point:
-    * half-up((bias + Σw) · 10⁴ / n_feats).
-    */
-  def scoreE4(text: Column, model: Model): Column = {
-    val s = featureSum(text, model)
-    ExactAgg.divHalfUp((s.getField("wsum") + model.bias) * 10000, s.getField("n_feats"))
-  }
-
-  /** Score + threshold a corpus: adds `n_feats`, `score_e4` and `label`
-    * ('keep' when score_e4 ≥ minScoreE4). One codegen map stage.
-    */
-  def classify(df: DataFrame, textCol: String, model: Model,
-      minScoreE4: Long = 0L): DataFrame = {
-    val s = featureSum(col(textCol), model)
-    df.withColumn("__q", s)
-      .withColumn("n_feats", col("__q.n_feats"))
-      .withColumn("score_e4",
-        ExactAgg.divHalfUp((col("__q.wsum") + model.bias) * 10000, col("__q.n_feats")))
-      .withColumn("label",
-        when(col("score_e4") >= minScoreE4, "keep").otherwise("drop"))
-      .drop("__q")
+    withBest.withColumn("pred", pred).drop("__q", "__q_best")
   }
 
   /** Bucket index of one feature string under a dimension — the scorer's
@@ -358,7 +329,7 @@ object QualityClassifier {
     * importing trained weights keyed by feature).
     */
   def featureBucket(feat: String, dim: Int): Int =
-    new QualityScorer(new Array[Long](dim)).bucket(feat)
+    (new Md5Hash60().hash(feat) % dim).toInt
 
   /** The oracle-side SQL mirrors, generated from the same constants. */
   object Sql {
@@ -372,67 +343,29 @@ object QualityClassifier {
   }
 }
 
-/** `quality_feature_sum(string)` → `struct<n_feats:bigint, wsum:bigint>`:
-  * hashed unigram+bigram weight sum — see [[QualityClassifier]]. Codegen
-  * delegates to the shared scorer object (the [[BpeEncodeStats]] pattern):
-  * the loop stays compiled Scala, the expression stays inside whole-stage
-  * codegen.
+/** `quality_feature_sum(string)` →
+  * `struct<n_feats:bigint, wsums:array<bigint>>`: hashed unigram+bigram
+  * weight sums of K models — see [[QualityClassifier]]; a single model is
+  * K = 1. Codegen delegates to the shared scorer object (the
+  * [[BpeEncodeStats]] pattern): the loop stays compiled Scala, the
+  * expression stays inside whole-stage codegen.
   */
-case class QualityFeatureSum(child: Expression, weights: Array[Long])
+case class QualityFeatureSum(child: Expression, weights: Array[Array[Long]])
     extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
+    case StringType if weights.nonEmpty => TypeCheckResult.TypeCheckSuccess
+    case StringType => TypeCheckResult.TypeCheckFailure(
+      "quality_feature_sum requires at least one model")
     case other => TypeCheckResult.TypeCheckFailure(
       s"quality_feature_sum requires string, got ${other.sql}")
   }
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_feats", LongType, nullable = false),
-    StructField("wsum", LongType, nullable = false)))
-  override def prettyName: String = "quality_feature_sum"
-
-  @transient private lazy val scorer = new QualityScorer(weights)
-
-  override protected def nullSafeEval(v: Any): Any =
-    scorer.score(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.addReferenceObj("qualityScorer", scorer, classOf[QualityScorer].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $s.score($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `quality_multi_feature_sum(string)` →
-  * `struct<n_feats:bigint, wsums:array<bigint>>`: the K-class sibling of
-  * [[QualityFeatureSum]] — ONE tokenize + md5 pass per document, all K
-  * class weight sums accumulated inside that loop (round-14 verdict #4:
-  * the K-pass shape re-hashed the document per class; real lang-id is
-  * K≈100+ where hashing dominates). Per-class dims may differ — the
-  * 60-bit hash is computed once and reduced modulo each class's own
-  * dimension, so the per-class bucket is IDENTICAL to the single-class
-  * scorer's and trained single-class tables install unchanged.
-  */
-case class QualityMultiFeatureSum(child: Expression, weights: Array[Array[Long]])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if weights.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      "quality_multi_feature_sum requires at least one class")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"quality_multi_feature_sum requires string, got ${other.sql}")
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_feats", LongType, nullable = false),
     StructField("wsums", ArrayType(LongType, containsNull = false),
       nullable = false)))
-  override def prettyName: String = "quality_multi_feature_sum"
+  override def prettyName: String = "quality_feature_sum"
 
   @transient private lazy val scorer = new QualityMultiScorer(weights)
 
@@ -448,34 +381,6 @@ case class QualityMultiFeatureSum(child: Expression, weights: Array[Array[Long]]
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Per-task scorer: md5 digest + weight table reused across rows. Features
-  * are the engine-contract single-space tokens (split keeps empty tokens,
-  * matching Spark `split` / DuckDB `string_split`) plus adjacent bigrams
-  * joined with one space — so every feature string is re-derivable from
-  * the document text alone.
-  */
-private[graft] class QualityScorer(weights: Array[Long]) extends Serializable {
-  @transient private lazy val h60 = new Md5Hash60
-
-  private[graft] def bucket(feat: String): Int = bucketOf(feat)
-
-  private def bucketOf(feat: String): Int =
-    (h60.hash(feat) % weights.length).toInt
-
-  def score(text: UTF8String): InternalRow = {
-    val toks = text.toString.split(" ", -1)
-    var wsum = 0L
-    var i = 0
-    while (i < toks.length) {
-      wsum += weights(bucketOf(toks(i)))
-      if (i > 0) wsum += weights(bucketOf(toks(i - 1) + " " + toks(i)))
-      i += 1
-    }
-    val nFeats = toks.length.toLong + (toks.length - 1).toLong
-    new GenericInternalRow(Array[Any](nFeats, wsum))
-  }
 }
 
 /** The scorer family's shared feature hash: md5 first-15-hex-chars as a
@@ -495,13 +400,15 @@ private[graft] final class Md5Hash60 extends Serializable {
   }
 }
 
-/** K-class per-task scorer: ONE md5 hash per feature, each class then
-  * costs a modulo + table lookup inside the same token loop — near-flat
-  * in K. Bucket arithmetic per class is identical to [[QualityScorer]]'s
-  * (60-bit hash mod that class's dimension).
+/** Per-task K-model scorer: md5 digest + weight tables reused across rows.
+  * Features are the engine-contract single-space tokens (split keeps
+  * empty tokens, matching Spark `split` / DuckDB `string_split`) plus
+  * adjacent bigrams joined with one space — so every feature string is
+  * re-derivable from the document text alone. ONE md5 hash per feature;
+  * each model then costs a modulo by its own dimension + a table lookup,
+  * so serve cost is near-flat in K and per-model dims may differ.
   */
-private[graft] class QualityMultiScorer(weights: Array[Array[Long]])
-    extends Serializable {
+private[graft] class QualityMultiScorer(weights: Array[Array[Long]]) extends Serializable {
   @transient private lazy val h60 = new Md5Hash60
   private val k = weights.length
 
@@ -524,7 +431,6 @@ private[graft] class QualityMultiScorer(weights: Array[Array[Long]])
       i += 1
     }
     val nFeats = toks.length.toLong + (toks.length - 1).toLong
-    new GenericInternalRow(Array[Any](nFeats,
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(sums)))
+    new GenericInternalRow(Array[Any](nFeats, new GenericArrayData(sums)))
   }
 }

@@ -639,7 +639,7 @@ object IngestPipeline {
   def lastApplied(spark: SparkSession, paths: IngestPaths): Long = {
     val fs = IndexProtocol.fileSystem(spark, paths.manifest)
     val p = new org.apache.hadoop.fs.Path(paths.manifest)
-    val old = new org.apache.hadoop.fs.Path(paths.manifest + "__old")
+    val old = new org.apache.hadoop.fs.Path(paths.manifest + Sinks.OldSuffix)
     def read(path: org.apache.hadoop.fs.Path): Option[Long] =
       try {
         val in = fs.open(path)
@@ -652,48 +652,24 @@ object IngestPipeline {
     read(p).orElse(read(old)).orElse(read(p)).getOrElse(-1L)
   }
 
-  /** Restore the commit record when a [[recordApplied]] crash left it
-    * parked at `__old` (between the publish's two renames). Restoring the
-    * PARKED value — not adopting the staged `__tmp` — is always safe: the
-    * batch whose publish crashed replays from its commit gate and rewrites
-    * byte-identical content before republishing. No-op when the live
-    * manifest exists (then any surviving `__old`/`__tmp` are stale debris
-    * of a COMPLETED publish, cleared by the next one).
-    */
-  private def recoverManifest(
-      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(p.toString + "__old")
-    // Hadoop rename reports failure as `false`, not an exception — a
-    // silent false here would leave the record parked and the caller
-    // reading -1 on a healthy lake, the exact state this heals
-    if (!fs.exists(p) && fs.exists(old))
-      require(fs.rename(old, p), s"manifest recovery rename failed: $old -> $p")
-  }
-
-  /** Publish the manifest through a park-based swap (the staged-generation
+  /** Publish the manifest through [[Sinks.swapIn]] (the staged-generation
     * discipline every other artifact in the loop already follows): the
-    * previous record moves aside to `__old` instead of being deleted, so
+    * previous record is parked at `__old` instead of being deleted, so
     * there is NO window in which the lake's only commit record ceases to
     * exist — a crash at any point leaves it live, parked, or already
-    * replaced, and [[recoverManifest]] heals the parked state.
+    * replaced. The swap's own recovery step ([[Sinks.recoverSwap]])
+    * restores a parked record first; restoring the PARKED value, not
+    * adopting the staged `__tmp`, is always safe: the batch whose publish
+    * crashed replays from its commit gate and rewrites byte-identical
+    * content before republishing.
     */
   private def recordApplied(spark: SparkSession, paths: IngestPaths, batchId: Long): Unit = {
     val fs = IndexProtocol.fileSystem(spark, paths.manifest)
-    val p = new org.apache.hadoop.fs.Path(paths.manifest)
     val tmp = new org.apache.hadoop.fs.Path(paths.manifest + "__tmp")
-    val old = new org.apache.hadoop.fs.Path(paths.manifest + "__old")
-    recoverManifest(fs, p)
     val out = fs.create(tmp, true)
     try out.write(batchId.toString.getBytes("UTF-8"))
     finally out.close()
-    fs.delete(old, false) // stale park of a completed publish, if any
-    // renames fail as `false` on Hadoop filesystems — each one unchecked
-    // would let recordApplied return "committed" with the record parked
-    // or still staged
-    if (fs.exists(p))
-      require(fs.rename(p, old), s"manifest park rename failed: $p -> $old")
-    require(fs.rename(tmp, p), s"manifest publish rename failed: $tmp -> $p")
-    fs.delete(old, false)
+    Sinks.swapIn(fs, tmp, new org.apache.hadoop.fs.Path(paths.manifest))
   }
 
   /** One ingest transaction. Returns the number of accepted (landed) docs;
@@ -781,7 +757,7 @@ object IngestPipeline {
         // names too (review finding: a batch column named like a scratch
         // column is replaced just as silently as a bookkeeping one)
         requireNoGateCollision("lang",
-          Seq("pred", "n_feats", "__q_multi", "__q_best") ++
+          Seq("pred", "n_feats", "__q", "__q_best") ++
             cfg.models.map { case (c, _) => s"score_${c}_e4" })
         graft.functions.QualityClassifier
           .classifyMulti(scrubbed, textCol, cfg.models)

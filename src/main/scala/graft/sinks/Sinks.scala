@@ -276,13 +276,16 @@ object Sinks {
     * the live path empty and the last good generation parked aside —
     * rename it back. Writers that READ the table before swapping (e.g.
     * [[upsertBatch]]'s merge, [[compactPartials]]) must run this first or
-    * they would mistake the crash window for an empty table.
+    * they would mistake the crash window for an empty table. The rename
+    * is checked: Hadoop reports a failed rename as `false`, and a silent
+    * one would leave the table parked while the caller reads it as empty.
     */
   def recoverSwap(
       fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path,
       old: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.exists(target) && fs.exists(old)) fs.rename(old, target)
+    if (!fs.exists(target) && fs.exists(old))
+      require(fs.rename(old, target), s"swap recovery: failed to restore $old at $target")
 
   /** Resolve the readable generation of a swap-managed table: the live path
     * when present, else the parked `__old` generation a crashed swap left

@@ -252,6 +252,29 @@ class Bm25Spec extends SparkSpec {
     }
   }
 
+  test("searchBucketed evaluates each probe row once while constructing the search") {
+    val tbl = graft.sources.Bucketing.ensureBm25Postings(
+      spark, s"$indexPath/postings", s"$root/bucketed_once", "bm25speconce", buckets = 8)
+    try {
+      // every evaluation of a probe row's term bumps the accumulator; the
+      // term list and the broadcast pairs must come from ONE collect
+      val evals = spark.sparkContext.longAccumulator("probe_row_evals")
+      val counted = udf { (t: String) => evals.add(1L); t }.asNondeterministic()
+      val probes = spark.range(6).select(
+        (col("id") % 2 + 100L).as("query_id"),
+        counted(when(col("id") % 3 === 0, lit("a")).otherwise(lit("c"))).as("term"))
+      val bucketed = Bm25.searchBucketed(spark, probes, tbl, indexPath, k = 10)
+      assert(evals.value == 6L, s"6 probe rows evaluated ${evals.value} times")
+      val plain = Bm25.search(spark,
+        Seq((100L, "a"), (100L, "c"), (101L, "a"), (101L, "c")).toDF("query_id", "term"),
+        indexPath, k = 10).as[(Long, Int, Long, Long)].collect().toSeq.sorted
+      assert(bucketed.as[(Long, Int, Long, Long)].collect().toSeq.sorted == plain)
+      assert(evals.value == 6L, "running the search must not re-read the probe relation")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    }
+  }
+
   test("contaminationReport: shingle-grade sweep flags the near-verbatim copy only") {
     // ten eval docs with distinct bigram structure (a realistic suite
     // size — a 2-doc suite's ln(2) idf cannot clear any threshold);

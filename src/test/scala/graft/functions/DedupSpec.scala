@@ -169,36 +169,52 @@ class DedupSpec extends SparkSpec {
     assert(hamming(h(1L), h(3L)) < hamming(h(1L), h(4L)))
   }
 
-  test("duplicateClusters: min id propagates across chained pairs") {
+  /** Sequential union-find over the pair list: (id, min id of its
+    * component) for every id in a pair — the CC contract, computed
+    * independently of the engine. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("duplicateClustersLogN: min id propagates across chained pairs") {
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 9L)).toDF("a_id", "b_id")
-    val out = Dedup.duplicateClusters(pairs)
+    val out = Dedup.duplicateClustersLogN(pairs)
       .as[(Long, Long)].collect().toMap
     // 1-2-3-9 is one component (rep 1), 5-6 another (rep 5)
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L))
   }
 
-  test("duplicateClustersLogN: equals min-label propagation on random graphs") {
+  test("duplicateClustersLogN: equals a sequential union-find on random graphs") {
     val rnd = new scala.util.Random(1234)
     for (trial <- 1 to 3) {
       val n = 60 + trial * 40
-      val pairs = Seq.fill(n)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+      val edges = Seq.fill(n)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
         .filter { case (a, b) => a != b }
-        .toDF("a_id", "b_id")
-      val expected = Dedup.duplicateClusters(pairs).as[(Long, Long)].collect().toMap
+      val pairs = edges.toDF("a_id", "b_id")
+      val expected = unionFindLabels(edges)
       val actual = Dedup.duplicateClustersLogN(pairs).as[(Long, Long)].collect().toMap
       assert(actual == expected, s"trial $trial diverged")
     }
   }
 
-  test("duplicateClustersLogN: equals min-label on chain and star graphs") {
-    val chain = (0L until 64L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("a_id", "b_id")
+  test("duplicateClustersLogN: equals a sequential union-find on chain and star graphs") {
+    val chain = (0L until 64L).sliding(2).map(s => (s(0), s(1))).toSeq
     assert(
-      Dedup.duplicateClustersLogN(chain).as[(Long, Long)].collect().toMap ==
-        Dedup.duplicateClusters(chain).as[(Long, Long)].collect().toMap)
-    val star = (1L to 40L).map(i => (i, 0L)).toDF("a_id", "b_id")
+      Dedup.duplicateClustersLogN(chain.toDF("a_id", "b_id")).as[(Long, Long)].collect().toMap ==
+        unionFindLabels(chain))
+    val star = (1L to 40L).map(i => (i, 0L))
     assert(
-      Dedup.duplicateClustersLogN(star).as[(Long, Long)].collect().toMap ==
-        Dedup.duplicateClusters(star).as[(Long, Long)].collect().toMap)
+      Dedup.duplicateClustersLogN(star.toDF("a_id", "b_id")).as[(Long, Long)].collect().toMap ==
+        unionFindLabels(star))
   }
 
   test("duplicateClustersLogN: O(log n) rounds on a 10k-edge chain") {
@@ -220,7 +236,6 @@ class DedupSpec extends SparkSpec {
 
   test("CC loops converge on an EMPTY pair set instead of NPE-ing on a null SUM") {
     val empty = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
-    assert(Dedup.duplicateClusters(empty).count() == 0)
     assert(Dedup.duplicateClustersLogN(empty).count() == 0)
     assert(Dedup.duplicateClustersLogNWithRounds(empty, localFirst = true)._1.count() == 0)
   }
@@ -289,7 +304,8 @@ class DedupSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 9L)).toDF("a_id", "b_id")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L, 5L -> 5L, 6L -> 5L)
-    val viaReliable = Dedup.duplicateClusters(pairs, checkpointDir = Some(ckpt))
+    val viaReliable = Dedup.duplicateClustersLogNWithRounds(
+      pairs, checkpointDir = Some(ckpt), localFirst = false)._1
       .as[(Long, Long)].collect().toMap
     val viaReliableLogN = Dedup.duplicateClustersLogN(pairs, checkpointDir = Some(ckpt))
       .as[(Long, Long)].collect().toMap

@@ -47,7 +47,7 @@ class DsirSpec extends SparkSpec {
     val m = Dsir.trainImportance(targetDocs, rawDocs, "text")
     val scores = rawDocs
       .select(col("doc_id"),
-        QualityClassifier.featureSum(col("text"), m).getField("wsum").as("w"))
+        element_at(QualityClassifier.featureSum(col("text"), m).getField("wsums"), 1).as("w"))
       .as[(Long, Long)].collect().toMap
     assert(scores(12L) > scores(13L) && scores(13L) > scores(10L),
       s"importance must order by target-likeness: $scores")
@@ -93,5 +93,32 @@ class DsirSpec extends SparkSpec {
     val empty = Dsir.importanceResample(
       rawDocs.filter(col("doc_id") < 0), "text", "doc_id", m, 5, "s")
     assert(empty.count() == 0L)
+  }
+
+  test("trainImportance at the default dim matches a plain recount; null texts count nowhere") {
+    // the shared feature count under DSIR: target and raw share one
+    // aggregation, told apart only by side — a null text adds no feature
+    val dim = QualityClassifier.DefaultDim
+    val target = ((0 until 12).map(i => (i.toLong, s"wiki w$i facts f${i % 4} wiki")) :+
+      ((99L, null: String))).toDF("doc_id", "text")
+    val raw = ((0 until 20).map(i => (i.toLong, s"crawl c${i % 6} junk w$i")) :+
+      ((98L, null: String))).toDF("doc_id", "text")
+    val m = Dsir.trainImportance(target, raw, "text")
+    def counts(df: org.apache.spark.sql.DataFrame): Array[Long] = {
+      val n = new Array[Long](dim)
+      df.as[(Long, String)].collect().map(_._2).filter(_ != null).foreach { t =>
+        val toks = t.split(" ", -1).toSeq
+        (toks ++ toks.sliding(2).filter(_.size == 2).map(_.mkString(" ")))
+          .foreach(f => n((Dedup.tokenHash64Jvm(f) % dim).toInt) += 1)
+      }
+      n
+    }
+    val (tc, rc) = (counts(target), counts(raw))
+    val (tTot, rTot) = (tc.sum + dim.toDouble, rc.sum + dim.toDouble)
+    val expected = (0 until dim).map { b =>
+      math.round((StrictMath.log((tc(b) + 1.0) / tTot) -
+        StrictMath.log((rc(b) + 1.0) / rTot)) * 10000.0)
+    }
+    assert(m.weights.toSeq == expected && m.bias == 0L)
   }
 }

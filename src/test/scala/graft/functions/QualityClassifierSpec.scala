@@ -32,7 +32,7 @@ class QualityClassifierSpec extends SparkSpec {
     val battery = Seq("alpha beta gamma", "one", "", "a  b", "x y x y x")
     val out = battery.zipWithIndex.map(_.swap).toDF("id", "text")
       .select(col("id"), QualityClassifier.featureSum(col("text"), model).as("s"))
-      .select(col("id"), col("s.n_feats"), col("s.wsum"))
+      .select(col("id"), col("s.n_feats"), element_at(col("s.wsums"), 1))
       .orderBy("id").as[(Int, Long, Long)].collect()
     for ((text, i) <- battery.zipWithIndex) {
       val (nf, ws) = expectedScore(text)
@@ -236,8 +236,8 @@ class QualityClassifierSpec extends SparkSpec {
       QualityClassifier.featureSum(col("text"), m).as(c) }: _*)
     val expected = sums.collect().map { r =>
       val scores = models.map { case (c, m) =>
-        val s = r.getStruct(r.fieldIndex(c)) // (n_feats, wsum)
-        val (n, w) = (s.getLong(0), s.getLong(1))
+        val s = r.getStruct(r.fieldIndex(c)) // (n_feats, wsums)
+        val (n, w) = (s.getLong(0), s.getSeq[Long](1).head)
         c -> Math.floorDiv((w + m.bias) * 10000 * 2 + n, 2 * n)
       }.toMap
       val n = r.getStruct(1).getLong(0)
@@ -265,5 +265,49 @@ class QualityClassifierSpec extends SparkSpec {
       QualityClassifier.trainCentroidMulti(docs, "text", "cls", dim = 64)
     }
     assert(e.getMessage.contains("non-null"))
+  }
+
+  test("trainCentroid is the difference of the two class centroids; a null label counts for neither") {
+    // "maybe" casts to a null boolean: that row must move no weight, as
+    // the "true"/"false" rows alone define the fit
+    val docs = Seq(
+      (1L, "wiki cite prose body", "true"),
+      (2L, "wiki prose again here", "true"),
+      (3L, "buy now free offer", "false"),
+      (4L, "free free buy click", "false"),
+      (5L, "wiki buy free maybe-row words", "maybe")).toDF("doc_id", "text", "lbl")
+    val dim = 97
+    val m = QualityClassifier.trainCentroid(docs, "text", "lbl", dim)
+    val twoClass = QualityClassifier.trainCentroidMulti(
+      docs.filter(col("lbl").isin("true", "false")), "text", "lbl", dim).toMap
+    assert(twoClass.keySet == Set("true", "false"))
+    val diff = twoClass("true").weights.zip(twoClass("false").weights).map { case (g, b) => g - b }
+    assert(m.weights.toSeq == diff.toSeq && m.bias == 0L)
+    // the same difference from counts recomputed here: halfUp(c·10⁶ / C)
+    def shares(texts: Seq[String]): Array[Long] = {
+      val n = new Array[Long](dim)
+      texts.foreach { t =>
+        val toks = t.split(" ", -1).toSeq
+        (toks ++ toks.sliding(2).filter(_.size == 2).map(_.mkString(" ")))
+          .foreach(f => n((Dedup.tokenHash64Jvm(f) % dim).toInt) += 1)
+      }
+      val total = n.sum
+      n.map(x => Math.floorDiv(x * QualityClassifier.TrainScale * 2 + total, total * 2))
+    }
+    val rows = docs.as[(Long, String, String)].collect().toSeq
+    val g = shares(rows.filter(_._3 == "true").map(_._2))
+    val b = shares(rows.filter(_._3 == "false").map(_._2))
+    assert(m.weights.toSeq == g.zip(b).map { case (x, y) => x - y }.toSeq)
+  }
+
+  test("classify's score_e4 equals classifyMulti's score over the one class the model names") {
+    val docs = (0L until 30L).map(i => (i, s"doc $i token${i % 7} " * (1 + (i % 4).toInt)))
+      .toDF("doc_id", "text")
+    val m = QualityClassifier.Model(QualityClassifier.synthesizeWeights(509), bias = -3L)
+    val single = QualityClassifier.classify(docs, "text", m)
+      .select("doc_id", "n_feats", "score_e4").as[(Long, Long, Long)].collect().sortBy(_._1)
+    val multi = QualityClassifier.classifyMulti(docs, "text", Seq("only" -> m))
+      .select("doc_id", "n_feats", "score_only_e4").as[(Long, Long, Long)].collect().sortBy(_._1)
+    assert(single.length == 30 && single.toSeq == multi.toSeq)
   }
 }
