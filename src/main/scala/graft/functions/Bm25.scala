@@ -118,29 +118,22 @@ object Bm25 {
       postings.write.parquet(s"$stage/postings")
       docNorms.write.parquet(s"$stage/docs")
       terms.write.parquet(s"$stage/terms")
-      IndexProtocol.writeLayoutPayload(spark, stage, s"n=$n,l=$l,bm=$Version,g=$ngram")
+      IndexProtocol.writeLayout(spark, stage, "n" -> n, "l" -> l, "bm" -> Version, "g" -> ngram)
     }
   }
 
   /** Term grade (word n-gram size) recorded in a published index's
     * layout; 1 for pre-grade artifacts. */
-  def indexNgram(spark: SparkSession, path: String): Int = {
-    val kv = IndexProtocol.readLayoutPayload(spark, path)
-      .split(",").map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
-    kv.getOrElse("g", "1").toInt
-  }
+  def indexNgram(spark: SparkSession, path: String): Int =
+    IndexProtocol.readLayout(spark, path).fields.getOrElse("g", "1").toInt
 
   /** Corpus totals (N docs, L tokens) recorded in a published index's
     * layout — the build's aggregate state, never recomputed at serve time.
     */
   def readMeta(spark: SparkSession, path: String): (Long, Long) = {
-    val payload = IndexProtocol.readLayoutPayload(spark, path)
-    val kv = payload.split(",").map(_.split("=", 2)).collect {
-      case Array(k, v) => k -> v
-    }.toMap
-    require(kv.get("bm").contains(Version.toString),
-      s"BM25 index at $path has layout '$payload' — not scheme v$Version; rebuild it")
-    (kv("n").toLong, kv("l").toLong)
+    val layout = IndexProtocol.readLayout(spark, path)
+    layout.requireScheme("bm", Version, "BM25 index")
+    (layout.long("n"), layout.long("l"))
   }
 
   /** Deterministic pseudo-queries for gating and evaluation: for each
@@ -175,12 +168,13 @@ object Bm25 {
     * [[refreshIndex]], so the fact schema stays minimal and replay-safe.
     */
   private def postingFacts(
-      docs: DataFrame, textCol: String, idCol: String, generation: Long): DataFrame =
-    docs.select(
+      docs: DataFrame, path: String, textCol: String, idCol: String,
+      generation: Long): IndexProtocol.GenerationRows =
+    IndexProtocol.GenerationRows(factsRoot(path), docs.select(
         col(idCol).cast("long").as("doc_id"),
         explode(Text.tokens(col(textCol))).as("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .select(col("term"), col("doc_id"), lit(generation).as("src"), col("tf"))
+      .select(col("term"), col("doc_id"), lit(generation).as("src"), col("tf")))
 
   /** Install an incremental BM25 index from a history corpus (generation
     * 0) and derive the first served artifact. Append-only corpus
@@ -191,20 +185,17 @@ object Bm25 {
   def installIndex(
       history: DataFrame, textCol: String, idCol: String, path: String): Unit = {
     val spark = history.sparkSession
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    IndexProtocol.writeLayoutPayload(spark, path, s"bm=$Version")
-    graft.sinks.Sinks.publishDir(
-      postingFacts(history, textCol, idCol, generation = 0L),
-      factsRoot(path), "batch=0")
+    IndexProtocol.install(spark, path, Seq("bm" -> Version), 0L,
+      postingFacts(history, path, textCol, idCol, generation = 0L))
     refreshIndex(spark, path)
   }
 
+  /** A fact index's layout is exactly its scheme — which also tells a fact
+    * root from a served root, whose layout carries corpus totals. */
   private def checkFactsLayout(spark: SparkSession, path: String): Unit = {
-    val payload = IndexProtocol.readLayoutPayload(spark, path)
-    require(payload == s"bm=$Version",
-      s"BM25 fact index at $path has layout '$payload', this build writes bm=$Version — rebuild")
+    val layout = IndexProtocol.readLayout(spark, path)
+    require(layout.fields == Map("bm" -> Version.toString),
+      s"BM25 fact index at $path has layout '${layout.payload}', this build writes bm=$Version — rebuild")
   }
 
   /** Publish one batch's posting facts as an immutable generation.
@@ -213,9 +204,7 @@ object Bm25 {
       batch: DataFrame, path: String, generation: Long,
       textCol: String = "text", idCol: String = "doc_id"): Boolean = {
     checkFactsLayout(batch.sparkSession, path)
-    graft.sinks.Sinks.publishDir(
-      postingFacts(batch, textCol, idCol, generation),
-      factsRoot(path), s"batch=$generation")
+    IndexProtocol.publishGeneration(generation, postingFacts(batch, path, textCol, idCol, generation))
   }
 
   def indexReadable(spark: SparkSession, path: String): Boolean =
@@ -235,8 +224,7 @@ object Bm25 {
   def refreshIndex(spark: SparkSession, path: String): Unit = {
     if (!indexReadable(spark, path)) return
     checkFactsLayout(spark, path)
-    val postings = graft.sources.Tables.parquetScan(spark, factsRoot(path))
-      .select("term", "doc_id", "src", "tf").distinct()
+    val postings = IndexProtocol.readFacts(spark, factsRoot(path), "term", "doc_id", "src", "tf")
       .select("term", "doc_id", "tf")
     publishServedIndex(spark, postings, indexRoot(path))
   }

@@ -706,7 +706,8 @@ object Dedup {
   // for growth pass `bpMod = Some(...)` explicitly (the modulus is part of
   // the install, like IVF's k); re-partitioning an index whose corpus has
   // outgrown its modulus is a fold-rewrite (all rows already flow through
-  // compactGenerationalIndex) under a new explicit modulus + meta rewrite.
+  // IndexProtocol.compactGenerational) under a new explicit modulus + meta
+  // rewrite.
   // ---------------------------------------------------------------------
 
   private[graft] val IndexDirTargetRows = 1L << 20
@@ -722,38 +723,24 @@ object Dedup {
     */
   private def prefixCol(key: Column, mod: Int): Column = pmod(hash(key), lit(mod))
 
-  // Layout IO, readable-detection and the generational fold live in
-  // [[IndexProtocol]] (the one-copy home of the shared crash protocol,
-  // round-11 verdict #4); this module binds them to the fp/band/eval/span
-  // families' payload formats and data roots.
-  private def writeLayoutPayload(
-      spark: org.apache.spark.sql.SparkSession, path: String, payload: String): Unit =
-    IndexProtocol.writeLayoutPayload(spark, path, payload)
+  // Layout IO, install, generation publish, readable-detection and the
+  // generational fold live in [[IndexProtocol]] (the one-copy home of the
+  // shared crash protocol, round-11 verdict #4); this module supplies the
+  // fp/band/eval/span families' rows, layout fields and data roots.
 
-  private def readLayoutPayload(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    IndexProtocol.readLayoutPayload(spark, path)
-
-  private def writeLayout(spark: org.apache.spark.sql.SparkSession, path: String, mod: Int): Unit =
-    writeLayoutPayload(spark, path, s"mod=$mod")
-
-  private def indexReadable(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      dataRoots: Seq[String]): Boolean =
-    IndexProtocol.generationalReadable(spark, path, dataRoots)
-
-  /** [[indexReadable]] for a [[writeFingerprintIndex]] layout. */
+  /** [[IndexProtocol.generationalReadable]] for a [[writeFingerprintIndex]]
+    * layout. */
   def fingerprintIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    indexReadable(spark, path, Seq(""))
+    IndexProtocol.generationalReadable(spark, path, Seq(""))
 
-  /** [[indexReadable]] for a [[writeBandIndex]] layout (both subtables —
-    * a sigs-only prefix is a crashed append and must read as bootstrap).
+  /** [[IndexProtocol.generationalReadable]] for a [[writeBandIndex]] layout
+    * (both subtables — a sigs-only prefix is a crashed append and must
+    * read as bootstrap).
     */
   def bandIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    indexReadable(spark, path, Seq("sigs", "bands"))
+    IndexProtocol.generationalReadable(spark, path, Seq("sigs", "bands"))
 
   /** Materialize a BOUNDED DataFrame as a broadcast-ready local relation:
     * one collect, then a LocalRelation plan node carrying the same schema.
@@ -771,8 +758,9 @@ object Dedup {
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
-  private def readLayout(spark: org.apache.spark.sql.SparkSession, path: String): Int =
-    readLayoutPayload(spark, path).stripPrefix("mod=").toInt
+  /** The fp/band index's recorded directory modulus. */
+  private def readMod(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    IndexProtocol.readLayout(spark, path).int("mod")
 
   /** Persist the history corpus's content fingerprints as a compact index
     * table: (idCol, fp) with fp = the raw 16-byte md5
@@ -801,24 +789,25 @@ object Dedup {
       generation: Long = 0L,
       bpMod: Option[Int] = None,
       fpCol: Option[String] = None): Unit = {
-    val spark = history.sparkSession
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val fpExpr = fpCol.map(col).getOrElse(Text.fingerprintBinary(col(textCol)))
-    val rows = history.select(col(idCol), fpExpr.as("fp"))
     // modulus derived from the BUILD corpus unless the install sizes for
-    // growth explicitly; recorded before the first generation publishes so
-    // no readable index ever lacks its layout. Counting HISTORY, not
-    // `rows`: the row count is the same and counting the projection would
-    // materialize every md5 fingerprint a second time (the publish below
-    // recomputes them for the write) — round-9 advice, 2x build cost.
+    // growth explicitly. Counting HISTORY, not the fp projection: the row
+    // count is the same and counting the projection would materialize
+    // every md5 fingerprint a second time (the publish recomputes them for
+    // the write) — round-9 advice, 2x build cost.
     val mod = bpMod.getOrElse(indexDirCount(history.count()))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    writeLayout(spark, path, mod)
-    graft.sinks.Sinks.publishDir(
-      rows.withColumn("fpp", prefixCol(col("fp"), mod)),
-      path, s"batch=$generation", partitionBy = Seq("fpp"))
-    ()
+    IndexProtocol.install(history.sparkSession, path, Seq("mod" -> mod), generation,
+      fingerprintRows(history, path, mod, textCol, idCol, fpCol))
+  }
+
+  /** (idCol, fp, fpp) rows of one document set — what the build and every
+    * append publish. */
+  private def fingerprintRows(
+      docs: DataFrame, path: String, mod: Int, textCol: String, idCol: String,
+      fpCol: Option[String]): IndexProtocol.GenerationRows = {
+    val fpExpr = fpCol.map(col).getOrElse(Text.fingerprintBinary(col(textCol)))
+    IndexProtocol.GenerationRows(path,
+      docs.select(col(idCol), fpExpr.as("fp")).withColumn("fpp", prefixCol(col("fp"), mod)),
+      partitionBy = Seq("fpp"))
   }
 
   /** Append an ACCEPTED batch's fingerprints to the index — the incremental
@@ -828,8 +817,8 @@ object Dedup {
     * redundant (their fps are already present — that is why they were
     * rejected).
     *
-    * The batch lands as its own immutable `batch=<generation>` directory
-    * via [[graft.sinks.Sinks.publishDir]] — stage + ONE atomic rename — so
+    * The batch lands as its own immutable generation directory via
+    * [[IndexProtocol.publishGeneration]] — stage + ONE atomic rename — so
     * the append is all-or-nothing. That matters beyond tidiness: the fp
     * append is an ingest loop's dedup COMMIT POINT, and a half-visible
     * append (what parquet `mode("append")`'s file-at-a-time job commit can
@@ -849,12 +838,9 @@ object Dedup {
     // appends hash under the INDEX's recorded modulus — a drifted modulus
     // would route the same fp to different directories across generations
     // and the probe's pruning would silently miss collisions
-    val mod = readLayout(accepted.sparkSession, path)
-    val fpExpr = fpCol.map(col).getOrElse(Text.fingerprintBinary(col(textCol)))
-    graft.sinks.Sinks.publishDir(
-      accepted.select(col(idCol), fpExpr.as("fp"))
-        .withColumn("fpp", prefixCol(col("fp"), mod)),
-      path, s"batch=$generation", partitionBy = Seq("fpp"))
+    val mod = readMod(accepted.sparkSession, path)
+    IndexProtocol.publishGeneration(generation,
+      fingerprintRows(accepted, path, mod, textCol, idCol, fpCol))
   }
 
   /** Fold all `batch=<gen> ≤ upToGen` generation directories of a
@@ -882,17 +868,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       upToGen: Long): Unit =
-    compactGenerationalIndex(spark, path, upToGen, partitionBy = Seq("fpp"))
-
-  /** The shared generational fold, bound here for the fp index and the
-    * band index's subtables — one implementation in
-    * [[IndexProtocol.compactGenerational]]. */
-  private def compactGenerationalIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      upToGen: Long,
-      partitionBy: Seq[String] = Nil): Unit =
-    IndexProtocol.compactGenerational(spark, path, upToGen, partitionBy)
+    IndexProtocol.compactGenerational(spark, path, upToGen, partitionBy = Seq("fpp"))
 
   // -----------------------------------------------------------------------
   // Persisted MinHash BAND index — incremental NEAR-dup dedup.
@@ -929,24 +905,29 @@ object Dedup {
     */
   val BandIndexVersion = "minhash-band-v4"
 
-  /** (sigs, bands) projections for one document set — the rows both the
-    * index build and the append publish. Band keys are EXACTLY
-    * [[minhashCandidates]]' construction (md5 over the band's signature
-    * slice), so the SQL oracle machinery reproduces them verbatim.
+  /** (sigs, bands) generation rows for one document set — what both the
+    * index build and the append publish, sigs first (see the layout note
+    * above). Band keys are EXACTLY [[minhashCandidates]]' construction
+    * (md5 over the band's signature slice), so the SQL oracle machinery
+    * reproduces them verbatim.
     */
   private def bandIndexRows(
       docs: DataFrame,
+      path: String,
       textCol: String,
       idCol: String,
       nHashes: Int,
       nBands: Int,
       seed: Long,
-      bpMod: Int): (DataFrame, DataFrame) = {
+      bpMod: Int): Seq[IndexProtocol.GenerationRows] = {
     val sig = minhashSignatures(docs.select(col(idCol), col(textCol)), textCol, idCol, nHashes, seed)
     val bandCols = bandKeyCols(nHashes, nBands)
-    (sig.select(col("id").as("doc_id"), col("sig")),
-      sig.select(col("id").as("doc_id"), explode(array(bandCols: _*)).as("band"))
-        .select(col("band"), col("doc_id"), prefixCol(col("band"), bpMod).as("bp")))
+    Seq(
+      IndexProtocol.GenerationRows(s"$path/sigs", sig.select(col("id").as("doc_id"), col("sig"))),
+      IndexProtocol.GenerationRows(s"$path/bands",
+        sig.select(col("id").as("doc_id"), explode(array(bandCols: _*)).as("band"))
+          .select(col("band"), col("doc_id"), prefixCol(col("band"), bpMod).as("bp")),
+        partitionBy = Seq("bp")))
   }
 
   /** Build the band index over a history corpus (generation 0 of both
@@ -963,19 +944,11 @@ object Dedup {
       seed: Long = 42L,
       generation: Long = 0L,
       bpMod: Option[Int] = None): Unit = {
-    val spark = history.sparkSession
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
     // band rows per doc = nBands, so the modulus derives from docs × nBands
     // (or the install's explicit growth sizing) — see the layout note above
     val mod = bpMod.getOrElse(indexDirCount(history.count() * nBands))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    writeLayout(spark, path, mod)
-    val (sigs, bands) = bandIndexRows(history, textCol, idCol, nHashes, nBands, seed, mod)
-    graft.sinks.Sinks.publishDir(sigs, s"$path/sigs", s"batch=$generation")
-    graft.sinks.Sinks.publishDir(bands, s"$path/bands", s"batch=$generation",
-      partitionBy = Seq("bp"))
-    ()
+    IndexProtocol.install(history.sparkSession, path, Seq("mod" -> mod), generation,
+      bandIndexRows(history, path, textCol, idCol, nHashes, nBands, seed, mod): _*)
   }
 
   /** Append an ACCEPTED batch's signatures and band keys as generation
@@ -994,11 +967,9 @@ object Dedup {
       nHashes: Int = 64,
       nBands: Int = 4,
       seed: Long = 42L): Boolean = {
-    val mod = readLayout(accepted.sparkSession, path)
-    val (sigs, bands) = bandIndexRows(accepted, textCol, idCol, nHashes, nBands, seed, mod)
-    graft.sinks.Sinks.publishDir(sigs, s"$path/sigs", s"batch=$generation")
-    graft.sinks.Sinks.publishDir(bands, s"$path/bands", s"batch=$generation",
-      partitionBy = Seq("bp"))
+    val mod = readMod(accepted.sparkSession, path)
+    IndexProtocol.publishGeneration(generation,
+      bandIndexRows(accepted, path, textCol, idCol, nHashes, nBands, seed, mod): _*)
   }
 
   /** Keep only `incoming` rows that are not near-duplicates of the indexed
@@ -1058,7 +1029,7 @@ object Dedup {
     // them. A small batch probes a handful of directories instead of
     // file-scanning the full band table (the round-8 q78 gap); a corpus-
     // sized batch degrades gracefully to the old full scan.
-    val mod = readLayout(spark, path)
+    val mod = readMod(spark, path)
     val prefixes = batchBands
       .select(prefixCol(col("band"), mod).as("bp"))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -1102,8 +1073,8 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       upToGen: Long): Unit = {
-    compactGenerationalIndex(spark, s"$path/sigs", upToGen)
-    compactGenerationalIndex(spark, s"$path/bands", upToGen, partitionBy = Seq("bp"))
+    IndexProtocol.compactGenerational(spark, s"$path/sigs", upToGen)
+    IndexProtocol.compactGenerational(spark, s"$path/bands", upToGen, partitionBy = Seq("bp"))
   }
 
   /** [[dedupAgainstHistory]] served from a persisted [[writeFingerprintIndex]]
@@ -1146,7 +1117,7 @@ object Dedup {
     // fpp IN (...) partition predicate, so a small batch reads only the
     // index directories its own fingerprints can land in instead of
     // file-scanning all generations
-    val mod = readLayout(spark, path)
+    val mod = readMod(spark, path)
     val prefixes = batchFps.select(prefixCol(col("__fp"), mod).as("fpp"))
       .distinct().collect().map(_.getInt(0)).toSeq
     val collisions = graft.sources.Tables.parquetScan(spark, path)
@@ -1185,7 +1156,7 @@ object Dedup {
   // broadcast without shuffling anything wider than (id, fp) longs. No
   // prefix partitioning: pruning directories of a megabyte-scale table
   // would add listing cost without removing scan cost. The `_GRAFT_LAYOUT`
-  // file records the winnowing geometry (k|w) instead of a modulus — the
+  // file records the winnowing geometry (k, w) instead of a modulus — the
   // probe MUST gram/window under the index's own geometry or collisions
   // are silently missed, the same layout-travels-with-the-index drift
   // hazard as the fp index's directory modulus.
@@ -1200,22 +1171,19 @@ object Dedup {
   /** Version tag of the eval-index scheme (winnowing hash derivation +
     * storage form), for fixture stamps. The geometry (k, w) is recorded in
     * the index's own layout file, not here — it travels with the data.
+    * v2: the layout is written by the shared codec (`k=3,w=4`; v1 wrote
+    * `k=3|w=4`, which the codec refuses with the rebuild remedy).
     */
-  val EvalIndexVersion = "winnow-eval-v1"
+  val EvalIndexVersion = "winnow-eval-v2"
 
-  private def writeEvalLayout(
-      spark: org.apache.spark.sql.SparkSession, path: String, k: Int, w: Int): Unit =
-    writeLayoutPayload(spark, path, s"k=$k|w=$w")
-
+  /** The eval index's recorded winnowing geometry (k, w). */
   private def readEvalLayout(
-      spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) =
-    readLayoutPayload(spark, path).split('|') match {
-      case Array(ks, ws) => (ks.stripPrefix("k=").toInt, ws.stripPrefix("w=").toInt)
-      case s => throw new IllegalStateException(
-        s"malformed eval-index layout '${s.mkString("|")}' at $path")
-    }
+      spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) = {
+    val layout = IndexProtocol.readLayout(spark, path)
+    (layout.int("k"), layout.int("w"))
+  }
 
-  /** [[indexReadable]] for a [[writeEvalIndex]] layout. Runs
+  /** [[IndexProtocol.generationalReadable]] for a [[writeEvalIndex]] layout. Runs
     * [[recoverEvalIndex]] first: a crashed install swap parks the WHOLE
     * live index at `<path>__old`, and without the restore every probe
     * until the next startup would read "no index" — for a gate that fails
@@ -1224,7 +1192,7 @@ object Dedup {
   def evalIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
     recoverEvalIndex(spark, path)
-    indexReadable(spark, path, Seq(""))
+    IndexProtocol.generationalReadable(spark, path, Seq(""))
   }
 
   /** Ceiling on the eval-index rows the probe will collect + broadcast —
@@ -1262,9 +1230,8 @@ object Dedup {
 
   private def evalGenSignature(
       spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(_.getPath.getName.startsWith("batch="))
+    IndexProtocol.generations(
+        IndexProtocol.fileSystem(spark, path), new org.apache.hadoop.fs.Path(path))
       .map(st => s"${st.getPath.getName}@${st.getModificationTime}")
       .sorted.mkString(";")
   }
@@ -1324,16 +1291,18 @@ object Dedup {
       generation: Long = 0L): Unit = {
     val spark = evalDocs.sparkSession
     IndexProtocol.stagedReplace(spark, path) { next =>
-      IndexProtocol.fileSystem(spark, next)
-        .mkdirs(new org.apache.hadoop.fs.Path(next))
-      writeEvalLayout(spark, next, k, w)
-      graft.sinks.Sinks.publishDir(
-        Text.winnowFingerprintsSalted(evalDocs, textCol, idCol, k, w)
-          .select(col(idCol).as("eval_id"), col("fp")),
-        next, s"batch=$generation")
-      ()
+      IndexProtocol.install(spark, next, Seq("k" -> k, "w" -> w), generation,
+        evalRows(evalDocs, next, textCol, idCol, k, w))
     }
   }
+
+  /** (eval_id, fp) rows of one eval suite under the geometry (k, w). */
+  private def evalRows(
+      evalDocs: DataFrame, path: String, textCol: String, idCol: String,
+      k: Int, w: Int): IndexProtocol.GenerationRows =
+    IndexProtocol.GenerationRows(path,
+      Text.winnowFingerprintsSalted(evalDocs, textCol, idCol, k, w)
+        .select(col(idCol).as("eval_id"), col("fp")))
 
   /** Restore an eval index a crashed [[writeEvalIndex]] swap left parked at
     * `<path>__old`. No-op when the live path exists. */
@@ -1355,10 +1324,7 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"): Boolean = {
     val (k, w) = readEvalLayout(evalDocs.sparkSession, path)
-    graft.sinks.Sinks.publishDir(
-      Text.winnowFingerprintsSalted(evalDocs, textCol, idCol, k, w)
-        .select(col(idCol).as("eval_id"), col("fp")),
-      path, s"batch=$generation")
+    IndexProtocol.publishGeneration(generation, evalRows(evalDocs, path, textCol, idCol, k, w))
   }
 
   /** Fold eval-index generations ≤ upToGen into one — same membership-state
@@ -1370,7 +1336,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       upToGen: Long): Unit =
-    compactGenerationalIndex(spark, path, upToGen)
+    IndexProtocol.compactGenerational(spark, path, upToGen)
 
   /** Batch doc ids whose winnowing fingerprints collide with the indexed
     * eval suites at least `minSharedFps` times — counted against the
@@ -1472,9 +1438,10 @@ object Dedup {
   // The index therefore stores per-batch count FACTS — (h, src, c) where
   // `src` is the ORIGIN batch id carried as a data column — so any
   // duplication a crash window can produce is row-identical duplication,
-  // removed by the reader's `distinct()` and by the shared generational
-  // fold's distinct ([[compactGenerationalIndex]]'s membership argument
-  // holds verbatim). Totals are then `sum(c) group by h` over distinct
+  // removed by the reader's `distinct()` ([[IndexProtocol.readFacts]]) and
+  // by the shared generational fold's distinct
+  // ([[IndexProtocol.compactGenerational]]'s membership argument holds
+  // verbatim). Totals are then `sum(c) group by h` over distinct
   // facts.
   //
   // Layout:
@@ -1494,39 +1461,31 @@ object Dedup {
   private def spanCountsRoot(path: String) = s"$path/counts"
   private def hotListPath(path: String) = s"$path/hot"
 
-  private def writeSpanLayout(
-      spark: org.apache.spark.sql.SparkSession, path: String, k: Int, minCount: Long): Unit =
-    writeLayoutPayload(spark, path, s"k=$k,minCount=$minCount")
-
   /** The index's recorded (k, minCount). */
   def readSpanLayout(
       spark: org.apache.spark.sql.SparkSession, path: String): (Int, Long) = {
-    val payload = readLayoutPayload(spark, path)
-    val kv = payload.split(",").map(_.split("=", 2)).collect {
-      case Array(a, b) => a -> b
-    }.toMap
-    require(kv.contains("k") && kv.contains("minCount"),
-      s"span index at $path has a malformed layout payload '$payload'; rebuild it")
-    (kv("k").toInt, kv("minCount").toLong)
+    val layout = IndexProtocol.readLayout(spark, path)
+    (layout.int("k"), layout.long("minCount"))
   }
 
-  /** [[indexReadable]] for a span-count index (the counts subtable; the hot
+  /** [[IndexProtocol.generationalReadable]] for a span-count index (the counts subtable; the hot
     * list is optional state — an index with counts but no refreshed list
     * yet is readable, it just scrubs nothing).
     */
   def spanCountIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    indexReadable(spark, path, Seq("counts"))
+    IndexProtocol.generationalReadable(spark, path, Seq("counts"))
 
   /** One batch's span-count facts: (h, src, c) for every distinct k-token
     * span hash of `docs`, counted with multiplicity. */
   private def spanCountFacts(
-      docs: DataFrame, textCol: String, k: Int, generation: Long): DataFrame =
-    docs
+      docs: DataFrame, path: String, textCol: String, k: Int,
+      generation: Long): IndexProtocol.GenerationRows =
+    IndexProtocol.GenerationRows(spanCountsRoot(path), docs
       .select(explode(Text.spanChunks(col(textCol), k)).as("__ch"))
       .select(tokenHash64(col("__ch")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
-      .select(col("h"), lit(generation).as("src"), col("c"))
+      .select(col("h"), lit(generation).as("src"), col("c")))
 
   /** Install a span-count index from a history corpus (generation 0). One
     * span pass over the corpus — paid once; every later batch publishes
@@ -1538,17 +1497,9 @@ object Dedup {
       textCol: String = "text",
       k: Int = 4,
       minCount: Long = 3L,
-      generation: Long = 0L): Unit = {
-    val spark = history.sparkSession
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    writeSpanLayout(spark, path, k, minCount)
-    graft.sinks.Sinks.publishDir(
-      spanCountFacts(history, textCol, k, generation),
-      spanCountsRoot(path), s"batch=$generation")
-    ()
-  }
+      generation: Long = 0L): Unit =
+    IndexProtocol.install(history.sparkSession, path, Seq("k" -> k, "minCount" -> minCount),
+      generation, spanCountFacts(history, path, textCol, k, generation))
 
   /** Publish one batch's span-count facts as its own immutable generation.
     * Counts under the index's RECORDED k (drifted span geometry would
@@ -1561,9 +1512,8 @@ object Dedup {
       generation: Long,
       textCol: String = "text"): Boolean = {
     val (k, _) = readSpanLayout(batch.sparkSession, path)
-    graft.sinks.Sinks.publishDir(
-      spanCountFacts(batch, textCol, k, generation),
-      spanCountsRoot(path), s"batch=$generation")
+    IndexProtocol.publishGeneration(generation,
+      spanCountFacts(batch, path, textCol, k, generation))
   }
 
   /** Fold count-fact generations ≤ upToGen into one. Safe under the
@@ -1573,7 +1523,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       upToGen: Long): Unit =
-    compactGenerationalIndex(spark, spanCountsRoot(path), upToGen)
+    IndexProtocol.compactGenerational(spark, spanCountsRoot(path), upToGen)
 
   /** Recompute the hot list from the accumulated count facts and swap it
     * in: `distinct (h, src, c) → sum(c) by h → ≥ minCount`. The distinct is
@@ -1588,8 +1538,7 @@ object Dedup {
       path: String): Unit = {
     if (!spanCountIndexReadable(spark, path)) return
     val (_, minCount) = readSpanLayout(spark, path)
-    val hot = graft.sources.Tables.parquetScan(spark, spanCountsRoot(path))
-      .select("h", "src", "c").distinct()
+    val hot = IndexProtocol.readFacts(spark, spanCountsRoot(path), "h", "src", "c")
       .groupBy("h").agg(sum(col("c")).as("__total"))
       .filter(col("__total") >= minCount)
       .select("h")

@@ -123,42 +123,50 @@ object LangModel {
         .agg(countDistinct(col("w"))).head().getLong(0),
       1L)
 
+  /** Transition counts (w1, w2, c) of a corpus at the given order. */
+  private def pairCounts(docs: DataFrame, textCol: String, order: Int): DataFrame =
+    transitions(docs.withColumn("__lm_id", lit(0L)), textCol, "__lm_id", order)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+
   /** Train and persist an order-n model from a reference corpus. One pass:
-    * transitions exploded once, counted per (w1, w2) and per context;
-    * log-probs quantized to e4 integers and written as the three artifact
-    * tables.
+    * transitions exploded once and counted per (w1, w2); [[writeModel]]
+    * derives the three artifact tables.
     */
-  def train(docs: DataFrame, textCol: String, path: String, order: Int = 2): Unit = {
-    val spark = docs.sparkSession
+  def train(docs: DataFrame, textCol: String, path: String, order: Int = 2): Unit =
+    writeModel(docs.sparkSession, pairCounts(docs, textCol, order), order, path)
+
+  /** Write the served model at `dir` from transition counts (w1, w2, c):
+    * the three tables and the layout. The ONE place the smoothing and
+    * quantization live, shared by [[train]] and [[refreshModel]], so a
+    * one-shot train and an install+appends+refresh cannot drift. V counts
+    * the distinct tokens of the counted pairs — exactly the tokens of the
+    * raw transitions they count.
+    */
+  private def writeModel(
+      spark: SparkSession, counts: DataFrame, order: Int, dir: String): Unit = {
     import spark.implicits._
-    val tr = transitions(
-        docs.withColumn("__lm_id", lit(0L)), textCol, "__lm_id", order)
-      .select("w1", "w2")
-    val big = tr.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint(false) // feeds both the bigram table and the w1 margins
-    val uni = big.groupBy("w1").agg(sum(col("c12")).as("c1"))
-    val V = vocabSize(tr)
+    val big = counts.localCheckpoint(false) // feeds the bigram table, the w1 margins and V
+    val uni = big.groupBy("w1").agg(sum(col("c")).as("c1"))
+    val V = vocabSize(big)
     big.join(uni, "w1")
       .select(col("w1"), col("w2"),
-        lpE4Col(col("c12") + 1, col("c1") + V).as("lp_e4"))
-      .write.mode("overwrite").parquet(s"$path/bigrams")
+        lpE4Col(col("c") + 1, col("c1") + V).as("lp_e4"))
+      .write.mode("overwrite").parquet(s"$dir/bigrams")
     uni
       .select(col("w1"), lpE4Col(lit(1), col("c1") + V).as("miss_lp_e4"))
-      .write.mode("overwrite").parquet(s"$path/unigrams")
+      .write.mode("overwrite").parquet(s"$dir/unigrams")
     Seq(lpE4(1.0 / V.toDouble)).toDF("lp0_e4")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/defaults")
-    IndexProtocol.writeLayoutPayload(spark, path, s"v=$V,lm=$LmVersion,n=$order")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/defaults")
+    IndexProtocol.writeLayout(spark, dir, "v" -> V, "lm" -> LmVersion, "n" -> order)
   }
 
   /** The model's recorded (vocabulary size, order). The version check
     * rejects pre-order artifacts (scheme v1) — retrain, don't guess. */
   def readModelMeta(spark: SparkSession, path: String): (Long, Int) = {
-    val payload = IndexProtocol.readLayoutPayload(spark, path)
-    val m = "v=(\\d+),lm=(\\d+),n=(\\d+)".r.findFirstMatchIn(payload).getOrElse(
-      throw new IllegalStateException(s"malformed LM layout at $path: $payload"))
-    require(m.group(2).toInt == LmVersion,
-      s"LM at $path is scheme v${m.group(2)}, this build scores v$LmVersion — retrain")
-    (m.group(1).toLong, m.group(3).toInt)
+    val layout = IndexProtocol.readLayout(spark, path)
+    val meta = (layout.long("v"), layout.int("n"))
+    layout.requireScheme("lm", LmVersion, "LM", remedy = "retrain it")
+    meta
   }
 
   /** The model's recorded vocabulary size (smoothing denominator). */
@@ -168,7 +176,7 @@ object LangModel {
   // ------------------------------------------------- incremental counts
 
   /** The incremental flavor (q108): transition-count FACTS live as a
-    * generational persisted index — `counts/batch=<gen>` directories of
+    * generational persisted index — `counts/` generations of
     * (w1, w2, src, c) rows under the [[IndexProtocol]] crash protocol,
     * exactly the span-count index's shape — and the SERVED artifact (the
     * `model/` tables [[scoreDocs]] reads) is re-derived from the
@@ -192,10 +200,10 @@ object LangModel {
   def modelRoot(path: String): String = s"$path/model"
 
   private def countFacts(
-      docs: DataFrame, textCol: String, order: Int, generation: Long): DataFrame =
-    transitions(docs.withColumn("__lm_id", lit(0L)), textCol, "__lm_id", order)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .select(col("w1"), col("w2"), lit(generation).as("src"), col("c"))
+      docs: DataFrame, path: String, textCol: String, order: Int,
+      generation: Long): IndexProtocol.GenerationRows =
+    IndexProtocol.GenerationRows(countsRoot(path), pairCounts(docs, textCol, order)
+      .select(col("w1"), col("w2"), lit(generation).as("src"), col("c")))
 
   /** Install a count index from a history corpus (generation 0) and
     * derive the first served model. The order is recorded in the index
@@ -203,24 +211,17 @@ object LangModel {
   def installCountIndex(
       history: DataFrame, textCol: String, path: String, order: Int = 2): Unit = {
     val spark = history.sparkSession
-    val fs = IndexProtocol.fileSystem(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    IndexProtocol.writeLayoutPayload(spark, path, s"lm=$LmVersion,n=$order")
-    graft.sinks.Sinks.publishDir(
-      countFacts(history, textCol, order, generation = 0L), countsRoot(path), "batch=0")
+    IndexProtocol.install(spark, path, Seq("lm" -> LmVersion, "n" -> order), 0L,
+      countFacts(history, path, textCol, order, generation = 0L))
     refreshModel(spark, path)
   }
 
   /** The count index's recorded order (validates the scheme version). */
   private def readCountIndexOrder(spark: SparkSession, path: String): Int = {
-    val payload = IndexProtocol.readLayoutPayload(spark, path)
-    val m = "lm=(\\d+),n=(\\d+)".r.findFirstMatchIn(payload).getOrElse(
-      throw new IllegalStateException(
-        s"malformed LM count-index layout at $path: $payload"))
-    require(m.group(1).toInt == LmVersion,
-      s"LM count index at $path is scheme v${m.group(1)}, this build writes lm=$LmVersion — rebuild")
-    m.group(2).toInt
+    val layout = IndexProtocol.readLayout(spark, path)
+    val order = layout.int("n")
+    layout.requireScheme("lm", LmVersion, "LM count index")
+    order
   }
 
   /** Publish one batch's transition counts as its own immutable
@@ -231,8 +232,8 @@ object LangModel {
       batch: DataFrame, path: String, generation: Long,
       textCol: String = "text"): Boolean = {
     val order = readCountIndexOrder(batch.sparkSession, path)
-    graft.sinks.Sinks.publishDir(
-      countFacts(batch, textCol, order, generation), countsRoot(path), s"batch=$generation")
+    IndexProtocol.publishGeneration(generation,
+      countFacts(batch, path, textCol, order, generation))
   }
 
   def countIndexReadable(spark: SparkSession, path: String): Boolean =
@@ -245,30 +246,15 @@ object LangModel {
     IndexProtocol.compactGenerational(spark, countsRoot(path), upToGen)
 
   /** Re-derive the served model from the accumulated facts and swap it
-    * in. Identical arithmetic to [[train]] — same smoothing, same
-    * quantization — over summed counts, so an install+appends+refresh
+    * in — [[writeModel]] over summed counts, so an install+appends+refresh
     * equals a full retrain on the union corpus. */
   def refreshModel(spark: SparkSession, path: String): Unit = {
     if (!countIndexReadable(spark, path)) return
     val order = readCountIndexOrder(spark, path)
-    val big = graft.sources.Tables.parquetScan(spark, countsRoot(path))
-      .select("w1", "w2", "src", "c").distinct()
-      .groupBy("w1", "w2").agg(sum(col("c")).as("c12"))
-      .localCheckpoint(false)
-    val uni = big.groupBy("w1").agg(sum(col("c12")).as("c1"))
-    val V = vocabSize(big)
+    val counts = IndexProtocol.readFacts(spark, countsRoot(path), "w1", "w2", "src", "c")
+      .groupBy("w1", "w2").agg(sum(col("c")).as("c"))
     IndexProtocol.stagedReplace(spark, modelRoot(path)) { next =>
-      import spark.implicits._
-      big.join(uni, "w1")
-        .select(col("w1"), col("w2"),
-          lpE4Col(col("c12") + 1, col("c1") + V).as("lp_e4"))
-        .write.mode("overwrite").parquet(s"$next/bigrams")
-      uni
-        .select(col("w1"), lpE4Col(lit(1), col("c1") + V).as("miss_lp_e4"))
-        .write.mode("overwrite").parquet(s"$next/unigrams")
-      Seq(lpE4(1.0 / V.toDouble)).toDF("lp0_e4")
-        .coalesce(1).write.mode("overwrite").parquet(s"$next/defaults")
-      IndexProtocol.writeLayoutPayload(spark, next, s"v=$V,lm=$LmVersion,n=$order")
+      writeModel(spark, counts, order, next)
     }
   }
 

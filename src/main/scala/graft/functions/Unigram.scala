@@ -362,19 +362,15 @@ object Unigram {
       model.pieces.zip(model.lpE4).toSeq.toDF("piece", "lp_e4")
         .coalesce(1).write.parquet(s"$stage/pieces")
       val oov = if (model.byteFallback) "bytes" else "unkid"
-      IndexProtocol.writeLayoutPayload(spark, stage,
-        s"unk=${model.unkLpE4},uni=$Version,oov=$oov")
+      IndexProtocol.writeLayout(spark, stage,
+        "unk" -> model.unkLpE4, "uni" -> Version, "oov" -> oov)
     }
   }
 
   def readModel(spark: SparkSession, path: String): Model = {
-    val payload = IndexProtocol.readLayoutPayload(spark, path)
-    val kv = payload.split(",").map(_.split("=", 2)).collect {
-      case Array(k, v) => k -> v
-    }.toMap
-    require(kv.get("uni").contains(Version.toString),
-      s"unigram model at $path has layout '$payload' — not scheme v$Version; rebuild it")
-    val story = kv.getOrElse("oov", "<absent>")
+    val layout = IndexProtocol.readLayout(spark, path)
+    layout.requireScheme("uni", Version, "unigram model")
+    val story = layout.fields.getOrElse("oov", "<absent>")
     require(story == "unkid" || story == "bytes",
       s"unigram model at $path declares OOV story '$story' — this build serves " +
         "oov=unkid (unknown cp → reserved id |pieces|) and oov=bytes (unknown " +
@@ -385,7 +381,7 @@ object Unigram {
     val rows = spark.read.parquet(s"$path/pieces")
       .collect().map(r => (r.getAs[String]("piece"), r.getAs[Long]("lp_e4")))
       .sortBy(_._1)(CanonicalOrder)
-    Model(rows.map(_._1), rows.map(_._2), kv("unk").toLong,
+    Model(rows.map(_._1), rows.map(_._2), layout.long("unk"),
       byteFallback = story == "bytes")
   }
 

@@ -583,7 +583,7 @@ object IngestPipeline {
     val merged = Kmv.mergeMins(existing.map(_._2).getOrElse(Nil), batchMins, cfg.k)
     IndexProtocol.stagedReplace(spark, paths.cardSketch) { stage =>
       merged.toDF("h").coalesce(1).write.parquet(s"$stage/mins")
-      IndexProtocol.writeLayoutPayload(spark, stage, s"kmv=1,k=${cfg.k}")
+      IndexProtocol.writeLayout(spark, stage, "kmv" -> 1, "k" -> cfg.k)
     }
   }
 
@@ -600,14 +600,10 @@ object IngestPipeline {
     val at = Seq(live, parked, live) // re-check live: writer may finish mid-read
       .find(p => fs.exists(IndexProtocol.layoutPath(p)))
     at.map { p =>
-      val payload = IndexProtocol.readLayoutPayload(spark, p)
-      val kv = payload.split(",").map(_.split("=", 2)).collect {
-        case Array(a, b) => a -> b
-      }.toMap
-      require(kv.get("kmv").contains("1"),
-        s"feed sketch at $p has layout '$payload' — not a kmv=1 artifact")
+      val layout = IndexProtocol.readLayout(spark, p)
+      layout.requireScheme("kmv", 1, "feed sketch")
       val mins = spark.read.parquet(s"$p/mins").orderBy("h").as[Long].collect().toSeq
-      (kv("k").toInt, mins)
+      (layout.int("k"), mins)
     }
   }
 
@@ -1077,7 +1073,7 @@ object IngestPipeline {
     try out.write((intent.upTo.toString +: intent.deleteDirs).mkString("\n").getBytes("UTF-8"))
     finally out.close()
     if (fs.exists(marker)) fs.delete(marker, false)
-    fs.rename(tmp, marker)
+    require(fs.rename(tmp, marker), s"compaction intent: failed to publish $tmp at $marker")
   }
 
   private def readIntent(

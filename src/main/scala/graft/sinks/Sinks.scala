@@ -170,7 +170,8 @@ object Sinks {
     * content is present) — the call returns false and writes nothing.
     * Crash windows: before the rename, only `<root>__stage` holds files
     * (cleaned on the next publish of the same generation); the rename
-    * itself is atomic on HDFS and local filesystems.
+    * itself is atomic on HDFS and local filesystems, and a rename that
+    * fails throws instead of returning true.
     */
   def publishDir(
       df: DataFrame, root: String, dirName: String,
@@ -188,7 +189,9 @@ object Sinks {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(stage.toString)
     if (!fs.exists(rootP)) fs.mkdirs(rootP)
-    fs.rename(stage, target)
+    // Hadoop reports a failed rename by returning false (see [[swapIn]]);
+    // reading it as success would record a generation that never landed
+    require(fs.rename(stage, target), s"publish: failed to rename $stage to $target")
     fs.delete(new org.apache.hadoop.fs.Path(root + "__stage"), true)
     true
   }
@@ -490,7 +493,11 @@ object Sinks {
     if (fs.exists(trashRoot)) {
       fs.listStatus(trashRoot).foreach { st =>
         val live = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
-        if (!fs.exists(live)) fs.rename(st.getPath, live)
+        // checked before the trash delete below: that delete would destroy
+        // the only copy of a partition whose restore failed
+        if (!fs.exists(live))
+          require(fs.rename(st.getPath, live),
+            s"partition recovery: failed to restore ${st.getPath} at $live")
       }
       fs.delete(trashRoot, true)
     }

@@ -44,11 +44,16 @@ object Tables {
     * plumbing — SCHEMAS, never rows or results — invalidated mechanically
     * when any file's size or mtime changes, and a cold JVM still infers
     * once per source (the bench/verify/driver contract recomputes
-    * everything from parquet).
+    * everything from parquet). Each entry also records whether the source
+    * declares TIMESTAMP(NANOS) columns, which its schema alone cannot say
+    * (see [[events]]).
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
+
+  private final case class Inferred(
+      sig: String, schema: org.apache.spark.sql.types.StructType, nanos: Boolean)
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Source-state signature behind every JVM-local source memo (the schema
     * memo here and [[graft.SparkEntry]]'s fixture-stamp fingerprints):
@@ -102,16 +107,51 @@ object Tables {
   /** A parquet scan that infers its schema at most once per (JVM, source
     * state): first read infers and memoizes, later reads supply the cached
     * schema. Values are identical by construction — the supplied schema IS
-    * the one inference produced for the same bytes.
+    * the one inference produced for the same bytes. A memo hit on a source
+    * that declares TIMESTAMP(NANOS) sets `nanosAsLong` for this session,
+    * as the inference did for the session that ran it: the memoized schema
+    * reads those columns as longs, and the scan's execution-time footer
+    * conversion needs the flag too.
     */
   private[graft] def parquetScan(spark: SparkSession, path: String): DataFrame = {
     val sig = sourceSignature(path)
-    Option(schemaMemo.get(path)).filter(h => sig.contains(h._1)) match {
-      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+    Option(schemaMemo.get(path)).filter(h => sig.contains(h.sig)) match {
+      case Some(hit) =>
+        if (hit.nanos) spark.conf.set(NanosAsLong, "true")
+        spark.read.schema(hit.schema).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        sig.foreach(s => schemaMemo.put(path, (s, df.schema)))
+        // without the flag a NANOS column fails the inference above; with
+        // it, it infers as a LongType no different from a plain INT64, and
+        // only the footer tells the two apart
+        val nanos = spark.conf.get(NanosAsLong, "false").toBoolean && declaresNanos(spark, path)
+        sig.foreach(s => schemaMemo.put(path, Inferred(s, df.schema, nanos)))
         df
+    }
+  }
+
+  /** True when the parquet file at `path` (or the first data file directly
+    * under a directory `path`) declares a TIMESTAMP(NANOS) column — read
+    * from its footer, whatever the session's `nanosAsLong` setting.
+    */
+  private def declaresNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(p).isFile) Some(p)
+      else fs.listStatus(p).map(_.getPath).find(_.getName.endsWith(".parquet"))
+    file.exists { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try reader.getFileMetaData.getSchema.getColumns.asScala.exists {
+        _.getPrimitiveType.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }
+      } finally reader.close()
     }
   }
 
@@ -227,27 +267,21 @@ object Tables {
     // unconditionally flipping it mutated session-wide parquet semantics
     // as a read side effect: every LATER read of an unrelated NANOS
     // parquet in the session would silently load longs instead of failing
-    // loudly (review finding). When set, it must STAY set for the session:
+    // loudly (review finding). A plain INT64 `ts` also loads as LongType
+    // and needs no flag; the schema memo records which of the two the
+    // file is, so a memo hit in another session sets the flag exactly
+    // when this inference did. When set, it must STAY set for the session:
     // the scan re-derives its conf at action time, so restoring the flag
-    // after read() would break the returned frame's own execution. A
-    // session that truly reads nano-typed events has opted into the
-    // documented legacy semantics; one that doesn't keeps pristine conf.
+    // after read() would break the returned frame's own execution.
     val raw =
       try parquetScan(spark, s"$dir/events.parquet")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("PARQUET_TYPE_ILLEGAL") ||
               e.getMessage.contains("Illegal Parquet type") =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          spark.conf.set(NanosAsLong, "true")
           parquetScan(spark, s"$dir/events.parquet")
       }
-    // A LongType ts can also arrive via the schema MEMO on a session that
-    // never ran the throwing inference itself — the flag must be set for
-    // the scan's EXECUTION-time footer conversion too, and doing so here
-    // keeps the documented opt-in scope: only sessions actually loading a
-    // nano-typed events table get the legacy semantics.
-    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -323,6 +323,43 @@ class SinksSpec extends SparkSpec {
       "compacting one partition destroyed another partition's parked-only copy")
   }
 
+  /** A `norename:` path on the local disk whose filesystem refuses the
+    * renames [[RefusingRenameFileSystem.refuse]] selects. */
+  private def refusingDir(): String = {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.norename.impl", classOf[RefusingRenameFileSystem].getName)
+    "norename://" + tmpDir()
+  }
+
+  private def localPath(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  test("publishDir: a refused rename throws and publishes nothing") {
+    val root = refusingDir() + "/idx"
+    RefusingRenameFileSystem.refuse = _.toUri.getPath == localPath(s"${root}__stage/batch=0")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Sinks.publishDir(Seq(1L, 2L).toDF("id"), root, "batch=0")
+      }
+      assert(e.getMessage.contains("failed to rename"), e.getMessage)
+      assert(!Files.exists(java.nio.file.Paths.get(localPath(root), "batch=0")),
+        "a refused publish must leave no generation behind")
+    } finally RefusingRenameFileSystem.refuse = _ => false
+  }
+
+  test("recoverPartitions: a refused restore throws and keeps the parked partition") {
+    val dir = refusingDir() + "/lake"
+    val parked = java.nio.file.Paths.get(localPath(dir + Sinks.OldSuffix), "d=2024-01-01")
+    Files.createDirectories(parked)
+    Files.writeString(parked.resolve("part-0.parquet"), "rows")
+    RefusingRenameFileSystem.refuse = _.toUri.getPath == parked.toString
+    try {
+      val e = intercept[IllegalArgumentException](Sinks.recoverPartitions(spark, dir))
+      assert(e.getMessage.contains("failed to restore"), e.getMessage)
+      assert(Files.exists(parked.resolve("part-0.parquet")),
+        "the trash delete destroyed the only copy of an unrestored partition")
+    } finally RefusingRenameFileSystem.refuse = _ => false
+  }
+
   test("ES/Cassandra sink configs build the reference's option surfaces") {
     val es = Sinks.EsSinkConfig("es1,es2", "jobs/_doc", "job_id",
       extra = Map("es.net.http.auth.user" -> "svc"))
@@ -338,4 +375,18 @@ class SinksSpec extends SparkSpec {
   }
 
   implicit class Pipe[A](a: A) { def pipe[B](f: A => B): B = f(a) }
+}
+
+/** The local filesystem under the `norename:` scheme, whose `rename`
+  * returns false for the sources [[RefusingRenameFileSystem.refuse]]
+  * selects — how HDFS and object stores report most failed renames. */
+class RefusingRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def getScheme: String = "norename"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !RefusingRenameFileSystem.refuse(src) && super.rename(src, dst)
+}
+
+object RefusingRenameFileSystem {
+  @volatile var refuse: org.apache.hadoop.fs.Path => Boolean = _ => false
 }

@@ -105,6 +105,61 @@ class TablesContractSpec extends SparkSpec {
       "reading micros-typed events must leave the nanosAsLong conf untouched")
   }
 
+  test("a plain INT64 ts leaves nanosAsLong untouched, inferred and from the schema memo") {
+    // a plain INT64 `ts` loads as LongType just like a TIMESTAMP(NANOS)
+    // read under the legacy flag; only a file that declares NANOS may set
+    // the flag — on the inference AND on every later memo hit
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = Files.createTempDirectory("int64-ts").toString
+    spark.range(3).selectExpr(
+      "id as event_id", "id * 1000000000 as ts", "id as user_id",
+      "'x' as event_type", "cast(id as double) as value", "'{}' as props")
+      .write.parquet(s"$dir/events.parquet")
+    val s = spark.newSession()
+    val before = s.conf.getOption(key)
+    Tables.events(s, dir).collect()
+    assert(s.conf.getOption(key) == before, "the inference set nanosAsLong for a plain INT64 ts")
+    Tables.events(s, dir).collect()
+    assert(s.conf.getOption(key) == before, "a memo hit set nanosAsLong for a plain INT64 ts")
+  }
+
+  test("a TIMESTAMP(NANOS) ts decodes identically inferred and from the memo in a fresh session") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("nanos-ts").toString
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema)
+      .withConf(spark.sparkContext.hadoopConfiguration)
+      .build()
+    val rows = new SimpleGroupFactory(schema)
+    val nanos = Seq(1700000000123456789L, 1700000001987654321L)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      writer.write(rows.newGroup()
+        .append("event_id", i.toLong).append("ts", ns).append("user_id", 7L)
+        .append("event_type", "view").append("value", 1.5).append("props", "{}"))
+    } finally writer.close()
+    def read(s: org.apache.spark.sql.SparkSession) =
+      Tables.events(s, dir).orderBy("event_id").collect().toSeq
+    val inferred = read(spark.newSession())
+    val fresh = spark.newSession()
+    val fromMemo = read(fresh)
+    assert(inferred == fromMemo)
+    assert(inferred.map(_.getAs[java.sql.Timestamp]("ts").toInstant) ==
+      nanos.map(ns => java.time.Instant.ofEpochSecond(0L, ns / 1000 * 1000)))
+    assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
   test("events loader fails with one clear message on an unknown ts physical type") {
     val dir = Files.createTempDirectory("drift").toString
     spark.range(3).selectExpr(
