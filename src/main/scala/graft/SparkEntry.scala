@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.agg.BatchAggregates
-import graft.functions.{Bm25, Bpe, Dedup, ExactAgg, HeavyHitters, LangModel, Pq, QualityClassifier, Similarity, Text}
-import graft.ops.{Cleaning, Features, Packing, Sampling, UrlOps}
-import graft.pipeline.{EventsPipeline, IngestPipeline}
-import graft.sources.{Bucketing, Tables}
-import graft.streaming.StreamingAggs
+import graft.pipeline.EventsPipeline
+import graft.registry._
+import graft.sources.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every query takes (spark, sfDir), reads the driver parquet tables via
   * [[Tables]], and returns a DETERMINISTIC result: exact DECIMAL sums for
@@ -18,877 +16,19 @@ import graft.streaming.StreamingAggs
   * averages, timestamps formatted to second-precision strings, and a total
   * ORDER BY with tiebreaks. The DuckDB oracles mirror names AND types
   * (casts added where DuckDB's natural type differs from Spark's).
+  *
+  * Each query is one [[Query]] record in its family's file under
+  * `graft/registry/`: builder, oracle and fixtures side by side. The maps
+  * below are views over those records.
   */
 object SparkEntry {
 
-  /** IVF model hyperparameters for the persisted-index queries (q67, q70).
-    * Constants here, not inline at call sites: they are part of the index
-    * FIXTURE's identity — [[ivfIndexStamp]] folds them into the stamp so a
-    * hyperparameter change rebuilds the index instead of silently serving
-    * a model trained under the old values (round-6 verdict #3).
+  /** Every registry record, family by family. Lazy: the family objects
+    * are read only once a caller needs the registry.
     */
-  private[graft] val IvfCells = 16
-  private[graft] val IvfIters = 2
-
-  /** Stamp for a persisted IVF index fixture: the embeddings' source stamp
-    * (`source`, a [[Fixture.sourceStamp]] — sfDir + row count + content
-    * hash) plus the model hyperparameters and quantizer scheme version,
-    * which live in code where no data fingerprint can see them.
-    */
-  private[graft] def ivfIndexStamp(source: String, k: Int, iters: Int): String =
-    s"$source|k=$k|iters=$iters|quant=${graft.functions.Int8Ops.QuantizerVersion}|km=${Similarity.KmeansVersion}"
-
-  /** Train + persist the IVF index at `fixture` unless the stamp already
-    * matches the current corpus AND model hyperparameters. Extracted from
-    * q67 so the rebuild-on-hyperparameter-change behavior is directly
-    * spec-testable (`IvfIndexSpec` flips k and observes the rebuild).
-    */
-  private[graft] def ensureIvfIndex(
-      emb: DataFrame, source: String, fixture: String, k: Int, iters: Int): Unit =
-    Fixture.ensure(emb.sparkSession, fixture, ivfIndexStamp(source, k, iters)) {
-      Similarity.writeIvfIndex(
-        emb, Similarity.kmeansCentroids(emb, k = k, iters = iters), fixture)
-    }
-
-  /** Stamped build of the q92 IVF-PQ index fixture — the [[ensureIvfIndex]]
-    * contract with the PQ model folded into the identity: both models'
-    * hyperparameters AND both scheme versions (coarse kmeans + PQ trainer)
-    * are stamp ingredients, so changing any of them rebuilds instead of
-    * serving codes trained under the old scheme.
-    */
-  private[graft] def ensureIvfPqIndex(s: SparkSession, dir: String): String = {
-    val emb = Tables.embeddings(s, dir)
-    val fixture = Fixture.path(dir, "ivf_pq_index")
-    Fixture.ensure(s, fixture, ivfIndexStamp(
-        Fixture.sourceStamp(s, dir, "embeddings"), IvfCells, IvfIters) +
-        s"|pq_m=$PqM|pq_k=$PqK|pq_iters=$PqIters|pq=${Pq.PqVersion}") {
-      val cents = Similarity.kmeansCentroids(emb, k = IvfCells, iters = IvfIters)
-      val model = Pq.train(emb, Pq.initCodebooks(emb, dims = 64, m = PqM, k = PqK), iters = PqIters)
-      Pq.writeIvfPqIndex(emb, cents, model, fixture)
-    }
-  }
-
-  /** The GROWN-index fixture q70 (append gate) and q79 (health monitor)
-    * share: an index trained+built over 90% of the corpus, then the
-    * remaining 10% appended against the frozen centroids. The stamp covers
-    * the FULL corpus content (base + batch both determine the post-append
-    * state) plus model hyperparameters + an append-protocol version; any
-    * mismatch rebuilds base AND re-appends, so the append runs exactly
-    * once per fixture build (a bare re-append would duplicate rows).
-    */
-  private[graft] def ensureAppendedIvfIndex(
-      s: SparkSession, dir: String): String = {
-    val emb = Tables.embeddings(s, dir)
-    val base = emb.filter(col("vec_id") % 10 =!= 7)
-    val batch = emb.filter(col("vec_id") % 10 === 7)
-    val fixture = Fixture.path(dir, "ivf_index_append")
-    Fixture.ensure(s, fixture, ivfIndexStamp(
-        Fixture.sourceStamp(s, dir, "embeddings"), IvfCells, IvfIters) + "|append-v1") {
-      val cents = Similarity.kmeansCentroids(base, k = IvfCells, iters = IvfIters)
-      Similarity.writeIvfIndex(base, cents, fixture)
-      Similarity.appendToIvfIndex(s, fixture, batch)
-    }
-  }
-
-  /** Stamped build of the q69 fingerprint-index fixture: gen 0 over the
-    * even-doc_id history, batch 1's survivors appended as gen 1. Extracted
-    * from the query body so the bench warmup can pre-build it untimed
-    * ([[prebuildFixtures]]) — the benched body is then the pure O(batch)
-    * probe both passes.
-    */
-  private[graft] def ensureFpIndexFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val history = docs.filter(col("doc_id") % 2 === 0)
-    val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
-    val fixture = Fixture.path(dir, "fp_index")
-    Fixture.ensure(s, fixture,
-        Fixture.sourceStamp(s, dir, "documents", Dedup.FingerprintIndexVersion)) {
-      Dedup.writeFingerprintIndex(history, fixture)
-      val accepted1 = Dedup.dedupAgainstFingerprintIndex(s, fixture, batch1)
-      Dedup.appendFingerprintIndex(accepted1, fixture, generation = 1L)
-    }
-  }
-
-  /** Stamped build of the q78 MinHash band-index fixture (gen 0 over
-    * history + gen 1 appended survivors) — the near-dup sibling of
-    * [[ensureFpIndexFixture]], same warmup motivation: the r8 bench billed
-    * the 83.6 s one-time index build to q78's first pass.
-    */
-  private[graft] def ensureBandIndexFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val history = docs.filter(col("doc_id") % 2 === 0)
-    val batch1 = docs.filter(col("doc_id") % 4 === 1).select("doc_id", "text")
-    val fixture = Fixture.path(dir, "band_index")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        Dedup.BandIndexVersion, s"h=$BandIdxHashes", s"b=$BandIdxBands",
-        s"seed=$BandIdxSeed", s"minj=$BandIdxMinJ", s"cap=$BandIdxCap", "append-v1")) {
-      Dedup.writeBandIndex(history, fixture,
-        nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
-      val accepted1 = Dedup.dedupAgainstBandIndex(s, fixture, batch1,
-        nHashes = BandIdxHashes, nBands = BandIdxBands,
-        minEstJaccard = BandIdxMinJ, seed = BandIdxSeed,
-        maxBandCollisions = BandIdxCap)
-      Dedup.appendBandIndex(accepted1.select("doc_id", "text"), fixture, generation = 1L,
-        nHashes = BandIdxHashes, nBands = BandIdxBands, seed = BandIdxSeed)
-    }
-  }
-
-  /** Stamped build of the q82 eval-decontamination-index fixture: the
-    * doc_id % 20 == 7 slice of `documents` indexed as eval generation 0 and
-    * the % 20 == 8 slice appended as generation 1 — two benchmark suites on
-    * the blocklist, exercising both install and append. Winnowing geometry
-    * is the (k=3, w=4) default, the same geometry q54/q55's oracle CTE
-    * reproduces.
-    */
-  private[graft] def ensureEvalIndexFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "eval_index")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        Dedup.EvalIndexVersion, "k=3", "w=4", "append-v1")) {
-      Dedup.writeEvalIndex(docs.filter(col("doc_id") % 20 === 7), fixture)
-      Dedup.appendEvalIndex(docs.filter(col("doc_id") % 20 === 8), fixture, generation = 1L)
-    }
-  }
-
-  /** Stamped build of the q86 span-count-index fixture: the doc_id % 5 ∈
-    * {0,2} slice installed as count generation 0, the % 5 ∈ {3,4} slice
-    * appended as generation 1 (together: every non-batch doc), then the
-    * hot list refreshed — exercising install, append and refresh. (k=4,
-    * minCount=3), the q84 geometry.
-    */
-  private[graft] def ensureSpanIndexFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "span_index")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        Dedup.SpanIndexVersion, "k=4", "min=3", "gens-2")) {
-      Dedup.writeSpanCountIndex(
-        docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 2),
-        fixture, k = 4, minCount = 3L)
-      Dedup.appendSpanCounts(
-        docs.filter(col("doc_id") % 5 === 3 || col("doc_id") % 5 === 4),
-        fixture, generation = 1L)
-      Dedup.refreshHotSpanList(s, fixture)
-    }
-  }
-
-  /** q79 diagnostic sidecar (round-9 verdict #1a): one JSON string that
-    * pins everything the hash gate can disagree about — the fixture's
-    * on-disk identity (stamp + data file count), the per-cell list sizes
-    * the skew stats derive from, and the engine's RAW recall inputs
-    * (hits, nq, recall×10⁴) behind the thresholded `recall_ok` the query
-    * emits. One read of this artifact attributes any future q79 mismatch
-    * to fixture build-divergence (stamp/file/cell rows differ), read-
-    * divergence (cells agree, stats don't), or the recall envelope (raw
-    * recall near the 0.60 floor). Verify writes it next to the q79 dump.
-    */
-  private[graft] def q79Diagnostics(s: SparkSession, dir: String): String = {
-    val fixture = ensureAppendedIvfIndex(s, dir)
-    val stamp = Fixture.readStamp(s, fixture).getOrElse("<missing>")
-    val dataFiles = {
-      val it = graft.functions.IndexProtocol.fileSystem(s, fixture)
-        .listFiles(new org.apache.hadoop.fs.Path(fixture), true)
-      var n = 0L
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val cells = Tables.parquetScan(s, s"$fixture/lists")
-      .select(col("cell_id"), col("vec_id")).distinct()
-      .groupBy("cell_id").agg(count(lit(1)).as("n"))
-      .orderBy("cell_id").collect()
-      .map(r => s"""[${r.get(0)},${r.getLong(1)}]""").mkString("[", ",", "]")
-    val k = 10
-    val rec = Similarity.ivfIndexRecall(
-        s, fixture, Tables.embeddings(s, dir).filter(col("vec_id") < 8),
-        nProbe = 4, k = k)
-      .agg(coalesce(sum(col("hits")), lit(0L)).as("h"), count(lit(1)).as("n")).head()
-    val (hits, nq) = (rec.getLong(0), rec.getLong(1))
-    val recallE4 = if (nq == 0) -1L else hits * 10000L / (nq * k)
-    s"""{"fixture":"$fixture","stamp":"${stamp.replace("\"", "\\\"")}",""" +
-      s""""data_files":$dataFiles,"cells":$cells,""" +
-      s""""hits":$hits,"nq":$nq,"k":$k,"recall_e4":$recallE4}"""
-  }
-
-  /** Merge-table size for the q97 BPE fixture — a stamp ingredient (a
-    * different merge budget is a different tokenizer).
-    */
-  private[graft] val BpeMergeCount = 200
-
-  /** Stamped build of the q97 BPE fixture: learn `BpeMergeCount` merges
-    * from the corpus (one explode+agg pass + a driver-side loop over the
-    * capped dictionary — [[Bpe.learnMerges]]), persist them as the
-    * versioned merges table, and write the differential EXPECTED table by
-    * re-encoding every document with the independent naive implementation
-    * ([[Bpe.naiveTokenCounts]]) — the q90 exhaustive-baseline discipline:
-    * the oracle joins the naive counts, the query runs the production
-    * expression, and any merge-order divergence hash-fails. Content-stamped
-    * like every index fixture, so bench passes time the encode path only.
-    */
-  private[graft] def ensureBpeFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bpe")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"merges=$BpeMergeCount", s"bpe=${Bpe.BpeVersion}")) {
-      val dict = Bpe.learnDictionary(docs, "text")
-      val merges = Bpe.trainFromDictionary(dict, numMerges = BpeMergeCount)
-      val vocab = Bpe.buildVocab(dict, merges)
-      Bpe.writeMerges(s, merges, s"$fixture/merges")
-      Bpe.writeVocab(s, vocab, s"$fixture/vocab")
-      Bpe.naiveTokenCounts(docs, "text", "doc_id", merges)
-        .write.mode("overwrite").parquet(s"$fixture/expected")
-      Bpe.naiveIdsTable(docs, "text", "doc_id", merges, vocab)
-        .write.mode("overwrite").parquet(s"$fixture/expected_ids")
-      // the q111 byte-fallback tier: the same trained tokenizer with the
-      // 256 byte tokens appended, and the textbook encoder's expected-ids
-      // table over the EXOTIC-injected corpus (fallback semantics only
-      // show on symbols outside the training alphabet)
-      val vocabBytes = Bpe.buildVocabWithBytes(dict, merges)
-      Bpe.writeVocab(s, vocabBytes, s"$fixture/vocab_bytes")
-      Bpe.naiveIdsTable(exoticInjected(docs), "text", "doc_id", merges,
-          vocabBytes, byteFallback = true)
-        .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-    }
-  }
-
-  /** The q106/q113 HTML wrapper: markup injected deterministically around
-    * the corpus text — a full page with script+style payloads (d%3==0),
-    * inline tags with entities (d%3==1), and a no-markup control. ONE
-    * definition feeds the q106 extraction gate, the q113 WARC bodies and
-    * (via [[htmlWrappedSql]]) both oracles.
-    */
-  private[graft] def htmlWrapped(d: Column, text: Column): Column =
-    when(d % 3 === 0, concat(
-        lit("<html><head><script type=\"a\">var x = 1 < 2;</script>" +
-          "<style>.c { }</style></head><body><p>"),
-        text, lit("</p></body></html>")))
-      .when(d % 3 === 1, concat(
-        lit("<div class=\"x\">Tom &amp; co say &quot;hi&quot;: </div>"),
-        text, lit(" &lt;tail&gt;&nbsp;end")))
-      .otherwise(text)
-
-  /** The DuckDB mirror of [[htmlWrapped]] over (doc_id, text). Single-line
-    * on purpose: a leading "||" would lose a pipe to an enclosing
-    * template's stripMargin. */
-  private[graft] val htmlWrappedSql: String =
-    "CASE WHEN doc_id % 3 = 0 THEN " +
-      "'<html><head><script type=\"a\">var x = 1 < 2;</script><style>.c { }</style></head><body><p>' " +
-      "|| text || '</p></body></html>' " +
-      "WHEN doc_id % 3 = 1 THEN " +
-      "'<div class=\"x\">Tom &amp; co say &quot;hi&quot;: </div>' " +
-      "|| text || ' &lt;tail&gt;&nbsp;end' " +
-      "ELSE text END"
-
-  /** Stamped build of the q113 WARC fixture: eight containers written by
-    * the distributed sharded writer ([[graft.sources.Warc.writeSharded]]),
-    * one response record per document with the q106 HTML wrapper as its
-    * body, record id / target URI / Content-Length all pure formulas of
-    * doc_id — so DuckDB predicts every parsed column from the base table
-    * (the q37/q58 encode-side-formula discipline). Every 31st doc
-    * (d%31==7) declares a WRONG Content-Length, so the parser's
-    * quarantine+resync path runs inside the gate corpus and those docs
-    * must be absent from the good output.
-    */
-  private[graft] def ensureWarcFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "warc_lake")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "warc-v2")) {
-      val d = col("doc_id")
-      def rows(shard: Column) = docs.select(
-        shard.as("shard"),
-        d.as("sort_key"),
-        concat(lit("urn:graft:"), d.cast("string")).as("record_id"),
-        concat(lit("https://site"), (d % 40).cast("string"),
-          lit(".example.com/p/"), d.cast("string")).as("target_uri"),
-        htmlWrapped(d, col("text")).as("body"),
-        when(d % 31 === 7, lit(-5)).otherwise(lit(0)).as("len_delta"))
-      // half the corpus in plain containers, half in per-record-gzip
-      // ones (the Common Crawl transport) — ONE read consumes both
-      graft.sources.Warc.writeSharded(s,
-        rows(pmod(d, lit(8))).filter(col("shard") < 4),
-        s"$fixture/warc", shards = 4)
-      graft.sources.Warc.writeSharded(s,
-        rows(pmod(d, lit(8)) - 4).filter(col("shard") >= 0),
-        s"$fixture/warc", shards = 4, gzip = true)
-    }
-  }
-
-  /** Exotic-script suffixes for the q111 byte-fallback gate, appended to
-    * the (ASCII-clean) corpus text deterministically by doc_id: Greek and
-    * CJK letters (2- and 3-byte UTF-8), an astral-plane emoji (surrogate
-    * pair, 4-byte UTF-8) and an in-alphabet control. ONE definition feeds
-    * the fixture's expected table and the gate query.
-    */
-  private[graft] def exoticInjected(docs: DataFrame): DataFrame = {
-    val d = col("doc_id")
-    docs.withColumn("text", concat(col("text"),
-      when(d % 4 === 0, lit(" δοκιμή"))
-        .when(d % 4 === 1, lit(" 試験"))
-        .when(d % 4 === 2, lit(" 🚀"))
-        .otherwise(lit(" plain"))))
-  }
-
-  /** Stamped install of the q98 quality-classifier model fixture — the
-    * synthesized demo weight table ([[QualityClassifier.synthesizeWeights]]).
-    * Corpus-independent (a model is not a function of the data it scores),
-    * so the stamp carries only the model identity: dimension + scheme
-    * version.
-    */
-  private[graft] def ensureQualityModel(s: SparkSession, dir: String): String = {
-    val fixture = Fixture.path(dir, "quality_model")
-    val dim = QualityClassifier.DefaultDim
-    Fixture.ensure(s, fixture, s"dim=$dim|bias=0|qc=${QualityClassifier.ModelVersion}") {
-      QualityClassifier.writeModel(s,
-        QualityClassifier.Model(QualityClassifier.synthesizeWeights(dim), bias = 0L),
-        s"$fixture/model")
-    }
-  }
-
-  /** The declared schema of the q112 CSV lake (the [[CsvLake]] contract:
-    * schemas are declared, never inferred). */
-  private[graft] val CsvLakeSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("flag", org.apache.spark.sql.types.StringType)))
-
-  /** Stamped build of the q112 CSV lake fixture: one line per document,
-    * synthesized from doc_id so DuckDB reads the same file as a DIRECT
-    * oracle (no parquet twin). Three deterministic malformation kinds are
-    * injected — a type-invalid numeric (id%7==3), a short row (id%13==5)
-    * and an extra field (id%13==8) — the exact set both Spark PERMISSIVE
-    * and DuckDB ignore_errors classify as malformed (prototyped; the
-    * agreement IS the gate's subject). Lines are written distributedly
-    * via the text sink, one pass, no driver materialization.
-    */
-  private[graft] def ensureCsvLake(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "csv_lake")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "csv-v1")) {
-      val d = col("doc_id")
-      val idS = d.cast("string")
-      val nameS = concat(lit("name_"), (d % 50).cast("string"))
-      val metricS = ((d * 7) % 1000).cast("string")
-      val flagS = concat(lit("f"), (d % 2).cast("string"))
-      val line =
-        when(d % 7 === 3, concat_ws(",", idS, nameS, concat(lit("xx"), idS), flagS))
-          .when(d % 13 === 5, concat_ws(",", idS, nameS))
-          .when(d % 13 === 8, concat_ws(",", idS, nameS, metricS, flagS, lit("extra")))
-          .otherwise(concat_ws(",", idS, nameS, metricS, flagS))
-      docs.select(line.as("value")).write.mode("overwrite").text(s"$fixture/csv")
-    }
-  }
-
-  /** Stamped build of the q115 snapshot-lake fixture: the full
-    * reader-vs-maintenance timeline of [[graft.sinks.SnapshotLake]] —
-    * gen 0 append (even docs), gen 1 append (the %4==1 quarter; the PIN
-    * POINT), gen 2 compaction (rewrites every file), gen 3 append
-    * (%8==3 — growth the pinned reader must never see), then a vacuum
-    * keeping three generations (g1's manifest survives; g0's FILES
-    * survive through g1's manifest). The gate reads the pinned
-    * generation 1 AFTER all that maintenance: row-identical to the
-    * pre-compaction state — exactly gens 0+1, which DuckDB re-derives
-    * from the base table alone.
-    */
-  private[graft] def ensureSnapshotLake(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "snap_lake")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "snap-v1")) {
-      val base = docs.select("doc_id", "lang", "source", "n_chars")
-      val root = s"$fixture/tbl"
-      graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 2 === 0), root)
-      graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 4 === 1), root)
-      graft.sinks.SnapshotLake.compact(s, root, targetRecordsPerFile = 1000000L)
-      graft.sinks.SnapshotLake.append(base.filter(col("doc_id") % 8 === 3), root)
-      graft.sinks.SnapshotLake.vacuum(s, root, keepGenerations = 3)
-    }
-  }
-
-  /** Marker suffixes of the q109 labeled training corpus: every even doc
-    * is a "good" example and every odd doc a "bad" one, with a class
-    * marker appended so the centroid fit has real signal to separate on
-    * (the q76 discipline — both branches get rows). Interpolated into the
-    * generated oracle SQL, so the two sides label identically.
-    */
-  private[graft] val QcGoodMark = " verified concise informative prose"
-  private[graft] val QcBadMark = " click here buy now free prize offer"
-
-  /** The labeled corpus both the q109 trainer and its scoring pass read:
-    * label = even doc_id, text = corpus text + the class marker.
-    */
-  private[graft] def qcLabeled(docs: DataFrame): DataFrame = docs
-    .withColumn("__lbl", col("doc_id") % 2 === 0)
-    .withColumn("__ltext", concat(col("text"),
-      when(col("__lbl"), lit(QcGoodMark)).otherwise(lit(QcBadMark))))
-
-  /** Stamped TRAIN of the q109 classifier fixture: the deterministic
-    * closed-form centroid fit ([[QualityClassifier.trainCentroid]]) over
-    * the labeled corpus, persisted as the same (bucket, weight) artifact
-    * q98 serves — train → install → score is the full production loop.
-    * A pure function of (corpus slice, dim, trainer scheme).
-    */
-  private[graft] def ensureTrainedQualityModel(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "quality_model_trained")
-    // the class markers are trainer inputs: editing either would leave a
-    // stale fixture serving old weights while the oracle re-derives with
-    // the new markers (round-13 advice) — fold them into the identity
-    val markers = Integer.toHexString((QcGoodMark + "\u0000" + QcBadMark).hashCode)
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"dim=${QualityClassifier.DefaultDim}", s"scale=${QualityClassifier.TrainScale}",
-        s"qc=${QualityClassifier.ModelVersion}", s"marks=$markers", "centroid-v1")) {
-      val model = QualityClassifier.trainCentroid(qcLabeled(docs), "__ltext", "__lbl")
-      QualityClassifier.writeModel(s, model, s"$fixture/model")
-    }
-  }
-
-  /** Stamped build of the q119 BM25 inverted index over the documents
-    * corpus ([[Bm25.buildIndex]]). A pure function of (corpus slice,
-    * scheme version) — the oracle joins the persisted terms table for
-    * idf_e6, so the index path is interpolated into the generated SQL.
-    */
-  private[graft] def ensureBm25Index(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bm25")
-    Fixture.ensure(s, fixture, bm25IndexStamp(s, dir)) {
-      Bm25.buildIndex(docs, "text", "doc_id", s"$fixture/idx")
-    }
-    s"$fixture/idx"
-  }
-
-  /** The q119 index's stamp, also its bucketed layout's identity. */
-  private def bm25IndexStamp(s: SparkSession, dir: String): String =
-    Fixture.sourceStamp(s, dir, "documents", s"bm=${Bm25.Version}")
-
-  /** Stamped build of the q124 retrieval-decontamination fixture: the q82
-    * eval suites (doc_id % 20 ∈ {7, 8}) indexed as a SHINGLE-grade BM25
-    * artifact ([[Bm25.buildIndex]] with ngram = 2 — bigram terms
-    * discriminate near-verbatim overlap even on the corpus's heavily
-    * shared unigram vocabulary; the grade travels in the index layout).
-    */
-  private[graft] def ensureBm25EvalIndex(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bm25_eval")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"bm=${Bm25.Version}", "g=2", "eval78")) {
-      Bm25.buildIndex(
-        docs.filter(col("doc_id") % 20 === 7 || col("doc_id") % 20 === 8),
-        "text", "doc_id", s"$fixture/idx", ngram = 2)
-    }
-    s"$fixture/idx"
-  }
-
-  /** Catalog-registered TERM-BUCKETED copy of the q119 index's postings
-    * ([[Bucketing.ensureBm25Postings]]) for the q123 bucket-pruned serve.
-    * The layout identity is the index fixture's stamp ([[bm25IndexStamp]],
-    * hashed into the catalog name) — one source of truth, so anything that
-    * rebuilds the index (corpus change, `Bm25.Version` bump) lands a fresh
-    * layout instead of a stale catalog hit, and no second full-corpus
-    * fingerprint scan runs per serve (the stamp's fingerprint is memoized).
-    */
-  private[graft] def ensureBm25BucketedPostings(s: SparkSession, dir: String): String = {
-    val idx = ensureBm25Index(s, dir)
-    val identity =
-      s"${Fixture.tag(dir)}_${java.lang.Integer.toHexString(bm25IndexStamp(s, dir).hashCode)}"
-    Bucketing.ensureBm25Postings(
-      s, s"$idx/postings", s"${Fixture.root}/bucketed", identity)
-  }
-
-  /** Stamped build of the q122 INCREMENTAL BM25 index: install generation
-    * 0 from the even-doc_id half, append the odd half as generation 1,
-    * refresh — the maintenance loop a live corpus actually runs
-    * ([[Bm25.installIndex]]/[[Bm25.appendDocs]]/[[Bm25.refreshIndex]]).
-    * The union equals the full corpus, so the oracle is q119's
-    * re-derivation pointed at THIS artifact's terms table.
-    */
-  private[graft] def ensureBm25IncIndex(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bm25_inc")
-    Fixture.ensure(s, fixture,
-        Fixture.sourceStamp(s, dir, "documents", s"bm=${Bm25.Version}", "inc")) {
-      Bm25.installIndex(docs.filter(col("doc_id") % 2 === 0), "text", "doc_id",
-        s"$fixture/idx")
-      Bm25.appendDocs(docs.filter(col("doc_id") % 2 === 1), s"$fixture/idx",
-        generation = 1L)
-      Bm25.refreshIndex(s, s"$fixture/idx")
-    }
-    s"$fixture/idx"
-  }
-
-  /** Stamped build of the q121 unigram-tokenizer fixture: train the
-    * EM/Viterbi model ([[graft.functions.Unigram]]) on the CLEAN corpus
-    * dictionary, persist it, and persist the naive-encoder expected table
-    * over the exotic-injected corpus (the q111 pattern — unknown-cp
-    * semantics only show on symbols outside the training alphabet). The
-    * oracle joins the expected table (q97 differential discipline).
-    */
-  private[graft] def ensureUnigramFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "unigram")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"uni=${graft.functions.Unigram.Version}", "b")) {
-      val dict = graft.functions.Unigram.learnDictionary(docs, "text")
-      val model = graft.functions.Unigram.trainFromDictionary(dict)
-      graft.functions.Unigram.writeModel(s, model, s"$fixture/model")
-      graft.functions.Unigram.naiveTable(exoticInjected(docs), "text", "doc_id", model)
-        .write.mode("overwrite").parquet(s"$fixture/expected")
-      graft.functions.Unigram.naiveIdTable(exoticInjected(docs), "text", "doc_id", model)
-        .write.mode("overwrite").parquet(s"$fixture/expected_ids")
-      // the SAME trained pieces under the oov=bytes story (q128): the
-      // byte-tier serialization round-trips through its own persisted
-      // artifact, and the expected table comes from the independent
-      // encoder under the same story
-      val byteModel = model.copy(byteFallback = true)
-      graft.functions.Unigram.writeModel(s, byteModel, s"$fixture/model_bytes")
-      graft.functions.Unigram
-        .naiveIdTable(exoticInjected(docs), "text", "doc_id", byteModel)
-        .write.mode("overwrite").parquet(s"$fixture/expected_ids_bytes")
-    }
-  }
-
-  /** Stamped build of the q131 DSIR fixture: train the importance-weight
-    * model (target = the %10==3 corpus slice, raw = the rest —
-    * "make the raw corpus look like the target domain") and persist it
-    * through the quality-classifier artifact format plus the quantized
-    * Gumbel inverse-CDF table, so the oracle joins the SAME persisted
-    * integers the selection plan carries as constants ([[graft.functions
-    * .LangModel]]'s quantize-once discipline).
-    */
-  private[graft] def ensureDsirFixture(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "dsir")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents", "dsir=1")) {
-      val target = docs.filter(col("doc_id") % 10 === 3)
-      val raw = docs.filter(col("doc_id") % 10 =!= 3)
-      val model = graft.functions.Dsir.trainImportance(target, raw, "text")
-      graft.functions.QualityClassifier.writeModel(s, model, s"$fixture/model")
-      graft.functions.Dsir.gumbelTableE4().zipWithIndex
-        .map { case (g, i) => (i.toLong, g) }.toSeq.toDF("i", "g_e4")
-        .coalesce(1).write.mode("overwrite").parquet(s"$fixture/gumbel")
-    }
-  }
-
-  /** q131 selection size and noise salt — shared between the query and
-    * its generated oracle.
-    */
-  private val DsirN = 200
-  private val DsirSalt = "dsir-v1"
-
-  /** Generated DuckDB re-derivation of the q130 KMV cardinality report:
-    * the same md5-60bit hash idiom the minhash oracles use, the k-minima
-    * via a per-group rank, and the exact two-step int64 estimator
-    * ([[graft.functions.Kmv]]'s contract — k interpolates [[KmvK]], one
-    * source of truth). A FULL value oracle on a sketch: every column
-    * including the estimate and its relative error is re-computed.
-    */
-  private def kmvCardinalitySql: String = {
-    val k = KmvK
-    val est = s"CASE WHEN m.n_min < $k THEN m.n_min " +
-      s"ELSE ${k - 1} * ${ExactAgg.Sql.floorDiv("1152921504606846976", "GREATEST(m.kth, 1)")} END"
-    s"""WITH h AS (
-       |  SELECT lang, text,
-       |    CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT) AS h
-       |  FROM documents),
-       |d AS (SELECT lang, h FROM h GROUP BY 1, 2),
-       |r AS (SELECT lang, h,
-       |    row_number() OVER (PARTITION BY lang ORDER BY h) AS rn FROM d),
-       |mins AS (
-       |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_min, MAX(h) AS kth
-       |  FROM r WHERE rn <= $k GROUP BY 1),
-       |ex AS (
-       |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_rows,
-       |    CAST(COUNT(DISTINCT text) AS BIGINT) AS distinct_exact
-       |  FROM documents GROUP BY 1),
-       |rep AS (
-       |  SELECT e.lang, e.n_rows, e.distinct_exact,
-       |    m.n_min AS sketch_n_min,
-       |    CASE WHEN m.n_min < $k THEN 0 ELSE m.kth END AS sketch_kth,
-       |    CAST($est AS BIGINT) AS distinct_est
-       |  FROM ex e JOIN mins m ON e.lang = m.lang)
-       |SELECT lang, n_rows, distinct_exact, sketch_n_min, sketch_kth,
-       |  distinct_est,
-       |  CAST(${ExactAgg.Sql.divHalfUp(
-                 "ABS(distinct_est - distinct_exact) * 1000000",
-                 "GREATEST(distinct_exact, 1)")} AS BIGINT) AS rel_err_e6
-       |FROM rep
-       |ORDER BY lang""".stripMargin
-  }
-
-  /** Generated DuckDB re-derivation of the q129 Gopher repetition
-    * signals: per n (the ranges and gate ceilings interpolate
-    * [[graft.functions.Repetition]]'s constants — one source of truth),
-    * n-gram window counts over the single-space tokens, the per-doc
-    * top / duplicated occupancy and the shared e6 half-up division.
-    * Docs with fewer than two n-gram windows fall out of the per-n CTE
-    * and COALESCE to the 0 the engine also scores.
-    */
-  private def repetitionSignalsSql: String = {
-    import graft.functions.Repetition
-    val pairs = Repetition.TopNs.map(n => (n, s"top${n}_e6", true)) ++
-      Repetition.DupNs.map(n => (n, s"dup${n}_e6", false))
-    def gram(n: Int): String =
-      (0 until n).map(k => s"sp[i + $k]").mkString(" || ' ' || ")
-    val ctes = pairs.map { case (n, _, isTop) =>
-      val agg =
-        if (isTop) "MAX(c)"
-        else "CAST(SUM(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)"
-      s"""cnt$n AS (
-         |  SELECT doc_id, term, COUNT(*) AS c FROM (
-         |    SELECT doc_id, ${gram(n)} AS term FROM (
-         |      SELECT doc_id, unnest(range(1, len(sp) - $n + 2)) AS i, sp
-         |      FROM base WHERE len(sp) - $n + 1 >= 2))
-         |  GROUP BY 1, 2),
-         |sig$n AS (
-         |  SELECT c.doc_id,
-         |    CAST(${ExactAgg.Sql.divHalfUp(s"$agg * 1000000", s"b.nt - $n + 1")} AS BIGINT) AS v
-         |  FROM cnt$n c JOIN base b USING (doc_id)
-         |  GROUP BY c.doc_id, b.nt)""".stripMargin
-    }
-    val selects = pairs.map { case (n, f, _) => s"COALESCE(s$n.v, 0) AS $f" }
-    val gateConds = pairs.zip(Repetition.GateMaxE6).map {
-      case ((n, _, _), m) => s"COALESCE(s$n.v, 0) <= $m"
-    }
-    val joins = pairs
-      .map { case (n, _, _) => s"LEFT JOIN sig$n s$n ON s$n.doc_id = b.doc_id" }
-      .mkString("\n")
-    s"""WITH spt AS (SELECT doc_id, string_split(text, ' ') AS sp FROM documents),
-       |base AS (SELECT doc_id, sp, len(sp) AS nt FROM spt),
-       |${ctes.mkString(",\n")}
-       |SELECT b.doc_id, CAST(b.nt AS BIGINT) AS n_tokens,
-       |  ${selects.mkString(",\n  ")},
-       |  CAST(CASE WHEN ${gateConds.mkString(" AND ")} THEN 1 ELSE 0 END AS BIGINT)
-       |    AS gopher_ok
-       |FROM base b
-       |$joins
-       |ORDER BY b.doc_id""".stripMargin
-  }
-
-  /** Generated DuckDB derivation shared by the q124 decontamination and
-    * q127 calibration oracles: the full shingle-BM25 sweep — bigram
-    * terms from the eval slices, bag-of-shingles query scoring over the
-    * caller-supplied CLEAN population (`cleanSql`, always unioned with
-    * the q124 light-edit injection), the exact-integer length norm and
-    * the per-shingle normalization — through the `normed` CTE
-    * (doc_id, eval_id, score_e6, norm_e6). Only idf_e6 joins from the
-    * persisted eval-index artifact (the q119 discipline). One source of
-    * truth: the two consumers append different tails but can never
-    * disagree on the arithmetic.
-    */
-  private def shingleBm25NormedSql(dir: String, cleanSql: String): String =
-    s"""WITH evals AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id % 20 IN (7, 8)),
-       |train AS (
-       |  $cleanSql
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, 'edited copy ' || text
-       |  FROM documents WHERE doc_id % 20 = 7),
-       |esp AS (SELECT doc_id, string_split(text, ' ') AS sp FROM evals),
-       |eidx AS (SELECT doc_id, unnest(range(1, len(sp))) AS i, sp FROM esp),
-       |etoks AS (SELECT doc_id, sp[i] || ' ' || sp[i + 1] AS term FROM eidx),
-       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM etoks GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM etoks GROUP BY 1),
-       |meta AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-       |kd AS (
-       |  SELECT doc_id,
-       |    CAST(${ExactAgg.Sql.divHalfUp("(3 * l + 9 * dl * n) * 1000000", "10 * l")} AS BIGINT) AS k_e6
-       |  FROM dl CROSS JOIN meta),
-       |idf AS (SELECT term, idf_e6
-       |  FROM read_parquet('${Fixture.path(dir, "bm25_eval")}/idx/terms/*.parquet')),
-       |tsp AS (SELECT doc_id, string_split(text, ' ') AS sp FROM train),
-       |tidx AS (SELECT doc_id, GREATEST(len(sp) - 1, 0) AS n_sh,
-       |    unnest(range(1, len(sp))) AS i, sp FROM tsp),
-       |probes AS (
-       |  SELECT doc_id AS query_id, CAST(n_sh AS BIGINT) AS n_sh,
-       |    sp[i] || ' ' || sp[i + 1] AS term FROM tidx),
-       |scored AS (
-       |  SELECT p.query_id, p.n_sh, tf.doc_id AS eval_id,
-       |    CAST(SUM(CAST(${ExactAgg.Sql.divHalfUp(
-             "i.idf_e6 * 22 * tf.tf * 100000", "tf.tf * 1000000 + kd.k_e6")} AS BIGINT)) AS BIGINT) AS score_e6
-       |  FROM probes p
-       |  JOIN tf ON tf.term = p.term
-       |  JOIN idf i ON i.term = p.term
-       |  JOIN kd ON kd.doc_id = tf.doc_id
-       |  GROUP BY 1, 2, 3),
-       |top1 AS (
-       |  SELECT query_id, n_sh, eval_id, score_e6
-       |  FROM scored
-       |  QUALIFY ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY score_e6 DESC, eval_id) = 1),
-       |normed AS (
-       |  SELECT query_id AS doc_id, eval_id, score_e6,
-       |    CAST(${ExactAgg.Sql.divHalfUp("score_e6", "n_sh")} AS BIGINT) AS norm_e6
-       |  FROM top1)""".stripMargin
-
-  /** Generated DuckDB oracle for the BM25 retrieval gates (q119/q122):
-    * tokenization, tf, dl, the exact-integer length norm, pseudo-query
-    * selection and the rational tf-normalization all re-derived from the
-    * base table; only idf_e6 joins from `termsPath` — the one persisted
-    * transcendental (q101 shared-artifact discipline). Two gates, one
-    * SQL: the q122 variant only swaps in the incremental artifact's
-    * terms table, which is exactly the claim under test.
-    */
-  private def bm25RetrievalOracleSql(termsPath: String): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
-       |meta AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-       |kd AS (
-       |  SELECT doc_id,
-       |    CAST(${ExactAgg.Sql.divHalfUp("(3 * l + 9 * dl * n) * 1000000", "10 * l")} AS BIGINT) AS k_e6
-       |  FROM dl CROSS JOIN meta),
-       |probes AS (
-       |  SELECT doc_id AS query_id, term FROM (
-       |    SELECT doc_id, term,
-       |      ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tf DESC, term) AS r
-       |    FROM tf WHERE doc_id < 8) t
-       |  WHERE r <= 3),
-       |idf AS (SELECT term, idf_e6
-       |  FROM read_parquet('$termsPath/*.parquet')),
-       |scored AS (
-       |  SELECT p.query_id, tf.doc_id,
-       |    CAST(SUM(CAST(${ExactAgg.Sql.divHalfUp(
-               "i.idf_e6 * 22 * tf.tf * 100000", "tf.tf * 1000000 + kd.k_e6")} AS BIGINT)) AS BIGINT) AS score_e6
-       |  FROM probes p
-       |  JOIN tf ON tf.term = p.term
-       |  JOIN idf i ON i.term = p.term
-       |  JOIN kd ON kd.doc_id = tf.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT query_id,
-       |  CAST(ROW_NUMBER() OVER (
-       |    PARTITION BY query_id ORDER BY score_e6 DESC, doc_id) AS INTEGER) AS rank,
-       |  doc_id, score_e6
-       |FROM scored QUALIFY rank <= 10
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Class markers of the q116 multi-class lang-id training corpus: each
-    * doc_id % 3 class gets a distinct function-word suffix (the q109
-    * marker discipline generalized to K classes) so the per-class
-    * centroids have real signal. Interpolated into the generated oracle
-    * SQL — one definition on both sides.
-    */
-  private[graft] val LangIdMarks: Seq[(String, String)] = Seq(
-    "de" -> " der schnelle braune fuchs springt hoch",
-    "en" -> " the quick brown fox jumps high",
-    "fr" -> " le renard brun rapide saute haut")
-
-  /** The labeled corpus the q116 trainer and its scoring pass both read:
-    * class = doc_id % 3 mapped onto the [[LangIdMarks]] order, text =
-    * corpus text + the class marker. */
-  private[graft] def langIdLabeled(docs: DataFrame): DataFrame = {
-    val m = col("doc_id") % 3
-    docs
-      .withColumn("__cls",
-        when(m === 0, LangIdMarks(0)._1)
-          .when(m === 1, LangIdMarks(1)._1)
-          .otherwise(LangIdMarks(2)._1))
-      .withColumn("__ltext", concat(col("text"),
-        when(m === 0, lit(LangIdMarks(0)._2))
-          .when(m === 1, lit(LangIdMarks(1)._2))
-          .otherwise(lit(LangIdMarks(2)._2))))
-  }
-
-  /** Stamped TRAIN of the q116 multi-class lang-id fixture: the
-    * closed-form per-class centroid fit
-    * ([[QualityClassifier.trainCentroidMulti]]) over the labeled corpus,
-    * persisted as one (class, bucket, weight) table and served back
-    * through the argmax path — the q109 train→install→score loop at K
-    * classes. Marker strings are stamp ingredients (round-13 advice).
-    */
-  private[graft] def ensureLangIdModel(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "langid_model")
-    val markers = Integer.toHexString(
-      LangIdMarks.map { case (c, m) => s"$c=$m" }.mkString("|").hashCode)
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"dim=${QualityClassifier.DefaultDim}", s"scale=${QualityClassifier.TrainScale}",
-        s"qc=${QualityClassifier.ModelVersion}", s"marks=$markers", "centroid-multi-v1")) {
-      val models = QualityClassifier.trainCentroidMulti(
-        langIdLabeled(docs), "__ltext", "__cls")
-      QualityClassifier.writeMultiModel(s, models, s"$fixture/model")
-    }
-  }
-
-  /** Stamped train of the q101 bigram-LM fixture ([[LangModel.train]]) —
-    * the model is a pure function of the corpus slice, so the stamp is
-    * the corpus content hash + the scheme version.
-    */
-  private[graft] def ensureLmFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bigram_lm")
-    Fixture.ensure(s, fixture,
-        Fixture.sourceStamp(s, dir, "documents", s"lm=${LangModel.LmVersion}")) {
-      LangModel.train(docs, "text", s"$fixture/model")
-    }
-  }
-
-  /** Stamped build of the q108 INCREMENTAL LM fixture: generation 0
-    * installed from the even docs, generation 1 appended from the
-    * doc_id % 4 == 1 quarter (so a quarter of the corpus stays unseen and
-    * scoring exercises the miss ladders), model refreshed from the
-    * accumulated facts. 6th generational-index family, same protocol.
-    */
-  private[graft] def ensureLmIncFixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "bigram_lm_inc")
-    Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-        s"lm=${LangModel.LmVersion}", "incr-v1")) {
-      LangModel.installCountIndex(
-        docs.filter(col("doc_id") % 2 === 0), "text", s"$fixture/inc")
-      LangModel.appendCounts(
-        docs.filter(col("doc_id") % 4 === 1), s"$fixture/inc", generation = 1L)
-      LangModel.refreshModel(s, s"$fixture/inc")
-    }
-  }
-
-  /** Stamped train of the q110 TRIGRAM fixture — the same artifact family
-    * as q101 at order 3 (CCNet's production filter is order 5; order 3 is
-    * the smallest n that exercises the joined-context path). Pure function
-    * of (corpus slice, order, scheme version).
-    */
-  private[graft] def ensureLm3Fixture(s: SparkSession, dir: String): String = {
-    val docs = Tables.documents(s, dir)
-    val fixture = Fixture.path(dir, "trigram_lm")
-    Fixture.ensure(s, fixture,
-        Fixture.sourceStamp(s, dir, "documents", s"lm=${LangModel.LmVersion}", "n=3")) {
-      LangModel.train(docs, "text", s"$fixture/model", order = 3)
-    }
-  }
-
-  /** Pre-build the expensive write-once index fixtures so a bench run's
-    * pass A times the probe/serve path, not a one-time index build (round-8
-    * advice: q78's first pass carried its 83.6 s fixture build). All builds
-    * are stamped, so this is a cheap fingerprint probe whenever the fixture
-    * already matches the current corpus slice. The lake fixtures (q47/q61/
-    * q65/q71/q72) are NOT pre-built: their builds are sub-5 s and their
-    * stamps amortize identically without warmup help.
-    */
-  private[graft] def prebuildFixtures(s: SparkSession, dir: String): Unit = {
-    ensureFpIndexFixture(s, dir)
-    ensureBpeFixture(s, dir)
-    ensureQualityModel(s, dir)
-    ensureTrainedQualityModel(s, dir)
-    ensureLmFixture(s, dir)
-    ensureLmIncFixture(s, dir)
-    ensureLm3Fixture(s, dir)
-    ensureBandIndexFixture(s, dir)
-    ensureEvalIndexFixture(s, dir)
-    ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
-      Fixture.path(dir, "ivf_index"), k = IvfCells, iters = IvfIters)
-    ensureAppendedIvfIndex(s, dir)
-    ensureIvfPqIndex(s, dir)
-    Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
-    ensureBm25BucketedPostings(s, dir)
-    ensureBm25EvalIndex(s, dir)
-  }
-
-  // Exact-arithmetic aggregate helpers (why-docs in graft.functions.ExactAgg:
-  // integer cents/e4/e6 sums and an integer half-up mean, mirrored verbatim
-  // in the oracle SQL so no DECIMAL rendering or float rounding ever crosses
-  // the engine boundary — round 1's only gate failures were DECIMAL output
-  // columns hashing differently in the driver's oracle environment).
-  private def avgExact2dp(c: org.apache.spark.sql.Column) = ExactAgg.avgExact2dp(c)
-  private def avgExactLong(c: org.apache.spark.sql.Column) = ExactAgg.avgExactLong(c)
-  private def cents(c: org.apache.spark.sql.Column) = ExactAgg.cents(c)
+  private[graft] lazy val registry: Seq[Query] = Query.assemble(
+    RelationalQueries.records, TextQueries.records, DedupQueries.records,
+    VectorQueries.records, TokenizerQueries.records, LakeQueries.records)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -897,2856 +37,8 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core: scan → filter → agg (TPC-H Q1 shape; A1/A2/P6) ----
-    // Money sums are emitted as exact BIGINT fixed-point units (cents / e4 /
-    // e6) built from integer cents per factor — ep·(1−d) ≡ ep_c·(100−d_c) —
-    // so the cross-engine contract is pure int64 with no DECIMAL rendering.
-    // Envelope: charge_e6 ≤ ~5e10/row keeps an int64 sum safe to ~10⁸ rows
-    // per group; beyond that emit e4 units or pre-aggregate per date.
-    "q01_pricing_summary" -> { (s, dir) =>
-      val epc = cents(col("l_extendedprice"))
-      val dc = cents(col("l_discount"))
-      val tc = cents(col("l_tax"))
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(cents(col("l_quantity"))).as("sum_qty_c"),
-          sum(epc).as("sum_base_price_c"),
-          sum(epc * (lit(100) - dc)).as("sum_disc_price_e4"),
-          sum(epc * (lit(100) - dc) * (lit(100) + tc)).as("sum_charge_e6"),
-          avgExact2dp(col("l_quantity")).as("avg_qty"),
-          avgExact2dp(col("l_extendedprice")).as("avg_price"),
-          avgExact2dp(col("l_discount")).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-    // ---- join + agg + top-k (SURVEY §2.7 capability extension) ----
-    "q02_top_customers" -> { (s, dir) =>
-      val l = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy("c_custkey", "c_name")
-        .agg(sum(cents(col("l_extendedprice")) * (lit(100) - cents(col("l_discount"))))
-          .as("revenue_e4"))
-        .orderBy(col("revenue_e4").desc, col("c_custkey"))
-        .limit(10)
-    },
-    // ---- broadcast dimension join (SURVEY §2.7; explicitly broadcast) ----
-    "q03_brand_stats" -> { (s, dir) =>
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(
-          count(lit(1)).as("cnt"),
-          avgExact2dp(col("l_extendedprice")).as("avg_price"),
-          sum(cents(col("l_quantity"))).as("sum_qty_c"))
-        .orderBy("p_brand")
-    },
-    // ---- multi-hop dimension join chain ----
-    "q04_region_revenue" -> { (s, dir) =>
-      Tables.region(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .join(Tables.customer(s, dir), col("c_nationkey") === col("n_nationkey"))
-        .join(Tables.orders(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy("r_name")
-        .agg(
-          count(lit(1)).as("cnt"),
-          sum(cents(col("o_totalprice"))).as("revenue_c"))
-        .orderBy("r_name")
-    },
-    // ---- pushdown-friendly filter + global agg (TPC-H Q6 shape; P2/M5) ----
-    "q05_revenue_filter" -> { (s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(
-          col("l_shipdate") >= lit("1997-01-01") && col("l_shipdate") < lit("1998-01-01") &&
-            col("l_discount") >= 0.05 && col("l_discount") <= 0.07 && col("l_quantity") < 24)
-        .agg(sum(cents(col("l_extendedprice")) * cents(col("l_discount")))
-          .as("revenue_e4"))
-    },
-    // ---- ranking window function: top-N per group ----
-    "q06_top_parts_per_brand" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("p_brand").orderBy(col("p_retailprice").desc, col("p_partkey"))
-      Tables.part(s, dir)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select("p_brand", "p_partkey", "p_retailprice", "rank")
-        .orderBy("p_brand", "rank")
-    },
-    // ---- unionByName of partially-overlapping sources (producer merge, §2.10) ----
-    "q07_union_kinds" -> { (s, dir) =>
-      val c = Tables.customer(s, dir)
-        .select(col("c_name").as("name"), col("c_acctbal").as("acctbal"), lit("customer").as("kind"))
-      val sup = Tables.supplier(s, dir)
-        .select(col("s_name").as("name"), col("s_acctbal").as("acctbal"), lit("supplier").as("kind"))
-      c.unionByName(sup)
-        .groupBy("kind")
-        .agg(
-          count(lit(1)).as("cnt"),
-          avgExact2dp(col("acctbal")).as("avg_bal"),
-          min(col("acctbal")).as("min_bal"),
-          max(col("acctbal")).as("max_bal"))
-        .orderBy("kind")
-    },
-    // ---- deterministic keyed dedup (P3, latest-wins) ----
-    "q08_latest_order_per_customer" -> { (s, dir) =>
-      Cleaning.dedupByKey(
-          Tables.orders(s, dir),
-          Seq("o_custkey"),
-          Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-        .select(
-          col("o_custkey"),
-          col("o_orderkey"),
-          col("o_totalprice"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
-        .orderBy("o_custkey")
-    },
-    // ---- global-mean imputation (A8, deterministic) ----
-    "q09_impute_global_mean" -> { (s, dir) =>
-      // same plan shape as Features.imputeWithGlobalMean (1-row agg broadcast),
-      // but the mean is an exact decimal sum / count so the oracle's double
-      // is bit-identical (avg() would drift with partition order)
-      val e = Tables.events(s, dir).withColumn("v", when(col("value") >= 10, col("value")))
-      val mean = e.agg(avgExact2dp(col("v")).as("__mean"))
-      e.crossJoin(broadcast(mean))
-        .select(col("event_id"), round(coalesce(col("v"), col("__mean")), 4).as("value_filled"))
-        .orderBy("event_id")
-    },
-    // ---- reference-parity enrichment pipeline (S4/P2/F5/F7/F8/M4/M5/M6/M8/D4) ----
-    "q10_events_enrich" -> { (s, dir) =>
-      // The one map-heavy events consumer (JSON decode + regex taxonomy +
-      // calendar extracts per row, no aggregation): fan the single-row-group
-      // events scan out before the enrich projection (guide §2.5). The
-      // agg-bound events consumers (q11-q14…) measured WORSE under fan-out
-      // (r17) and keep the pipelined single-task scan — this is per-query
-      // opt-in, exactly like documentsHeavy.
-      EventsPipeline.enrich(
-          Tables.fanOutIfTiny(s, Tables.events(s, dir), s"$dir/events.parquet"))
-        .select(
-          col("event_id"), col("event_type_clean"), col("category"), col("value_tier"),
-          col("region"), col("dow"), col("month"), col("quarter"), col("k"),
-          round(col("score"), 4).as("score"), col("is_high_value"), col("doc_id"))
-        .orderBy("event_id")
-    },
-    // ---- dimension stats with conditional sum (A2) ----
-    "q11_type_stats" -> { (s, dir) =>
-      BatchAggregates.dimensionStats(
-          EventsPipeline.enrich(Tables.events(s, dir)),
-          Seq("event_type_clean"), "value", col("k") % 2 === 0)
-        .orderBy("event_type_clean")
-    },
-    // ---- temporal stats (A6/D4) ----
-    "q12_temporal_stats" -> { (s, dir) =>
-      BatchAggregates.temporalStats(
-          EventsPipeline.enrich(Tables.events(s, dir)), "dow", "month", "value")
-        .orderBy("dow", "month")
-    },
-    // ---- exact percentiles per category (A4) ----
-    "q13_category_percentiles" -> { (s, dir) =>
-      BatchAggregates.percentileStats(
-          EventsPipeline.enrich(Tables.events(s, dir)), Seq("category"), "value")
-        .orderBy("category")
-    },
-    // ---- tumbling-window stats, batch-parity of W4 ----
-    "q14_hourly_type_stats" -> { (s, dir) =>
-      StreamingAggs.tumblingStats(Tables.events(s, dir), "ts", "1 hour", Seq("event_type"), "value")
-        .orderBy("window_start", "event_type")
-    },
-    // ---- sliding-window counts, batch-parity of W3 ----
-    "q15_sliding_type_counts" -> { (s, dir) =>
-      StreamingAggs.slidingCounts(Tables.events(s, dir), "ts", "1 hour", "30 minutes", Seq("event_type"))
-        .orderBy("window_start", "event_type")
-    },
-    // ---- per-source rollup (§4.1.4 source_stats, declared but never built) ----
-    "q16_source_stats" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy("source")
-        .agg(
-          count(lit(1)).as("cnt"),
-          sum(col("n_chars")).as("sum_chars"),
-          avgExactLong(col("n_chars")).as("avg_chars"))
-        .orderBy("source")
-    },
-    // ---- LLM-pipeline: exact dedup groups ----
-    "q20_dedup_exact" -> { (s, dir) =>
-      Dedup.exactGroups(Tables.documents(s, dir)).orderBy("fp")
-    },
-    // ---- LLM-pipeline: per-document quality scoring ----
-    "q21_text_quality" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          Text.tokenCount(col("text")).cast("long").as("n_tokens"),
-          round(Text.avgTokenLen(col("text")), 4).as("avg_token_len"),
-          round(Text.stopwordRatio(col("text")), 4).as("stopword_ratio"),
-          Text.qualityBucket(col("text")).as("quality"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: language rollup ----
-    "q22_lang_stats" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy("lang")
-        .agg(
-          count(lit(1)).as("cnt"),
-          sum(col("n_chars")).as("sum_chars"),
-          avgExactLong(Text.tokenCount(col("text")).cast("long")).as("avg_tokens"))
-        .orderBy("lang")
-    },
-    // ---- LLM-pipeline: corpus token frequencies (explode + top-k) ----
-    "q23_token_freq" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .select(explode(Text.tokens(col("text"))).as("token"))
-        .groupBy("token")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("token"))
-        .limit(20)
-    },
-    // ---- LLM-pipeline: marker-evidence language ID ----
-    "q24_lang_id" -> { (s, dir) =>
-      val markers = Map(
-        "en" -> Seq("the", "a", "of", "is"),
-        "es" -> Seq("el", "la", "de", "que"),
-        "de" -> Seq("der", "die", "und", "ist"))
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Text.langIdScore(col("text"), markers).as("predicted_lang"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: pairwise token-set Jaccard (verification metric) ----
-    "q25_jaccard_pairs" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      val a = d.select(col("doc_id").as("a_id"), col("text").as("a_text"))
-      val b = d.select(col("doc_id").as("b_id"), col("text").as("b_text"))
-      a.join(b, col("b_id") === col("a_id") + 1)
-        .select(col("a_id"), col("b_id"),
-          round(Dedup.jaccardTokens(col("a_text"), col("b_text")), 4).as("jaccard"))
-        .orderBy("a_id")
-    },
-    // ---- LLM-pipeline: MinHash/LSH near-dup candidates (oracled via generated SQL) ----
-    "q26_minhash_pairs" -> { (s, dir) =>
-      // all-pairs ORACLE GATE (q57/q78 are the O(batch) production
-      // siblings — standing adjudication); gates on a deterministic
-      // half-slice: the full 64-hash/4-band pipeline is exercised
-      // identically, at half the signature cost and a quarter of the
-      // band-collision candidates (round-11 verdict #9)
-      // Fan the filtered half-corpus out before the signature bank (the
-      // same per-row-heavy class as q48/q53's documentsHeavy, r18): filter
-      // FIRST so the round-robin exchange moves only the gated half.
-      Dedup.minhashCandidates(
-        Tables.fanOutIfTiny(s,
-          Tables.documents(s, dir).filter(col("doc_id") % 2 === 0),
-          s"$dir/documents.parquet"))
-        .orderBy("a_id", "b_id")
-    },
-    // ---- LLM-pipeline: SimHash fingerprints (native per-row expression) ----
-    "q27_simhash" -> { (s, dir) =>
-      Dedup.simhashSignatures(Tables.documents(s, dir), "text", "doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: brute-force cosine top-k ANN baseline ----
-    "q28_embedding_knn" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), 5)
-        .orderBy("query_id", "rank")
-    },
-    // ---- LLM-pipeline: int8-quantized ANN (the 4x-memory scale path).
-    // Value-oracled exactly: quantized components come from identical IEEE
-    // floor(x/maxabs*127+0.5) ops in both engines, and the quantized
-    // cosine's dot/norm sums are integers < 2^53 (exact in any order),
-    // leaving one sqrt+division on identical doubles ----
-    "q63_int8_ann" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.int8TopK(emb, emb.filter(col("vec_id") < 10), 5)
-        .orderBy("query_id", "rank")
-    },
-    // ---- LLM-pipeline: the 100 TB ANN COMPOSITION — trained-centroid IVF
-    // (q62's spherical k-means) over int8-quantized inverted lists (q63's
-    // quantizer), nProbe cell pruning, integer-exact Int8Cosine ranking.
-    // Result rows depend on the trained model (float-ulp partition-order
-    // sensitive), so like q39/q62 the gate is an ENVELOPE: n_queries is
-    // exact; results_ok asserts every query returns exactly k rows ranked
-    // 1..k; recall_ok asserts recall@10 vs the in-query float brute-force
-    // baseline clears 0.60 — an empirical floor with wide margin (measured
-    // 0.86-0.95 across sf0.001/0.01/0.1 at nCells=16, nProbe=4; the floor
-    // is the sketch-style contract being asserted, a collapsed/broken
-    // index scores ~nProbe/nCells ≈ 0.25). Flags are int64 0/1 coalesced
-    // to 0 so degenerate cases fail loudly. The benched body deliberately
-    // includes training AND the exact baseline (the correctness gate);
-    // q66 times the production shape without the baseline baggage ----
-    "q64_ivf_int8_ann" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val queries = emb.filter(col("vec_id") < 10)
-      val cents = Similarity.kmeansCentroids(emb, k = IvfCells, iters = IvfIters)
-      // persisted like q53's shared prefix: the approx result feeds BOTH
-      // the recall join and the shape flags below — without the persist
-      // the whole IVF pipeline (corpus assignment + quantization included)
-      // executes twice. Narrow rows (4 columns, nQueries×k of them); the
-      // bench clears caches between queries.
-      val approx = Similarity.ivfInt8TopK(emb, queries, cents, nProbe = 4, k = k)
-        .persist()
-      val exact = Similarity.bruteForceTopK(emb, queries, k)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = approx
-        .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("__hits"))
-      approx
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === k && max(col("__n")) === k &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === k).cast("long"),
-            lit(0L)).as("results_ok"))
-        .crossJoin(hits)
-        .select(
-          col("n_queries"),
-          col("results_ok"),
-          coalesce(
-            (col("__hits") * 10000L >= col("n_queries") * (k * 6000L)).cast("long"),
-            lit(0L)).as("recall_ok"))
-    },
-    // ---- the SERVING half of the IVF story: the q64/q66 index persisted
-    // once (cell_id-partitioned int8 lists + centroid model, stamped
-    // write-once like q61/q65), then queried — the probed cells become an
-    // isin PARTITION predicate, so the scan physically reads only
-    // nQueries×nProbe of the nCells directories (plan-asserted). This is
-    // what amortizes training at 100 TB: q64/q66 pay train+quantize every
-    // run; a production corpus pays it once and serves from here ----
-    "q67_ivf_index_serve" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val fixture = Fixture.path(dir, "ivf_index")
-      ensureIvfIndex(emb, Fixture.sourceStamp(s, dir, "embeddings"), fixture,
-        k = IvfCells, iters = IvfIters)
-      Similarity.queryIvfIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = 5)
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === 5 && max(col("__n")) === 5 &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === 5).cast("long"),
-            lit(0L)).as("results_ok"))
-    },
-    // ---- the GROWTH half of the persisted-index story (q67 serves a
-    // static index; a real corpus grows): the index is built over 90% of
-    // the corpus with centroids trained on that base, then the remaining
-    // 10% is APPENDED — assigned to the persisted model, quantized, written
-    // into the existing cell partitions, no retrain, history lists never
-    // rewritten. The gate flag is the operator's defining equivalence,
-    // computed in-engine: serving the appended index must be ROW-IDENTICAL
-    // to the in-memory composition over the full corpus under the index's
-    // own centroids (assignment + int8 scores + vec_id tiebreaks are all
-    // deterministic given the model, so any divergence = a real append
-    // defect, not noise) ----
-    "q70_ivf_index_append" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val fixture = ensureAppendedIvfIndex(s, dir)
-      val queries = emb.filter(col("vec_id") < 3)
-      val served = Similarity.queryIvfIndex(s, fixture, queries, nProbe = 3, k = 5)
-        .select(col("query_id"), col("rank"),
-          col("neighbor_id").as("s_nid"), col("sim").as("s_sim"))
-      val rebuilt = Similarity.ivfInt8TopK(
-          emb, queries, Similarity.readIvfCentroids(s, fixture), nProbe = 3, k = 5)
-        .select(col("query_id"), col("rank"),
-          col("neighbor_id").as("r_nid"), col("sim").as("r_sim"))
-      val diff = served.join(rebuilt, Seq("query_id", "rank"), "full_outer")
-        .agg(coalesce(sum(
-          when(col("s_nid").isNull || col("r_nid").isNull ||
-            col("s_nid") =!= col("r_nid") || col("s_sim") =!= col("r_sim"), 1L)
-            .otherwise(0L)), lit(0L)).as("__mismatches"))
-      served
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === 5 && max(col("__n")) === 5 &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === 5).cast("long"),
-            lit(0L)).as("results_ok"))
-        .crossJoin(diff)
-        .select(
-          col("n_queries"),
-          col("results_ok"),
-          coalesce((col("__mismatches") === 0L).cast("long"), lit(0L)).as("append_match"))
-    },
-    // ---- the MONITORING half of the frozen-centroid story (q70 grows the
-    // index against centroids trained once; nothing previously measured
-    // what freezing costs): per-cell SKEW telemetry over the same grown
-    // fixture q70 serves — a drifting corpus concentrates appends into few
-    // cells, pushing probe cost toward O(corpus) — plus a sampled RECALL
-    // re-gate of the served index against an exhaustive int8 ranking over
-    // the index's own vectors (all cells, no probe pruning). The skew
-    // stats are exact int64s the oracle recomputes independently from the
-    // index FILES (hive-partitioned read — the q47 fixture-read contract);
-    // recall is deterministic-but-engine-internal and gates as an envelope
-    // flag with q64's 0.60 floor. When the monitor trips, the repair is
-    // Similarity.migrateIvfIndex (build-alongside + two-rename swap;
-    // SimilaritySpec proves serve-equivalence and the crash window) ----
-    "q79_ivf_index_health" -> { (s, dir) =>
-      val fixture = ensureAppendedIvfIndex(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val sizes = Tables.parquetScan(s, s"$fixture/lists")
-        .select(col("cell_id"), col("vec_id")).distinct()
-        .groupBy("cell_id").agg(count(lit(1)).as("n"))
-      val stats = sizes.agg(
-          count(lit(1)).as("n_cells"),
-          sum(col("n")).as("n_vecs"),
-          max(col("n")).as("max_list"),
-          min(col("n")).as("min_list"))
-        .select(
-          col("n_cells"), col("n_vecs"), col("max_list"), col("min_list"),
-          ExactAgg.divHalfUp(col("max_list") * 100 * col("n_cells"), col("n_vecs"))
-            .as("skew_e2"),
-          coalesce((col("max_list") * col("n_cells") <= col("n_vecs") * 10).cast("long"),
-            lit(0L)).as("skew_ok"))
-      val recall = Similarity.ivfIndexRecall(
-          s, fixture, emb.filter(col("vec_id") < 8), nProbe = 4, k = k)
-        .agg(coalesce(sum(col("hits")), lit(0L)).as("__hits"), count(lit(1)).as("__nq"))
-        .select(coalesce(
-          (col("__hits") * 100 >= col("__nq") * k * 60).cast("long"), lit(0L)).as("recall_ok"))
-      stats.crossJoin(recall)
-    },
-    // ---- the full ingest COMPOSITION (IngestPipeline): q69's fingerprint
-    // index + the versioned doc lake + the applied-batch manifest run as ONE
-    // crash-safe exactly-once transaction per micro-batch. Three batches
-    // carrying quality rejects, intra-batch duplicates, cross-batch
-    // duplicates AND a replayed already-committed batch are ingested; the
-    // output is the terminal lake itself — (doc_id, ingest_batch) — derived
-    // independently in DuckDB from the SOURCE table, so acceptance, dedup
-    // precedence (first batch wins, min id within a batch), replay-safety
-    // and partition placement are all inside the hash gate ----
-    "q73_incremental_ingest" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      def slice(rem: Int) =
-        docs.filter(col("doc_id") % 3 === rem).select("doc_id", "text")
-      val b0 = slice(0)
-      val b1 = slice(1).unionByName(docs.filter(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))) // b0 content replayed
-      val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("text"))) // b1 content replayed
-      // the root carries the manifest high-water mark, so a stale fixture
-      // must be wiped, not overwritten (Fixture.ensure deletes it) — a
-      // leftover manifest would gate the rebuild's batches out as "already
-      // applied"
-      val fixture = Fixture.path(dir, "ingest_root")
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-          Dedup.FingerprintIndexVersion, "ingest-v1")) {
-        val paths = IngestPipeline.IngestPaths(fixture)
-        IngestPipeline.ingestBatch(s, paths, b0, 0L)
-        IngestPipeline.ingestBatch(s, paths, b1, 1L)
-        IngestPipeline.ingestBatch(s, paths, b1, 1L) // committed replay: must no-op
-        IngestPipeline.ingestBatch(s, paths, b2, 2L)
-      }
-      Tables.parquetScan(s, s"$fixture/doc_lake")
-        .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
-        .orderBy("doc_id")
-    },
-    // ---- q73's lake-maintenance half: the same three-batch ingest, then
-    // compactCommitted(upTo=1) folds the first two __ver partitions into
-    // one via the intent-logged two-rename protocol (one partition per
-    // micro-batch is ~525k partitions/year at a per-minute cadence — the
-    // fold is what keeps the versioned lake scannable). The output exposes
-    // the COARSENED provenance (batches 0-1 now report ingest_batch=1), so
-    // the hash gate checks content preservation AND that exactly the
-    // committed range was folded ----
-    "q74_ingest_compaction" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      def slice(rem: Int) =
-        docs.filter(col("doc_id") % 3 === rem).select("doc_id", "text")
-      val b0 = slice(0)
-      val b1 = slice(1).unionByName(docs.filter(col("doc_id") % 15 === 0)
-        .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      val b2 = slice(2).unionByName(docs.filter(col("doc_id") % 15 === 1)
-        .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
-      val fixture = Fixture.path(dir, "ingest_root_c")
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "documents",
-          Dedup.FingerprintIndexVersion, "ingest-compact-v1")) {
-        val paths = IngestPipeline.IngestPaths(fixture)
-        IngestPipeline.ingestBatch(s, paths, b0, 0L)
-        IngestPipeline.ingestBatch(s, paths, b1, 1L)
-        IngestPipeline.compactCommitted(s, paths, 1L)
-        IngestPipeline.ingestBatch(s, paths, b2, 2L)
-      }
-      Tables.parquetScan(s, s"$fixture/doc_lake")
-        .select(col("doc_id"), col("__ver").cast("long").as("ingest_batch"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: token budgeting — whitespace words vs BPE-ish
-    // pre-tokenizer pieces (Text.BpeishPattern, the GPT-2-style pre-split)
-    // per document, with the pieces-per-word ratio in exact basis points.
-    // The pattern is ONE shared constant interpolated into the oracle SQL,
-    // and both engines segment with leftmost-first alternation, so the
-    // counts are value-exact cross-engine ----
-    "q68_token_budget" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .select(
-          col("doc_id"),
-          Text.tokenCount(col("text")).cast("long").as("n_words"),
-          Text.bpeishCount(col("text")).cast("long").as("n_pieces"))
-        .withColumn("pieces_per_word_e4",
-          ExactAgg.divHalfUp(col("n_pieces") * 10000, col("n_words")))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: sequence packing — concatenate documents into a
-    // token stream and slice it into 2048-token context windows (GPT-style
-    // packing; docs straddle boundaries, nothing padded or dropped). The
-    // stream is SHARDED (doc_id % 8) so each shard packs independently —
-    // a single global running sum would serialize the corpus through one
-    // window partition; the only exchange moves narrow (doc_id, n_tokens)
-    // rows. Budget is a power of two, so the floor-division window ids are
-    // exact in both engines' arithmetic ----
-    "q75_sequence_packing" -> { (s, dir) =>
-      Packing.packSequences(Tables.documents(s, dir), "text", "doc_id",
-        budget = 2048, shards = 8)
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: structural PII redaction with typed placeholders
-    // and per-type audit counts. The synthetic corpus carries no PII, so
-    // known-positive rows are INJECTED deterministically from doc_id —
-    // identically in both engines (string concat of the same integers) —
-    // giving every pattern positive AND negative rows. The three patterns
-    // are the SAME shared constants in the Spark expression and the oracle
-    // SQL (the q68 regex contract); the full redacted text is an output
-    // column, so a wrong replacement cannot hash-pass ----
-    "q76_pii_redaction" -> { (s, dir) =>
-      val d = col("doc_id")
-      val injected = concat(col("text"),
-        when(d % 4 === 0,
-          concat(lit(" contact user"), d.cast("string"), lit("@mail.example.com")))
-          .when(d % 4 === 1,
-            concat(lit(" call 415-555-"),
-              lpad((d % 10000).cast("string"), 4, "0")))
-          .when(d % 4 === 2,
-            concat(lit(" from 10."), (d % 256).cast("string"), lit(".0."),
-              ((d * 7) % 256).cast("string"),
-              lit(" or user"), d.cast("string"), lit("@mail.example.com")))
-          // adversarial arm (round-7 advice): the bounded-octet pattern
-          // must NOT match any substring of 999.999.999.999, and must
-          // match the range-valid quad EMBEDDED in v1.2.3.4 (the
-          // documented no-lookaround residual) — n_ips = 1 for these rows
-          .otherwise(lit(" version v1.2.3.4 build 999.999.999.999")))
-      Tables.documentsHeavy(s, dir)
-        .select(col("doc_id"), injected.as("__t"))
-        .select(
-          col("doc_id"),
-          regexp_count(col("__t"), lit(Text.PiiEmailPattern)).cast("long").as("n_emails"),
-          regexp_count(col("__t"), lit(Text.PiiPhonePattern)).cast("long").as("n_phones"),
-          regexp_count(col("__t"), lit(Text.PiiIpv4Pattern)).cast("long").as("n_ips"),
-          Text.redactPii(col("__t")).as("redacted"))
-        .withColumn("red_len", length(col("redacted")).cast("long"))
-        .orderBy("doc_id")
-    },
-    // ---- co-located bucketed fact join: the PLANS.md "Joins" 100 TB path
-    // made executable. Orders and customer are bucketed+sorted on custkey
-    // at LAYOUT time (Bucketing.ensureCustomerOrders — once per session,
-    // the catalog carries the metadata), so the join itself needs no
-    // exchange of either side — asserted with broadcast disabled in
-    // PlanAuditSpec; this entry carries the value oracle. Revenue in exact
-    // cents ----
-    "q77_bucketed_join" -> { (s, dir) =>
-      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
-      s.table(o).join(s.table(c), col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          sum(cents(col("o_totalprice"))).as("revenue_c"))
-        .orderBy("c_mktsegment")
-    },
-    // ---- the SECOND consumer of q77's bucketed layout — the amortization
-    // made executable: the layout is paid once per ingest and every
-    // subsequent custkey join rides it exchange-free, so a DIFFERENT
-    // query over the same two catalog tables (per-priority stats instead
-    // of per-segment revenue) must plan the same zero-Exchange
-    // SortMergeJoin and build nothing (ensureCustomerOrders is a catalog
-    // hit; `BucketedJoinSpec` asserts the files are untouched) ----
-    "q80_bucketed_reuse" -> { (s, dir) =>
-      val (o, c) = Bucketing.ensureCustomerOrders(s, dir, s"${Fixture.root}/bucketed")
-      s.table(o).join(s.table(c), col("o_custkey") === col("c_custkey"))
-        .groupBy("o_orderpriority")
-        .agg(
-          count(lit(1)).as("n_orders"),
-          countDistinct(col("c_custkey")).as("n_customers"),
-          sum(cents(col("c_acctbal"))).as("acctbal_c"))
-        .orderBy("o_orderpriority")
-    },
-    // ---- q64's PRODUCTION sibling (the q39→q60 pattern): the same
-    // trained-IVF × int8 composition WITHOUT the exact brute-force recall
-    // baseline q64 carries to be gate-able — this is the shape a 100 TB
-    // similarity-search run actually executes, so the bench times it
-    // separately. Envelope: exact n_queries + the k-rows-ranked-1..k flag ----
-    "q66_ivf_int8_production" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val queries = emb.filter(col("vec_id") < 10)
-      val cents = Similarity.kmeansCentroids(emb, k = IvfCells, iters = IvfIters)
-      Similarity.ivfInt8TopK(emb, queries, cents, nProbe = 4, k = k)
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === k && max(col("__n")) === k &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === k).cast("long"),
-            lit(0L)).as("results_ok"))
-    },
-    // ---- LLM-pipeline: LSH-bucketed ANN pairs (scale path; oracled via generated SQL) ----
-    "q29_lsh_ann_pairs" -> { (s, dir) =>
-      Similarity.lshCandidatePairs(Tables.embeddings(s, dir), dims = 64, nBits = 12, seed = 7L)
-        .orderBy("a_id", "b_id")
-    },
-    // ---- LLM-pipeline: embedding norm stats per label. Each norm is
-    // floored to integer 1e-6 units (floor of an identical double is
-    // cross-engine-unambiguous, unlike round) and averaged in exact
-    // integer arithmetic, so no float accumulation order or rounding
-    // tie can flip the result ----
-    "q30_embedding_norms" -> { (s, dir) =>
-      Tables.embeddings(s, dir)
-        .withColumn("__ne6", floor(Similarity.norm(col("embedding")) * 1000000.0))
-        .groupBy("label")
-        .agg(
-          count(lit(1)).as("cnt"),
-          (ExactAgg.divHalfUp(sum(col("__ne6")), count(col("__ne6")) * 100) / 10000.0)
-            .as("avg_norm"))
-        .orderBy("label")
-    },
-    // ---- two-source normalization + unionByName merge (§2.10, F1/F2/F3, S8) ----
-    "q17_source_normalize" -> { (s, dir) =>
-      val a = Tables.orders(s, dir)
-        .select(
-          col("o_orderkey").cast("string").as("rec_id"),
-          concat(lit("$"), col("o_totalprice").cast("decimal(12,2)").cast("string"), lit(" USD")).as("pay_raw"),
-          concat(col("o_orderpriority"), lit(", "), col("o_orderstatus")).as("loc"),
-          lit("linkedin").as("src"))
-        .select(
-          col("rec_id"),
-          ops.ValueOps.parseMoney(col("pay_raw")).as("pay_usd"),
-          trim(split(col("loc"), ",")(0)).as("city"),
-          trim(split(col("loc"), ",")(1)).as("state"),
-          col("src"))
-      val b = Tables.customer(s, dir)
-        .select(
-          col("c_custkey").cast("string").as("rec_id"),
-          col("c_acctbal").as("pay_usd"),
-          col("c_mktsegment").as("city"),
-          lit("adzuna").as("src"))
-      a.unionByName(b, allowMissingColumns = true)
-        .groupBy("src")
-        .agg(
-          count(lit(1)).as("cnt"),
-          avgExact2dp(col("pay_usd")).as("avg_pay"),
-          count(col("state")).as("n_with_state"))
-        .orderBy("src")
-    },
-    // ---- declared-schema JSON decode (S4 from_json path) ----
-    "q18_json_decode" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .select(
-          col("event_id"),
-          from_json(col("props"), "k INT", Map.empty[String, String]).getField("k").as("k_decoded"),
-          length(col("props")).as("props_len"))
-        .orderBy("event_id")
-    },
-    // ---- freshness bucketing vs a report date (D3/D6/D7) ----
-    "q19_freshness" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("days", datediff(lit("2024-03-01").cast("date"), to_date(col("ts"))))
-        .groupBy(ops.Temporal.freshness(col("days")).as("freshness"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("freshness")
-    },
-    // ---- LLM-pipeline: word-trigram frequencies (codegen shingling) ----
-    "q31_trigram_freq" -> { (s, dir) =>
-      Text.explodeNgrams(Tables.documents(s, dir), "text", 3)
-        .groupBy("ng")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("ng"))
-        .limit(20)
-    },
-    // ---- lag window: inter-event gaps per user ----
-    "q32_user_gaps" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id").orderBy("event_id")
-      Tables.events(s, dir)
-        .withColumn("sec", unix_timestamp(col("ts")))
-        .withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
-        .groupBy("user_id")
-        .agg(
-          count(lit(1)).as("cnt"),
-          count(col("gap")).as("n_gaps"),
-          avgExactLong(col("gap")).as("avg_gap_sec"))
-        .orderBy("user_id")
-    },
-    // ---- multi-dimensional rollup: CUBE ----
-    "q33_cube_counts" -> { (s, dir) =>
-      // Pre-aggregate at the cube's finest cell first (guide §2.3, the
-      // q114 move): the cube otherwise Expands 4x the full lineitem
-      // stream through its partial aggregate; rolling up from the
-      // ~6-row (flag, status) pre-aggregate is exact by associativity
-      // (BIGINT counts/cents sums) and type-identical (SUM(BIGINT)).
-      // One zero row (NULL keys, b_cnt 0, NULL sum) joins the
-      // pre-aggregate, so the cube's () set has input even when lineitem
-      // is empty: Spark then returns no row at all, DuckDB the () row with
-      // COUNT(*) = 0. Elsewhere the zero row adds 0 to a count and nothing
-      // to a sum; a group it makes alone has cnt 0 (every real cell counts
-      // >= 1) and is filtered out unless it is the () row (gid 3).
-      val zero = s.range(1).select(
-        lit(null).cast("string").as("l_returnflag"),
-        lit(null).cast("string").as("l_linestatus"),
-        lit(0L).as("b_cnt"), lit(null).cast("long").as("b_sum_qty_c"))
-      Tables.lineitem(s, dir)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          count(lit(1)).as("b_cnt"),
-          sum(cents(col("l_quantity"))).as("b_sum_qty_c"))
-        .unionByName(zero)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("b_cnt")).as("cnt"),
-          sum(col("b_sum_qty_c")).as("sum_qty_c"),
-          grouping_id("l_returnflag", "l_linestatus").as("gid"))
-        .filter(col("cnt") > 0 || col("gid") === 3)
-        .select(
-          coalesce(col("l_returnflag"), lit("ALL")).as("f"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("st"),
-          col("cnt"), col("sum_qty_c"))
-        .orderBy("f", "st")
-    },
-    // ---- anti join: customers with no events ----
-    "q34_inactive_customers" -> { (s, dir) =>
-      val c = Tables.customer(s, dir)
-      val e = Tables.events(s, dir)
-      c.join(e, col("c_custkey") === col("user_id"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("c_mktsegment")
-    },
-    // ---- exact distinct-count aggregate ----
-    "q35_distinct_users" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("users"))
-        .orderBy("event_type")
-    },
-    // ---- as-of join: latest order at-or-before each event (AsOfJoin op) ----
-    "q36_asof_latest_order" -> { (s, dir) =>
-      val ordersDedup = Cleaning.dedupByKey(
-        Tables.orders(s, dir),
-        Seq("o_custkey", "o_orderdate"),
-        Seq(col("o_orderkey").desc))
-      ops.AsOfJoin
-        .asOf(
-          Tables.events(s, dir), ordersDedup,
-          leftKey = "user_id", rightKey = "o_custkey",
-          leftTime = "ts", rightTime = "o_orderdate",
-          payload = Seq("o_orderkey"))
-        .select(col("event_id"), coalesce(col("o_orderkey"), lit(-1L)).as("okey"))
-        .orderBy("event_id")
-    },
-    // ---- multimodal: REAL PNG blobs (ImageIO-encoded, dims keyed by
-    // media_id) -> per-partition feature extraction with a REAL ImageIO
-    // decode. The output dims come from actually-decoded pixel grids, and
-    // because the encode side keys dims by id, the oracle predicts by
-    // formula exactly what a correct decoder must read back ----
-    "q37_media_features" -> { (s, dir) =>
-      val media = multimodal.Multimodal.synthesizeImages(
-        Tables.documentsHeavy(s, dir), "doc_id")
-      multimodal.Multimodal.extractFeatures(media)
-        .toDF()
-        .select("media_id", "kind", "width", "height", "duration_ms")
-        .orderBy("media_id")
-    },
-    // ---- multimodal: REAL animated-GIF "video" blobs (frame count, dims
-    // and per-frame delay keyed by media_id at encode time) -> REAL
-    // container probe + per-frame pixel decode. Every emitted column is a
-    // decode result the oracle predicts by formula; the pixel checksums
-    // (witnessing the actual raster reads) are spec-verified instead,
-    // since no SQL engine can re-derive them ----
-    "q38_frame_samples" -> { (s, dir) =>
-      val media = multimodal.Multimodal.synthesizeVideos(
-        Tables.documents(s, dir).filter(col("doc_id") < 100), "doc_id")
-      multimodal.Multimodal.sampleFrames(media, 8)
-        .select("media_id", "frame_idx", "n_frames", "width", "height", "duration_ms")
-        .orderBy("media_id", "frame_idx")
-    },
-    // ---- multimodal: REAL WAV blobs (PCM length keyed by media_id at
-    // encode time) -> REAL javax.sound.sampled parse; the decoded duration
-    // must read back the encode-side formula from the container header ----
-    "q58_audio_features" -> { (s, dir) =>
-      val media = multimodal.Multimodal.synthesizeAudio(
-        Tables.documents(s, dir).filter(col("doc_id") < 200), "doc_id")
-      multimodal.Multimodal.extractFeatures(media)
-        .toDF()
-        .select("media_id", "kind", "width", "height", "duration_ms")
-        .orderBy("media_id")
-    },
-    // ---- LLM-pipeline: corpus-global boilerplate filter — a trigram in
-    // more than dfThreshold distinct docs is boilerplate (nav chrome,
-    // license headers); each doc scored by its boilerplate-position
-    // fraction in exact basis points. Shuffles carry 60-bit gram hashes,
-    // never gram text ----
-    "q59_boilerplate_filter" -> { (s, dir) =>
-      Text.boilerplateStats(Tables.documentsHeavy(s, dir), "text", "doc_id",
-          n = 3, dfThreshold = 10L, maxRatioE4 = 5000L)
-        .orderBy("doc_id")
-    },
-    // ---- the reference's FULL job pipeline in the correctness gate:
-    // synthesize raw all-string job records from orders, run
-    // JobNormalize.normalizeLinkedIn + JobPipeline.enrich, emit the
-    // row-level derived columns (every ladder oracle-checked) ----
-    "q45_job_pipeline" -> { (s, dir) =>
-      val raw = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("string").as("job_id"),
-        concat(lit("Company"), (col("o_custkey") % 50).cast("string")).as("company_name"),
-        when(col("o_orderpriority") === "1-URGENT", "Senior Software Engineer")
-          .when(col("o_orderpriority") === "2-HIGH", "Data Analyst")
-          .when(col("o_orderpriority") === "3-MEDIUM", "junior ux designer")
-          .when(col("o_orderpriority") === "4-NOT SPECIFIED", "sales account manager")
-          .otherwise("qa tester").as("title"),
-        lit("d").as("description"),
-        concat(lit("City"), (col("o_orderkey") % 7).cast("string"), lit(", ST")).as("location"),
-        col("o_totalprice").cast("decimal(12,2)").cast("string").as("min_salary"),
-        (col("o_totalprice").cast("decimal(12,2)") + 20000).cast("decimal(14,2)").cast("string").as("max_salary"),
-        when(col("o_custkey") % 4 === 0, "GBP").otherwise("USD").as("currency"),
-        when(col("o_custkey") % 3 === 0, "Full-time")
-          .when(col("o_custkey") % 3 === 1, "part-time")
-          .otherwise("contract work").as("work_type"),
-        lit("wt").as("formatted_work_type"),
-        when(col("o_orderkey") % 5 === 0, "Executive").otherwise("").as("formatted_experience_level"),
-        when(col("o_orderkey") % 2 === 0, "true").otherwise("false").as("remote_allowed"),
-        (unix_timestamp(col("o_orderdate")) * 1000).cast("string").as("listed_time"),
-        (col("o_orderkey") % 300).cast("string").as("views"),
-        (col("o_orderkey") % 20).cast("string").as("applies"))
-      val unified = sources.JobNormalize.normalizeLinkedIn(raw, ingestTs = lit(1.0))
-      pipeline.JobPipeline.enrich(unified, "1998-06-01")
-        .select(
-          col("job_id"), col("company_name_clean"), col("job_category"),
-          col("experience_level_final"), col("work_type_clean"), col("salary_category"),
-          round(col("salary_avg"), 4).as("salary_avg"),
-          round(col("salary_range"), 4).as("salary_range"),
-          col("job_freshness"), col("region"),
-          round(col("competition_score"), 4).as("competition_score"),
-          col("is_high_demand"), col("posted_day_of_week"), col("posted_month"))
-        .orderBy(col("job_id").cast("long"))
-    },
-    // ---- the six-table aggregate fan-out shape on the same pipeline (count-only; A7) ----
-    "q46_salary_distribution" -> { (s, dir) =>
-      val raw = Tables.orders(s, dir).select(
-        col("o_orderkey").cast("string").as("job_id"),
-        concat(lit("Company"), (col("o_custkey") % 50).cast("string")).as("company_name"),
-        when(col("o_orderpriority") === "1-URGENT", "Senior Software Engineer")
-          .when(col("o_orderpriority") === "2-HIGH", "Data Analyst")
-          .when(col("o_orderpriority") === "3-MEDIUM", "junior ux designer")
-          .when(col("o_orderpriority") === "4-NOT SPECIFIED", "sales account manager")
-          .otherwise("qa tester").as("title"),
-        lit("d").as("description"),
-        lit("City, ST").as("location"),
-        col("o_totalprice").cast("decimal(12,2)").cast("string").as("min_salary"),
-        (col("o_totalprice").cast("decimal(12,2)") + 20000).cast("decimal(14,2)").cast("string").as("max_salary"),
-        when(col("o_custkey") % 4 === 0, "GBP").otherwise("USD").as("currency"),
-        lit("Full-time").as("work_type"),
-        lit("wt").as("formatted_work_type"),
-        lit("").as("formatted_experience_level"),
-        lit("false").as("remote_allowed"),
-        (unix_timestamp(col("o_orderdate")) * 1000).cast("string").as("listed_time"),
-        lit("0").as("views"),
-        lit("0").as("applies"))
-      val enriched = pipeline.JobPipeline.enrich(
-        sources.JobNormalize.normalizeLinkedIn(raw, ingestTs = lit(1.0)), "1998-06-01")
-      pipeline.JobPipeline.aggregates(enriched)("salary_distribution")
-        .orderBy("salary_category", "job_category")
-    },
-    // ---- pivot/crosstab: event-type counts by day-of-week ----
-    "q44_pivot_counts" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("dow", ops.Temporal.dayOfWeekSun0(col("ts")))
-        .groupBy("dow")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy("dow")
-    },
-    // ---- LLM-pipeline: IVF ANN (coarse quantize -> probe cells -> re-rank).
-    // Deliberately the VALUE-EXACT flavor: deterministic exemplar centroids
-    // + float cosine make every output row reproducible in the SQL oracle.
-    // The 100 TB flavor — trained centroids + int8 lists — is q64/q66, and
-    // its persisted serving shape is q67; this query pins the IVF
-    // mechanics (probe selection, cell-pruned candidate set, re-rank) by
-    // exact rows where those must gate by envelope ----
-    "q43_ivf_ann" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), nCells = 32, nProbe = 4, k = 5)
-        .orderBy("query_id", "rank")
-    },
-    // ---- sketch aggregates: HLL distinct + approx percentile (mergeable
-    // sketches, the 100 TB path) — with a TESTABLE contract: the sketch VALUES
-    // are engine-internal (HLL register layout, GK quantile summary) and
-    // can never hash-match another engine — but a sketch's actual promise
-    // is bounded error against the exact answer, and THAT is oracle-able.
-    // Emit the exact aggregates (DuckDB-checkable) plus in-engine booleans
-    // asserting each sketch landed inside its documented bound; the oracle
-    // predicts the exact values and `true` for every bound ----
-    "q39_sketch_stats" -> { (s, dir) =>
-      // the GATE carries exact count-distinct/percentile baselines BY
-      // DESIGN (q60 is the production shape); the baselines run on a
-      // deterministic quarter-slice — the sketch-vs-exact assertion is
-      // just as binding there, at a quarter of the exact side's cost
-      // (round-11 verdict #9)
-      Tables.events(s, dir)
-        .filter(col("event_id") % 4 === 0)
-        .groupBy("event_type")
-        .agg(
-          countDistinct(col("user_id")).as("exact_users"),
-          approx_count_distinct(col("user_id")).as("__approx_users"),
-          percentile_approx(col("value"), lit(0.5), lit(10000)).as("__p50_approx"),
-          // ONE exact-percentile aggregate for both band edges — two
-          // separate percentile() calls each build their own value
-          // histogram over the group (measured 2× the aggregate cost)
-          expr("percentile(value, array(0.45, 0.55))").as("__p_band"))
-        .select(
-          col("event_type"),
-          col("exact_users"),
-          // HLL default rsd 0.05; 0.15 is an empirical 3-sigma margin —
-          // a future SF/data change could trip it, by design (that IS the
-          // sketch contract being asserted). Flags are int64 0/1, not
-          // BOOLEAN: the round-1 postmortem showed the driver's hasher
-          // canonicalizing non-int64 output types differently than local
-          // DuckDB, and int64 is the proven-safe envelope. coalesce → 0:
-          // a group whose value column is entirely NULL makes percentile/
-          // percentile_approx (and therefore the flag) NULL — that must
-          // fail LOUDLY as a 0-flag against the oracle's 1, not as a
-          // confusing null-vs-1 type mismatch.
-          coalesce(
-            (abs(col("__approx_users") - col("exact_users"))
-              <= col("exact_users") * 0.15).cast("long"),
-            lit(0L)).as("users_ok"),
-          // the GK sketch's guarantee is on RANK error (<= n/10000 at
-          // accuracy 10000), not value error — a value tolerance would
-          // fail on gap-y distributions where adjacent ranks are far
-          // apart. Assert the rank contract: the approx median must lie
-          // within the exact [p45, p55] band, 500x the sketch's bound.
-          coalesce(
-            col("__p50_approx")
-              .between(col("__p_band").getItem(0), col("__p_band").getItem(1))
-              .cast("long"),
-            lit(0L)).as("p50_ok"))
-        .orderBy("event_type")
-    },
-    // ---- q39's PRODUCTION sibling: the same mergeable sketches WITHOUT
-    // the exact countDistinct/percentile baselines q39 carries to be
-    // oracle-able. q39 is the correctness gate (its flags pin the sketch
-    // error bounds); this is the shape a 100 TB run actually executes, so
-    // the bench times it separately. The flags here are cheap-envelope
-    // sanity checks (count/min/max are mergeable and near-free next to
-    // the HLL and GK sketches they guard), deterministically 1 for any
-    // correct sketch, so the query stays hash-oracle-able without exact
-    // distinct-count or percentile work ----
-    "q60_sketch_production" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_rows"),
-          approx_count_distinct(col("user_id")).as("__approx_users"),
-          percentile_approx(col("value"), lit(0.5), lit(10000)).as("__p50"),
-          min(col("value")).as("__lo"),
-          max(col("value")).as("__hi"))
-        .select(
-          col("event_type"),
-          col("n_rows"),
-          // lower bound (>= 1 when any non-null user exists) is exact for
-          // any correct sketch; the UPPER bound is an envelope, not a hard
-          // invariant — a correct HLL at rsd 0.05 can legitimately estimate
-          // ABOVE the true distinct count, and a near-unique-per-row group
-          // puts the true count at ~n_rows, so `<= n_rows` could flip on a
-          // correct sketch. 1.3 × n_rows is ~6 sigma of headroom.
-          coalesce(
-            (col("__approx_users") >= 1L &&
-              col("__approx_users") <= col("n_rows") * 1.3).cast("long"),
-            lit(0L)).as("users_ok"),
-          coalesce(
-            col("__p50").between(col("__lo"), col("__hi")).cast("long"),
-            lit(0L)).as("p50_ok"))
-        .orderBy("event_type")
-    },
-    // ---- S1 ORC flavor: BASELINE's storage contract says Parquet/ORC —
-    // write an events slice as ORC, read it back with a DECLARED schema
-    // and a predicate (pushed into the ORC scan, plan-asserted), oracled
-    // against the same-data parquet twin: DuckDB cannot read ORC, so
-    // hash-equality to the parquet-backed oracle closes the round-trip ----
-    "q61_orc_lake" -> { (s, dir) =>
-      import org.apache.spark.sql.types._
-      val fixture = Fixture.path(dir, "orc_events")
-      val src = Tables.events(s, dir)
-        .filter(col("event_id") < 2000)
-        .select("event_id", "user_id", "event_type", "value")
-      // write the ORC fixture only when the stamp says the on-disk copy
-      // came from different data, so the timed body is the READ path (write
-      // coverage lives in SourceFormatsSpec's S9 round-trip). The stamp also
-      // records the SLICE DEFINITION (predicate + projected columns +
-      // format) — those live in code, so a data fingerprint alone would keep
-      // serving the old layout after an edit here changed what the fixture
-      // should contain (round-6 #8)
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
-          "slice=event_id<2000;cols=event_id,user_id,event_type,value;fmt=orc")) {
-        src.write.mode("overwrite").format("orc").save(fixture)
-      }
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      s.read.format("orc").schema(schema).load(fixture)
-        .where(col("event_type") === "click" && col("event_id") < 1000)
-        .orderBy("event_id")
-    },
-    // ---- S1 partitioned-lake flavor: the date-partitioned layout a
-    // production lake uses (reference globs partition paths by hand,
-    // bigdata-project/src/spark_batch_v2.py:33 — here the predicate API
-    // prunes via Catalyst PartitionFilters, plan-asserted to exactly one
-    // selected directory). The fixture is the events table re-laid-out as
-    // event_date=YYYY-MM-DD directories (30 of them), stamped write-once
-    // like q61 so the benched body is the pruned READ, not the lake build;
-    // the DuckDB oracle reads the same lake through hive partitioning ----
-    "q65_lake_partition_scan" -> { (s, dir) =>
-      val fixture = Fixture.path(dir, "lake_events")
-      val src = Tables.events(s, dir)
-        .withColumn("event_date", to_date(col("ts")))
-        .select("event_id", "user_id", "event_type", "value", "event_date")
-      // stamp = data fingerprint + the code-resident layout definition
-      // (projection + partition column + format), same rationale as q61's
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
-          "slice=cols=event_id,user_id,event_type,value;part=event_date;fmt=parquet")) {
-        src.write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-      }
-      sinks.Sinks.readLakePartition(s, fixture, "event_date", "2024-01-15")
-        .select("event_id", "user_id", "event_type", "value")
-        .orderBy("event_id")
-    },
-    // ---- lake COMPACTION (the small-file antidote): the fixture is the
-    // events lake deliberately fragmented (repartition(40) before the
-    // partitioned write → 40 small files per date directory — the layout a
-    // streaming trigger leaves after a day of micro-batches, reference's
-    // 50-record flushes at kafka_to_minio.py:63-75). The benched body IS
-    // the operator: compact one date partition into target-sized files
-    // (crash-safe two-rename swap, idempotent on re-run) and read it back.
-    // The oracle recomputes the partition's rows INDEPENDENTLY from the
-    // source events table, q65-style, so equality proves the compaction
-    // preserved content exactly; the file-count + crash-safety claims live
-    // in SinksSpec ----
-    "q71_lake_compaction" -> { (s, dir) =>
-      val fixture = Fixture.path(dir, "frag_lake")
-      val src = Tables.events(s, dir)
-        .withColumn("event_date", to_date(col("ts")))
-        .select("event_id", "user_id", "event_type", "value", "event_date")
-      // scratch-v2: pre-v2 fixtures were compacted IN PLACE by the first
-      // run (the advice finding) — the marker forces one rebuild so the
-      // on-disk fixture is actually 40-file fragmented again
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
-          "slice=cols=event_id,user_id,event_type,value;part=event_date;frag=40", "scratch-v2")) {
-        src.repartition(40)
-          .write.mode("overwrite").partitionBy("event_date").parquet(fixture)
-      }
-      // The timed body compacts a SCRATCH copy of the fragmented partition,
-      // re-made every run (round-7 advice: compacting the stamped fixture
-      // in place defragmented it permanently after the first pass — the
-      // stamp still matched, so every later run timed compacting an
-      // already-compact partition). The copy keeps the fixture's 40-file
-      // pathology the stamp claims, so both bench passes and later
-      // sessions all pay the real small-file work.
-      val scratch = Fixture.path(dir, "frag_lake_scratch")
-      val fsys = graft.functions.IndexProtocol.fileSystem(s, scratch)
-      fsys.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      org.apache.hadoop.fs.FileUtil.copy(
-        fsys, new org.apache.hadoop.fs.Path(s"$fixture/event_date=2024-01-16"),
-        fsys, new org.apache.hadoop.fs.Path(s"$scratch/event_date=2024-01-16"),
-        false, s.sparkContext.hadoopConfiguration)
-      sinks.Sinks.compactLakePartition(
-        s, scratch, "event_date", "2024-01-16", targetRecordsPerFile = 500000L)
-      sinks.Sinks.readLakePartition(s, scratch, "event_date", "2024-01-16")
-        .select("event_id", "user_id", "event_type", "value")
-        .orderBy("event_id")
-    },
-    // ---- SCHEMA-EVOLUTION read (SURVEY §4.1.6, the reference's declared
-    // v1/v2 drift made first-class): generation 1 writes `min_salary` as a
-    // STRING, generation 2 renames it `salary_min` as a DOUBLE and adds a
-    // `source` column. The evolved read surfaces the union of fields
-    // (mergeSchema null-fills gen-1's missing columns) and coalesceEvolved
-    // folds the renamed+retyped family into ONE declared double via
-    // try_cast. Oracled INDEPENDENTLY from the source events table (the
-    // q65/q71 contract: a fixture-build defect fails the gate) — the
-    // string→double round trip is exact in both engines because shortest-
-    // representation double rendering round-trips by construction ----
-    "q72_schema_evolution" -> { (s, dir) =>
-      val fixture = Fixture.path(dir, "evolved_lake")
-      val ev = Tables.events(s, dir)
-      Fixture.ensure(s, fixture, Fixture.sourceStamp(s, dir, "events",
-          "slice=v1:eid%3=0(min_salary:str);v2:eid%3=1(salary_min:dbl,source)")) {
-        ev.filter(col("event_id") % 3 === 0)
-          .select(col("event_id").as("job_id"),
-            col("value").cast("string").as("min_salary"),
-            col("event_type").as("location"))
-          .write.mode("overwrite").parquet(s"$fixture/gen=1")
-        ev.filter(col("event_id") % 3 === 1)
-          .select(col("event_id").as("job_id"),
-            col("value").as("salary_min"),
-            col("event_type").as("location"),
-            lit("v2").as("source"))
-          .write.mode("overwrite").parquet(s"$fixture/gen=2")
-      }
-      val merged = sources.SchemaEvolution.readMergedLake(s, fixture)
-      sources.SchemaEvolution
-        .coalesceEvolved(merged, "salary_usd", "DOUBLE", Seq("salary_min", "min_salary"))
-        .select(
-          col("job_id"),
-          col("salary_usd"),
-          col("location"),
-          coalesce(col("source"), lit("v1")).as("source"))
-        .orderBy("job_id")
-    },
-    // ---- k-means training as a GATED query (previously test-only): train
-    // 3 SPHERICAL Lloyd's iterations, then emit the contract any correct
-    // trainer keeps — every vector lands in a cell of [0, k), and the
-    // trained model's cosine inertia is no worse than the init model's.
-    // Monotonicity is GUARANTEED (not merely empirical): the update step is
-    // the cosine objective's own maximizer (normalized-member mean — see
-    // kmeansCentroids' docstring); 1e-6 relative slack covers float
-    // summation order. Exact centroid values are float-ulp engine-internal
-    // — like q39's sketches, the ORACLE-able part is the envelope. The
-    // benched body deliberately includes the training loop (q62 IS the
-    // training query); the gate flags are single-pass PLAN aggregates over
-    // bestCosine ladders, not driver-computed lits, so the plan auditor
-    // sees them and the corpus is read exactly once beyond training ----
-    "q62_kmeans_train" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 8
-      val init: Array[Array[Float]] = emb.orderBy("vec_id").limit(k)
-        .select("embedding").collect().map(_.getSeq[Float](0).toArray)
-      val trained = Similarity.kmeansCentroids(emb, k, iters = 3)
-      val centsIdx = trained.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-      emb
-        .select(
-          Similarity.nearestCentroid(col("embedding"), centsIdx).as("cell_id"),
-          Similarity.bestCosine(col("embedding"), trained).as("__cos_trained"),
-          Similarity.bestCosine(col("embedding"), init).as("__cos_init"))
-        .agg(
-          count(lit(1)).as("n_vectors"),
-          coalesce(
-            (max(col("cell_id")) < k && min(col("cell_id")) >= 0).cast("long"),
-            lit(0L)).as("cells_ok"),
-          coalesce(
-            (sum(lit(1.0) - col("__cos_trained"))
-              <= sum(lit(1.0) - col("__cos_init")) * (1 + 1e-6)).cast("long"),
-            lit(0L)).as("inertia_improved"))
-    },
-    // ---- LLM-pipeline: URL/email scrub pass ----
-    "q41_text_scrub" -> { (s, dir) =>
-      Tables.documentsHeavy(s, dir)
-        .withColumn("dirty",
-          concat(col("text"), lit(" http://ex.com/"), col("doc_id"), lit(" u"), col("doc_id"), lit("@mail.com tail")))
-        .select(
-          col("doc_id"),
-          length(col("dirty")).as("dirty_len"),
-          length(Text.scrub(col("dirty"))).as("clean_len"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: repetition/boilerplate signal (linear explode-agg;
-    // ratio emitted as exact integer half-up e4 so no float rounding
-    // crosses the engine boundary) ----
-    "q42_repetition" -> { (s, dir) =>
-      Text.topTokenRatios(Tables.documents(s, dir), "text", "doc_id")
-        .select(
-          col("doc_id"),
-          (ExactAgg.divHalfUp(col("top_cnt") * 10000, col("tok_cnt")) / 10000.0)
-            .as("top_token_ratio"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: collapse near-dup candidates into duplicate
-    // clusters (connected components via iterative min-label propagation) ----
-    "q48_dup_clusters" -> { (s, dir) =>
-      val pairs = Dedup.minhashCandidates(Tables.documentsHeavy(s, dir))
-      Dedup.duplicateClustersLogN(pairs)
-        .select(col("id").as("doc_id"), col("rep"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: deterministic content-stable train/val/test split ----
-    "q49_split_assign" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("split", ops.Sampling.splitLabel(col("doc_id")))
-        .groupBy("split", "lang")
-        .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("split", "lang")
-    },
-    // ---- LLM-pipeline: per-document top TF-IDF terms ----
-    "q50_tfidf_top_terms" -> { (s, dir) =>
-      Text.tfidfTopTerms(Tables.documents(s, dir), "text", "doc_id", 3)
-        .select("doc_id", "term", "score_e4", "rank")
-        .orderBy("doc_id", "rank")
-    },
-    // ---- LLM-pipeline: embedding-cosine near-dup dedup — LSH bucket
-    // pairs thresholded on cosine, collapsed to clusters (the embedding
-    // flavor of q48; threshold tuned to this synthetic corpus's sim range) ----
-    "q51_embedding_dedup" -> { (s, dir) =>
-      val pairs = Similarity
-        .lshCandidatePairs(Tables.embeddings(s, dir), dims = 64, nBits = 12, seed = 7L)
-        .filter(col("sim") >= 0.2)
-      Dedup.duplicateClustersLogN(pairs)
-        .select(col("id").as("vec_id"), col("rep"))
-        .orderBy("vec_id")
-    },
-    // ---- LLM-pipeline: n-gram (trigram-set) Jaccard between adjacent
-    // docs — the shingle-set verification metric, all-integer e4 output ----
-    "q52_trigram_jaccard" -> { (s, dir) =>
-      val ng = Text.explodeNgrams(Tables.documents(s, dir), "text", 3)
-        .select(col("doc_id"), col("ng")).distinct()
-      val sizes = ng.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = ng.select(col("doc_id").as("a_id"), col("ng"))
-        .join(ng.select((col("doc_id") - 1).as("a_id"), col("ng")), Seq("a_id", "ng"))
-        .groupBy("a_id").agg(count(lit(1)).as("i"))
-      val i0 = coalesce(col("i"), lit(0L))
-      sizes.select(col("doc_id").as("a_id"), col("n").as("na"))
-        .join(sizes.select((col("doc_id") - 1).as("a_id"), col("n").as("nb")), Seq("a_id"))
-        .join(inter, Seq("a_id"), "left")
-        .select(col("a_id"), (col("a_id") + 1).as("b_id"),
-          (ExactAgg.divHalfUp(i0 * 10000, col("na") + col("nb") - i0) / 10000.0)
-            .as("jaccard_e4"))
-        .orderBy("a_id")
-    },
-    // ---- LLM-pipeline: winnowing (rolling-hash) document fingerprints;
-    // per-doc selected-fingerprint count + minimum ----
-    "q54_winnow_fingerprints" -> { (s, dir) =>
-      Text.winnowFingerprints(Tables.documents(s, dir), "text", "doc_id")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_fp"), min(col("fp")).as("min_fp"))
-        .orderBy("doc_id")
-    },
-    // ---- the flagship LLM-data curation pipeline, end to end in ONE
-    // declarative composition: scrub → quality gate → exact dedup →
-    // near-dup cluster collapse (keep representatives) → deterministic
-    // split assignment → per-split corpus stats. Every stage is the
-    // already-oracled operator; the oracle composes their SQL ----
-    "q53_curation_pipeline" -> { (s, dir) =>
-      val base = Tables.documentsHeavy(s, dir)
-        .select(col("doc_id"), Text.scrub(col("text")).as("stext"))
-      val quality = base.filter(
-        Text.qualityBucket(col("stext")).isin("OK_FLUENT", "OK_TERSE"))
-      // `exact` feeds BOTH the minhash candidate pipeline and the final
-      // `kept` join — persist it so scrub → quality → window-dedup runs
-      // once per q53 execution, not once per consuming branch. (Same class
-      // of fix as the streaming fan-out's single-execution contract.)
-      val exact = Cleaning.dedupByKey(
-          quality.withColumn("__fp", Text.fingerprint(col("stext"))),
-          Seq("__fp"), Seq(col("doc_id").asc))
-        .drop("__fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nearDupReps = Dedup.duplicateClustersLogN(
-        Dedup.minhashCandidates(exact, "stext", "doc_id",
-          maxBandBucket = curationMaxBandBucket))
-      val kept = exact
-        .join(nearDupReps.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-        .filter(col("rep").isNull || col("rep") === col("doc_id"))
-      // NOT orderedOnce: the final agg's exchange sits directly below the
-      // presentation sort, so the sampling pass re-reads 3 aggregated rows
-      // from shuffle output — measured no-op (PLANS.md r16)
-      kept
-        .withColumn("split", ops.Sampling.splitLabel(col("doc_id")))
-        .groupBy("split")
-        .agg(count(lit(1)).as("cnt"), sum(length(col("stext"))).as("sum_chars"))
-        .orderBy("split")
-    },
-    // ---- the reference's raw-lake format end to end: JSON-array files
-    // (<= 50 records per array object, the archiver's layout) written,
-    // then batch-read with a DECLARED schema and multiLine parsing —
-    // the S1 JSON flavor. The fixture lands under target/ so the DuckDB
-    // oracle reads the very same files with read_json ----
-    "q47_json_raw_lake" -> { (s, dir) =>
-      import org.apache.spark.sql.types._
-      val fixture = Fixture.path(dir, "json_events")
-      val src = Tables.events(s, dir)
-        .filter(col("event_id") < 1000)
-        .select("event_id", "user_id", "event_type", "value", "props")
-      sources.JsonLake.writeArrayLake(src, "event_id", 50, fixture)
-      val schema = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType),
-        StructField("props", StringType)))
-      sources.JsonLake.readArrayLake(s, fixture, schema)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-          length(col("props")).as("props_len"))
-        .orderBy("event_id")
-    },
-    // ---- LLM-pipeline: train→eval decontamination — val/test docs that
-    // share a winnowing fingerprint (verbatim ≥6-token run) with the
-    // train split, with collision counts. The report a curator acts on
-    // before training ----
-    "q55_decontamination" -> { (s, dir) =>
-      ops.Sampling.contaminationReport(Tables.documentsHeavy(s, dir), "text", "doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: deterministic weighted corpus mixing — per-lang
-    // keep rates in basis points over a pure key-hash (stable across
-    // engines/partitioning; nested across rate changes). Exercises full
-    // keep (de), drop-all (zh), minority rate (en) and the default ----
-    "q56_stratified_sample" -> { (s, dir) =>
-      ops.Sampling.sampleByStratum(
-          Tables.documents(s, dir), "doc_id", "lang",
-          Map("en" -> 2500, "de" -> 10000, "zh" -> 0), defaultE4 = 5000)
-        .select("doc_id", "lang")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: incremental ingestion dedup — a new batch (fresh
-    // docs ∪ replayed copies of already-ingested docs under new ids) is
-    // deduplicated against the immutable history corpus by content
-    // fingerprint; the replays must drop, history is never rewritten ----
-    "q57_incremental_dedup" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val history = docs.filter(col("doc_id") % 2 === 0)
-      val replayed = docs.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      val incoming = docs.filter(col("doc_id") % 2 === 1)
-        .select("doc_id", "text")
-        .unionByName(replayed)
-      Dedup.dedupAgainstHistory(history, incoming)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- q57's AMORTIZED serving shape (the q67 move applied to dedup):
-    // the history corpus's fingerprints persisted ONCE as a 16-byte/doc
-    // index, every ingest batch probed against the index — never the
-    // history text — and each accepted batch's fps APPENDED so the next
-    // batch dedups against them too. The fixture build (stamped write-once
-    // like the IVF index) writes the base index, dedups batch 1 and
-    // appends its survivors; the benched steady-state body is batch 2's
-    // probe: its replays of HISTORY docs drop via the base index, its
-    // replays of BATCH-1 docs drop via the appended rows (proving the
-    // append participates), and fresh docs survive. The oracle states the
-    // same semantics independently as NOT EXISTS over text ----
-    "q69_dedup_fp_index" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val fixture = ensureFpIndexFixture(s, dir)
-      val batch2 = docs.filter(col("doc_id") % 4 === 3)
-        .select("doc_id", "text")
-        .unionByName(docs.filter(col("doc_id") % 20 === 0) // replays of history
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 20 === 1) // replays of batch 1
-          .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
-      Dedup.dedupAgainstFingerprintIndex(s, fixture, batch2)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- q69's NEAR-dup sibling (the persisted-index move applied to the
-    // banded-LSH pipeline, q26): the history's band keys + minhash
-    // signatures persisted ONCE, each batch probed against the BANDS table
-    // (bounded collisions verified by signature agreement — history TEXT
-    // appears nowhere in the plan), accepted batches APPENDED as immutable
-    // generations. The fixture builds gen 0 over history and appends batch
-    // 1's survivors; the benched steady-state body is batch 2's probe:
-    // exact replays of history drop (est 1.0), ONE-TOKEN near-replays of
-    // history AND of batch-1 survivors drop through the banding (8×8 bands
-    // target ~0.77; a one-token append on a median-25-distinct-token doc is
-    // j≈0.96), and fresh docs survive unless they are natural near-dups.
-    // The oracle restates both generations' acceptance independently from
-    // text via the same minhash/band/agreement SQL machinery as q26 ----
-    "q78_neardup_band_index" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val fixture = ensureBandIndexFixture(s, dir)
-      val batch2 = docs.filter(col("doc_id") % 4 === 3).select("doc_id", "text")
-        .unionByName(docs.filter(col("doc_id") % 20 === 0) // exact replays of history
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        .unionByName(docs.filter(col("doc_id") % 20 === 2) // near-replays of history
-          .select((col("doc_id") + 3000000L).as("doc_id"),
-            concat(col("text"), lit(" qq")).as("text")))
-        .unionByName(docs.filter(col("doc_id") % 20 === 1) // near-replays of batch 1
-          .select((col("doc_id") + 4000000L).as("doc_id"),
-            concat(col("text"), lit(" qq")).as("text")))
-      Dedup.dedupAgainstBandIndex(s, fixture, batch2,
-        nHashes = BandIdxHashes, nBands = BandIdxBands,
-        minEstJaccard = BandIdxMinJ, seed = BandIdxSeed,
-        maxBandCollisions = BandIdxCap)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- gap-based session windows (session_window, batch parity) ----
-    "q40_session_windows" -> { (s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          col("user_id"),
-          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"))
-        .orderBy("user_id", "session_start")
-    },
-    // ---- the THIRD persisted-index dedup family (round 10): embedding
-    // near-dup of a batch against the persisted IVF index — exact dedup
-    // has the fingerprint index (q69), text near-dup the band index (q78),
-    // this closes semantic near-dup with the same O(batch) directory-pruned
-    // probe. The batch is half exact copies of resident vectors (new ids —
-    // deterministically caught: an identical vector probes its twin's own
-    // cell at sim 1.0) and half reversed embeddings (fresh ids, dup-ness
-    // data-dependent, deliberately unasserted). Gate flags are the
-    // defining equivalences, in-engine per the IVF family's adjudication:
-    // subset_ok = every probe-reported dup re-scores >= threshold against
-    // an INDEPENDENT quantization of the corpus TABLE (precision 1 — and
-    // persisted lists ≡ recomputed corpus); copies_all_dup = the
-    // deterministic recall half ----
-    "q81_ivf_embedding_dedup" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val fixture = ensureAppendedIvfIndex(s, dir)
-      val Big = 10000000L
-      val copies = emb.filter(col("vec_id") % 7 === 0)
-        .select((col("vec_id") + Big).as("vec_id"), col("embedding"))
-      val novel = emb.filter(col("vec_id") % 7 === 3)
-        .select((col("vec_id") + 2 * Big).as("vec_id"),
-          reverse(col("embedding")).as("embedding"))
-      val batch = copies.unionByName(novel)
-      val survivors = Similarity.dedupAgainstIvfIndex(
-        s, fixture, batch, nProbe = 2, minSim = 0.95)
-      val dupIds = batch.select("vec_id")
-        .join(survivors.select("vec_id"), Seq("vec_id"), "left_anti")
-      // independent brute recomputation from the corpus TABLE (not the
-      // index files) under the same int8 quantization — bounded-broadcast
-      // gate shape, as q28/q64's in-query baselines
-      val corpusQ = emb.select(col("vec_id").as("c_id"),
-        functions.Int8Ops.quantizeInt8Native(col("embedding")).as("c_qvec"))
-      val bruteDupIds = batch
-        .select(col("vec_id"), functions.Int8Ops.quantizeInt8Native(col("embedding")).as("b_qvec"))
-        .crossJoin(broadcast(corpusQ))
-        .withColumn("__s", functions.Int8Ops.cosineInt8Native(col("b_qvec"), col("c_qvec")))
-        // same NaN-guard as dedupAgainstIvfIndex: a zero vector scores 0/0
-        // = NaN against everything, and NaN >= threshold is TRUE under
-        // Spark's ordering — the envelope must agree with the probe's gate
-        .filter(col("__s") >= 0.95 && !isnan(col("__s")))
-        .select("vec_id").distinct()
-      val notInBrute = dupIds.join(bruteDupIds, Seq("vec_id"), "left_anti")
-        .agg(count(lit(1)).as("__n")).select(col("__n").as("__not_in_brute"))
-      val copiesMissed = copies.select("vec_id")
-        .join(dupIds, Seq("vec_id"), "left_anti")
-        .agg(count(lit(1)).as("__n")).select(col("__n").as("__copies_missed"))
-      batch.agg(count(lit(1)).as("n_batch"))
-        .crossJoin(notInBrute)
-        .crossJoin(copiesMissed)
-        .select(
-          col("n_batch"),
-          coalesce((col("__not_in_brute") === 0L).cast("long"), lit(0L)).as("subset_ok"),
-          coalesce((col("__copies_missed") === 0L).cast("long"), lit(0L)).as("copies_all_dup"))
-    },
-    // ---- LLM-pipeline: eval-set decontamination INDEX — the q55 report's
-    // inverse shape for an ingest loop: the eval suites' winnowing
-    // fingerprints are persisted once (two generations: install + a second
-    // benchmark appended) and a training batch is gated against the
-    // blocklist at O(batch); survivors share no verbatim ≥6-token run with
-    // any indexed eval doc. Exact-SQL-expressible end to end (the q54/q55
-    // winnowing CTE), so the oracle re-derives acceptance from text,
-    // independently of the persisted index files ----
-    "q82_decontam_index" -> { (s, dir) =>
-      val fixture = ensureEvalIndexFixture(s, dir)
-      val batch = Tables.documents(s, dir)
-        .filter(col("doc_id") % 5 === 1)
-        .select("doc_id", "text")
-      Dedup.dedupAgainstEvalIndex(s, fixture, batch)
-        .select("doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: the decontamination TRIAGE report — q82's gate
-    // tells the loop what to drop; this tells the curator WHY: for each
-    // contaminated batch doc, how many distinct eval docs it collides
-    // with and through how many of its fingerprints (the q55 report shape
-    // driven by the persisted index's (eval_id, fp) rows) ----
-    "q83_decontam_report" -> { (s, dir) =>
-      val fixture = ensureEvalIndexFixture(s, dir)
-      val batch = Tables.documents(s, dir)
-        .filter(col("doc_id") % 5 === 1)
-        .select("doc_id", "text")
-      Dedup.evalContaminationReport(s, fixture, batch)
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: corpus-wide hot-span SCRUB (C4/RefinedWeb line
-    // dedup) — q59 scores boilerplate, this REWRITES it out: any 4-token
-    // span occurring ≥3 times corpus-wide is removed from every document
-    // and the survivors re-join in order. Count shuffle carries (hash,
-    // count) only; the rewrite is a zero-shuffle per-row filter against
-    // the plan-shipped hot set (binary-search membership) ----
-    "q84_hot_span_scrub" -> { (s, dir) =>
-      Text.hotSpanScrub(Tables.documents(s, dir), "text", "doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: intra-document repeated-span removal (the
-    // within-doc face of exact dedup, Lee et al. 2021) — later occurrences
-    // of a 2-token span already seen in the same document are dropped,
-    // first occurrences keep their order. Pure per-row array_distinct in
-    // the scan projection: no shuffle, nothing corpus-global ----
-    "q85_intradoc_span_dedup" -> { (s, dir) =>
-      Text.dropRepeatedSpans(Tables.documents(s, dir), "text", "doc_id")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: the INCREMENTAL face of q84 — a batch scrubbed
-    // against the persisted span-count index's hot list (installed in two
-    // generations over the non-batch corpus, then refreshed). O(batch):
-    // history text is never re-read; the hot list is the only global state.
-    // The oracle re-derives the hot set and the rewrite from text,
-    // independently of the persisted index files (the q82 contract) ----
-    "q86_span_index_scrub" -> { (s, dir) =>
-      val fixture = ensureSpanIndexFixture(s, dir)
-      val batch = Tables.documents(s, dir)
-        .filter(col("doc_id") % 5 === 1)
-        .select("doc_id", "text")
-      Text.scrubAgainstHotList(batch, "text", "doc_id", 4,
-          Dedup.readHotSpanList(s, fixture))
-        .select(col("doc_id"), col("text").as("clean_text"))
-        .orderBy("doc_id")
-    },
-    // ---- binned range join (RangeJoin op): 30-minute click→purchase
-    // attribution. Every purchase counts the same user's clicks in the
-    // half-open window [ts − 30 min, ts) — the inequality-join shape that
-    // nested-loops at scale unless binned into a plain equi-join on
-    // (user, bin). Purchases with no preceding click are kept at 0 so the
-    // output is one row per purchase (deterministic row count) ----
-    "q87_attribution_window" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-        .withColumn("lo", col("ts") - expr("INTERVAL 30 MINUTES"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      val matched = ops.RangeJoin.pointInInterval(
-        purchases, clicks,
-        intervalKeys = Seq("user_id"), pointKeys = Seq("c_user"),
-        lo = "lo", hi = "ts", pt = "c_ts",
-        binWidthSec = 1800, inclusiveLo = true, inclusiveHi = false)
-      val counts = matched.groupBy("event_id")
-        .agg(count(lit(1)).as("clicks_30m"))
-      // fresh scan (new attribute ids) for the zero-fill left join, so the
-      // shared-lineage self-join ambiguity never arises
-      Tables.events(s, dir).filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"))
-        .join(counts, Seq("event_id"), "left")
-        .select(col("event_id"), col("user_id"),
-          coalesce(col("clicks_30m"), lit(0L)).as("clicks_30m"))
-        .orderBy("event_id")
-    },
-    // ---- symmetric band self-join (RangeJoin.bandPairs): unordered pairs
-    // of same-customer orders placed within 7 days of each other — the
-    // near-in-time audit shape (burst ordering, duplicate submissions).
-    // gap_days is signed (b relative to a under a_key < b_key ordering) ----
-    "q88_order_band_pairs" -> { (s, dir) =>
-      ops.RangeJoin.bandPairs(
-          Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-          keys = Seq("o_custkey"), id = "o_orderkey", ts = "o_orderdate",
-          bandSec = 7L * 86400L)
-        .select(col("a_o_custkey").as("custkey"),
-          col("a_o_orderkey").as("a_key"), col("b_o_orderkey").as("b_key"),
-          datediff(col("b_o_orderdate"), col("a_o_orderdate")).cast("long").as("gap_days"))
-        .orderBy("custkey", "a_key", "b_key")
-    },
-    // ---- Catalyst optimizer rule (plans/RangeJoinRewrite): the SAME
-    // inequality-join SQL a reference user would write, executed on a child
-    // session with spark.graft.rangeJoin.binWidthSec set — the rule rewrites
-    // the logical join into the binned equi-join (PlanAuditSpec pins the
-    // shape), so the query text never changes. Purchase←click pairs with
-    // their gap in seconds ----
-    "q89_sql_range_join" -> { (s, dir) =>
-      val s2 = s.newSession()
-      s2.conf.set(plans.RangeJoinRewrite.WidthConf, "1800")
-      Tables.events(s2, dir).createOrReplaceTempView("ev")
-      s2.sql("""SELECT p.event_id AS p_event, c.event_id AS c_event,
-        |  CAST((unix_micros(p.ts) - unix_micros(c.ts)) DIV 1000000 AS BIGINT) AS gap_sec
-        |FROM ev p JOIN ev c
-        |  ON p.user_id = c.user_id
-        | AND p.event_type = 'purchase' AND c.event_type = 'click'
-        | AND c.ts >= p.ts - INTERVAL 30 MINUTES AND c.ts < p.ts
-        |ORDER BY p_event, c_event""".stripMargin)
-    },
-    // ---- LLM-pipeline: product-quantization ANN (the CAPACITY scale path
-    // — 16 bytes per 64-dim vector vs 256 float / 64 int8; IVF-PQ is the
-    // standard billion-scale ANN design). Everything is deterministic
-    // (fixed-point Lloyd's, fixed-order IEEE kernels), so like q62/q64 the
-    // gate is an ENVELOPE of exact 0/1 flags: results_ok (every query
-    // returns exactly k rows ranked 1..k), recall_ok (ADC shortlist 10k +
-    // exact re-rank clears 0.60 recall@10 vs the in-query float baseline —
-    // measured 0.88/0.99/0.88 at sf0.001/0.01/0.1 (the synthetic
-    // embeddings are near-uniform, PQ's hardest case; a broken code path
-    // scores near random ≈ shortlist/corpus), distortion_ok (Lloyd's
-    // improved on the init codebooks — the training-works assertion),
-    // code_bytes exact ----
-    "q90_pq_ann" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val queries = emb.filter(col("vec_id") < 10)
-      val init = Pq.initCodebooks(emb, dims = 64, m = PqM, k = PqK)
-      val model = Pq.train(emb, init, iters = PqIters)
-      val distortionOk = {
-        val (dm, di) = Pq.distortionPair(emb, model, init)
-        dm <= di + 1e-9
-      }
-      // persisted like q64: the approx result feeds both the recall join
-      // and the shape flags
-      val approx = Pq.pqTopK(emb, queries, model, k = k, refine = 10 * k).persist()
-      val exact = Similarity.bruteForceTopK(emb, queries, k)
-        .select(col("query_id"), col("neighbor_id"))
-      val hits = approx
-        .join(exact, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as("__hits"))
-      approx
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === k && max(col("__n")) === k &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === k).cast("long"),
-            lit(0L)).as("results_ok"))
-        .crossJoin(hits)
-        .select(
-          col("n_queries"),
-          col("results_ok"),
-          coalesce(
-            (col("__hits") * 10000L >= col("n_queries") * (k * 6000L)).cast("long"),
-            lit(0L)).as("recall_ok"),
-          lit(if (distortionOk) 1L else 0L).as("distortion_ok"),
-          lit(PqM.toLong).as("code_bytes"))
-    },
-    // ---- the PRODUCTION PQ shape (q66's role for q90): codes-only ADC
-    // scan + bounded exact re-rank, no training-baseline baggage — the
-    // shape a serving tier runs per query batch once codebooks are
-    // trained. Same envelope as q66 ----
-    "q91_pq_production" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val queries = emb.filter(col("vec_id") < 10)
-      val model = Pq.train(emb, Pq.initCodebooks(emb, dims = 64, m = PqM, k = PqK), iters = PqIters)
-      Pq.pqTopK(emb, queries, model, k = k, refine = 10 * k)
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === k && max(col("__n")) === k &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === k).cast("long"),
-            lit(0L)).as("results_ok"))
-    },
-    // ---- the PERSISTED IVF-PQ index (q67's role for the PQ family): the
-    // billion-scale composition — coarse cells directory-prune the scan,
-    // m-byte PQ codes are all the lists store (16× smaller resident set
-    // than float, 4× than the int8 index). Built once behind a stamp that
-    // folds BOTH models' hyperparameters and scheme versions; served via
-    // isin partition pruning + broadcast probes + the ADC kernel. Same
-    // envelope as q67: any correct index returns the 3 queries' k results
-    // ranked 1..k ----
-    "q92_ivf_pq_index_serve" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 5
-      val fixture = ensureIvfPqIndex(s, dir)
-      Pq.queryIvfPqIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = k)
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("__n"),
-          min(col("rank")).as("__rmin"),
-          max(col("rank")).as("__rmax"))
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (min(col("__n")) === k && max(col("__n")) === k &&
-              min(col("__rmin")) === 1 && max(col("__rmax")) === k).cast("long"),
-            lit(0L)).as("results_ok"))
-    },
-    // ---- the q79 monitor's contract for the PQ family: recall of the
-    // nProbe-pruned serve vs the exhaustive ADC ranking over the SAME
-    // index (both sides score codes, so this isolates the cell-pruning
-    // loss — quantization loss is q90's gate). Fully deterministic
-    // (frozen fixture models + ADC), so the envelope asserts exact flags:
-    // probe-sample size, and a 0.50 recall floor with measured margin
-    // (0.74/0.71/0.83 at sf0.001/0.01/0.1; a collapsed probe scores
-    // ~nProbe/nCells = 0.25) ----
-    "q93_ivf_pq_health" -> { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val k = 10
-      val fixture = ensureIvfPqIndex(s, dir)
-      Pq.ivfPqIndexRecall(s, fixture, emb.filter(col("vec_id") < 10), nProbe = 4, k = k)
-        .agg(
-          count(lit(1)).as("n_queries"),
-          coalesce(
-            (sum(col("hits")) * 10000L >=
-              count(lit(1)) * (k * 5000L)).cast("long"),
-            lit(0L)).as("recall_ok"))
-    },
-    // ---- LLM-pipeline: Misra-Gries heavy-hitter tokens — vocabulary-scale
-    // frequent items WITHOUT a token shuffle (the map side compresses to
-    // <= capacity counters per partition, like approx_count_distinct's HLL
-    // buffers). The summary SET is legitimately partition-dependent, so
-    // the gate asserts the sketch's mathematical guarantees against the
-    // exact baseline — undercount-only, error <= n/(c+1), every item above
-    // the threshold present — each deterministically TRUE for any correct
-    // execution (the q39 exact-baseline discipline; both verification
-    // joins run distributed against the capacity-bounded summary, no
-    // vocabulary collect) ----
-    "q94_heavy_hitter_tokens" -> { (s, dir) =>
-      import s.implicits._
-      val capacity = 64
-      val toks = Tables.documents(s, dir)
-        .select(explode(Text.tokens(col("text"))).as("tok"))
-      val summary = toks.select(col("tok").as[String])
-        .select(new HeavyHitters.MisraGries(capacity).toColumn).head().items
-      val summaryDf = summary.map(i => (i.item, i.est)).toDF("tok", "est")
-      val exact = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-      val totals = exact.agg(
-        sum(col("cnt")).as("n"), count(lit(1)).as("d")).head()
-      val (n, nDistinct) = (totals.getLong(0), totals.getLong(1))
-      // integer-exact guarantee checks: truth > n/(c+1)  <=>  truth*(c+1) > n
-      val heavyMissing = exact
-        .filter(col("cnt") * (capacity + 1) > n)
-        .join(broadcast(summaryDf), Seq("tok"), "left_anti")
-        .count()
-      // bounds check: a broadcast hint on the PRESERVED side of a left
-      // outer join is unbuildable and silently dropped (HintErrorLogger),
-      // shuffling the corpus-wide counts. Instead semi-filter exact by the
-      // capacity-bounded summary (broadcast-right, legal — the counts
-      // stream map-side-pruned), then outer-join two summary-sized frames.
-      val exactForSummary = exact
-        .join(broadcast(summaryDf.select("tok")), Seq("tok"), "left_semi")
-      val boundViolations = summaryDf
-        .join(broadcast(exactForSummary), Seq("tok"), "left")
-        .filter(col("cnt").isNull || col("est") > col("cnt") ||
-          (col("cnt") - col("est")) * (capacity + 1) > n)
-        .count()
-      Seq((n, nDistinct,
-        if (heavyMissing == 0L) 1L else 0L,
-        if (boundViolations == 0L) 1L else 0L))
-        .toDF("n_tokens", "n_distinct", "containment_ok", "bounds_ok")
-    },
-    // ---- the GROUPED composition of q94 — per-language heavy hitters via
-    // KeyValueGroupedDataset.agg, the realistic usage (per-domain vocab):
-    // one shuffle of capacity-bounded partial summaries per language, the
-    // same guarantees asserted per group. The collected summaries are
-    // (n_langs × capacity) rows — model-sized; the verification joins run
-    // distributed against them ----
-    "q95_heavy_hitters_by_lang" -> { (s, dir) =>
-      import s.implicits._
-      val capacity = 32
-      val toksL = Tables.documents(s, dir)
-        .select(col("lang"), explode(Text.tokens(col("text"))).as("tok"))
-      val summaries = toksL.as[(String, String)]
-        .groupByKey(_._1).mapValues(_._2)
-        .agg(new HeavyHitters.MisraGries(capacity).toColumn)
-        .collect()
-      val sumDf = summaries
-        .flatMap { case (lang, sm) => sm.items.map(i => (lang, i.item, i.est)) }
-        .toSeq.toDF("lang", "tok", "est")
-      val exact = toksL.groupBy("lang", "tok").agg(count(lit(1)).as("cnt"))
-      val perLang = exact.groupBy("lang")
-        .agg(sum(col("cnt")).as("n_tokens"), count(lit(1)).as("n_distinct"))
-      val missing = exact
-        .join(perLang.select(col("lang"), col("n_tokens").as("__n")), Seq("lang"))
-        .filter(col("cnt") * (capacity + 1) > col("__n"))
-        .join(broadcast(sumDf), Seq("lang", "tok"), "left_anti")
-        .groupBy("lang").agg(count(lit(1)).as("__miss"))
-      // same preserved-side-hint fix as q94: semi-filter the corpus-wide
-      // counts by the (n_langs × capacity) summary before the outer join
-      val exactForSum = exact
-        .join(broadcast(sumDf.select("lang", "tok")), Seq("lang", "tok"), "left_semi")
-      val violations = sumDf
-        .join(broadcast(exactForSum), Seq("lang", "tok"), "left")
-        .join(perLang.select(col("lang"), col("n_tokens").as("__n")), Seq("lang"))
-        .filter(col("cnt").isNull || col("est") > col("cnt") ||
-          (col("cnt") - col("est")) * (capacity + 1) > col("__n"))
-        .groupBy("lang").agg(count(lit(1)).as("__viol"))
-      perLang
-        .join(missing, Seq("lang"), "left")
-        .join(violations, Seq("lang"), "left")
-        .select(
-          col("lang"), col("n_tokens"), col("n_distinct"),
-          (coalesce(col("__miss"), lit(0L)) === 0L).cast("long").as("containment_ok"),
-          (coalesce(col("__viol"), lit(0L)) === 0L).cast("long").as("bounds_ok"))
-        .orderBy("lang")
-    },
-    // ---- LLM-pipeline: fixed-size per-stratum sampling ("exactly 20 eval
-    // docs per language") — reservoir sampling's job done content-stably:
-    // hash-rank order is a pure function of the keys, so replays and
-    // repartitions draw the SAME sample and DuckDB reproduces it exactly
-    // (a full value oracle, not an envelope). Salted so the carve
-    // decorrelates from the module's other unsalted key decisions ----
-    "q96_fixed_size_sample" -> { (s, dir) =>
-      Sampling.takePerStratum(
-        Tables.documents(s, dir), "doc_id", "lang", n = 20, salt = "carve-v1")
-        .select("lang", "doc_id", "n_chars")
-        .orderBy("lang", "doc_id")
-    },
-    // ---- LLM-pipeline: REAL BPE tokenization (round-11 verdict #1) —
-    // merges LEARNED from this corpus slice (persisted versioned fixture),
-    // applied per document by the production codegen expression in one
-    // shuffle-free map stage. Three-way gate: n_pieces and detok are
-    // recomputed by DuckDB ITSELF from the shared pre-tokenizer regex (the
-    // q68 cross-engine contract — detok pins that tokens partition the
-    // piece stream byte-exactly), while n_tokens joins the EXPECTED table
-    // written by the independent textbook encoder (the q90 differential
-    // discipline — any merge-order divergence hash-fails) ----
-    "q97_bpe_tokenize" -> { (s, dir) =>
-      val fixture = ensureBpeFixture(s, dir)
-      val merges = Bpe.readMerges(s, s"$fixture/merges")
-      Tables.documentsHeavy(s, dir)
-        .select(col("doc_id"), Bpe.encodeStats(col("text"), merges).as("b"))
-        .select(col("doc_id"),
-          col("b.n_pieces").as("n_pieces"),
-          col("b.n_tokens").as("n_tokens"),
-          col("b.detok").as("detok"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: fastText-style quality-classifier INFERENCE
-    // (round-11 verdict #2) — a persisted (bucket, weight) linear model
-    // over hashed unigram+bigram features, scored per document in exact
-    // integer fixed point. One codegen map pass, model as a plan constant,
-    // zero pre-sort exchanges (PlanAuditSpec pins it). The installed demo
-    // table's weights are a pure formula of the bucket index, so DuckDB
-    // re-derives the ENTIRE path — hash, bucket, weight, sum, rounding —
-    // from the base table (full value oracle, no fixture join) ----
-    "q98_quality_classifier" -> { (s, dir) =>
-      val model = QualityClassifier.readModel(s, s"${ensureQualityModel(s, dir)}/model")
-      QualityClassifier.classify(Tables.documents(s, dir), "text", model)
-        .select("doc_id", "n_feats", "score_e4", "label")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: Gopher-style per-domain caps (round-11 verdict
-    // #3) — URLs synthesized deterministically from doc_id (one host,
-    // "hub", takes every third doc; forty "siteN" hosts share the tail),
-    // host + registrable domain extracted by the shared regex constants,
-    // and each over-represented host capped to 25 docs via the MG-sketch →
-    // exact-confirm → q96-carve composition. Tail hosts bypass the window
-    // exchange entirely; the oracle re-derives the exact carve because the
-    // sketch's containment guarantee makes candidate generation lossless
-    // at this capacity ----
-    "q99_domain_cap" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-        .withColumn("url", concat(
-          lit("https://"),
-          when(col("doc_id") % 3 === 0, lit("hub"))
-            .otherwise(concat(lit("site"), (col("doc_id") % 40).cast("string"))),
-          lit(".example.com/p/"), col("doc_id").cast("string")))
-        .withColumn("host", UrlOps.host(col("url")))
-      UrlOps.capPerDomainAuto(docs, "host", "doc_id", cap = 25, salt = "domcap-v1")
-        .select(col("host"),
-          UrlOps.registrableDomain(col("host")).as("domain"),
-          col("doc_id"))
-        .orderBy("host", "doc_id")
-    },
-    // ---- LLM-pipeline: SemDeDup-style cluster-balanced sampling (round-11
-    // verdict #8) — a fixed-size content-stable draw from EVERY semantic
-    // cell of the persisted IVF index (q62 centroids + the q96 carve), the
-    // diversity-balanced eval-set move. Cell assignment is read from the
-    // index's inverted lists — the shared persisted artifact — so the
-    // oracle reads the SAME lists parquet and re-derives the exact carve
-    // (full value oracle, q96 family) ----
-    "q100_semantic_carve" -> { (s, dir) =>
-      val fixture = Fixture.path(dir, "ivf_index")
-      ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
-        fixture, k = IvfCells, iters = IvfIters)
-      Sampling.semanticCarve(s, fixture, n = 10, salt = "semcarve-v1")
-        .orderBy("cell_id", "vec_id")
-    },
-    // ---- LLM-pipeline: CCNet-style bigram-LM perplexity filter — the
-    // model trained on this corpus slice persists as INTEGER log-prob
-    // tables (the one log quantization happens at train time), scoring
-    // resolves bigram-hit → known-w1 floor → global floor entirely from
-    // the artifact, and the band ladder buckets docs by mean transition
-    // log-prob. The oracle joins the SAME persisted tables (q100
-    // shared-artifact discipline) — full value gate, no float crosses
-    // the engine boundary ----
-    "q101_lm_perplexity" -> { (s, dir) =>
-      val fixture = ensureLmFixture(s, dir)
-      LangModel.scoreDocs(Tables.documentsHeavy(s, dir), "text", "doc_id", s"$fixture/model")
-        .withColumn("band",
-          when(col("n_transitions") === 0, "empty")
-            .when(col("ppl_e4") < 80000L, "fluent")
-            .when(col("ppl_e4") < 120000L, "mid")
-            .otherwise("suspect"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: sequence packing under the REAL tokenizer — q75's
-    // sharded running-sum pack budgeted by the trained BPE token counts
-    // (Packing.packByCount × Bpe) instead of whitespace words: the
-    // end-to-end shape a shard-writer actually runs (learn merges →
-    // tokenize → slice the token stream into context windows). The oracle
-    // budgets with the naive-encoder expected table — q97 pins production
-    // == naive per doc, so the counts coincide by the already-gated
-    // equality ----
-    "q102_bpe_packing" -> { (s, dir) =>
-      val fixture = ensureBpeFixture(s, dir)
-      val merges = Bpe.readMerges(s, s"$fixture/merges")
-      Packing.packByTokenizer(
-        Tables.documents(s, dir), "text", "doc_id",
-        graft.functions.Tokenizer.bpe(merges), budget = 1024, shards = 8)
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: Unicode canonicalization (NFC + zero-width
-    // strip) — the normalize-before-everything ingest stage. The corpus
-    // is ASCII-clean, so known non-NFC suffixes are INJECTED
-    // deterministically from doc_id (the q76 discipline: every branch
-    // gets positive AND negative rows) — combining acute that must
-    // compose, the Angstrom singleton that must map to Å, a zero-width
-    // space that must strip, and an already-canonical tail. DuckDB
-    // re-derives via its own independent nfc_normalize, so the JVM
-    // Normalizer is value-checked byte-for-byte ----
-    "q103_unicode_normalize" -> { (s, dir) =>
-      val d = col("doc_id")
-      // decomposed e+combining-acute (must compose), the U+212B Angstrom
-      // singleton (must map to U+00C5), an embedded zero-width space
-      // (must strip), and an already-canonical tail (must pass unchanged)
-      def injected = concat(col("text"),
-        when(d % 4 === 0, lit(" café"))
-          .when(d % 4 === 1, lit(" Å"))
-          .when(d % 4 === 2, lit(" zw​sp"))
-          .otherwise(lit(" plain")))
-      Tables.documents(s, dir)
-        .select(d,
-          graft.functions.Normalize.canonicalize(injected).as("norm_text"),
-          injected.as("__raw"))
-        .withColumn("changed", (col("norm_text") =!= col("__raw")).cast("long"))
-        .withColumn("n_chars", length(col("norm_text")).cast("long"))
-        .drop("__raw")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: deterministic training-order shuffle — the final
-    // epoch permutation a shard writer iterates in: salted hash-rank
-    // order (reproducible pseudo-random; new salt = new epoch), shard
-    // from the hash (map-side, no global count barrier). Full value
-    // oracle incl. row order: the same md5 formula ranks in DuckDB ----
-    "q104_training_order" -> { (s, dir) =>
-      Sampling.trainingOrder(Tables.documents(s, dir), "doc_id",
-          shards = 16, salt = "epoch0")
-        .select("doc_id", "shuffle_key", "shard")
-    },
-    // ---- LLM-pipeline: token-ID encoding under the persisted vocabulary
-    // — the tokenizer's serving surface (what actually feeds a trainer:
-    // int ids, not strings). Vocab = base code points + merge outputs in
-    // rank order, minted once at fixture build; OOV (symbols outside the
-    // capped training dictionary) encode as −1 and are counted. The
-    // oracle joins the expected-ids table the independent textbook
-    // encoder wrote through the SAME persisted vocab (q97's differential
-    // discipline, extended to ids) ----
-    "q105_bpe_token_ids" -> { (s, dir) =>
-      val fixture = ensureBpeFixture(s, dir)
-      val merges = Bpe.readMerges(s, s"$fixture/merges")
-      val vocab = Bpe.readVocab(s, s"$fixture/vocab")
-      Tables.documents(s, dir)
-        .select(col("doc_id"), Bpe.encodeIds(col("text"), merges, vocab).as("e"))
-        .select(col("doc_id"),
-          col("e.n_tokens").as("n_tokens"),
-          col("e.n_oov").as("n_oov"),
-          col("e.ids").as("ids"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: HTML → text extraction (the web-crawl WET step).
-    // Markup is INJECTED deterministically around the corpus text — three
-    // wrapper shapes by doc_id: full page with script+style payloads,
-    // inline tags with entities, and a no-markup control — and the
-    // extraction chain (drop script/style, strip tags, decode entities,
-    // collapse whitespace) is the SAME constant sequence in the Spark
-    // column and the generated oracle SQL (q68/q76 contract) ----
-    "q106_html_extract" -> { (s, dir) =>
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          graft.functions.Html.extractText(htmlWrapped(col("doc_id"), col("text"))).as("clean_text"))
-        .withColumn("n_chars", length(col("clean_text")).cast("long"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: chat-template rendering (SFT data prep) —
-    // (system, user, assistant) turns synthesized deterministically from
-    // documents (every fifth doc gets a NULL system prompt, pinning the
-    // empty-turn contract), serialized with the shared ChatML constants,
-    // and token-budgeted. The oracle renders with the SAME generated
-    // template, so any drift in special tokens or turn order hash-fails ----
-    "q107_chat_template" -> { (s, dir) =>
-      val d = col("doc_id")
-      graft.ops.ChatTemplate.renderConversations(
-        Tables.documents(s, dir)
-          .withColumn("system",
-            when(d % 5 === 0, lit(null).cast("string"))
-              .otherwise(concat(lit("You are assistant "), (d % 7).cast("string"))))
-          .withColumn("user", concat(lit("Summarize document "), d.cast("string")))
-          .withColumn("assistant", col("text")),
-        "system", "user", "assistant")
-        .select("doc_id", "rendered", "rendered_tokens")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: INCREMENTALLY-built LM served end-to-end — the
-    // model grown as a generational count-fact index (install gen 0 on
-    // the even docs, append gen 1 as the %4==1 quarter, refresh via
-    // staged swap; the %4==3 quarter stays unseen so scoring exercises
-    // every miss ladder) under the shared IndexProtocol. Spec-pinned
-    // equal to a full retrain on the same union; the oracle joins the
-    // refreshed artifact (q101's shared-artifact family) ----
-    "q108_lm_incremental" -> { (s, dir) =>
-      val fixture = ensureLmIncFixture(s, dir)
-      LangModel.scoreDocs(Tables.documentsHeavy(s, dir), "text", "doc_id",
-          LangModel.modelRoot(s"$fixture/inc"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: ORDER-3 LM perplexity (round-12 verdict #2) —
-    // the same integer-artifact scoring family as q101 with the context
-    // generalized to the two preceding tokens (CCNet's real filter is a
-    // 5-gram KenLM; the order is a training knob recorded in the
-    // artifact's layout, so scoring can never probe at the wrong n).
-    // Same plan shape: explode → size-chosen model joins → one id-keyed
-    // agg, no corpus join-back (PlanAuditSpec) ----
-    "q110_lm_trigram" -> { (s, dir) =>
-      val fixture = ensureLm3Fixture(s, dir)
-      LangModel.scoreDocs(Tables.documentsHeavy(s, dir), "text", "doc_id",
-          s"$fixture/model")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: in-engine classifier TRAINING (round-12 verdict
-    // #1) — the q98 family's missing half: a deterministic closed-form
-    // centroid fit over the hashed feature space (one explode + hash agg,
-    // dim-bounded collect), persisted as the same (bucket, weight)
-    // artifact, then served back through the q98 inference path — the
-    // full train → install → score production loop in one gate. The
-    // oracle re-derives EVERYTHING — labels, markers, buckets, class
-    // shares, weights, scores — from the base table and the shared
-    // integer constants (no fixture join: the trained model is itself
-    // re-derivable, which is the point of closed-form training) ----
-    "q109_classifier_train" -> { (s, dir) =>
-      val fixture = ensureTrainedQualityModel(s, dir)
-      val model = QualityClassifier.readModel(s, s"$fixture/model")
-      QualityClassifier.classify(qcLabeled(Tables.documents(s, dir)), "__ltext", model)
-        .select("doc_id", "n_feats", "score_e4", "label")
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: BYTE-FALLBACK id encoding (round-12 verdict #3)
-    // — q105's vocabulary is code-point-level, so symbols outside the
-    // capped training alphabet encode as −1 OOVs; GPT-2-class tokenizers
-    // are byte-level precisely so OOV is impossible. Here the 256 byte
-    // tokens are a fallback TIER appended after the learned vocab (the
-    // SentencePiece byte_fallback design): an unseen symbol emits its
-    // UTF-8 bytes' ids. Exotic-script suffixes (Greek, CJK, astral
-    // emoji) are injected so the fallback actually fires; the oracle
-    // joins the expected table the independent textbook encoder wrote
-    // through the SAME byte vocabulary (q105's differential discipline),
-    // and n_oov — identically zero — is part of the compared values ----
-    "q111_bpe_byte_fallback" -> { (s, dir) =>
-      val fixture = ensureBpeFixture(s, dir)
-      val merges = Bpe.readMerges(s, s"$fixture/merges")
-      val vocab = Bpe.readVocab(s, s"$fixture/vocab_bytes")
-      exoticInjected(Tables.documentsHeavy(s, dir))
-        .select(col("doc_id"),
-          Bpe.encodeIds(col("text"), merges, vocab, byteFallback = true).as("e"))
-        .select(col("doc_id"),
-          col("e.n_tokens").as("n_tokens"),
-          col("e.n_oov").as("n_oov"),
-          col("e.ids").as("ids"))
-        .orderBy("doc_id")
-    },
-    // ---- S1 source matrix: CSV lake with a DECLARED schema and routed
-    // malformed rows (round-12 verdict #5 — the one mainstream lake
-    // format the matrix lacked). The gate's subject is the malformed-row
-    // CONTRACT: Spark PERMISSIVE's corrupt-record set must equal DuckDB
-    // ignore_errors' drop set over the same injected type-invalid /
-    // short / extra-field lines, so the well-formed projection below
-    // hash-matches DuckDB reading the same raw files directly (no
-    // parquet twin — the CSV itself is the shared artifact) ----
-    "q112_csv_lake" -> { (s, dir) =>
-      val fixture = ensureCsvLake(s, dir)
-      graft.sources.CsvLake.wellFormed(
-        graft.sources.CsvLake.read(s, s"$fixture/csv", CsvLakeSchema))
-        .orderBy("id")
-    },
-    // ---- S1 source matrix: WARC container read (round-12 verdict #8) —
-    // the crawl→text chain's missing front: binary record-boundary
-    // parsing (offset scan, header parse, Content-Length body slice,
-    // trailer check) with quarantine+resync for malformed records, then
-    // the q106 HTML extraction over the parsed bodies — raw crawl
-    // container to clean training text in one plan, no shuffle before
-    // the presentation sort. Half the fixture containers are plain WARC
-    // and half per-record-gzip .warc.gz (the Common Crawl transport),
-    // consumed by ONE read. Every output column is a PARSE result the
-    // oracle predicts by the encode-side formula (the q37/q58
-    // discipline); the %31==7 docs carry a wrong declared length and
-    // must be quarantined out of this result ----
-    "q113_warc_extract" -> { (s, dir) =>
-      val fixture = ensureWarcFixture(s, dir)
-      val rows = graft.sources.Warc.records(
-        graft.sources.Warc.read(s, s"$fixture/warc"))
-      orderedOnce(
-        rows.select(
-            regexp_extract(col("record_id"), "urn:graft:(\\d+)", 1)
-              .cast("long").as("doc_id"),
-            col("target_uri"), col("content_length"),
-            graft.functions.Html.extractText(col("body")).as("clean_text"))
-          .withColumn("n_chars", length(col("clean_text")).cast("long")),
-        "doc_id")
-    },
-    // ---- multi-dimensional agg matrix, final flavor (round-12 verdict
-    // #9): GROUPING SETS with a mixed set list — the (flag, status)
-    // rollup chain PLUS an independent (shipmode) set and the grand
-    // total, i.e. neither a cube (q33) nor a pure rollup, so the Expand
-    // planning is exercised on an irregular lattice. grouping() flags
-    // disambiguate set membership in the output (and are themselves
-    // gated). SQL text matches what a reference user would write; the
-    // cents arithmetic is the SAME generated string on both engines ----
-    "q114_grouping_sets" -> { (s, dir) =>
-      val s2 = s.newSession()
-      Tables.lineitem(s2, dir)
-        .withColumn("l_shipmonth", date_format(col("l_shipdate"), "yyyy-MM"))
-        .createOrReplaceTempView("li")
-      // Partial-aggregate FIRST at the sets' common refinement (guide
-      // §2.3, r18): Spark plans GROUPING SETS as Expand×|sets| over the
-      // BASE rows — 4x the full lineitem stream through the partial
-      // aggregate. Rolling the sets up from the (flag, status, month)
-      // pre-aggregate instead expands ~500 intermediate rows, not 4×600k.
-      // Results are identical by associativity: COUNT(*) == SUM of
-      // refinement counts, SUM == SUM of refinement sums (exact BIGINT
-      // cents — no float reassociation), every set in the list is a
-      // coarsening of the refinement, and a NULL DATA value stays a
-      // grouped value (grouping() = 0) in both forms. Types unchanged
-      // (SUM(BIGINT) = BIGINT). The oracle still states the single
-      // GROUPING SETS pass — same rows, hash-verified. The zero row in
-      // `base` keeps the () row over an empty lineitem, as in q33; HAVING
-      // drops any other group it makes alone.
-      s2.sql(
-        s"""WITH base AS (
-           |  SELECT l_returnflag, l_linestatus, l_shipmonth,
-           |    COUNT(*) AS b_cnt,
-           |    SUM(${ExactAgg.Sql.cents("l_quantity")}) AS b_sum_qty_c
-           |  FROM li
-           |  GROUP BY l_returnflag, l_linestatus, l_shipmonth
-           |  UNION ALL
-           |  SELECT NULL, NULL, NULL, 0L, CAST(NULL AS BIGINT))
-           |SELECT COALESCE(l_returnflag, 'ALL') AS f,
-           |  COALESCE(l_linestatus, 'ALL') AS st,
-           |  COALESCE(l_shipmonth, 'ALL') AS sm,
-           |  CAST(grouping(l_returnflag) AS BIGINT) AS gf,
-           |  CAST(grouping(l_linestatus) AS BIGINT) AS gst,
-           |  CAST(grouping(l_shipmonth) AS BIGINT) AS gsm,
-           |  SUM(b_cnt) AS cnt,
-           |  SUM(b_sum_qty_c) AS sum_qty_c
-           |FROM base
-           |GROUP BY GROUPING SETS (
-           |  (l_returnflag, l_linestatus), (l_returnflag), (l_shipmonth), ())
-           |HAVING SUM(b_cnt) > 0 OR grouping_id() = 7
-           |ORDER BY gf, gst, gsm, f, st, sm""".stripMargin)
-    },
-    // ---- snapshot-isolated lake read (round-13 verdict #1): the reader
-    // pins a MANIFEST — a complete file listing published by one atomic
-    // rename — and reads exactly those immutable files, so concurrent
-    // compaction/append/vacuum can never show it a half-swapped
-    // partition. The fixture runs the whole maintenance timeline (two
-    // appends, the pin, a full compaction that rewrites every file, a
-    // post-pin append, a vacuum); the gate reads the PINNED generation
-    // afterwards and must be row-identical to the pre-compaction state,
-    // which the oracle re-derives from the base table ----
-    "q115_snapshot_read" -> { (s, dir) =>
-      val fixture = ensureSnapshotLake(s, dir)
-      graft.sinks.SnapshotLake.read(s,
-          graft.sinks.SnapshotLake.pin(s, s"$fixture/tbl", generation = 1L))
-        .orderBy("doc_id")
-    },
-    // ---- multi-class in-engine lang-id TRAINING (round-13 verdict #3):
-    // the q109 centroid trainer generalized to K classes — one explode +
-    // (class, bucket) hash agg fit, one (class, bucket, weight) artifact,
-    // argmax serve in one codegen map stage with the K weight tables as
-    // plan constants. The oracle re-derives the ENTIRE loop — labels,
-    // markers, buckets, per-class shares, weights, scores, argmax with
-    // the alphabetical tiebreak — from the base table and the shared
-    // integer constants (the q109 discipline at K=3) ----
-    "q116_langid_train" -> { (s, dir) =>
-      val fixture = ensureLangIdModel(s, dir)
-      val models = QualityClassifier.readMultiModel(s, s"$fixture/model")
-      QualityClassifier.classifyMulti(
-          langIdLabeled(Tables.documents(s, dir)), "__ltext", models)
-        .select("doc_id", "n_feats",
-          "score_de_e4", "score_en_e4", "score_fr_e4", "pred")
-        .orderBy("doc_id")
-    },
-    // ---- deterministic WITH-REPLACEMENT upsampling (round-13 verdict
-    // #4): epoch mixing's missing half — rates above 1.0 epoch ("2.3x
-    // wikipedia") emit floor(rate) unconditional replicas plus a
-    // fractional replica drawn by a per-replica salted key hash, so the
-    // draw is content-stable, replay-identical and monotone in the rate.
-    // One explode + a codegen predicate, no shuffle before the
-    // presentation sort; the oracle re-derives every replica decision
-    // from the shared md5 formula (the q56 basis-point discipline) ----
-    "q117_epoch_upsample" -> { (s, dir) =>
-      Sampling.upsampleByStratum(
-          Tables.documents(s, dir).select("doc_id", "lang"),
-          "doc_id", "lang",
-          ratesE4 = Map("en" -> 23000, "de" -> 15000, "fr" -> 10000, "zh" -> 4000),
-          defaultE4 = 7500, salt = "mix-v1")
-        .orderBy("doc_id", "replica")
-    },
-    // ---- skewed-join hardening (round-13 verdict #6): a deliberately
-    // skewed fact key (30% of docs on one company — the reference-analog
-    // dimension skew) joined through ops.SkewJoin.saltedJoin, which
-    // splits the hot key across 16 tasks STRUCTURALLY (dim replicated
-    // per salt, fact salt drawn from the row id) instead of relying on
-    // AQE's runtime size thresholds. Row-identical to the plain join by
-    // construction — which is exactly what the oracle checks (DuckDB
-    // joins without any salt); SkewJoinSpec pins the salted exchanges
-    // and the 16-way hot-key spread under no-broadcast ----
-    "q118_skew_salted_join" -> { (s, dir) =>
-      val d = col("doc_id")
-      val facts = Tables.documents(s, dir).select(d.as("doc_id"),
-        when(d % 10 < 3, "MEGACORP")
-          .otherwise(concat(lit("co_"), (d % 50).cast("string"))).as("company"),
-        col("n_chars"))
-      val dim = s.range(50).select(
-          concat(lit("co_"), col("id").cast("string")).as("company"),
-          (col("id") % 7).as("region"))
-        .unionByName(s.range(1).select(
-          lit("MEGACORP").as("company"), lit(9L).as("region")))
-      graft.ops.SkewJoin.saltedJoin(facts, dim, "company",
-          saltFrom = col("doc_id"), salts = 16)
-        .select("doc_id", "company", "region", "n_chars")
-        .orderBy("doc_id")
-    },
-    // ---- BM25 retrieval over the persisted inverted index: pseudo-queries
-    // (each probe doc's top-3 tokens) ranked top-10 by exact int64 BM25 —
-    // k1=6/5, b=3/4 make every tf-norm constant rational, and the one
-    // transcendental (idf) is quantized ONCE at build time into the terms
-    // table, which the oracle JOINS (the q101 shared-artifact discipline:
-    // no float crosses the engine boundary). Serving never scans text:
-    // probes ⋈ postings ⋈ terms ⋈ doc-norms, per-query sum, WindowGroupLimit
-    // top-k ----
-    "q119_bm25_retrieval" -> { (s, dir) =>
-      val idx = ensureBm25Index(s, dir)
-      val probes = Bm25.pseudoQueries(
-        Tables.documents(s, dir), "text", "doc_id", nQueries = 8, termsPerQuery = 3)
-      Bm25.search(s, probes, idx, k = 10).orderBy("query_id", "rank")
-    },
-    // ---- hard-negative mining: BM25 top-n (lexically close, self
-    // excluded) × embedding cosine against the query doc's own vector
-    // (semantically far at cosine <= 0 on this near-uniform synthetic
-    // corpus) — the negatives source for training retrieval/embedding
-    // models. sim rounds to 4 decimals and the hard flag compares the
-    // ROUNDED value (both the q28 cross-engine contract) ----
-    "q120_hard_negatives" -> { (s, dir) =>
-      val idx = ensureBm25Index(s, dir)
-      val probes = Bm25.pseudoQueries(
-        Tables.documents(s, dir), "text", "doc_id", nQueries = 8, termsPerQuery = 3)
-      Bm25.hardNegatives(s, probes, idx, Tables.embeddings(s, dir), n = 10)
-        .orderBy("query_id", "rank")
-    },
-    // ---- unigram-LM (SentencePiece-style) tokenization: EM-trained piece
-    // probabilities, Viterbi encode in one codegen map pass with the
-    // quantized (piece, lp_e4) table as a plan constant. Gated over the
-    // exotic-injected corpus so the unknown-cp path (Greek/CJK/astral
-    // suffixes outside the training alphabet) is exercised; differential
-    // vs the independently-structured naive Viterbi's expected table ----
-    "q121_unigram_tokenize" -> { (s, dir) =>
-      val fixture = ensureUnigramFixture(s, dir)
-      val model = graft.functions.Unigram.readModel(s, s"$fixture/model")
-      exoticInjected(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          graft.functions.Unigram.encodeStats(col("text"), model).as("u"))
-        .select(col("doc_id"), col("u.n_tokens").as("n_tokens"),
-          col("u.n_unk").as("n_unk"), col("u.nll_e4").as("nll_e4"),
-          col("u.tokens").as("tokens"))
-        .orderBy("doc_id")
-    },
-    // ---- BM25 over the INCREMENTAL index: the q119 retrieval served from
-    // an install(gen 0: even docs) + append(gen 1: odd docs) + refresh
-    // artifact — proves the generational fact fold reproduces the one-shot
-    // arithmetic all the way through the DuckDB gate ----
-    "q122_bm25_index_append" -> { (s, dir) =>
-      val idx = ensureBm25IncIndex(s, dir)
-      val probes = Bm25.pseudoQueries(
-        Tables.documents(s, dir), "text", "doc_id", nQueries = 8, termsPerQuery = 3)
-      Bm25.search(s, probes, Bm25.indexRoot(idx), k = 10).orderBy("query_id", "rank")
-    },
-    // ---- the q119 serve from a TERM-BUCKETED postings layout (the
-    // q77/q80 catalog machinery): the probe's distinct terms become a
-    // literal IN filter on the bucket column, so the postings scan opens
-    // ONLY the buckets holding probed terms (SelectedBucketsCount in the
-    // plan — at a 100 TB postings table, |probe terms| buckets instead of
-    // listing the lake) and still reaches its join with zero Exchange.
-    // Same exact integers, same oracle as q119 — the layout is the only
-    // variable, which is exactly the claim under test ----
-    "q123_bm25_bucketed_serve" -> { (s, dir) =>
-      val idx = ensureBm25Index(s, dir)
-      val tbl = ensureBm25BucketedPostings(s, dir)
-      val probes = Bm25.pseudoQueries(
-        Tables.documents(s, dir), "text", "doc_id", nQueries = 8, termsPerQuery = 3)
-      Bm25.searchBucketed(s, probes, tbl, idx, k = 10).orderBy("query_id", "rank")
-    },
-    // ---- retrieval-based decontamination: the near-verbatim/paraphrase
-    // layer winnowing (q55/q82) cannot see — every train doc's top-1
-    // shingle-BM25 match against the indexed eval suites, flagged on the
-    // per-shingle normalized score (raw top-1 is length-confounded).
-    // Train side = the clean slices ∪ INJECTED light-edit copies of eval
-    // docs (id + 1e6, 'edited copy ' prefix — the q57 replay-injection
-    // discipline): every injected leak must flag, and the handful of
-    // natural flags are the corpus's engineered near-dup cliques
-    // straddling the eval slice — true contamination, not noise ----
-    "q124_retrieval_decontam" -> { (s, dir) =>
-      val idx = ensureBm25EvalIndex(s, dir)
-      val docs = Tables.documentsHeavy(s, dir)
-      val clean = docs.filter(col("doc_id") % 20 =!= 7 && col("doc_id") % 20 =!= 8)
-      val leaked = docs.filter(col("doc_id") % 20 === 7)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("text", concat(lit("edited copy "), col("text")))
-      // NOT orderedOnce: measured (PLANS.md r16), the presentation sort
-      // adds ~nothing here — the last shuffle sits right below the top-1
-      // window, so the RangePartitioner's sampling pass re-reads shuffle
-      // output, not the shingle explode. The cost IS the report pipeline.
-      Bm25.contaminationReport(clean.unionByName(leaked), "text", "doc_id", idx)
-        .orderBy("doc_id")
-    },
-    // ---- q102's packing under the UNIGRAM tokenizer — the family-
-    // agnostic serialization claim made executable (one Tokenizer
-    // interface, one packer, the model family as the only variable).
-    // Runs over the exotic-injected corpus so the counts exercise the
-    // unknown-codepoint path, and the oracle joins the SAME persisted
-    // expected table q121 differentials against ----
-    "q125_unigram_packing" -> { (s, dir) =>
-      val fixture = ensureUnigramFixture(s, dir)
-      val model = graft.functions.Unigram.readModel(s, s"$fixture/model")
-      Packing.packByTokenizer(
-        exoticInjected(Tables.documents(s, dir)), "text", "doc_id",
-        graft.functions.Tokenizer.unigram(model), budget = 1024, shards = 8)
-        .orderBy("doc_id")
-    },
-    // ---- q105's token-ID serving surface under the UNIGRAM family,
-    // through the unified Tokenizer trait (round-15 verdict #4): piece id
-    // = index in the model's canonical lexicographic piece order (the id
-    // vocabulary IS the model — no second artifact), OOV = the reserved
-    // |pieces| id, recorded as oov=unkid in the model layout. Runs over
-    // the exotic-injected corpus so unknown code points exercise the OOV
-    // path; the oracle joins the expected-ids table the independently-
-    // structured naive encoder (fold/minBy Viterbi + Map lookup vs the
-    // production array loop + binary search) persisted at fixture build ----
-    "q126_unigram_token_ids" -> { (s, dir) =>
-      val fixture = ensureUnigramFixture(s, dir)
-      val model = graft.functions.Unigram.readModel(s, s"$fixture/model")
-      exoticInjected(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          graft.functions.Tokenizer.unigram(model).encodeIds(col("text")).as("e"))
-        .select(col("doc_id"),
-          col("e.n_tokens").as("n_tokens"),
-          col("e.n_oov").as("n_oov"),
-          col("e.ids").as("ids"))
-        .orderBy("doc_id")
-    },
-    // ---- the q124 threshold-recalibration recipe as a GATED operator
-    // (r15 stretch #8 made first-class): score a known-clean SAMPLE (the
-    // %20==1 slice — the recipe calibrates on samples, not the corpus)
-    // and a known-leaked sample (the q124 injection) against the same
-    // eval index, emit the one-row separation report. Every column is
-    // exact integer arithmetic the oracle re-derives through the q124
-    // CTE chain plus two population aggregates; `separated`/`suggested`
-    // are corpus facts the differential pins, not assertions ----
-    "q127_decontam_calibration" -> { (s, dir) =>
-      val idx = ensureBm25EvalIndex(s, dir)
-      val docs = Tables.documents(s, dir)
-      val clean = docs.filter(col("doc_id") % 20 === 1)
-      val leaked = docs.filter(col("doc_id") % 20 === 7)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .withColumn("text", concat(lit("edited copy "), col("text")))
-      Bm25.calibrateContaminationThreshold(clean, leaked, "text", "doc_id", idx)
-    },
-    // ---- q111's OOV-impossible serialization claim extended to the
-    // UNIGRAM family (r16 verdict gap: byte-fallback was one-family
-    // only): the q126 model's pieces under the oov=bytes story — an
-    // unknown code point decomposes into its UTF-8 bytes through the
-    // reserved tier |pieces|..|pieces|+255 (SentencePiece byte_fallback),
-    // so every exotic-injected doc serializes without information loss;
-    // n_oov reports the byte-tier fallback mass. The story round-trips
-    // through its own persisted model artifact (oov=bytes in the layout
-    // — a consumer can never decode shards under the wrong convention),
-    // and the oracle joins the independent naive encoder's expected
-    // table under the same story ----
-    "q128_unigram_byte_ids" -> { (s, dir) =>
-      val fixture = ensureUnigramFixture(s, dir)
-      val model = graft.functions.Unigram.readModel(s, s"$fixture/model_bytes")
-      exoticInjected(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          graft.functions.Tokenizer.unigram(model).encodeIds(col("text")).as("e"))
-        .select(col("doc_id"),
-          col("e.n_tokens").as("n_tokens"),
-          col("e.n_oov").as("n_oov"),
-          col("e.ids").as("ids"))
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: the Gopher repetition-filter family (top 2-4-gram
-    // fraction + duplicated 5-10-gram fraction, occurrence-weighted exact
-    // e6 — graft.functions.Repetition) as ONE codegen map pass per doc:
-    // no explode, no shuffle — repetition is a function of one document,
-    // so at 100 TB it must not pay the (doc, ngram) exchange that
-    // cross-document statistics legitimately do. gopher_ok applies the
-    // paper's published ceilings (one shared constant with the oracle) ----
-    "q129_repetition_signals" -> { (s, dir) =>
-      import graft.functions.Repetition
-      val fields = Repetition.SignalFields
-      val gate = fields.zip(Repetition.GateMaxE6)
-        .map { case (f, m) => col(s"r.$f") <= m }
-        .reduce(_ && _)
-      Tables.documentsHeavy(s, dir)
-        .select(col("doc_id"), Repetition.signals(col("text")).as("r"))
-        .select(col("doc_id") +: col("r.n_tokens").as("n_tokens") +:
-          fields.map(f => col(s"r.$f").as(f)) :+
-          gate.cast("long").as("gopher_ok"): _*)
-        .orderBy("doc_id")
-    },
-    // ---- LLM-pipeline: KMV distinct-count sketch (bottom-k theta family,
-    // graft.functions.Kmv) as the corpus cardinality monitor — mergeable
-    // bounded state through the partial-aggregate machinery instead of a
-    // full distinct shuffle. Built on the engine's shared md5-60bit hash,
-    // so unlike HLL++ the oracle re-derives the k-minima, the estimator
-    // and the relative error BIT-IDENTICALLY from the base table: a full
-    // value gate on a sketch (k=32 saturates on every lang at gate SFs —
-    // the estimator path, not the exact fallback, is what's gated) ----
-    "q130_kmv_cardinality" -> { (s, dir) =>
-      graft.functions.Kmv
-        .distinctReport(Tables.documents(s, dir), "lang", "text", k = KmvK)
-        .orderBy("lang")
-    },
-    // ---- LLM-pipeline: DSIR importance resampling (Xie et al. 2023,
-    // graft.functions.Dsir) — select raw-corpus docs whose hashed n-gram
-    // distribution looks like the target slice. Importance weights
-    // quantize once at fixture build (persisted via the quality-model
-    // artifact), Gumbel-top-n noise comes from a persisted quantized
-    // inverse-CDF table indexed by the salted key hash, and selection is
-    // a threshold predicate against the distributed n-th rank — never a
-    // partitionless window. Oracle re-derives every integer from the two
-    // persisted tables and ranks with the same (key desc, id) order ----
-    "q131_dsir_resample" -> { (s, dir) =>
-      val fixture = ensureDsirFixture(s, dir)
-      val model = graft.functions.QualityClassifier.readModel(s, s"$fixture/model")
-      graft.functions.Dsir.importanceResample(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 3),
-        "text", "doc_id", model, n = DsirN, salt = DsirSalt)
-        .orderBy("doc_id")
-    }
-  )
-
-  /** q130 sketch size: small enough that every lang group saturates at
-    * sf0.001 (the estimator path is the gated one), large enough for
-    * ~18% theoretical standard error — a monitor, not a count.
-    */
-  private val KmvK = 32
-
-  /** Evaluate a finished gate result ONCE before its presentation sort.
-    * `orderBy`'s RangePartitioner samples its child to pick split points,
-    * which re-executes the child a second time — but only down to the
-    * nearest shuffle boundary, because shuffle output is reused, not
-    * recomputed. So this matters exactly when the sort's child contains
-    * NO exchange (q113: container read → parse → project, re-scanned in
-    * full by the sampling pass — measured 1.30 s plain vs 0.83 s
-    * persisted at sf0.1), and is a measured no-op when an exchange sits
-    * directly below the sort (q124, q53 — see PLANS.md r16). Persisting
-    * the finished result is what a user materializing results would do:
-    * the sampling pass populates the cache, the sort reads it, and the
-    * harnesses clear the cache between queries.
-    */
-  private def orderedOnce(df: DataFrame, cols: String*): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .orderBy(cols.map(col): _*)
-
-  /** PQ model shape for the q90/q91 gates: 16 subspaces × 16 codes over
-    * the 64-dim embeddings = 16 bytes/vector (16× vs float32) — chosen by
-    * a recall sweep on the near-uniform synthetic embeddings (m=8's 32×
-    * codes recall 0.53-0.73 at 5k shortlist; m=16 at 10k recalls
-    * 0.88-0.99, see PLANS.md).
-    */
-  private val PqM = 16
-  private val PqK = 16
-  private val PqIters = 3
-
-  // DuckDB mirrors of the exact-integer aggregate arithmetic — generated by
-  // the same module as the Spark side (graft.functions.ExactAgg) so the two
-  // formulas cannot drift.
-  private def sqlCents(x: String): String = ExactAgg.Sql.cents(x)
-  private def sqlAvg2dp(x: String): String = ExactAgg.Sql.avg2dp(x)
-  private def sqlAvgLong(x: String): String = ExactAgg.Sql.avgLong(x)
-
-  /** Generated DuckDB oracle for q26: the full MinHash/LSH pipeline in SQL —
-    * same md5-derived token hashes (`0x`-hex cast ≡ Spark's `conv(_,16,10)`),
-    * same permutation constants from [[Dedup.minhashCoeffs]], same band md5
-    * keys and agreement count. Everything is integer arithmetic except the
-    * final est_jaccard = agree/128, a dyadic rational both engines round
-    * identically.
-    */
-  /** The CTE chain ending in `scored(a_id, b_id, est_jaccard)` — shared by
-    * the q26 oracle, the q48 duplicate-cluster oracle and the q53 curation
-    * pipeline (which points it at a derived relation instead of the raw
-    * documents table).
-    */
-  private def minhashScoredCte(
-      nHashes: Int,
-      nBands: Int,
-      seed: Long,
-      src: String = "documents",
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxBandBucket: Int = Int.MaxValue): String = {
-    val p = Dedup.minhashP
-    val rows = nHashes / nBands
-    val minAggs = (0 until nHashes).map { i =>
-      val (a, b) = Dedup.minhashCoeffs(i, seed)
-      s"MIN((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n    ")
-    val bandSelects = (0 until nBands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => s"m$i").mkString(", ")
-      s"SELECT id, md5(concat_ws('_', '$b', $cols)) AS band FROM sig"
-    }.mkString("\n  UNION ALL\n  ")
-    // parenthesize in chunks of 16: a flat 128-term `+` chain left-associates
-    // into a 128-deep expression tree and trips DuckDB's binder recursion cap
-    val agree = (0 until nHashes)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .grouped(16).map(_.mkString("(", " + ", ")")).mkString(" + ")
-    // Mirror of minhashCandidates' hot-bucket cap: buckets above the cap are
-    // excluded from pair generation (same CTE shape as the q29 LSH oracle).
-    val pairSrc =
-      if (maxBandBucket == Int.MaxValue) "banded"
-      else s"""(SELECT banded.* FROM banded
-              |   JOIN (SELECT band FROM banded GROUP BY band
-              |         HAVING COUNT(*) <= $maxBandBucket) okb USING (band))""".stripMargin
-    s"""toks AS (
-       |  SELECT $idCol AS id, unnest(list_distinct(string_split($textCol, ' '))) AS tok FROM $src),
-       |hashed AS (
-       |  SELECT id, CAST(concat('0x', substring(md5(tok), 1, 15)) AS BIGINT) % $p AS h FROM toks),
-       |sig AS (
-       |  SELECT id,
-       |    $minAggs
-       |  FROM hashed GROUP BY id),
-       |banded AS (
-       |  $bandSelects),
-       |pairs AS (
-       |  SELECT DISTINCT a.id AS a_id, b.id AS b_id
-       |  FROM $pairSrc a JOIN $pairSrc b ON b.band = a.band AND a.id < b.id),
-       |scored AS (
-       |  SELECT p.a_id, p.b_id, ROUND(CAST(($agree) AS DOUBLE) / $nHashes, 4) AS est_jaccard
-       |  FROM pairs p JOIN sig sa ON sa.id = p.a_id JOIN sig sb ON sb.id = p.b_id)""".stripMargin
-  }
-
-  /** Band-index hyperparameters (q78). 8 bands × 8 rows targets an LSH
-    * match threshold of (1/8)^(1/8) ≈ 0.77 — finer than q26's 4 × 16
-    * (≈0.92) so one-token near-replays of median-25-distinct-token docs
-    * (j ≈ 0.96) collide with near-certainty. Part of the index fixture's
-    * identity → folded into the stamp.
-    */
-  private[graft] val BandIdxHashes = 64
-  private[graft] val BandIdxBands = 8
-  private[graft] val BandIdxSeed = 42L
-  private[graft] val BandIdxMinJ = 0.85
-  private[graft] val BandIdxCap = 200
-
-  /** Generated DuckDB oracle for q78: both index generations' acceptance
-    * restated independently from TEXT — signatures and band keys recomputed
-    * with the exact q26 SQL machinery (same md5-derived hashes, same
-    * [[Dedup.minhashCoeffs]] constants, same band md5s, same chunked
-    * agreement sum), then generation 1 = batch-1 ids minus band-collision
-    * pairs against history with est ≥ minJ, and the output = batch-2 ids
-    * minus the same construction against (history ∪ generation 1). The
-    * hot-band cap mirrors as HAVING COUNT(*) ≤ cap on the index side of
-    * each probe (equivalent to the engine's collision-set count: a
-    * LEFT SEMI keeps every index row of a colliding band).
-    */
-  private def bandIndexOracleSql(
-      nHashes: Int, nBands: Int, seed: Long, minJ: Double, cap: Int): String = {
-    val p = Dedup.minhashP
-    val rows = nHashes / nBands
-    val minAggs = (0 until nHashes).map { i =>
-      val (a, b) = Dedup.minhashCoeffs(i, seed)
-      s"MIN((h * $a + $b) % $p) AS m$i"
-    }.mkString(",\n    ")
-    val bandSelects = (0 until nBands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => s"m$i").mkString(", ")
-      s"SELECT id, md5(concat_ws('_', '$b', $cols)) AS band FROM sig"
-    }.mkString("\n  UNION ALL\n  ")
-    val agree = (0 until nHashes)
-      .map(i => s"CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END")
-      .grouped(16).map(_.mkString("(", " + ", ")")).mkString(" + ")
-    s"""WITH hist AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-       |b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 = 1),
-       |b2 AS (
-       |  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 3
-       |  UNION ALL
-       |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 20 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 3000000, text || ' qq' FROM documents WHERE doc_id % 20 = 2
-       |  UNION ALL
-       |  SELECT doc_id + 4000000, text || ' qq' FROM documents WHERE doc_id % 20 = 1),
-       |alldocs AS (
-       |  SELECT doc_id, text FROM hist
-       |  UNION ALL SELECT doc_id, text FROM b1
-       |  UNION ALL SELECT doc_id, text FROM b2),
-       |toks AS (
-       |  SELECT doc_id AS id, unnest(list_distinct(string_split(text, ' '))) AS tok FROM alldocs),
-       |hashed AS (
-       |  SELECT id, CAST(concat('0x', substring(md5(tok), 1, 15)) AS BIGINT) % $p AS h FROM toks),
-       |sig AS (
-       |  SELECT id,
-       |    $minAggs
-       |  FROM hashed GROUP BY id),
-       |banded AS (
-       |  $bandSelects),
-       |hb1 AS (SELECT b.* FROM banded b JOIN hist h ON h.doc_id = b.id),
-       |okb1 AS (SELECT band FROM hb1 GROUP BY band HAVING COUNT(*) <= $cap),
-       |near1 AS (
-       |  SELECT DISTINCT p.b_id FROM (
-       |    SELECT DISTINCT bb.id AS b_id, hb.id AS h_id
-       |    FROM banded bb
-       |    JOIN b1 x ON x.doc_id = bb.id
-       |    JOIN hb1 hb ON hb.band = bb.band
-       |    JOIN okb1 ok ON ok.band = hb.band) p
-       |  JOIN sig sa ON sa.id = p.b_id JOIN sig sb ON sb.id = p.h_id
-       |  WHERE ROUND(CAST(($agree) AS DOUBLE) / $nHashes, 4) >= $minJ),
-       |acc1 AS (
-       |  SELECT doc_id FROM b1
-       |  WHERE NOT EXISTS (SELECT 1 FROM near1 n WHERE n.b_id = b1.doc_id)),
-       |idx2 AS (SELECT doc_id FROM hist UNION ALL SELECT doc_id FROM acc1),
-       |hb2 AS (SELECT b.* FROM banded b JOIN idx2 i ON i.doc_id = b.id),
-       |okb2 AS (SELECT band FROM hb2 GROUP BY band HAVING COUNT(*) <= $cap),
-       |near2 AS (
-       |  SELECT DISTINCT p.b_id FROM (
-       |    SELECT DISTINCT bb.id AS b_id, hb.id AS h_id
-       |    FROM banded bb
-       |    JOIN b2 x ON x.doc_id = bb.id
-       |    JOIN hb2 hb ON hb.band = bb.band
-       |    JOIN okb2 ok ON ok.band = hb.band) p
-       |  JOIN sig sa ON sa.id = p.b_id JOIN sig sb ON sb.id = p.h_id
-       |  WHERE ROUND(CAST(($agree) AS DOUBLE) / $nHashes, 4) >= $minJ)
-       |SELECT doc_id FROM b2
-       |WHERE NOT EXISTS (SELECT 1 FROM near2 n WHERE n.b_id = b2.doc_id)
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** Generated DuckDB oracle for LM scoring against a persisted artifact
-    * (q101 full-trained order 2, q108 incrementally-grown, q110 order 3):
-    * ONE scoring SQL — single-space transitions at the model's order
-    * (context = the n−1 preceding tokens space-joined), the hit →
-    * known-context → global-floor coalesce ladder over the artifact
-    * tables, the shared half-up mean — so the gates cannot drift; q101
-    * additionally appends its fluency band ladder.
-    */
-  private def lmScoringOracleSql(
-      modelRoot: String, withBand: Boolean, order: Int = 2): String = {
-    val core =
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |tr AS (
-         |  SELECT doc_id,
-         |    array_to_string(t[CAST(i AS INT):CAST(i AS INT) + ${order - 2}], ' ') AS w1,
-         |    t[CAST(i AS INT) + ${order - 1}] AS w2
-         |  FROM toks, UNNEST(range(1, len(t) - ${order - 2})) AS u(i)),
-         |lp AS (
-         |  SELECT tr.doc_id,
-         |    COALESCE(b.lp_e4, un.miss_lp_e4,
-         |      (SELECT lp0_e4 FROM read_parquet('$modelRoot/defaults/*.parquet'))) AS l
-         |  FROM tr
-         |  LEFT JOIN read_parquet('$modelRoot/bigrams/*.parquet') b
-         |    ON tr.w1 = b.w1 AND tr.w2 = b.w2
-         |  LEFT JOIN read_parquet('$modelRoot/unigrams/*.parquet') un
-         |    ON tr.w1 = un.w1),
-         |s AS (
-         |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_transitions,
-         |    CAST(SUM(l) AS BIGINT) AS lps
-         |  FROM lp GROUP BY doc_id),
-         |scored AS (
-         |  SELECT d.doc_id,
-         |    COALESCE(s.n_transitions, 0) AS n_transitions,
-         |    COALESCE(CAST(${ExactAgg.Sql.divHalfUp("s.lps", "s.n_transitions")} AS BIGINT), 0) AS ppl_e4
-         |  FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id)
-         |""".stripMargin
-    if (withBand)
-      core +
-        """SELECT doc_id, n_transitions, ppl_e4,
-          |  CASE WHEN n_transitions = 0 THEN 'empty'
-          |       WHEN ppl_e4 < 80000 THEN 'fluent'
-          |       WHEN ppl_e4 < 120000 THEN 'mid'
-          |       ELSE 'suspect' END AS band
-          |FROM scored ORDER BY doc_id""".stripMargin
-    else
-      core + "SELECT doc_id, n_transitions, ppl_e4 FROM scored ORDER BY doc_id"
-  }
-
-  private def minhashOracleSql(
-      nHashes: Int, nBands: Int, seed: Long,
-      src: String = "documents"): String =
-    s"""WITH ${minhashScoredCte(nHashes, nBands, seed, src = src)}
-       |SELECT a_id, b_id, est_jaccard FROM scored WHERE est_jaccard >= 0.9
-       |ORDER BY a_id, b_id""".stripMargin
-
-  /** q48 oracle: the q26 candidate pairs, transitively closed with a
-    * recursive CTE; min reachable id per node = the cluster representative.
-    */
-  private def dupClustersOracleSql(nHashes: Int, nBands: Int, seed: Long): String =
-    s"""WITH RECURSIVE ${minhashScoredCte(nHashes, nBands, seed)},
-       |cand AS (SELECT a_id, b_id FROM scored WHERE est_jaccard >= 0.9),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM cand
-       |  UNION
-       |  SELECT b_id AS src, a_id AS dst FROM cand),
-       |reach(id, l) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, r.l FROM edges e JOIN reach r ON r.id = e.dst)
-       |SELECT id AS doc_id, CAST(MIN(l) AS BIGINT) AS rep
-       |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
-
-  /** Generated DuckDB oracle for q27: per-bit ±1 votes over distinct-token
-    * hashes, mirroring [[Dedup.simhashSignatures]] in pure integer SQL.
-    */
-  private def simhashOracleSql(nBits: Int): String = {
-    val votes = (0 until nBits)
-      .map(b => s"SUM(CASE WHEN ((h >> $b) & 1) = 1 THEN 1 ELSE -1 END) AS v$b")
-      .mkString(",\n    ")
-    val fp = (0 until nBits)
-      .map(b => s"CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok FROM documents),
-       |hashed AS (
-       |  SELECT doc_id, CAST(concat('0x', substring(md5(tok), 1, 15)) AS BIGINT) AS h FROM toks),
-       |votes AS (
-       |  SELECT doc_id,
-       |    $votes
-       |  FROM hashed GROUP BY doc_id)
-       |SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM votes ORDER BY doc_id""".stripMargin
-  }
-
-  /** Generated DuckDB oracle for q29: random-hyperplane buckets rebuilt
-    * from [[Similarity.lshCoeffMantissa]] — each coefficient is m/2^52 − 1,
-    * exact dyadic arithmetic both engines evaluate identically — followed by
-    * the same bucket-size cap, same-bucket pairing and cosine re-rank
-    * (list_cosine_similarity ≡ the native expression, proven by q28).
-    */
-  /** The CTE chain ending in `simpairs(a_id, b_id, sim)` — shared by the
-    * q29 oracle and the q51 embedding-dedup oracle.
-    */
-  private def lshSimPairsCte(dims: Int, nBits: Int, seed: Long, maxBucket: Int): String = {
-    val bits = (0 until nBits).map { b =>
-      val dot = (0 until dims).map { d =>
-        val m = functions.Similarity.lshCoeffMantissa(b, d, seed)
-        s"e[${d + 1}] * ($m / 4503599627370496.0 - 1.0)"
-      }.mkString(" + ")
-      s"CASE WHEN ($dot) >= 0 THEN ${1L << b} ELSE 0 END"
-    }.mkString("\n    + ")
-    s"""ids AS (
-       |  SELECT vec_id,
-       |    ($bits) AS bucket
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings) t),
-       |ok AS (SELECT bucket FROM ids GROUP BY bucket HAVING COUNT(*) <= $maxBucket),
-       |f AS (SELECT i.vec_id, i.bucket FROM ids i JOIN ok USING (bucket)),
-       |bpairs AS (
-       |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |  FROM f a JOIN f b ON b.bucket = a.bucket AND a.vec_id < b.vec_id),
-       |simpairs AS (
-       |  SELECT a_id, b_id,
-       |    ROUND(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])), 4) AS sim
-       |  FROM bpairs
-       |  JOIN embeddings ea ON ea.vec_id = a_id
-       |  JOIN embeddings eb ON eb.vec_id = b_id)""".stripMargin
-  }
-
-  private def lshAnnOracleSql(dims: Int, nBits: Int, seed: Long, maxBucket: Int): String =
-    s"""WITH ${lshSimPairsCte(dims, nBits, seed, maxBucket)}
-       |SELECT a_id, b_id, sim FROM simpairs ORDER BY a_id, b_id""".stripMargin
-
-  /** q51 oracle: LSH cosine pairs thresholded into near-dup edges, closed
-    * transitively (same recursive shape as the q48 oracle).
-    */
-  private def embeddingDedupOracleSql(
-      dims: Int, nBits: Int, seed: Long, maxBucket: Int, minSim: Double): String =
-    s"""WITH RECURSIVE ${lshSimPairsCte(dims, nBits, seed, maxBucket)},
-       |cand AS (SELECT a_id, b_id FROM simpairs WHERE sim >= $minSim),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM cand
-       |  UNION
-       |  SELECT b_id AS src, a_id AS dst FROM cand),
-       |reach(id, l) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, r.l FROM edges e JOIN reach r ON r.id = e.dst)
-       |SELECT id AS vec_id, CAST(MIN(l) AS BIGINT) AS rep
-       |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin
-
-  /** q53 oracle: the curation pipeline composed from the stages' own SQL —
-    * the q41 scrub regexes, the q21 quality bounds, the q20 fingerprint
-    * dedup, the q26/q48 MinHash-CC chain re-pointed at the deduped
-    * relation, and the q49 split bucket.
-    */
-  /** q53's production posture: a FINITE band-bucket cap. Exact dedup runs
-    * before MinHash in the curation pipeline, so any remaining band bucket
-    * above this size is boilerplate near-dup mass whose b(b−1)/2 pair
-    * explosion LSH exists to avoid; the exhaustive-pairs contract stays on
-    * q26/q48, which keep the uncapped default. One constant feeds both the
-    * Spark call and the generated oracle, so they cannot drift.
-    */
-  private val curationMaxBandBucket = 200
-
-  private def curationOracleSql(nHashes: Int, nBands: Int, seed: Long): String = {
-    val scrub =
-      """trim(regexp_replace(regexp_replace(regexp_replace(text,
-        |    'https?://[^ ]+', '', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '', 'g'),
-        |    '  +', ' ', 'g'))""".stripMargin
-    s"""WITH RECURSIVE base AS (
-       |  SELECT doc_id, $scrub AS stext FROM documents),
-       |quality AS (
-       |  SELECT doc_id, stext FROM base
-       |  WHERE len(string_split(stext, ' ')) BETWEEN 5 AND 5000),
-       |ex AS (
-       |  SELECT doc_id, stext FROM (
-       |    SELECT doc_id, stext,
-       |      ROW_NUMBER() OVER (PARTITION BY md5(stext) ORDER BY doc_id) AS rn
-       |    FROM quality) t
-       |  WHERE rn = 1),
-       |${minhashScoredCte(nHashes, nBands, seed, src = "ex", textCol = "stext",
-            maxBandBucket = curationMaxBandBucket)},
-       |cand AS (SELECT a_id, b_id FROM scored WHERE est_jaccard >= 0.9),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM cand
-       |  UNION
-       |  SELECT b_id AS src, a_id AS dst FROM cand),
-       |reach(id, l) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, r.l FROM edges e JOIN reach r ON r.id = e.dst),
-       |reps AS (SELECT id, MIN(l) AS rep FROM reach GROUP BY id),
-       |kept AS (
-       |  SELECT e.doc_id, e.stext FROM ex e
-       |  LEFT JOIN reps r ON r.id = e.doc_id
-       |  WHERE r.rep IS NULL OR r.rep = e.doc_id)
-       |SELECT
-       |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-       |  COUNT(*) AS cnt, CAST(SUM(length(stext)) AS BIGINT) AS sum_chars
-       |FROM (
-       |  SELECT stext,
-       |    CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b
-       |  FROM kept) t
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Shared WHERE clause of the enrichment pipeline's validation filter. */
-  private val enrichWhere =
-    "event_id IS NOT NULL AND event_type IS NOT NULL AND trim(event_type) <> ''"
-
-  /** Enrichment expressions shared by the q10-q13 oracles (DuckDB dialect).
-    * dayofweek: DuckDB is Sunday=0 natively; Spark side uses dayofweek()-1.
-    */
-  private val oracleK = "CAST(json_extract_string(props, '$.k') AS INTEGER)"
-  private val oracleCategory =
-    """CASE WHEN regexp_matches(event_type, '(?i)click|view') THEN 'Engagement'
-      |     WHEN regexp_matches(event_type, '(?i)purchase') THEN 'Commerce'
-      |     WHEN regexp_matches(event_type, '(?i)signup') THEN 'Acquisition'
-      |     WHEN regexp_matches(event_type, '(?i)error') THEN 'Reliability'
-      |     ELSE 'Other' END""".stripMargin
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map(registry.map(q => q.id -> q.build): _*)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. The MinHash/SimHash/LSH oracles are generated
@@ -3757,1684 +49,23 @@ object SparkEntry {
     * exact aggregates plus `true` for every in-engine error-bound flag.
     * Every registry query is oracled.
     *
-    * The two fixture-reading oracles (q47, q79) interpolate the SF-SCOPED
-    * fixture path, so the map is parameterized by the sfDir the dump ran
-    * against ([[oracleSqlFor]]); `Verify` emits `oracleSqlFor(sfDir)`.
+    * The fixture-reading oracles interpolate the SF-SCOPED fixture path,
+    * so the map is parameterized by the sfDir the dump ran against
+    * ([[oracleSqlFor]]); `Verify` emits `oracleSqlFor(sfDir)`.
     * The driver contract's bare `oracleSql` stays available and targets
     * the driver's correctness SF (sf0.01, TESTDATA.md).
     */
   def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
 
-  def oracleSqlFor(dir: String): Map[String, String] = Map(
-    // sketch values are engine-internal; the oracle checks what a sketch
-    // actually promises — the exact baseline, and bounded error against it
-    "q39_sketch_stats" ->
-      """SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-        |  CAST(1 AS BIGINT) AS users_ok, CAST(1 AS BIGINT) AS p50_ok
-        |FROM events WHERE event_id % 4 = 0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q60: the flags are deterministic for ANY correct sketch (estimate in
-    // [1, n_rows]; median inside [min, max]) — the oracle predicts them
-    // exactly, including the degenerate all-NULL-group case where the
-    // Spark side coalesces the NULL flag to a loud 0
-    "q60_sketch_production" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |  CAST(CASE WHEN COUNT(user_id) > 0 THEN 1 ELSE 0 END AS BIGINT) AS users_ok,
-        |  CAST(CASE WHEN COUNT(value) > 0 THEN 1 ELSE 0 END AS BIGINT) AS p50_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // q61: the oracle is the parquet twin of the ORC fixture's source
-    // slice — equality proves the ORC write+read round trip is lossless
-    "q61_orc_lake" ->
-      """SELECT event_id, user_id, event_type, value FROM events
-        |WHERE event_type = 'click' AND event_id < 1000
-        |ORDER BY event_id""".stripMargin,
-    // q65: the expectation is derived INDEPENDENTLY from the source events
-    // table (round-6 advice: an oracle that reads the Spark-written lake
-    // would reproduce a fixture-build bug — wrong partition values, dropped
-    // rows — and pass). Spark reads the lake through the pruned scan, DuckDB
-    // recomputes the partition's rows from source, so equality closes the
-    // partitioned write + pruned read round trip end-to-end: any defect in
-    // the fixture build now FAILS the gate instead of matching itself.
-    // CAST(naive ts AS DATE) ≡ Spark's to_date under the UTC session TZ.
-    "q65_lake_partition_scan" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events
-        |WHERE CAST(ts AS DATE) = DATE '2024-01-15'
-        |ORDER BY event_id""".stripMargin,
-    // q71: same independent-derivation contract as q65 — DuckDB recomputes
-    // the compacted partition's rows from source, so equality proves the
-    // fragmented write + compaction rewrite + pruned read lost nothing
-    "q71_lake_compaction" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events
-        |WHERE CAST(ts AS DATE) = DATE '2024-01-16'
-        |ORDER BY event_id""".stripMargin,
-    // q72: the drift + normalization restated independently from source —
-    // v1 rows pass through a string round trip (exact for shortest-repr
-    // doubles in both engines), v2 rows carry the double straight through
-    "q72_schema_evolution" ->
-      """SELECT job_id, salary_usd, location, source FROM (
-        |  SELECT event_id AS job_id,
-        |    TRY_CAST(CAST(value AS VARCHAR) AS DOUBLE) AS salary_usd,
-        |    event_type AS location, 'v1' AS source
-        |  FROM events WHERE event_id % 3 = 0
-        |  UNION ALL
-        |  SELECT event_id, value, event_type, 'v2'
-        |  FROM events WHERE event_id % 3 = 1)
-        |ORDER BY job_id""".stripMargin,
-    // q62: the envelope any correct k-means keeps (assignment range +
-    // Lloyd's inertia monotonicity) — exact centroids are float-ulp
-    // engine-internal, like q39's sketch registers
-    "q62_kmeans_train" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_vectors,
-        |  CAST(1 AS BIGINT) AS cells_ok,
-        |  CAST(1 AS BIGINT) AS inertia_improved
-        |FROM embeddings""".stripMargin,
-    // q37's blobs are real ImageIO-encoded PNGs whose dims are keyed by
-    // media_id at encode time; the oracle predicts by formula what a
-    // correct ImageIO decode must read back out of the pixel grid
-    "q37_media_features" ->
-      """SELECT doc_id AS media_id, 'image' AS kind,
-        |  CAST(4 + doc_id % 29 AS INTEGER) AS width,
-        |  CAST(4 + doc_id % 31 AS INTEGER) AS height,
-        |  CAST(0 AS BIGINT) AS duration_ms
-        |FROM documents ORDER BY media_id""".stripMargin,
-    // q38's blobs are real multi-frame GIFs: frame count 2+id%7, frame grid
-    // (4+id%13)×(4+id%11), 100 ms per-frame delay — so the container probe
-    // and every per-frame decode must read these values back by formula
-    "q38_frame_samples" ->
-      """WITH v AS (SELECT doc_id, 2 + doc_id % 7 AS nf FROM documents WHERE doc_id < 100)
-        |SELECT doc_id AS media_id, CAST(i AS INTEGER) AS frame_idx,
-        |  CAST(nf AS INTEGER) AS n_frames,
-        |  CAST(4 + doc_id % 13 AS INTEGER) AS width,
-        |  CAST(4 + doc_id % 11 AS INTEGER) AS height,
-        |  CAST(nf * 100 AS BIGINT) AS duration_ms
-        |FROM v, UNNEST(range(nf)) AS u(i)
-        |ORDER BY media_id, frame_idx""".stripMargin,
-    // q58's blobs are real RIFF/WAVE PCM: 100+25·(id%48) ms at 8 kHz — the
-    // parsed frame count over the header frame rate must return exactly that
-    "q58_audio_features" ->
-      """SELECT doc_id AS media_id, 'audio' AS kind,
-        |  CAST(0 AS INTEGER) AS width, CAST(0 AS INTEGER) AS height,
-        |  CAST(100 + 25 * (doc_id % 48) AS BIGINT) AS duration_ms
-        |FROM documents WHERE doc_id < 200 ORDER BY media_id""".stripMargin,
-    // identical gram hashing (md5 15-hex prefix) and exact half-up basis
-    // points as the Spark side; thresholds inlined from the q59 call
-    "q59_boilerplate_filter" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |grams AS (
-         |  SELECT doc_id,
-         |    CAST(concat('0x', substring(md5(
-         |      concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3])), 1, 15)) AS BIGINT) AS h
-         |  FROM toks, UNNEST(range(len(t) - 2)) AS u(i)),
-         |dc AS (SELECT doc_id, h, COUNT(*) AS c FROM grams GROUP BY doc_id, h),
-         |vocab AS (
-         |  SELECT h, 1 AS is_boiler FROM
-         |    (SELECT h, COUNT(*) AS df FROM dc GROUP BY h) WHERE df > 10),
-         |agg AS (
-         |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_grams,
-         |    CAST(SUM(CASE WHEN is_boiler IS NOT NULL THEN c ELSE 0 END) AS BIGINT) AS n_boiler
-         |  FROM dc LEFT JOIN vocab USING (h) GROUP BY doc_id)
-         |SELECT doc_id, n_grams, n_boiler,
-         |  CAST(${ExactAgg.Sql.divHalfUp("n_boiler * 10000", "n_grams")} AS BIGINT) AS boiler_e4,
-         |  CAST(CASE WHEN CAST(${ExactAgg.Sql.divHalfUp("n_boiler * 10000", "n_grams")} AS BIGINT) <= 5000
-         |       THEN 1 ELSE 0 END AS BIGINT) AS keep
-         |FROM agg ORDER BY doc_id""".stripMargin,
-    "q47_json_raw_lake" ->
-      s"""SELECT event_id, user_id, event_type, value, CAST(length(props) AS INTEGER) AS props_len
-         |FROM read_json('${Fixture.path(dir, "json_events")}/chunk=*/*.txt', format='array',
-         |  columns={event_id:'BIGINT', user_id:'BIGINT', event_type:'VARCHAR', value:'DOUBLE', props:'VARCHAR'})
-         |ORDER BY event_id""".stripMargin,
-    "q26_minhash_pairs" -> minhashOracleSql(nHashes = 64, nBands = 4, seed = 42L,
-      src = "(SELECT * FROM documents WHERE doc_id % 2 = 0)"),
-    "q48_dup_clusters" -> dupClustersOracleSql(nHashes = 64, nBands = 4, seed = 42L),
-    "q53_curation_pipeline" -> curationOracleSql(nHashes = 64, nBands = 4, seed = 42L),
-    "q54_winnow_fingerprints" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS INT) + 1 AS pos,
-        |    CAST(concat('0x', substring(md5(
-        |      concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3])), 1, 15)) AS BIGINT) AS h
-        |  FROM toks, UNNEST(range(len(t) - 2)) AS u(i)),
-        |fps AS (
-        |  SELECT DISTINCT doc_id,
-        |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM grams)
-        |SELECT doc_id, COUNT(*) AS n_fp, CAST(MIN(fp) AS BIGINT) AS min_fp
-        |FROM fps GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q51_embedding_dedup" ->
-      embeddingDedupOracleSql(dims = 64, nBits = 12, seed = 7L, maxBucket = 1000, minSim = 0.2),
-    // q55: q54's winnowing CTE + q49's split bucket, then the cross-split
-    // fingerprint collision join
-    "q55_decontamination" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS INT) + 1 AS pos,
-        |    CAST(concat('0x', substring(md5(
-        |      concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3])), 1, 15)) AS BIGINT) AS h
-        |  FROM toks, UNNEST(range(len(t) - 2)) AS u(i)),
-        |fps AS (
-        |  SELECT DISTINCT doc_id,
-        |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM grams),
-        |sp AS (
-        |  SELECT doc_id, fp,
-        |    CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-        |  FROM (
-        |    SELECT doc_id, fp,
-        |      CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b
-        |    FROM fps) z),
-        |tr AS (SELECT fp, doc_id AS tid FROM sp WHERE split = 'train')
-        |SELECT ev.doc_id, ev.split,
-        |  CAST(COUNT(DISTINCT tr.tid) AS BIGINT) AS n_train_docs,
-        |  CAST(COUNT(DISTINCT ev.fp) AS BIGINT) AS n_shared_fps
-        |FROM sp ev JOIN tr ON tr.fp = ev.fp
-        |WHERE ev.split <> 'train'
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    // q57: fingerprint match ≡ text equality (md5 on both sides), so the
-    // oracle states the semantics directly as NOT EXISTS on text
-    "q57_incremental_dedup" ->
-      """WITH history AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
-        |incoming AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0)
-        |SELECT i.doc_id FROM incoming i
-        |WHERE NOT EXISTS (SELECT 1 FROM history h WHERE h.text = i.text)
-        |ORDER BY doc_id""".stripMargin,
-    // q69: fingerprint-index membership ≡ text membership (md5 is
-    // injective on this corpus as q57 establishes), so the oracle states
-    // the two-generation semantics directly on text, INDEPENDENTLY of the
-    // persisted index: batch 2 survives iff its text is in neither the
-    // history nor batch 1's accepted set (the appended generation)
-    "q69_dedup_fp_index" ->
-      """WITH history AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
-        |b1acc AS (
-        |  SELECT text FROM documents b1 WHERE doc_id % 4 = 1
-        |  AND NOT EXISTS (SELECT 1 FROM history h WHERE h.text = b1.text)),
-        |b2 AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 3
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 20 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 20 = 1)
-        |SELECT doc_id FROM b2
-        |WHERE NOT EXISTS (SELECT 1 FROM history h WHERE h.text = b2.text)
-        |  AND NOT EXISTS (SELECT 1 FROM b1acc a WHERE a.text = b2.text)
-        |ORDER BY doc_id""".stripMargin,
-    // q78: two-generation near-dup acceptance restated from text via the
-    // q26 minhash/band SQL machinery — see bandIndexOracleSql's doc
-    "q78_neardup_band_index" ->
-      bandIndexOracleSql(BandIdxHashes, BandIdxBands, BandIdxSeed, BandIdxMinJ, BandIdxCap),
-    // q79: the skew stats recomputed INDEPENDENTLY from the grown index's
-    // files (hive-partitioned read, the q47 fixture-read contract) — a
-    // wrong cell count, a dropped append row or a stats-aggregation defect
-    // all hash-fail; recall_ok is the engine-internal envelope constant
-    // (q62/q64 family)
-    "q79_ivf_index_health" ->
-      s"""WITH cells AS (
-         |  SELECT cell_id, COUNT(DISTINCT vec_id) AS n
-         |  FROM read_parquet('${Fixture.path(dir, "ivf_index_append")}/lists/*/*.parquet', hive_partitioning=1)
-         |  GROUP BY cell_id)
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
-         |  CAST(SUM(n) AS BIGINT) AS n_vecs,
-         |  CAST(MAX(n) AS BIGINT) AS max_list,
-         |  CAST(MIN(n) AS BIGINT) AS min_list,
-         |  CAST(${ExactAgg.Sql.divHalfUp("MAX(n) * 100 * COUNT(*)", "SUM(n)")} AS BIGINT) AS skew_e2,
-         |  CAST(CASE WHEN MAX(n) * COUNT(*) <= SUM(n) * 10 THEN 1 ELSE 0 END AS BIGINT) AS skew_ok,
-         |  CAST(1 AS BIGINT) AS recall_ok
-         |FROM cells""".stripMargin,
-    // q73: the ingest loop's terminal lake, derived from the SOURCE table —
-    // quality filter mirrors q21's bucket bounds; intra-batch dedup is
-    // min(doc_id) per text; cross-batch precedence is NOT EXISTS against
-    // every earlier batch's accepted set. Independent of the fixture the
-    // Spark side writes, so a pipeline defect (dropped batch, clobbered
-    // partition, non-idempotent replay) fails the hash gate.
-    "q73_incremental_ingest" ->
-      """WITH b0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 15 = 0),
-        |b2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 15 = 1),
-        |a0 AS (SELECT MIN(doc_id) AS doc_id, text FROM b0
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000 GROUP BY text),
-        |a1 AS (SELECT MIN(doc_id) AS doc_id, text FROM b1
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000
-        |    AND NOT EXISTS (SELECT 1 FROM a0 WHERE a0.text = b1.text)
-        |  GROUP BY text),
-        |a2 AS (SELECT MIN(doc_id) AS doc_id, text FROM b2
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000
-        |    AND NOT EXISTS (SELECT 1 FROM a0 WHERE a0.text = b2.text)
-        |    AND NOT EXISTS (SELECT 1 FROM a1 WHERE a1.text = b2.text)
-        |  GROUP BY text)
-        |SELECT doc_id, CAST(0 AS BIGINT) AS ingest_batch FROM a0
-        |UNION ALL SELECT doc_id, 1 FROM a1
-        |UNION ALL SELECT doc_id, 2 FROM a2
-        |ORDER BY doc_id""".stripMargin,
-    // q74: q73's derivation with the fold's provenance coarsening applied —
-    // batches 0 and 1 (the compacted range) report ingest_batch 1
-    "q74_ingest_compaction" ->
-      """WITH b0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
-        |b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1
-        |  UNION ALL
-        |  SELECT doc_id + 2000000, text FROM documents WHERE doc_id % 15 = 0),
-        |b2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2
-        |  UNION ALL
-        |  SELECT doc_id + 3000000, text FROM documents WHERE doc_id % 15 = 1),
-        |a0 AS (SELECT MIN(doc_id) AS doc_id, text FROM b0
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000 GROUP BY text),
-        |a1 AS (SELECT MIN(doc_id) AS doc_id, text FROM b1
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000
-        |    AND NOT EXISTS (SELECT 1 FROM a0 WHERE a0.text = b1.text)
-        |  GROUP BY text),
-        |a2 AS (SELECT MIN(doc_id) AS doc_id, text FROM b2
-        |  WHERE len(string_split(text, ' ')) BETWEEN 5 AND 5000
-        |    AND NOT EXISTS (SELECT 1 FROM a0 WHERE a0.text = b2.text)
-        |    AND NOT EXISTS (SELECT 1 FROM a1 WHERE a1.text = b2.text)
-        |  GROUP BY text)
-        |SELECT doc_id, CAST(1 AS BIGINT) AS ingest_batch FROM a0
-        |UNION ALL SELECT doc_id, 1 FROM a1
-        |UNION ALL SELECT doc_id, 2 FROM a2
-        |ORDER BY doc_id""".stripMargin,
-    // q56: the same md5 key-hash as q49, at basis-point resolution, with
-    // the per-stratum rate ladder mirrored as a CASE
-    "q56_stratified_sample" ->
-      """SELECT doc_id, lang FROM (
-        |  SELECT doc_id, lang,
-        |    CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 10000 AS b
-        |  FROM documents) t
-        |WHERE b < CASE lang WHEN 'en' THEN 2500 WHEN 'de' THEN 10000 WHEN 'zh' THEN 0 ELSE 5000 END
-        |ORDER BY doc_id""".stripMargin,
-    "q52_trigram_jaccard" ->
-      s"""WITH ng AS (
-         |  SELECT DISTINCT doc_id, concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3]) AS ng
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents) d,
-         |       UNNEST(range(len(t) - 2)) AS u(i)),
-         |sizes AS (SELECT doc_id, COUNT(*) AS n FROM ng GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS a_id, COUNT(*) AS i
-         |  FROM ng a JOIN ng b ON b.doc_id = a.doc_id + 1 AND b.ng = a.ng
-         |  GROUP BY 1)
-         |SELECT sa.doc_id AS a_id, sa.doc_id + 1 AS b_id,
-         |  CAST(${ExactAgg.Sql.divHalfUp("COALESCE(i.i, 0) * 10000", "sa.n + sb.n - COALESCE(i.i, 0)")} AS DOUBLE) / 10000.0 AS jaccard_e4
-         |FROM sizes sa
-         |JOIN sizes sb ON sb.doc_id = sa.doc_id + 1
-         |LEFT JOIN inter i ON i.a_id = sa.doc_id
-         |ORDER BY a_id""".stripMargin,
-    "q49_split_assign" ->
-      """SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
-        |  lang, COUNT(*) AS cnt, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |FROM (
-        |  SELECT lang, n_chars,
-        |    CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 AS b
-        |  FROM documents) t
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // score is pure int64: tf · round_half_up((N+1)·1e4/(df+1)) — no ln,
-    // whose 1-ulp libm license could flip a floored fixed-point score
-    // between engines (ADVICE r2)
-    "q50_tfidf_top_terms" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, tok AS term, COUNT(*) AS tf FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) u
-         |  GROUP BY 1, 2),
-         |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-         |nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term,
-         |    CAST(tf.tf * ${ExactAgg.Sql.divHalfUp("(nd.n_docs + 1) * 10000", "dfreq.df + 1")} AS BIGINT) AS score_e4
-         |  FROM tf JOIN dfreq USING (term) CROSS JOIN nd)
-         |SELECT doc_id, term, score_e4,
-         |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score_e4 DESC, term) AS INTEGER) AS rank
-         |FROM scored QUALIFY rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "q27_simhash" -> simhashOracleSql(nBits = 60),
-    "q29_lsh_ann_pairs" -> lshAnnOracleSql(dims = 64, nBits = 12, seed = 7L, maxBucket = 1000),
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  CAST(SUM(${sqlCents("l_quantity")}) AS BIGINT) AS sum_qty_c,
-         |  CAST(SUM(${sqlCents("l_extendedprice")}) AS BIGINT) AS sum_base_price_c,
-         |  CAST(SUM(${sqlCents("l_extendedprice")} * (100 - ${sqlCents("l_discount")})) AS BIGINT) AS sum_disc_price_e4,
-         |  CAST(SUM(${sqlCents("l_extendedprice")} * (100 - ${sqlCents("l_discount")}) * (100 + ${sqlCents("l_tax")})) AS BIGINT) AS sum_charge_e6,
-         |  ${sqlAvg2dp("l_quantity")} AS avg_qty,
-         |  ${sqlAvg2dp("l_extendedprice")} AS avg_price,
-         |  ${sqlAvg2dp("l_discount")} AS avg_disc,
-         |  COUNT(*) AS count_order
-         |FROM lineitem
-         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_top_customers" ->
-      s"""SELECT c_custkey, c_name,
-         |  CAST(SUM(${sqlCents("l_extendedprice")} * (100 - ${sqlCents("l_discount")})) AS BIGINT) AS revenue_e4
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_custkey, c_name
-         |ORDER BY revenue_e4 DESC, c_custkey
-         |LIMIT 10""".stripMargin,
-    "q03_brand_stats" ->
-      s"""SELECT p_brand, COUNT(*) AS cnt, ${sqlAvg2dp("l_extendedprice")} AS avg_price,
-         |  CAST(SUM(${sqlCents("l_quantity")}) AS BIGINT) AS sum_qty_c
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q04_region_revenue" ->
-      s"""SELECT r_name, COUNT(*) AS cnt,
-         |  CAST(SUM(${sqlCents("o_totalprice")}) AS BIGINT) AS revenue_c
-         |FROM region JOIN nation ON n_regionkey = r_regionkey
-         |  JOIN customer ON c_nationkey = n_nationkey
-         |  JOIN orders ON o_custkey = c_custkey
-         |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q05_revenue_filter" ->
-      s"""SELECT CAST(SUM(${sqlCents("l_extendedprice")} * ${sqlCents("l_discount")}) AS BIGINT) AS revenue_e4
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-         |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-    "q06_top_parts_per_brand" ->
-      """SELECT p_brand, p_partkey, p_retailprice, rank FROM (
-        |  SELECT p_brand, p_partkey, p_retailprice,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS INTEGER) AS rank
-        |  FROM part) t
-        |WHERE rank <= 3 ORDER BY p_brand, rank""".stripMargin,
-    "q07_union_kinds" ->
-      s"""SELECT kind, COUNT(*) AS cnt, ${sqlAvg2dp("acctbal")} AS avg_bal,
-         |  MIN(acctbal) AS min_bal, MAX(acctbal) AS max_bal
-         |FROM (
-        |  SELECT c_name AS name, c_acctbal AS acctbal, 'customer' AS kind FROM customer
-        |  UNION ALL
-        |  SELECT s_name AS name, s_acctbal AS acctbal, 'supplier' AS kind FROM supplier) u
-        |GROUP BY kind ORDER BY kind""".stripMargin,
-    "q08_latest_order_per_customer" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, strftime(o_orderdate, '%Y-%m-%d') AS order_date FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-        |  FROM orders) t
-        |WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "q09_impute_global_mean" ->
-      s"""SELECT event_id,
-         |  ROUND(COALESCE(CASE WHEN value >= 10 THEN value END,
-         |    (SELECT ${sqlAvg2dp("CASE WHEN value >= 10 THEN value END")} FROM events)), 4) AS value_filled
-         |FROM events ORDER BY event_id""".stripMargin,
-    "q10_events_enrich" ->
-      s"""SELECT event_id,
-         |  upper(trim(event_type)) AS event_type_clean,
-         |  $oracleCategory AS category,
-         |  CASE WHEN value IS NULL THEN 'T0_UNKNOWN' WHEN value < 30 THEN 'T1_LOW'
-         |       WHEN value < 60 THEN 'T2_MID' WHEN value < 100 THEN 'T3_HIGH'
-         |       ELSE 'T4_TOP' END AS value_tier,
-         |  CASE WHEN user_id % 3 = 0 THEN 'North America' WHEN user_id % 3 = 1 THEN 'Europe'
-         |       ELSE 'Other' END AS region,
-         |  CAST(dayofweek(ts) AS INTEGER) AS dow,
-         |  CAST(month(ts) AS INTEGER) AS month,
-         |  CAST(quarter(ts) AS INTEGER) AS quarter,
-         |  $oracleK AS k,
-         |  ROUND(CASE WHEN $oracleK > 0 AND value > 0 THEN value / $oracleK * 100.0 ELSE 0.0 END, 4) AS score,
-         |  (value > 100 AND $oracleK < 50) AS is_high_value,
-         |  concat_ws('_', upper(trim(event_type)), event_id) AS doc_id
-         |FROM events
-         |WHERE $enrichWhere
-         |ORDER BY event_id""".stripMargin,
-    "q11_type_stats" ->
-      s"""SELECT upper(trim(event_type)) AS event_type_clean,
-         |  COUNT(*) AS cnt, ${sqlAvg2dp("value")} AS avg_val,
-         |  MIN(value) AS min_val, MAX(value) AS max_val,
-         |  CASE WHEN COUNT(value) > 1 THEN floor(sqrt(
-         |    CAST(COUNT(value) * SUM(${sqlCents("value")} * ${sqlCents("value")}) - SUM(${sqlCents("value")}) * SUM(${sqlCents("value")}) AS DOUBLE)
-         |    / CAST(COUNT(value) * (COUNT(value) - 1) AS DOUBLE)) * 100.0) / 10000.0 END AS stddev_val,
-         |  CAST(SUM(CASE WHEN $oracleK % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS flag_cnt
-         |FROM events
-         |WHERE $enrichWhere
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q12_temporal_stats" ->
-      s"""SELECT CAST(dayofweek(ts) AS INTEGER) AS dow, CAST(month(ts) AS INTEGER) AS month,
-         |  COUNT(*) AS cnt, ${sqlAvg2dp("value")} AS avg_val
-         |FROM events
-         |WHERE $enrichWhere
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q13_category_percentiles" ->
-      s"""SELECT $oracleCategory AS category,
-         |  COUNT(*) AS cnt, ${sqlAvg2dp("value")} AS avg_val,
-         |  ROUND(quantile_cont(value, 0.25), 4) AS p25,
-         |  ROUND(quantile_cont(value, 0.5), 4) AS p50,
-         |  ROUND(quantile_cont(value, 0.75), 4) AS p75
-         |FROM events
-         |WHERE $enrichWhere
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_hourly_type_stats" ->
-      s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-         |  event_type, COUNT(*) AS cnt, ${sqlAvg2dp("value")} AS avg_val,
-         |  concat_ws('_', event_type, strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')) AS doc_id
-         |FROM events
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q15_sliding_type_counts" ->
-      """WITH w AS (
-        |  SELECT time_bucket(INTERVAL '30 minutes', ts) AS ws, event_type FROM events
-        |  UNION ALL
-        |  SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes' AS ws, event_type FROM events)
-        |SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, event_type, COUNT(*) AS cnt
-        |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q16_source_stats" ->
-      s"""SELECT source, COUNT(*) AS cnt, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-         |  ${sqlAvgLong("n_chars")} AS avg_chars
-         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q20_dedup_exact" ->
-      """SELECT md5(text) AS fp, MIN(doc_id) AS rep_id, COUNT(*) AS dup_cnt
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q21_text_quality" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |  ROUND(CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE) / len(string_split(text, ' ')), 4) AS avg_token_len,
-        |  ROUND(CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the','a','of','to','and','in','is'))) AS DOUBLE) / len(string_split(text, ' ')), 4) AS stopword_ratio,
-        |  CASE WHEN len(string_split(text, ' ')) < 5 THEN 'TOO_SHORT'
-        |       WHEN len(string_split(text, ' ')) > 5000 THEN 'TOO_LONG'
-        |       WHEN CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the','a','of','to','and','in','is'))) AS DOUBLE) / len(string_split(text, ' ')) >= 0.05 THEN 'OK_FLUENT'
-        |       ELSE 'OK_TERSE' END AS quality
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q22_lang_stats" ->
-      s"""SELECT lang, COUNT(*) AS cnt, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-         |  ${sqlAvgLong("len(string_split(text, ' '))")} AS avg_tokens
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q23_token_freq" ->
-      """SELECT token, COUNT(*) AS cnt FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
-        |GROUP BY token ORDER BY cnt DESC, token LIMIT 20""".stripMargin,
-    "q24_lang_id" ->
-      """SELECT doc_id,
-        |  CASE
-        |    WHEN len(list_filter(string_split(text,' '), x -> x IN ('der','die','und','ist')))
-        |         >= len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','is')))
-        |     AND len(list_filter(string_split(text,' '), x -> x IN ('der','die','und','ist')))
-        |         >= len(list_filter(string_split(text,' '), x -> x IN ('el','la','de','que'))) THEN 'de'
-        |    WHEN len(list_filter(string_split(text,' '), x -> x IN ('the','a','of','is')))
-        |         >= len(list_filter(string_split(text,' '), x -> x IN ('el','la','de','que'))) THEN 'en'
-        |    ELSE 'es' END AS predicted_lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q25_jaccard_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok FROM documents),
-        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM documents a
-        |  JOIN documents b ON b.doc_id = a.doc_id + 1),
-        |inter AS (
-        |  SELECT ta.doc_id AS a_id, tb.doc_id AS b_id, COUNT(*) AS i
-        |  FROM toks ta JOIN toks tb ON tb.doc_id = ta.doc_id + 1 AND ta.tok = tb.tok
-        |  GROUP BY 1, 2)
-        |SELECT p.a_id, p.b_id,
-        |  ROUND(CAST(COALESCE(i.i, 0) AS DOUBLE) / (sa.n + sb.n - COALESCE(i.i, 0)), 4) AS jaccard
-        |FROM pairs p
-        |JOIN sizes sa ON sa.doc_id = p.a_id
-        |JOIN sizes sb ON sb.doc_id = p.b_id
-        |LEFT JOIN inter i ON i.a_id = p.a_id AND i.b_id = p.b_id
-        |ORDER BY p.a_id""".stripMargin,
-    "q28_embedding_knn" ->
-      """WITH q AS (SELECT * FROM embeddings WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])) AS s
-        |  FROM q CROSS JOIN embeddings c WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, ROUND(s, 4) AS sim,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS INTEGER) AS rank
-        |FROM scored
-        |QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-    // q63: DuckDB reproduces the quantizer bit-for-bit (identical IEEE
-    // floor(x/ma*127+0.5) over exact float->double casts), and the
-    // quantized values are small integers, so the double-typed dot/norm
-    // sums below are EXACT — the one sqrt+division then matches the
-    // engine's Int8Cosine to the last ulp, same as q28's precedent
-    "q63_int8_ann" ->
-      """WITH base AS (
-        |  SELECT vec_id,
-        |    list_transform(dv, x -> floor(x / ma * 127.0 + 0.5)) AS qv
-        |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv,
-        |          list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) AS ma
-        |        FROM embeddings)),
-        |q AS (SELECT vec_id, qv FROM base WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    list_sum(list_transform(list_zip(q.qv, c.qv), p -> p[1] * p[2])) /
-        |      (sqrt(list_sum(list_transform(q.qv, x -> x * x))) *
-        |       sqrt(list_sum(list_transform(c.qv, x -> x * x)))) AS s
-        |  FROM q CROSS JOIN base c WHERE c.vec_id <> q.vec_id)
-        |SELECT query_id, neighbor_id, ROUND(s, 4) AS sim,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS INTEGER) AS rank
-        |FROM scored
-        |QUALIFY rank <= 5
-        |ORDER BY query_id, rank""".stripMargin,
-    // q64/q66: the trained model is float-ulp engine-internal, so the
-    // oracle pins the ENVELOPE — exact query count plus constant-1 flags
-    // (k results ranked 1..k per query; recall@10 >= 0.60 vs brute force,
-    // measured 0.86-0.95 across all three SFs) — the same contract shape
-    // as q39's sketch bounds and q62's inertia gate
-    "q64_ivf_int8_ann" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok,
-        |  CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    "q66_ivf_int8_production" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    // q90/q91: same envelope family as q64/q66 — the PQ pipeline is fully
-    // deterministic (fixed-point Lloyd's + fixed-order IEEE kernels), so
-    // every flag is an exact 0/1; code_bytes pins the 16-byte (16×, PqM=16)
-    // representation the gate is actually exercising
-    "q90_pq_ann" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok,
-        |  CAST(1 AS BIGINT) AS recall_ok,
-        |  CAST(1 AS BIGINT) AS distortion_ok,
-        |  CAST(16 AS BIGINT) AS code_bytes
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    "q91_pq_production" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    // q92: q67's envelope for the persisted IVF-PQ index
-    "q92_ivf_pq_index_serve" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok
-        |FROM embeddings WHERE vec_id < 3""".stripMargin,
-    // q93: q79's envelope for the PQ family's recall monitor
-    "q93_ivf_pq_health" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS recall_ok
-        |FROM embeddings WHERE vec_id < 10""".stripMargin,
-    // q94: exact token totals (the q68-pinned single-space tokenizer in
-    // both engines) + the MG guarantees as deterministic flags
-    "q94_heavy_hitter_tokens" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_distinct,
-        |  CAST(1 AS BIGINT) AS containment_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM toks""".stripMargin,
-    // q95: q94's envelope per language
-    "q95_heavy_hitters_by_lang" ->
-      """WITH toks AS (
-        |  SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-        |  CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_distinct,
-        |  CAST(1 AS BIGINT) AS containment_ok,
-        |  CAST(1 AS BIGINT) AS bounds_ok
-        |FROM toks GROUP BY lang ORDER BY lang""".stripMargin,
-    // q96: the exact hash-rank carve — the same 60-bit md5 hash of the
-    // '#carve-v1'-salted key, ranked per stratum
-    "q96_fixed_size_sample" ->
-      """SELECT lang, doc_id, n_chars FROM (
-        |  SELECT lang, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY lang ORDER BY
-        |      CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), '#carve-v1')), 1, 15)) AS BIGINT),
-        |      doc_id) AS rk
-        |  FROM documents WHERE doc_id IS NOT NULL) t
-        |WHERE rk <= 20 ORDER BY lang, doc_id""".stripMargin,
-    // q97: n_pieces and detok are DuckDB's OWN regex recomputation (the
-    // q68 shared-pattern contract; detok = concatenated pieces, which a
-    // correct encoder must reconstruct exactly); n_tokens joins the
-    // expected table the independent naive encoder wrote (differential)
-    "q97_bpe_tokenize" ->
-      s"""SELECT d.doc_id,
-         |  CAST(len(regexp_extract_all(d.text, '${Text.BpeishPattern.replace("'", "''")}')) AS BIGINT) AS n_pieces,
-         |  e.n_tokens AS n_tokens,
-         |  array_to_string(regexp_extract_all(d.text, '${Text.BpeishPattern.replace("'", "''")}'), '') AS detok
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q98: the full classifier path re-derived in SQL — same single-space
-    // tokens (+ empty-token contract), same space-joined bigrams, same
-    // 60-bit md5 bucket hash, the same weight formula the installed model
-    // table was synthesized from, and the shared half-up fixed-point mean
-    "q98_quality_classifier" ->
-      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |feats AS (
-         |  SELECT doc_id, unnest(t) AS f FROM toks
-         |  UNION ALL
-         |  SELECT doc_id, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS f
-         |  FROM toks, UNNEST(range(1, len(t))) AS u(i)),
-         |scored AS (
-         |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-         |    CAST(SUM(${graft.functions.QualityClassifier.Sql.weight(
-                  graft.functions.QualityClassifier.Sql.bucket("f",
-                    graft.functions.QualityClassifier.DefaultDim))}) AS BIGINT) AS wsum
-         |  FROM feats GROUP BY doc_id)
-         |SELECT doc_id, n_feats, score_e4,
-         |  CASE WHEN score_e4 >= 0 THEN 'keep' ELSE 'drop' END AS label
-         |FROM (
-         |  SELECT doc_id, n_feats,
-         |    CAST(${ExactAgg.Sql.divHalfUp("(wsum + 0) * 10000", "n_feats")} AS BIGINT) AS score_e4
-         |  FROM scored)
-         |ORDER BY doc_id""".stripMargin,
-    // q99: exact re-derivation of the cap — same synthesized URLs, same
-    // host/domain regex constants, same salted 60-bit hash rank as the q96
-    // carve; "kept" = tail host (count <= cap) OR rank within cap. The MG
-    // sketch on the Spark side is candidate generation only and is
-    // lossless at the auto-derived capacity, so the results coincide
-    "q99_domain_cap" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    regexp_extract(
-         |      'https://' ||
-         |      CASE WHEN doc_id % 3 = 0 THEN 'hub'
-         |           ELSE 'site' || CAST(doc_id % 40 AS VARCHAR) END ||
-         |      '.example.com/p/' || CAST(doc_id AS VARCHAR),
-         |      '${UrlOps.HostPattern}', 1) AS host
-         |  FROM documents),
-         |c AS (SELECT host, COUNT(*) AS n FROM d GROUP BY host),
-         |r AS (
-         |  SELECT d.host, d.doc_id, c.n,
-         |    row_number() OVER (PARTITION BY d.host ORDER BY
-         |      CAST(concat('0x', substring(md5(concat(CAST(d.doc_id AS VARCHAR), '#domcap-v1')), 1, 15)) AS BIGINT),
-         |      d.doc_id) AS rk
-         |  FROM d JOIN c ON d.host = c.host)
-         |SELECT host, regexp_extract(host, '${UrlOps.DomainPattern}', 1) AS domain, doc_id
-         |FROM r WHERE n <= 25 OR rk <= 25
-         |ORDER BY host, doc_id""".stripMargin,
-    // q100: the oracle reads the SAME persisted inverted lists the query
-    // carves (shared artifact, like q70's append gate) and re-derives the
-    // q96 hash-rank carve per cell — exact value oracle
-    "q100_semantic_carve" ->
-      s"""SELECT cell_id, vec_id FROM (
-         |  SELECT CAST(cell_id AS BIGINT) AS cell_id, vec_id,
-         |    row_number() OVER (PARTITION BY cell_id ORDER BY
-         |      CAST(concat('0x', substring(md5(concat(CAST(vec_id AS VARCHAR), '#semcarve-v1')), 1, 15)) AS BIGINT),
-         |      vec_id) AS rk
-         |  FROM read_parquet('${Fixture.path(dir, "ivf_index")}/lists/*/*.parquet', hive_partitioning=1)
-         |  WHERE vec_id IS NOT NULL) t
-         |WHERE rk <= 10 ORDER BY cell_id, vec_id""".stripMargin,
-    // q101: same single-space transitions, the SAME persisted integer
-    // log-prob tables (trained artifact = shared source of truth), same
-    // coalesce ladder and half-up mean, same band thresholds
-    "q101_lm_perplexity" ->
-      lmScoringOracleSql(s"${Fixture.path(dir, "bigram_lm")}/model", withBand = true),
-    // q102: the q75 running-sum shape, budgeted with the BPE expected
-    // table's counts (production == naive is q97's already-gated equality)
-    "q102_bpe_packing" ->
-      s"""SELECT doc_id, shard, n_tokens,
-         |  CAST(floor(cumb / 1024.0) AS BIGINT) AS pack_first,
-         |  CAST(floor((cumb + n_tokens - 1) / 1024.0) AS BIGINT) AS pack_last,
-         |  CAST(floor((cumb + n_tokens - 1) / 1024.0) AS BIGINT)
-         |    - CAST(floor(cumb / 1024.0) AS BIGINT) + 1 AS n_windows
-         |FROM (
-         |  SELECT d.doc_id, d.doc_id % 8 AS shard, e.n_tokens,
-         |    COALESCE(SUM(e.n_tokens) OVER (
-         |      PARTITION BY d.doc_id % 8 ORDER BY d.doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumb
-         |  FROM documents d
-         |  JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected/*.parquet') e
-         |    ON d.doc_id = e.doc_id) t
-         |ORDER BY doc_id""".stripMargin,
-    // q103: identical injected suffixes (chr() forms of the same code
-    // points), DuckDB's OWN nfc_normalize + the shared zero-width class
-    // (literal code points — RE2 has no \\u escapes), 'g' for
-    // replace-all parity with Spark's regexp_replace
-    "q103_unicode_normalize" ->
-      s"""WITH inj AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 4 = 0 THEN ' cafe' || chr(769)
-         |         WHEN doc_id % 4 = 1 THEN ' ' || chr(8491)
-         |         WHEN doc_id % 4 = 2 THEN ' zw' || chr(8203) || 'sp'
-         |         ELSE ' plain' END AS raw
-         |  FROM documents),
-         |n AS (
-         |  SELECT doc_id, raw,
-         |    regexp_replace(nfc_normalize(raw), '${graft.functions.Normalize.ZeroWidthPattern}', '', 'g') AS norm_text
-         |  FROM inj)
-         |SELECT doc_id, norm_text,
-         |  CAST(norm_text <> raw AS BIGINT) AS changed,
-         |  CAST(length(norm_text) AS BIGINT) AS n_chars
-         |FROM n ORDER BY doc_id""".stripMargin,
-    // q105: the expected-ids table from the independent encoder through
-    // the same persisted vocab; ids compare as one space-joined string
-    "q105_bpe_token_ids" ->
-      s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected_ids/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q112: DuckDB reads the SAME raw CSV part files with the declared
-    // column types; ignore_errors drops exactly the rows Spark PERMISSIVE
-    // marked corrupt (type-invalid, short, extra-field — the prototyped
-    // shared contract), so the two engines see the same well-formed set
-    "q112_csv_lake" ->
-      s"""SELECT id, name, metric, flag
-         |FROM read_csv('${Fixture.path(dir, "csv_lake")}/csv/part-*',
-         |  columns={'id':'BIGINT','name':'VARCHAR','metric':'BIGINT','flag':'VARCHAR'},
-         |  header=false, ignore_errors=true)
-         |ORDER BY id""".stripMargin,
-    // q113: every parsed column re-derived from the encode-side formulas
-    // (uri, Content-Length = byte length of the wrapped body, extraction
-    // chain over the same wrapper); the wrong-length docs (%31==7) are
-    // the quarantine battery and must be absent here
-    "q113_warc_extract" -> {
-      val wrapped = htmlWrappedSql
-      s"""SELECT doc_id,
-         |  'https://site' || CAST(doc_id % 40 AS VARCHAR) || '.example.com/p/'
-         |    || CAST(doc_id AS VARCHAR) AS target_uri,
-         |  CAST(octet_length(encode(($wrapped))) AS BIGINT) AS content_length,
-         |  ${graft.functions.Html.extractTextSql(s"($wrapped)")} AS clean_text,
-         |  CAST(length(${graft.functions.Html.extractTextSql(s"($wrapped)")}) AS BIGINT) AS n_chars
-         |FROM documents
-         |WHERE doc_id % 31 <> 7
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q114: the identical GROUPING SETS statement (mixed-lattice set
-    // list), grouping() flags and all; the cents string is generated by
-    // the same module on both sides
-    "q114_grouping_sets" ->
-      s"""WITH li AS (
-         |  SELECT *, strftime(l_shipdate, '%Y-%m') AS l_shipmonth FROM lineitem)
-         |SELECT COALESCE(l_returnflag, 'ALL') AS f,
-         |  COALESCE(l_linestatus, 'ALL') AS st,
-         |  COALESCE(l_shipmonth, 'ALL') AS sm,
-         |  CAST(grouping(l_returnflag) AS BIGINT) AS gf,
-         |  CAST(grouping(l_linestatus) AS BIGINT) AS gst,
-         |  CAST(grouping(l_shipmonth) AS BIGINT) AS gsm,
-         |  COUNT(*) AS cnt,
-         |  CAST(SUM(${ExactAgg.Sql.cents("l_quantity")}) AS BIGINT) AS sum_qty_c
-         |FROM li
-         |GROUP BY GROUPING SETS (
-         |  (l_returnflag, l_linestatus), (l_returnflag), (l_shipmonth), ())
-         |ORDER BY gf, gst, gsm, f, st, sm""".stripMargin,
-    // q115: the pinned snapshot is generations 0+1 — the even docs plus
-    // the %4==1 quarter — regardless of the compaction, append and
-    // vacuum that ran after the pin; pure predicate over the base table
-    "q115_snapshot_read" ->
-      s"""SELECT doc_id, lang, source, n_chars
-         |FROM documents
-         |WHERE doc_id % 2 = 0 OR doc_id % 4 = 1
-         |ORDER BY doc_id""".stripMargin,
-    // q116: the q109 train->score re-derivation generalized to three
-    // classes — per-class bucket counts, e6 share weights over each
-    // class total, per-document mean scores, argmax with the
-    // alphabetical tiebreak; same feature CTEs, same shared constants
-    "q116_langid_train" -> {
-      val dim = QualityClassifier.DefaultDim
-      val scale = QualityClassifier.TrainScale
-      val Seq((cDe, mDe), (cEn, mEn), (cFr, mFr)) = LangIdMarks
-      val g = "GREATEST(score_de_e4, score_en_e4, score_fr_e4)"
-      s"""WITH lab AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 3 = 0 THEN '$cDe'
-         |         WHEN doc_id % 3 = 1 THEN '$cEn' ELSE '$cFr' END AS cls,
-         |    text || CASE WHEN doc_id % 3 = 0 THEN '$mDe'
-         |                 WHEN doc_id % 3 = 1 THEN '$mEn'
-         |                 ELSE '$mFr' END AS ltext
-         |  FROM documents),
-         |toks AS (SELECT doc_id, cls, string_split(ltext, ' ') AS t FROM lab),
-         |feats AS (
-         |  SELECT doc_id, cls, unnest(t) AS f FROM toks
-         |  UNION ALL
-         |  SELECT doc_id, cls, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS f
-         |  FROM toks, UNNEST(range(1, len(t))) AS u(i)),
-         |bk AS (SELECT doc_id, cls,
-         |    ${graft.functions.QualityClassifier.Sql.bucket("f", dim)} AS bucket
-         |  FROM feats),
-         |cnt AS (SELECT bucket,
-         |    SUM(CASE WHEN cls = '$cDe' THEN 1 ELSE 0 END) AS c_de,
-         |    SUM(CASE WHEN cls = '$cEn' THEN 1 ELSE 0 END) AS c_en,
-         |    SUM(CASE WHEN cls = '$cFr' THEN 1 ELSE 0 END) AS c_fr
-         |  FROM bk GROUP BY bucket),
-         |tot AS (SELECT SUM(c_de) AS t_de, SUM(c_en) AS t_en, SUM(c_fr) AS t_fr FROM cnt),
-         |w AS (SELECT bucket,
-         |    CAST(${ExactAgg.Sql.divHalfUp(s"c_de * $scale", "t_de")} AS BIGINT) AS w_de,
-         |    CAST(${ExactAgg.Sql.divHalfUp(s"c_en * $scale", "t_en")} AS BIGINT) AS w_en,
-         |    CAST(${ExactAgg.Sql.divHalfUp(s"c_fr * $scale", "t_fr")} AS BIGINT) AS w_fr
-         |  FROM cnt, tot),
-         |scored AS (
-         |  SELECT bk.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-         |    SUM(w.w_de) AS ws_de, SUM(w.w_en) AS ws_en, SUM(w.w_fr) AS ws_fr
-         |  FROM bk JOIN w USING (bucket) GROUP BY bk.doc_id),
-         |sc AS (
-         |  SELECT doc_id, n_feats,
-         |    CAST(${ExactAgg.Sql.divHalfUp("ws_de * 10000", "n_feats")} AS BIGINT) AS score_de_e4,
-         |    CAST(${ExactAgg.Sql.divHalfUp("ws_en * 10000", "n_feats")} AS BIGINT) AS score_en_e4,
-         |    CAST(${ExactAgg.Sql.divHalfUp("ws_fr * 10000", "n_feats")} AS BIGINT) AS score_fr_e4
-         |  FROM scored)
-         |SELECT doc_id, n_feats, score_de_e4, score_en_e4, score_fr_e4,
-         |  CASE WHEN score_de_e4 = $g THEN '$cDe'
-         |       WHEN score_en_e4 = $g THEN '$cEn' ELSE '$cFr' END AS pred
-         |FROM sc
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q117: the replica ladder re-derived — full replicas below
-    // floor(rate/1e4) are unconditional, the fractional replica draws by
-    // the same salted 60-bit md5 hash mod 1e4 ('key#mix-v1#rep<i>')
-    "q117_epoch_upsample" ->
-      s"""WITH r AS (
-         |  SELECT doc_id, lang,
-         |    CASE lang WHEN 'en' THEN 23000 WHEN 'de' THEN 15000
-         |              WHEN 'fr' THEN 10000 WHEN 'zh' THEN 4000
-         |              ELSE 7500 END AS rate
-         |  FROM documents WHERE doc_id IS NOT NULL),
-         |rep AS (
-         |  SELECT doc_id, lang, rate,
-         |    unnest(range(0, CAST(rate // 10000 AS BIGINT) + 1)) AS replica
-         |  FROM r)
-         |SELECT doc_id, lang, CAST(replica AS BIGINT) AS replica
-         |FROM rep
-         |WHERE replica < CAST(rate // 10000 AS BIGINT)
-         |   OR (CAST(concat('0x', substring(md5(
-         |        CAST(doc_id AS VARCHAR) || '#mix-v1#rep' || CAST(replica AS VARCHAR)
-         |      ), 1, 15)) AS BIGINT) % 10000) < rate % 10000
-         |ORDER BY doc_id, replica""".stripMargin,
-    // q118: the plain (salt-free) join — salting must be invisible in
-    // the result; dim re-derived from the same formulas
-    "q118_skew_salted_join" ->
-      s"""WITH f AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 10 < 3 THEN 'MEGACORP'
-         |         ELSE 'co_' || CAST(doc_id % 50 AS VARCHAR) END AS company,
-         |    n_chars
-         |  FROM documents),
-         |d AS (
-         |  SELECT 'co_' || CAST(i AS VARCHAR) AS company,
-         |    CAST(i % 7 AS BIGINT) AS region
-         |  FROM range(0, 50) AS t(i)
-         |  UNION ALL
-         |  SELECT 'MEGACORP', CAST(9 AS BIGINT))
-         |SELECT f.doc_id, f.company, d.region, f.n_chars
-         |FROM f JOIN d USING (company)
-         |ORDER BY doc_id""".stripMargin,
-    // q119: the ENTIRE BM25 loop re-derived — tokenization, tf, dl, the
-    // exact-integer length norm k_e6, pseudo-query selection and the
-    // rational tf-normalization (k1=6/5, b=3/4) all from the base table;
-    // ONLY idf_e6 (the transcendental, quantized once at build) joins
-    // from the persisted terms artifact (q101 shared-artifact discipline)
-    "q119_bm25_retrieval" ->
-      bm25RetrievalOracleSql(s"${Fixture.path(dir, "bm25")}/idx/terms"),
-    // q122: the IDENTICAL re-derivation pointed at the incremental
-    // install+append+refresh artifact's terms table — the gate value is
-    // that the generational fold served exactly the one-shot arithmetic
-    "q122_bm25_index_append" ->
-      bm25RetrievalOracleSql(
-        s"${Fixture.path(dir, "bm25_inc")}/idx/index/terms"),
-    // q123: layout-only variant of q119 — the bucketed catalog serve must
-    // reproduce the identical ranking and integers, so the oracle IS
-    // q119's re-derivation against the same one-shot artifact
-    "q123_bm25_bucketed_serve" ->
-      bm25RetrievalOracleSql(s"${Fixture.path(dir, "bm25")}/idx/terms"),
-    // q124: the full shingle-BM25 decontamination sweep re-derived from
-    // the base table — bigram terms, bag-of-shingles query scoring, the
-    // exact-integer length norm and the per-shingle normalization; only
-    // idf_e6 joins from the persisted eval-index artifact (the q119
-    // discipline), and the threshold interpolates the SAME shared
-    // constant the engine flags with
-    "q124_retrieval_decontam" ->
-      s"""${shingleBm25NormedSql(dir,
-             "SELECT doc_id, text FROM documents WHERE doc_id % 20 NOT IN (7, 8)")}
-         |SELECT doc_id, eval_id, score_e6, norm_e6,
-         |  CAST(norm_e6 >= ${Bm25.ContaminationThresholdE6} AS BIGINT) AS contaminated
-         |FROM normed
-         |ORDER BY doc_id""".stripMargin,
-    // q127: the calibration report's aggregates over the SAME normed
-    // relation (one generated derivation, the two oracles cannot drift) —
-    // clean sample = the %20==1 slice, leaked sample = the q124
-    // injection; populations split by the injection's id offset.
-    // calibrateContaminationThreshold sweeps the two samples SEPARATELY,
-    // the oracle sweeps their union — per-doc top-1 scores are
-    // independent of the sweep's co-population, which is itself part of
-    // the claim under test
-    "q127_decontam_calibration" ->
-      s"""${shingleBm25NormedSql(dir,
-             "SELECT doc_id, text FROM documents WHERE doc_id % 20 = 1")}
-         |, cstat AS (
-         |  SELECT COUNT(*) AS scored, MAX(norm_e6) AS mx
-         |  FROM normed WHERE doc_id < 1000000),
-         |lstat AS (
-         |  SELECT COUNT(*) AS scored, MIN(norm_e6) AS mn
-         |  FROM normed WHERE doc_id >= 1000000),
-         |pop AS (SELECT
-         |  (SELECT COUNT(*) FROM train WHERE doc_id < 1000000) AS clean_n,
-         |  (SELECT COUNT(*) FROM train WHERE doc_id >= 1000000) AS leaked_n)
-         |SELECT
-         |  CAST(pop.clean_n AS BIGINT) AS clean_n,
-         |  CAST(c.scored AS BIGINT) AS clean_scored,
-         |  c.mx AS clean_max_e6,
-         |  CAST(pop.leaked_n AS BIGINT) AS leaked_n,
-         |  CAST(l.scored AS BIGINT) AS leaked_scored,
-         |  l.mn AS leaked_min_e6,
-         |  CAST(l.scored = pop.leaked_n
-         |    AND COALESCE(c.mx < l.mn, false) AS BIGINT) AS separated,
-         |  CAST(${ExactAgg.Sql.divHalfUp(
-               "COALESCE(c.mx, 0) + COALESCE(l.mn, 0)", "2")} AS BIGINT) AS suggested_e6
-         |FROM cstat c CROSS JOIN lstat l CROSS JOIN pop""".stripMargin,
-    // q125: q102's window arithmetic verbatim, n_tokens joined from the
-    // UNIGRAM expected table (the q121 differential artifact) — the
-    // family-agnostic packing claim gates on the oracle side too
-    "q125_unigram_packing" ->
-      s"""SELECT doc_id, shard, n_tokens,
-         |  CAST(floor(cumb / 1024.0) AS BIGINT) AS pack_first,
-         |  CAST(floor((cumb + n_tokens - 1) / 1024.0) AS BIGINT) AS pack_last,
-         |  CAST(floor((cumb + n_tokens - 1) / 1024.0) AS BIGINT)
-         |    - CAST(floor(cumb / 1024.0) AS BIGINT) + 1 AS n_windows
-         |FROM (
-         |  SELECT d.doc_id, d.doc_id % 8 AS shard, e.n_tokens,
-         |    COALESCE(SUM(e.n_tokens) OVER (
-         |      PARTITION BY d.doc_id % 8 ORDER BY d.doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumb
-         |  FROM documents d
-         |  JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected/*.parquet') e
-         |    ON d.doc_id = e.doc_id) t
-         |ORDER BY doc_id""".stripMargin,
-    // q120: the q119 re-derivation minus self, restricted to the embedded
-    // corpus BEFORE the top-10 cut (the judgeability contract — at sf0.1
-    // only 2 of 5 docs carry vectors), plus the q28 cosine contract —
-    // sim = ROUND(list_cosine_similarity, 4), hard compares the rounded
-    // value
-    "q120_hard_negatives" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-         |dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY 1),
-         |meta AS (SELECT COUNT(*) AS n, CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-         |kd AS (
-         |  SELECT doc_id,
-         |    CAST(${ExactAgg.Sql.divHalfUp("(3 * l + 9 * dl * n) * 1000000", "10 * l")} AS BIGINT) AS k_e6
-         |  FROM dl CROSS JOIN meta),
-         |probes AS (
-         |  SELECT doc_id AS query_id, term FROM (
-         |    SELECT doc_id, term,
-         |      ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tf DESC, term) AS r
-         |    FROM tf WHERE doc_id < 8) t
-         |  WHERE r <= 3),
-         |idf AS (SELECT term, idf_e6
-         |  FROM read_parquet('${Fixture.path(dir, "bm25")}/idx/terms/*.parquet')),
-         |scored AS (
-         |  SELECT p.query_id, tf.doc_id,
-         |    CAST(SUM(CAST(${ExactAgg.Sql.divHalfUp(
-                 "i.idf_e6 * 22 * tf.tf * 100000", "tf.tf * 1000000 + kd.k_e6")} AS BIGINT)) AS BIGINT) AS score_e6
-         |  FROM probes p
-         |  JOIN tf ON tf.term = p.term
-         |  JOIN idf i ON i.term = p.term
-         |  JOIN kd ON kd.doc_id = tf.doc_id
-         |  WHERE tf.doc_id <> p.query_id
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id,
-         |    CAST(ROW_NUMBER() OVER (
-         |      PARTITION BY query_id ORDER BY score_e6 DESC, doc_id) AS INTEGER) AS rank,
-         |    doc_id, score_e6
-         |  FROM scored s
-         |  JOIN embeddings qe0 ON qe0.vec_id = s.query_id
-         |  JOIN embeddings ce0 ON ce0.vec_id = s.doc_id
-         |  QUALIFY rank <= 10)
-         |SELECT r.query_id, r.rank, r.doc_id, r.score_e6,
-         |  ROUND(list_cosine_similarity(
-         |    CAST(qe.embedding AS DOUBLE[]), CAST(ce.embedding AS DOUBLE[])), 4) AS sim,
-         |  CAST(ROUND(list_cosine_similarity(
-         |    CAST(qe.embedding AS DOUBLE[]), CAST(ce.embedding AS DOUBLE[])), 4) <= 0.0 AS BIGINT) AS hard
-         |FROM ranked r
-         |JOIN embeddings qe ON qe.vec_id = r.query_id
-         |JOIN embeddings ce ON ce.vec_id = r.doc_id
-         |ORDER BY query_id, rank""".stripMargin,
-    // q121: the q97 differential discipline — the expected table is the
-    // independently-structured naive Viterbi persisted at fixture build;
-    // the base-table join pins coverage (every document, exactly once)
-    "q121_unigram_tokenize" ->
-      s"""SELECT d.doc_id, e.n_tokens, e.n_unk, e.nll_e4, e.tokens
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q126: the q105 differential extended to the unigram family — the
-    // expected-ids table is the independently-structured naive encoder
-    // (fold/minBy Viterbi + Map id lookup) through the model's canonical
-    // piece order, persisted at fixture build; base-table join pins
-    // coverage
-    "q126_unigram_token_ids" ->
-      s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected_ids/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q128: the byte-fallback story's expected table from the same
-    // independent naive encoder (q111's discipline under the unigram
-    // family); n_oov here is the byte-tier fallback mass, nonzero
-    // exactly on the exotic-injected docs
-    "q128_unigram_byte_ids" ->
-      s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "unigram")}/expected_ids_bytes/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    "q129_repetition_signals" -> repetitionSignalsSql,
-    "q130_kmv_cardinality" -> kmvCardinalitySql,
-    // q131: the q98 hashed-feature machinery against the persisted DSIR
-    // weight table, the persisted Gumbel table joined by the q99 salted-
-    // hash idiom, and the same (key desc, id) rank — selected = rn <= n,
-    // which the Spark side's threshold predicate reproduces exactly
-    "q131_dsir_resample" ->
-      s"""WITH raw AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 3),
-         |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM raw),
-         |feats AS (
-         |  SELECT doc_id, unnest(t) AS f FROM toks
-         |  UNION ALL
-         |  SELECT doc_id, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS f
-         |  FROM toks, UNNEST(range(1, len(t))) AS u(i)),
-         |w AS (SELECT bucket, weight
-         |  FROM read_parquet('${Fixture.path(dir, "dsir")}/model/*.parquet')
-         |  WHERE bucket >= 0),
-         |scored AS (
-         |  SELECT fb.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-         |    CAST(SUM(COALESCE(w.weight, 0)) AS BIGINT) AS logw_e4
-         |  FROM (SELECT doc_id,
-         |      ${graft.functions.QualityClassifier.Sql.bucket("f",
-                   graft.functions.QualityClassifier.DefaultDim)} AS b
-         |    FROM feats) fb
-         |  LEFT JOIN w ON fb.b = w.bucket
-         |  GROUP BY fb.doc_id),
-         |noised AS (
-         |  SELECT s.doc_id, s.n_feats, s.logw_e4, g.g_e4 AS gumbel_e4,
-         |    s.logw_e4 + g.g_e4 AS key_e4
-         |  FROM scored s
-         |  JOIN read_parquet('${Fixture.path(dir, "dsir")}/gumbel/*.parquet') g
-         |    ON g.i = CAST(concat('0x', substring(
-         |        md5(concat(CAST(s.doc_id AS VARCHAR), '#$DsirSalt')), 1, 15))
-         |      AS BIGINT) % ${graft.functions.Dsir.GumbelResolution}),
-         |ranked AS (
-         |  SELECT *, row_number() OVER (ORDER BY key_e4 DESC, doc_id) AS rn
-         |  FROM noised)
-         |SELECT doc_id, n_feats, logw_e4, gumbel_e4, key_e4,
-         |  CAST(CASE WHEN rn <= $DsirN THEN 1 ELSE 0 END AS BIGINT) AS selected
-         |FROM ranked
-         |ORDER BY doc_id""".stripMargin,
-    // q111: the byte-fallback expected table from the independent
-    // encoder over the exotic-injected corpus; the compared n_oov column
-    // is identically zero — byte fallback makes OOV impossible
-    "q111_bpe_byte_fallback" ->
-      s"""SELECT d.doc_id, e.n_tokens, e.n_oov, e.ids
-         |FROM documents d
-         |JOIN read_parquet('${Fixture.path(dir, "bpe")}/expected_ids_bytes/*.parquet') e
-         |  ON d.doc_id = e.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-    // q106: identical injected wrappers; the extraction chain is
-    // GENERATED from Html's constants (Html.extractTextSql), so the two
-    // engines run the same replace sequence
-    "q106_html_extract" -> {
-      val wrapped = htmlWrappedSql
-      s"""SELECT doc_id,
-         |  ${graft.functions.Html.extractTextSql(s"($wrapped)")} AS clean_text,
-         |  CAST(length(${graft.functions.Html.extractTextSql(s"($wrapped)")}) AS BIGINT) AS n_chars
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    // q108: the q101 scoring SQL against the INCREMENTALLY-refreshed
-    // artifact (same shared-artifact family; no band ladder — the gate's
-    // subject is the grown model's serve path)
-    "q108_lm_incremental" ->
-      lmScoringOracleSql(
-        s"${Fixture.path(dir, "bigram_lm_inc")}/inc/model", withBand = false),
-    // q110: the q101 scoring SQL generalized to the order-3 context (the
-    // two preceding tokens space-joined) against the trigram artifact
-    "q110_lm_trigram" ->
-      lmScoringOracleSql(
-        s"${Fixture.path(dir, "trigram_lm")}/model", withBand = false, order = 3),
-    // q109: the ENTIRE train→score loop re-derived in SQL — same labels
-    // and markers, same feature space and 60-bit md5 buckets (the q98
-    // CTEs), the same e6 centroid-share weight formula over the class
-    // totals, and the shared half-up fixed-point mean. Every scored
-    // feature was trained on (same corpus), so the weight join is total.
-    "q109_classifier_train" -> {
-      val dim = QualityClassifier.DefaultDim
-      val scale = QualityClassifier.TrainScale
-      s"""WITH lab AS (
-         |  SELECT doc_id, doc_id % 2 = 0 AS lbl,
-         |    text || CASE WHEN doc_id % 2 = 0 THEN '$QcGoodMark'
-         |                 ELSE '$QcBadMark' END AS ltext
-         |  FROM documents),
-         |toks AS (SELECT doc_id, lbl, string_split(ltext, ' ') AS t FROM lab),
-         |feats AS (
-         |  SELECT doc_id, lbl, unnest(t) AS f FROM toks
-         |  UNION ALL
-         |  SELECT doc_id, lbl, t[CAST(i AS INT)] || ' ' || t[CAST(i AS INT) + 1] AS f
-         |  FROM toks, UNNEST(range(1, len(t))) AS u(i)),
-         |bk AS (SELECT doc_id, lbl,
-         |    ${graft.functions.QualityClassifier.Sql.bucket("f", dim)} AS bucket
-         |  FROM feats),
-         |cnt AS (SELECT bucket,
-         |    SUM(CASE WHEN lbl THEN 1 ELSE 0 END) AS g,
-         |    SUM(CASE WHEN lbl THEN 0 ELSE 1 END) AS b
-         |  FROM bk GROUP BY bucket),
-         |tot AS (SELECT SUM(g) AS gt, SUM(b) AS bt FROM cnt),
-         |w AS (SELECT bucket,
-         |    CAST(${ExactAgg.Sql.divHalfUp(s"g * $scale", "gt")}
-         |      - ${ExactAgg.Sql.divHalfUp(s"b * $scale", "bt")} AS BIGINT) AS wt
-         |  FROM cnt, tot),
-         |scored AS (
-         |  SELECT bk.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,
-         |    SUM(w.wt) AS wsum
-         |  FROM bk JOIN w USING (bucket) GROUP BY bk.doc_id)
-         |SELECT doc_id, n_feats, score_e4,
-         |  CASE WHEN score_e4 >= 0 THEN 'keep' ELSE 'drop' END AS label
-         |FROM (
-         |  SELECT doc_id, n_feats,
-         |    CAST(${ExactAgg.Sql.divHalfUp("wsum * 10000", "n_feats")} AS BIGINT) AS score_e4
-         |  FROM scored)
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q107: identical synthesized turns, the template generated from the
-    // SAME constants (ChatTemplate.renderSql)
-    "q107_chat_template" -> {
-      val rendered = graft.ops.ChatTemplate.renderSql(
-        "(CASE WHEN doc_id % 5 = 0 THEN NULL ELSE 'You are assistant ' || CAST(doc_id % 7 AS VARCHAR) END)",
-        "('Summarize document ' || CAST(doc_id AS VARCHAR))",
-        "text")
-      s"""SELECT doc_id, $rendered AS rendered,
-         |  CAST(len(string_split($rendered, ' ')) AS BIGINT) AS rendered_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    // q104: the same salted 60-bit hash, ranked; shard = hash mod 16
-    "q104_training_order" ->
-      """SELECT doc_id, shuffle_key, shuffle_key % 16 AS shard FROM (
-        |  SELECT doc_id,
-        |    CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), '#epoch0')), 1, 15)) AS BIGINT) AS shuffle_key
-        |  FROM documents WHERE doc_id IS NOT NULL) t
-        |ORDER BY shuffle_key, doc_id""".stripMargin,
-    // q67: same envelope family — the served results depend on the
-    // persisted trained model, but any correct index returns the 3
-    // queries' k results ranked 1..k
-    "q67_ivf_index_serve" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok
-        |FROM embeddings WHERE vec_id < 3""".stripMargin,
-    // q70: append-vs-rebuild is deterministic given the persisted model
-    // (int8 scores + vec_id tiebreaks), so append_match is exactly 1 for
-    // any correct append — same envelope family as q62/q64/q67
-    "q70_ivf_index_append" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
-        |  CAST(1 AS BIGINT) AS results_ok,
-        |  CAST(1 AS BIGINT) AS append_match
-        |FROM embeddings WHERE vec_id < 3""".stripMargin,
-    // q68: the SAME BpeishPattern constant, SQL-quoted; DuckDB's RE2 and
-    // Java regex both use leftmost-first ordered alternation
-    "q68_token_budget" ->
-      s"""SELECT doc_id,
-         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-         |  CAST(len(regexp_extract_all(text, '${Text.BpeishPattern.replace("'", "''")}')) AS BIGINT) AS n_pieces,
-         |  CAST(${ExactAgg.Sql.divHalfUp(
-              s"CAST(len(regexp_extract_all(text, '${Text.BpeishPattern.replace("'", "''")}')) AS BIGINT) * 10000",
-              "len(string_split(text, ' '))")} AS BIGINT) AS pieces_per_word_e4
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    // q75: same sharded running sum; the 2048 budget is a power of two so
-    // floor(cum / 2048.0) is exact binary64 in both engines
-    "q75_sequence_packing" ->
-      """SELECT doc_id, shard, n_tokens,
-        |  CAST(floor(cumb / 2048.0) AS BIGINT) AS pack_first,
-        |  CAST(floor((cumb + n_tokens - 1) / 2048.0) AS BIGINT) AS pack_last,
-        |  CAST(floor((cumb + n_tokens - 1) / 2048.0) AS BIGINT)
-        |    - CAST(floor(cumb / 2048.0) AS BIGINT) + 1 AS n_windows
-        |FROM (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    COALESCE(CAST(len(string_split(text, ' ')) AS BIGINT), 0) AS n_tokens,
-        |    COALESCE(SUM(COALESCE(CAST(len(string_split(text, ' ')) AS BIGINT), 0)) OVER (
-        |      PARTITION BY doc_id % 8 ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cumb
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-    // q76: identical injected text (string concat of the same integers),
-    // the SAME three shared pattern constants, and the same
-    // email -> ip -> phone replacement order
-    "q76_pii_redaction" -> {
-      val email = Text.PiiEmailPattern
-      val phone = Text.PiiPhonePattern
-      val ip = Text.PiiIpv4Pattern
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(t, '$email')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(t, '$phone')) AS BIGINT) AS n_phones,
-         |  CAST(len(regexp_extract_all(t, '$ip')) AS BIGINT) AS n_ips,
-         |  regexp_replace(regexp_replace(regexp_replace(t,
-         |    '$email', '<EMAIL>', 'g'), '$ip', '<IP>', 'g'),
-         |    '$phone', '<PHONE>', 'g') AS redacted,
-         |  CAST(length(regexp_replace(regexp_replace(regexp_replace(t,
-         |    '$email', '<EMAIL>', 'g'), '$ip', '<IP>', 'g'),
-         |    '$phone', '<PHONE>', 'g')) AS BIGINT) AS red_len
-         |FROM (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 4 = 0
-         |           THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-         |         WHEN doc_id % 4 = 1
-         |           THEN ' call 415-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-         |         WHEN doc_id % 4 = 2
-         |           THEN ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.'
-         |                || CAST((doc_id * 7) % 256 AS VARCHAR)
-         |                || ' or user' || CAST(doc_id AS VARCHAR) || '@mail.example.com'
-         |         ELSE ' version v1.2.3.4 build 999.999.999.999' END AS t
-         |  FROM documents) s
-         |ORDER BY doc_id""".stripMargin
-    },
-    // q77: the bucketed layout changes the PLAN, never the values — the
-    // oracle is the plain join over the source tables
-    "q77_bucketed_join" ->
-      s"""SELECT c_mktsegment, COUNT(*) AS n_orders,
-         |  CAST(SUM(${sqlCents("o_totalprice")}) AS BIGINT) AS revenue_c
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    // q80: same contract as q77 — the reused layout is plan-only
-    "q80_bucketed_reuse" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS n_orders,
-         |  COUNT(DISTINCT c_custkey) AS n_customers,
-         |  CAST(SUM(${sqlCents("c_acctbal")}) AS BIGINT) AS acctbal_c
-         |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // q81: IVF-family envelope (the trained model is engine-internal, as
-    // q64/q67/q70): n_batch is exact from the table; the equivalence flags
-    // are computed in-engine against an independent re-quantization
-    "q81_ivf_embedding_dedup" ->
-      """SELECT CAST((SELECT COUNT(*) FROM embeddings WHERE vec_id % 7 = 0)
-        |     + (SELECT COUNT(*) FROM embeddings WHERE vec_id % 7 = 3) AS BIGINT) AS n_batch,
-        |  CAST(1 AS BIGINT) AS subset_ok,
-        |  CAST(1 AS BIGINT) AS copies_all_dup""".stripMargin,
-    // q82: q54's winnowing CTE re-derives every doc's fingerprint set from
-    // TEXT; acceptance is then stated independently of the persisted index:
-    // a batch doc survives iff it shares no fingerprint with the two eval
-    // slices (doc_id % 20 ∈ {7, 8} — install generation + appended one)
-    "q82_decontam_index" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS INT) + 1 AS pos,
-        |    CAST(concat('0x', substring(md5(
-        |      concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3])), 1, 15)) AS BIGINT) AS h
-        |  FROM toks, UNNEST(range(len(t) - 2)) AS u(i)),
-        |fps AS (
-        |  SELECT DISTINCT doc_id,
-        |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM grams),
-        |ev AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 20 IN (7, 8))
-        |SELECT b.doc_id FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 1) b
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM fps f JOIN ev e ON e.fp = f.fp WHERE f.doc_id = b.doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    // q83: the same winnowing CTE, attribution form — per contaminated
-    // batch doc, distinct colliding eval docs and distinct shared fps
-    "q83_decontam_report" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |grams AS (
-        |  SELECT doc_id, CAST(i AS INT) + 1 AS pos,
-        |    CAST(concat('0x', substring(md5(
-        |      concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3])), 1, 15)) AS BIGINT) AS h
-        |  FROM toks, UNNEST(range(len(t) - 2)) AS u(i)),
-        |fps AS (
-        |  SELECT DISTINCT doc_id,
-        |    MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-        |                 ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS fp
-        |  FROM grams),
-        |ev AS (SELECT doc_id AS eval_id, fp FROM fps WHERE doc_id % 20 IN (7, 8)),
-        |b AS (SELECT f.doc_id, f.fp FROM fps f
-        |      JOIN documents d ON d.doc_id = f.doc_id WHERE d.doc_id % 5 = 1)
-        |SELECT b.doc_id,
-        |  CAST(COUNT(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs,
-        |  CAST(COUNT(DISTINCT b.fp) AS BIGINT) AS n_shared_fps
-        |FROM b JOIN ev ON ev.fp = b.fp
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q84: the same regex span segmentation ([[Text.spanPattern]], one
-    // shared constant) and the same md5-substring 60-bit hash as the Spark
-    // side; hot membership is decided ON THE HASH in both engines so a
-    // collision cannot cause cross-engine drift
-    "q84_hot_span_scrub" ->
-      // COALESCE(text, ''): the Spark side's spanChunks deliberately maps
-      // null text to an EMPTY span array (n_spans 0, clean_text ''), and
-      // regexp_extract_all(NULL) would propagate NULL counts instead (the
-      // q75 oracle's guard, same column)
-      s"""WITH sp AS (SELECT doc_id,
-         |    regexp_extract_all(COALESCE(text, ''), '${Text.spanPattern(4)}') AS l
-         |  FROM documents),
-         |chunks AS (SELECT doc_id, unnest(range(len(l))) AS i, unnest(l) AS ch FROM sp),
-         |hashed AS (SELECT doc_id, i, ch,
-         |    CAST(concat('0x', substring(md5(ch), 1, 15)) AS BIGINT) AS h
-         |  FROM chunks),
-         |hot AS (SELECT h FROM hashed GROUP BY h HAVING COUNT(*) >= 3),
-         |kept AS (SELECT k.doc_id, k.i, k.ch FROM hashed k
-         |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.h = k.h)),
-         |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         |    string_agg(ch, ' ' ORDER BY i) AS clean_text
-         |  FROM kept GROUP BY doc_id),
-         |tot AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_spans FROM sp)
-         |SELECT t.doc_id, t.n_spans,
-         |  CAST(t.n_spans - COALESCE(a.n_kept, 0) AS BIGINT) AS n_hot,
-         |  COALESCE(a.clean_text, '') AS clean_text
-         |FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
-         |ORDER BY t.doc_id""".stripMargin,
-    // q86: hot set from the NON-batch corpus slices (the two index
-    // generations sum to exactly that corpus, so the oracle needs no index
-    // files), membership on the shared 60-bit hash, rewrite on the batch
-    "q86_span_index_scrub" ->
-      s"""WITH hsp AS (SELECT regexp_extract_all(COALESCE(text, ''), '${Text.spanPattern(4)}') AS l
-         |  FROM documents WHERE doc_id % 5 <> 1),
-         |hch AS (SELECT unnest(l) AS ch FROM hsp),
-         |hot AS (SELECT h FROM (
-         |    SELECT CAST(concat('0x', substring(md5(ch), 1, 15)) AS BIGINT) AS h FROM hch) t
-         |  GROUP BY h HAVING COUNT(*) >= 3),
-         |b AS (SELECT doc_id, regexp_extract_all(COALESCE(text, ''), '${Text.spanPattern(4)}') AS l
-         |  FROM documents WHERE doc_id % 5 = 1),
-         |bc AS (SELECT doc_id, unnest(range(len(l))) AS i, unnest(l) AS ch FROM b),
-         |kept AS (SELECT doc_id, i, ch FROM (
-         |    SELECT doc_id, i, ch,
-         |      CAST(concat('0x', substring(md5(ch), 1, 15)) AS BIGINT) AS h
-         |    FROM bc) k
-         |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.h = k.h)),
-         |agg AS (SELECT doc_id, string_agg(ch, ' ' ORDER BY i) AS clean_text
-         |  FROM kept GROUP BY doc_id)
-         |SELECT b.doc_id, COALESCE(a.clean_text, '') AS clean_text
-         |FROM b LEFT JOIN agg a ON a.doc_id = b.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-    // q87: the range join stated as the plain SQL inequality join the
-    // binned rewrite must be indistinguishable from (COUNT(c.ts) counts
-    // only matched clicks, so unmatched purchases report 0)
-    "q87_attribution_window" ->
-      """SELECT p.event_id AS event_id, p.user_id AS user_id,
-        |  CAST(COUNT(c.ts) AS BIGINT) AS clicks_30m
-        |FROM events p
-        |LEFT JOIN events c
-        |  ON c.user_id = p.user_id AND c.event_type = 'click'
-        | AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts < p.ts
-        |WHERE p.event_type = 'purchase'
-        |GROUP BY 1, 2
-        |ORDER BY 1""".stripMargin,
-    // q88: the band self-join stated as the plain SQL inequality self-join
-    // (BETWEEN is inclusive both ends, matching bandPairs)
-    "q88_order_band_pairs" ->
-      """SELECT a.o_custkey AS custkey, a.o_orderkey AS a_key,
-        |  b.o_orderkey AS b_key,
-        |  CAST(datediff('day', a.o_orderdate, b.o_orderdate) AS BIGINT) AS gap_days
-        |FROM orders a
-        |JOIN orders b
-        |  ON b.o_custkey = a.o_custkey
-        | AND b.o_orderdate BETWEEN a.o_orderdate - INTERVAL 7 DAY
-        |                       AND a.o_orderdate + INTERVAL 7 DAY
-        | AND a.o_orderkey < b.o_orderkey
-        |ORDER BY 1, 2, 3""".stripMargin,
-    // q89: the same inequality join in DuckDB's dialect (epoch_us for
-    // unix_micros; both gaps are positive so // truncation == floor)
-    "q89_sql_range_join" ->
-      """SELECT p.event_id AS p_event, c.event_id AS c_event,
-        |  CAST((epoch_us(p.ts) - epoch_us(c.ts)) // 1000000 AS BIGINT) AS gap_sec
-        |FROM events p
-        |JOIN events c
-        |  ON p.user_id = c.user_id
-        | AND p.event_type = 'purchase' AND c.event_type = 'click'
-        | AND c.ts >= p.ts - INTERVAL 30 MINUTE AND c.ts < p.ts
-        |ORDER BY 1, 2""".stripMargin,
-    // q85: first-occurrence keep via row_number over (doc, span) in span
-    // order — the windowed definition of array_distinct's semantics
-    "q85_intradoc_span_dedup" ->
-      s"""WITH sp AS (SELECT doc_id,
-         |    regexp_extract_all(COALESCE(text, ''), '${Text.spanPattern(2)}') AS l
-         |  FROM documents),
-         |chunks AS (SELECT doc_id, unnest(range(len(l))) AS i, unnest(l) AS ch FROM sp),
-         |kept AS (SELECT doc_id, i, ch FROM (
-         |    SELECT doc_id, i, ch,
-         |      row_number() OVER (PARTITION BY doc_id, ch ORDER BY i) AS rn
-         |    FROM chunks) r
-         |  WHERE rn = 1),
-         |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         |    string_agg(ch, ' ' ORDER BY i) AS clean_text
-         |  FROM kept GROUP BY doc_id),
-         |tot AS (SELECT doc_id, CAST(len(l) AS BIGINT) AS n_spans FROM sp)
-         |SELECT t.doc_id, t.n_spans,
-         |  CAST(t.n_spans - COALESCE(a.n_kept, 0) AS BIGINT) AS n_dropped,
-         |  COALESCE(a.clean_text, '') AS clean_text
-         |FROM tot t LEFT JOIN agg a ON a.doc_id = t.doc_id
-         |ORDER BY t.doc_id""".stripMargin,
-    "q30_embedding_norms" ->
-      s"""SELECT label, COUNT(*) AS cnt,
-         |  CAST(${ExactAgg.Sql.divHalfUp("SUM(ne6)", "COUNT(*) * 100")} AS DOUBLE) / 10000.0 AS avg_norm
-         |FROM (SELECT label,
-         |    CAST(floor(sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x))) * 1000000.0) AS BIGINT) AS ne6
-         |  FROM embeddings) t
-         |GROUP BY label ORDER BY label""".stripMargin,
-    "q17_source_normalize" ->
-      s"""SELECT src, COUNT(*) AS cnt, ${sqlAvg2dp("pay_usd")} AS avg_pay,
-         |  CAST(COUNT(state) AS BIGINT) AS n_with_state
-         |FROM (
-        |  SELECT 'linkedin' AS src,
-        |    TRY_CAST(regexp_replace(concat('$$', CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR), ' USD'), '[^0-9.]', '', 'g') AS DOUBLE) AS pay_usd,
-        |    trim(string_split(concat(o_orderpriority, ', ', o_orderstatus), ',')[2]) AS state
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'adzuna', c_acctbal, NULL FROM customer) u
-        |GROUP BY src ORDER BY src""".stripMargin,
-    "q18_json_decode" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_decoded,
-        |  CAST(length(props) AS INTEGER) AS props_len
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q19_freshness" ->
-      """SELECT CASE WHEN days IS NULL THEN 'Unknown' WHEN days <= 1 THEN 'Fresh'
-        |       WHEN days <= 7 THEN 'Recent' WHEN days <= 30 THEN 'Active'
-        |       ELSE 'Old' END AS freshness, COUNT(*) AS cnt
-        |FROM (SELECT date_diff('day', CAST(ts AS DATE), DATE '2024-03-01') AS days FROM events) t
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q31_trigram_freq" ->
-      """SELECT ng, COUNT(*) AS cnt FROM (
-        |  SELECT concat_ws(' ', t[CAST(i AS INT)+1], t[CAST(i AS INT)+2], t[CAST(i AS INT)+3]) AS ng
-        |  FROM (SELECT string_split(text, ' ') AS t FROM documents) d,
-        |       UNNEST(range(len(t) - 2)) AS u(i)) g
-        |GROUP BY ng ORDER BY cnt DESC, ng LIMIT 20""".stripMargin,
-    "q32_user_gaps" ->
-      s"""SELECT user_id, COUNT(*) AS cnt, CAST(COUNT(gap) AS BIGINT) AS n_gaps,
-         |  ${sqlAvgLong("gap")} AS avg_gap_sec
-         |FROM (
-        |  SELECT user_id,
-        |    CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |      - lag(CAST(epoch(date_trunc('second', ts)) AS BIGINT), 1)
-        |        OVER (PARTITION BY user_id ORDER BY event_id) AS gap
-        |  FROM events) t
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q33_cube_counts" ->
-      s"""SELECT COALESCE(l_returnflag, 'ALL') AS f, COALESCE(l_linestatus, 'ALL') AS st,
-         |  COUNT(*) AS cnt,
-         |  CAST(SUM(${sqlCents("l_quantity")}) AS BIGINT) AS sum_qty_c
-         |FROM lineitem
-         |GROUP BY CUBE(l_returnflag, l_linestatus)
-         |ORDER BY f, st""".stripMargin,
-    "q34_inactive_customers" ->
-      """SELECT c_mktsegment, COUNT(*) AS cnt FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM events e WHERE e.user_id = c.c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q35_distinct_users" ->
-      """SELECT event_type, COUNT(*) AS cnt, COUNT(DISTINCT user_id) AS users
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q36_asof_latest_order" ->
-      """WITH od AS (
-        |  SELECT o_custkey, CAST(o_orderdate AS TIMESTAMP) AS d, o_orderkey FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey, o_orderdate ORDER BY o_orderkey DESC) AS rn
-        |    FROM orders) t
-        |  WHERE rn = 1)
-        |SELECT e.event_id, COALESCE(od.o_orderkey, -1) AS okey
-        |FROM events e ASOF LEFT JOIN od ON e.user_id = od.o_custkey AND od.d <= e.ts
-        |ORDER BY e.event_id""".stripMargin,
-    "q45_job_pipeline" ->
-      """WITH raw AS (
-        |  SELECT o_orderkey, CAST(o_orderkey AS VARCHAR) AS job_id,
-        |    concat('Company', CAST(o_custkey % 50 AS VARCHAR)) AS company_name,
-        |    CASE WHEN o_orderpriority = '1-URGENT' THEN 'Senior Software Engineer'
-        |         WHEN o_orderpriority = '2-HIGH' THEN 'Data Analyst'
-        |         WHEN o_orderpriority = '3-MEDIUM' THEN 'junior ux designer'
-        |         WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 'sales account manager'
-        |         ELSE 'qa tester' END AS title,
-        |    TRY_CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR) AS DOUBLE) AS smin,
-        |    TRY_CAST(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 20000 AS DECIMAL(14,2)) AS VARCHAR) AS DOUBLE) AS smax,
-        |    CASE WHEN o_custkey % 4 = 0 THEN 'GBP' ELSE 'USD' END AS ccy,
-        |    CASE WHEN o_custkey % 3 = 0 THEN 'Full-time' WHEN o_custkey % 3 = 1 THEN 'part-time'
-        |         ELSE 'contract work' END AS wt,
-        |    CASE WHEN o_orderkey % 5 = 0 THEN 'Executive' ELSE '' END AS exp_src,
-        |    CAST(o_orderdate AS DATE) AS listed_date,
-        |    CAST(o_orderkey % 300 AS INTEGER) AS views,
-        |    CAST(o_orderkey % 20 AS INTEGER) AS applies
-        |  FROM orders),
-        |sal AS (
-        |  SELECT *,
-        |    CASE WHEN ccy = 'GBP' AND smin_c IS NOT NULL THEN smin_c * 1.27 ELSE smin_c END AS min_usd,
-        |    CASE WHEN ccy = 'GBP' AND smax_c IS NOT NULL THEN smax_c * 1.27 ELSE smax_c END AS max_usd
-        |  FROM (SELECT *, CASE WHEN smin > 0 THEN smin END AS smin_c,
-        |               CASE WHEN smax > 0 THEN smax END AS smax_c FROM raw) t),
-        |enr AS (
-        |  SELECT *,
-        |    CASE WHEN min_usd IS NOT NULL AND max_usd IS NOT NULL THEN (min_usd + max_usd) / 2.0
-        |         WHEN min_usd IS NOT NULL THEN min_usd
-        |         WHEN max_usd IS NOT NULL THEN max_usd END AS salary_avg_raw,
-        |    CASE WHEN min_usd IS NOT NULL AND max_usd IS NOT NULL THEN max_usd - min_usd END AS salary_range_raw,
-        |    CASE WHEN regexp_matches(title, '(?i)intern|internship') THEN 'Intern'
-        |         WHEN regexp_matches(title, '(?i)junior|jr\.|entry|graduate|associate') THEN 'Junior'
-        |         WHEN regexp_matches(title, '(?i)senior|sr\.|lead|principal|staff') THEN 'Senior'
-        |         WHEN regexp_matches(title, '(?i)manager|director|head|vp|chief|cto|ceo') THEN 'Manager/Executive'
-        |         ELSE 'Mid-Level' END AS exp_derived,
-        |    date_diff('day', listed_date, DATE '1998-06-01') AS days_since
-        |  FROM sal)
-        |SELECT job_id,
-        |  upper(trim(company_name)) AS company_name_clean,
-        |  CASE WHEN regexp_matches(title, '(?i)software|developer|engineer|programming|backend|frontend|fullstack') THEN 'Software Engineering'
-        |       WHEN regexp_matches(title, '(?i)data|analyst|scientist|analytics|bi|business intelligence') THEN 'Data & Analytics'
-        |       WHEN regexp_matches(title, '(?i)manager|management|director|product manager') THEN 'Management'
-        |       WHEN regexp_matches(title, '(?i)marketing|social media|seo|content|digital marketing') THEN 'Marketing'
-        |       WHEN regexp_matches(title, '(?i)sales|account|business development') THEN 'Sales'
-        |       WHEN regexp_matches(title, '(?i)design|designer|ux|ui|graphic') THEN 'Design'
-        |       WHEN regexp_matches(title, '(?i)devops|cloud|infrastructure|sre') THEN 'DevOps/Cloud'
-        |       WHEN regexp_matches(title, '(?i)qa|quality|test|tester') THEN 'QA/Testing'
-        |       WHEN regexp_matches(title, '(?i)hr|human resource|recruiter') THEN 'Human Resources'
-        |       ELSE 'Other' END AS job_category,
-        |  CASE WHEN exp_src IS NOT NULL AND exp_src <> 'Not Specified' AND trim(exp_src) <> ''
-        |       THEN exp_src ELSE exp_derived END AS experience_level_final,
-        |  CASE WHEN regexp_matches(wt, '(?i)full') THEN 'FULL_TIME'
-        |       WHEN regexp_matches(wt, '(?i)part') THEN 'PART_TIME'
-        |       WHEN regexp_matches(wt, '(?i)contract') THEN 'CONTRACT'
-        |       WHEN regexp_matches(wt, '(?i)temporary') THEN 'TEMPORARY'
-        |       ELSE 'Other' END AS work_type_clean,
-        |  CASE WHEN salary_avg_raw IS NULL THEN 'Not Specified'
-        |       WHEN salary_avg_raw < 30000 THEN 'Entry Level'
-        |       WHEN salary_avg_raw < 60000 THEN 'Mid Level'
-        |       WHEN salary_avg_raw < 100000 THEN 'Senior Level'
-        |       ELSE 'Executive Level' END AS salary_category,
-        |  ROUND(salary_avg_raw, 4) AS salary_avg,
-        |  ROUND(salary_range_raw, 4) AS salary_range,
-        |  CASE WHEN days_since <= 1 THEN 'Fresh (< 24h)'
-        |       WHEN days_since <= 7 THEN 'Recent (1-7 days)'
-        |       WHEN days_since <= 30 THEN 'Active (1-4 weeks)'
-        |       ELSE 'Old (> 30 days)' END AS job_freshness,
-        |  'North America' AS region,
-        |  ROUND(CASE WHEN views > 0 AND applies > 0
-        |        THEN CAST(applies AS DOUBLE) / CAST(views AS DOUBLE) * 100.0 ELSE 0.0 END, 4) AS competition_score,
-        |  (views > 100 AND (CASE WHEN views > 0 AND applies > 0
-        |        THEN CAST(applies AS DOUBLE) / CAST(views AS DOUBLE) * 100.0 ELSE 0.0 END) < 5) AS is_high_demand,
-        |  CAST(dayofweek(listed_date) + 1 AS INTEGER) AS posted_day_of_week,
-        |  CAST(month(listed_date) AS INTEGER) AS posted_month
-        |FROM enr ORDER BY CAST(job_id AS BIGINT)""".stripMargin,
-    "q46_salary_distribution" ->
-      """WITH raw AS (
-        |  SELECT CAST(o_orderkey AS VARCHAR) AS job_id,
-        |    CASE WHEN o_orderpriority = '1-URGENT' THEN 'Senior Software Engineer'
-        |         WHEN o_orderpriority = '2-HIGH' THEN 'Data Analyst'
-        |         WHEN o_orderpriority = '3-MEDIUM' THEN 'junior ux designer'
-        |         WHEN o_orderpriority = '4-NOT SPECIFIED' THEN 'sales account manager'
-        |         ELSE 'qa tester' END AS title,
-        |    TRY_CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) AS VARCHAR) AS DOUBLE) AS smin,
-        |    TRY_CAST(CAST(CAST(CAST(o_totalprice AS DECIMAL(12,2)) + 20000 AS DECIMAL(14,2)) AS VARCHAR) AS DOUBLE) AS smax,
-        |    CASE WHEN o_custkey % 4 = 0 THEN 'GBP' ELSE 'USD' END AS ccy
-        |  FROM orders),
-        |sal AS (
-        |  SELECT *,
-        |    CASE WHEN ccy = 'GBP' AND smin_c IS NOT NULL THEN smin_c * 1.27 ELSE smin_c END AS min_usd,
-        |    CASE WHEN ccy = 'GBP' AND smax_c IS NOT NULL THEN smax_c * 1.27 ELSE smax_c END AS max_usd
-        |  FROM (SELECT *, CASE WHEN smin > 0 THEN smin END AS smin_c,
-        |               CASE WHEN smax > 0 THEN smax END AS smax_c FROM raw) t),
-        |enr AS (
-        |  SELECT job_id, title,
-        |    CASE WHEN min_usd IS NOT NULL AND max_usd IS NOT NULL THEN (min_usd + max_usd) / 2.0
-        |         WHEN min_usd IS NOT NULL THEN min_usd
-        |         WHEN max_usd IS NOT NULL THEN max_usd END AS salary_avg
-        |  FROM sal)
-        |SELECT
-        |  CASE WHEN salary_avg IS NULL THEN 'Not Specified'
-        |       WHEN salary_avg < 30000 THEN 'Entry Level'
-        |       WHEN salary_avg < 60000 THEN 'Mid Level'
-        |       WHEN salary_avg < 100000 THEN 'Senior Level'
-        |       ELSE 'Executive Level' END AS salary_category,
-        |  CASE WHEN regexp_matches(title, '(?i)software|developer|engineer|programming|backend|frontend|fullstack') THEN 'Software Engineering'
-        |       WHEN regexp_matches(title, '(?i)data|analyst|scientist|analytics|bi|business intelligence') THEN 'Data & Analytics'
-        |       WHEN regexp_matches(title, '(?i)manager|management|director|product manager') THEN 'Management'
-        |       WHEN regexp_matches(title, '(?i)marketing|social media|seo|content|digital marketing') THEN 'Marketing'
-        |       WHEN regexp_matches(title, '(?i)sales|account|business development') THEN 'Sales'
-        |       WHEN regexp_matches(title, '(?i)design|designer|ux|ui|graphic') THEN 'Design'
-        |       WHEN regexp_matches(title, '(?i)devops|cloud|infrastructure|sre') THEN 'DevOps/Cloud'
-        |       WHEN regexp_matches(title, '(?i)qa|quality|test|tester') THEN 'QA/Testing'
-        |       WHEN regexp_matches(title, '(?i)hr|human resource|recruiter') THEN 'Human Resources'
-        |       ELSE 'Other' END AS job_category,
-        |  COUNT(job_id) AS job_count
-        |FROM enr GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q44_pivot_counts" ->
-      """SELECT CAST(dayofweek(ts) AS INTEGER) AS dow,
-        |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
-        |  CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q43_ivf_ann" ->
-      """WITH cents AS (
-        |  SELECT vec_id AS cell_id, CAST(embedding AS DOUBLE[]) AS cell_vec
-        |  FROM embeddings WHERE vec_id < 32),
-        |corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
-        |assigned AS (
-        |  SELECT vec_id, vec, cell_id FROM (
-        |    SELECT c.vec_id, c.vec, ct.cell_id,
-        |      ROW_NUMBER() OVER (PARTITION BY c.vec_id
-        |        ORDER BY list_cosine_similarity(c.vec, ct.cell_vec) DESC, ct.cell_id) AS rn
-        |    FROM corpus c CROSS JOIN cents ct) t WHERE rn = 1),
-        |probes AS (
-        |  SELECT query_id, qvec, cell_id FROM (
-        |    SELECT q.vec_id AS query_id, q.vec AS qvec, ct.cell_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-        |        ORDER BY list_cosine_similarity(q.vec, ct.cell_vec) DESC, ct.cell_id) AS rn
-        |    FROM corpus q CROSS JOIN cents ct WHERE q.vec_id < 10) t WHERE rn <= 4),
-        |scored AS (
-        |  SELECT p.query_id, a.vec_id AS neighbor_id, list_cosine_similarity(p.qvec, a.vec) AS s
-        |  FROM probes p JOIN assigned a USING (cell_id) WHERE a.vec_id <> p.query_id)
-        |SELECT query_id, neighbor_id, ROUND(s, 4) AS sim,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS INTEGER) AS rank
-        |FROM scored QUALIFY rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q41_text_scrub" ->
-      """SELECT doc_id,
-        |  CAST(length(dirty) AS INTEGER) AS dirty_len,
-        |  CAST(length(trim(regexp_replace(regexp_replace(regexp_replace(dirty,
-        |    'https?://[^ ]+', '', 'g'),
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '', 'g'),
-        |    '  +', ' ', 'g'))) AS INTEGER) AS clean_len
-        |FROM (
-        |  SELECT doc_id,
-        |    concat(text, ' http://ex.com/', doc_id, ' u', doc_id, '@mail.com tail') AS dirty
-        |  FROM documents) t
-        |ORDER BY doc_id""".stripMargin,
-    "q42_repetition" ->
-      s"""SELECT doc_id, CAST(${ExactAgg.Sql.divHalfUp("mx * 10000", "n")} AS DOUBLE) / 10000.0 AS top_token_ratio FROM (
-         |  SELECT doc_id, MAX(c) AS mx, SUM(c) AS n FROM (
-         |    SELECT doc_id, tok, COUNT(*) AS c FROM (
-         |      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) u
-         |    GROUP BY doc_id, tok) g
-         |  GROUP BY doc_id) m
-         |ORDER BY doc_id""".stripMargin,
-    // Spark session_window semantics: a new session starts when the gap to
-    // the previous event is >= the gap duration (window end = last + gap,
-    // exclusive). The lag/accumulate windows order by (ts, event_id) —
-    // session_window merges purely on event-time order, so ordering the
-    // oracle by event_id alone would silently assume ts is monotone in
-    // event_id per user.
-    "q40_session_windows" ->
-      """WITH marked AS (
-        |  SELECT user_id, ts, event_id,
-        |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |           OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL '30 minutes'
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |sessions AS (
-        |  SELECT user_id, ts,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM marked)
-        |SELECT user_id, strftime(date_trunc('second', min(ts)), '%Y-%m-%d %H:%M:%S') AS session_start,
-        |  COUNT(*) AS n_events
-        |FROM sessions GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin
-  )
+  def oracleSqlFor(dir: String): Map[String, String] =
+    Map(registry.map(q => q.id -> q.oracle(dir)): _*)
+
+  /** Pre-build every fixture a registry query reads, so a bench run's
+    * first pass times the probe/serve path, not a one-time build (round-8
+    * advice: q78's first pass carried its 83.6 s index build). Each
+    * helper runs once; a current stamped fixture costs a fingerprint
+    * probe. The lakes q61/q65/q71-q74 stamp inline in their queries.
+    */
+  private[graft] def prebuildFixtures(s: SparkSession, dir: String): Unit =
+    Query.fixtures(registry).foreach(_.build(s, dir))
 }

@@ -64,7 +64,7 @@ object Verify {
     // sizes + raw recall, so any driver-side hash mismatch is attributable
     // in one read. `_`-prefixed → invisible to the driver's query globs.
     try Files.writeString(Paths.get(s"$outDir/_q79_diag.json"),
-      SparkEntry.q79Diagnostics(spark, sfDir))
+      registry.VectorQueries.q79Diagnostics(spark, sfDir))
     catch { case e: Throwable =>
       System.err.println(s"[verify] q79 diag failed: ${e.getMessage}")
     }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * (binary value) diverge on exact ties (observed at sf0.1; see
   * /root/repo/PLANS.md). Integer arithmetic removes both failure modes.
   *
-  * One copy for every call site (SparkEntry, BatchAggregates,
+  * One copy for every call site (the registry queries, BatchAggregates,
   * StreamingAggs) so the semantics can't drift between modules.
   */
 object ExactAgg {

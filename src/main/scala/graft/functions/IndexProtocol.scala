@@ -212,14 +212,19 @@ private[graft] object IndexProtocol {
   }
 
   /** A count family's facts under `root`, projected to `columns` and
-    * deduplicated. The `distinct` is the crash shield: a fold's post-swap
-    * crash can leave a generation's facts twice, and because every fact
-    * carries its origin generation (`src`) it drops only such copies,
-    * never two real facts.
+    * deduplicated. Before the scan, any generation a crashed fold left
+    * parked at `<root>__old` is restored
+    * ([[graft.sinks.Sinks.recoverPartitions]]), so a refresh after the
+    * crash still counts it. The `distinct` is the other crash shield: a
+    * fold's post-swap crash can leave a generation's facts twice, and
+    * because every fact carries its origin generation (`src`) it drops
+    * only such copies, never two real facts.
     */
-  def readFacts(spark: SparkSession, root: String, columns: String*): DataFrame =
+  def readFacts(spark: SparkSession, root: String, columns: String*): DataFrame = {
+    graft.sinks.Sinks.recoverPartitions(spark, root)
     graft.sources.Tables.parquetScan(spark, root)
       .select(columns.head, columns.tail: _*).distinct()
+  }
 
   // --------------------------------------------------- generational fold
 

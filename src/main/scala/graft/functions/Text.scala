@@ -384,7 +384,7 @@ object Text {
         sum(when(col("is_boiler").isNotNull, col("c")).otherwise(0L)).as("n_boiler"))
       .withColumn("boiler_e4", ExactAgg.divHalfUp(col("n_boiler") * 10000, col("n_grams")))
       // int64 0/1, not BOOLEAN: oracled output columns stay inside the
-      // proven hasher-safe type envelope (see q39's note in SparkEntry)
+      // proven hasher-safe type envelope (see q39's note in registry.RelationalQueries)
       .withColumn("keep", (col("boiler_e4") <= maxRatioE4).cast("long"))
   }
 

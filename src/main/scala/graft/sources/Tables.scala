@@ -46,17 +46,26 @@ object Tables {
     * once per source (the bench/verify/driver contract recomputes
     * everything from parquet). Each entry also records whether the source
     * declares TIMESTAMP(NANOS) columns, which its schema alone cannot say
-    * (see [[events]]).
+    * (see [[events]]), and the [[InferenceConfs]] values the inference ran
+    * under: a session holding other values infers again.
     */
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
 
   private final case class Inferred(
-      sig: String, schema: org.apache.spark.sql.types.StructType, nanos: Boolean)
+      sig: String, confs: Seq[Option[String]],
+      schema: org.apache.spark.sql.types.StructType, nanos: Boolean)
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
+  /** Session confs that change what parquet inference returns for the same
+    * bytes (`nanosAsLong` rides on the entry's `nanos` field instead). */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
   /** Source-state signature behind every JVM-local source memo (the schema
-    * memo here and [[graft.SparkEntry]]'s fixture-stamp fingerprints):
+    * memo here and [[graft.Fixture]]'s source fingerprints):
     * SHA-256 over the sorted `path:size:mtime;` listing of every file under
     * `path`. None when `java.nio` cannot see the path — absent, not on the
     * local filesystem, or failing mid-walk — and a caller then computes
@@ -113,20 +122,25 @@ object Tables {
     * reads those columns as longs, and the scan's execution-time footer
     * conversion needs the flag too.
     */
-  private[graft] def parquetScan(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def parquetScan(spark: SparkSession, path: String): DataFrame =
+    scan(spark, path)._1
+
+  /** [[parquetScan]] plus whether the source declares TIMESTAMP(NANOS). */
+  private def scan(spark: SparkSession, path: String): (DataFrame, Boolean) = {
     val sig = sourceSignature(path)
-    Option(schemaMemo.get(path)).filter(h => sig.contains(h.sig)) match {
+    val confs = InferenceConfs.map(spark.conf.getOption)
+    Option(schemaMemo.get(path)).filter(h => sig.contains(h.sig) && h.confs == confs) match {
       case Some(hit) =>
         if (hit.nanos) spark.conf.set(NanosAsLong, "true")
-        spark.read.schema(hit.schema).parquet(path)
+        (spark.read.schema(hit.schema).parquet(path), hit.nanos)
       case None =>
         val df = spark.read.parquet(path)
         // without the flag a NANOS column fails the inference above; with
         // it, it infers as a LongType no different from a plain INT64, and
         // only the footer tells the two apart
         val nanos = spark.conf.get(NanosAsLong, "false").toBoolean && declaresNanos(spark, path)
-        sig.foreach(s => schemaMemo.put(path, Inferred(s, df.schema, nanos)))
-        df
+        sig.foreach(s => schemaMemo.put(path, Inferred(s, confs, df.schema, nanos)))
+        (df, nanos)
     }
   }
 
@@ -258,6 +272,9 @@ object Tables {
     *    oracles assume).
     *  - TIMESTAMP(MICROS, isAdjustedToUTC=1): already TimestampType; as-is.
     *
+    * A plain INT64 `ts` (no TIMESTAMP unit) is refused as contract drift:
+    * nothing says what unit it counts.
+    *
     * The branch costs one footer read on the driver; the returned plan is
     * still a plain pushdown-friendly scan either way.
     */
@@ -273,18 +290,23 @@ object Tables {
     // when this inference did. When set, it must STAY set for the session:
     // the scan re-derives its conf at action time, so restoring the flag
     // after read() would break the returned frame's own execution.
-    val raw =
-      try parquetScan(spark, s"$dir/events.parquet")
+    val (raw, nanos) =
+      try scan(spark, s"$dir/events.parquet")
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if e.getMessage.contains("PARQUET_TYPE_ILLEGAL") ||
               e.getMessage.contains("Illegal Parquet type") =>
           spark.conf.set(NanosAsLong, "true")
-          parquetScan(spark, s"$dir/events.parquet")
+          scan(spark, s"$dir/events.parquet")
       }
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case org.apache.spark.sql.types.LongType if nanos =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case org.apache.spark.sql.types.LongType =>
+        throw new IllegalStateException(
+          "testdata contract drift: events.ts is a plain INT64 that declares no " +
+            s"TIMESTAMP unit; inspect $dir/events.parquet — the loader reads an INT64 " +
+            "ts only when the file declares TIMESTAMP(NANOS)")
       case org.apache.spark.sql.types.TimestampNTZType =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
       case org.apache.spark.sql.types.TimestampType =>

@@ -21,14 +21,14 @@ class IvfIndexSpec extends SparkSpec {
   private def source(seed: Int) = s"sfX|${Fixture.fingerprint(emb(seed), "embeddings")}"
 
   test("ivf stamp: hyperparameter flip changes the stamp; content change changes the stamp") {
-    val a = SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 1)
-    assert(SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 1) == a,
+    val a = registry.VectorQueries.ivfIndexStamp(source(0), k = 2, iters = 1)
+    assert(registry.VectorQueries.ivfIndexStamp(source(0), k = 2, iters = 1) == a,
       "stamp must be deterministic for identical inputs")
-    assert(SparkEntry.ivfIndexStamp(source(0), k = 3, iters = 1) != a, "k must be stamped")
-    assert(SparkEntry.ivfIndexStamp(source(0), k = 2, iters = 2) != a, "iters must be stamped")
+    assert(registry.VectorQueries.ivfIndexStamp(source(0), k = 3, iters = 1) != a, "k must be stamped")
+    assert(registry.VectorQueries.ivfIndexStamp(source(0), k = 2, iters = 2) != a, "iters must be stamped")
     // same cardinality, same vec_ids, different vector CONTENT — the exact
     // staleness mode count+sum(vec_id) could not see
-    assert(SparkEntry.ivfIndexStamp(source(1), k = 2, iters = 1) != a,
+    assert(registry.VectorQueries.ivfIndexStamp(source(1), k = 2, iters = 1) != a,
       "embedding content must be stamped")
   }
 
@@ -38,7 +38,7 @@ class IvfIndexSpec extends SparkSpec {
     val local = java.nio.file.Files.createTempDirectory("graft-ivf-stamp").toString
     val fixture = asFixture(local)
     val df = emb(0)
-    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
+    registry.VectorQueries.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
     assert(spark.read.parquet(s"$fixture/cells").count() == 2)
     def listState(): Set[(String, Long)] = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(local, "lists"))
@@ -51,11 +51,11 @@ class IvfIndexSpec extends SparkSpec {
     }
     val before = listState()
     // same corpus + same hyperparameters: write-once — no file touched
-    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
+    registry.VectorQueries.ensureIvfIndex(df, source(0), fixture, k = 2, iters = 1)
     assert(listState() == before, "matching stamp must not rewrite the index")
     // hyperparameter change: the stamp mismatches and the index is rebuilt
     // with the new model — the silent-stale-model trap the stamp closes
-    SparkEntry.ensureIvfIndex(df, source(0), fixture, k = 3, iters = 1)
+    registry.VectorQueries.ensureIvfIndex(df, source(0), fixture, k = 3, iters = 1)
     assert(spark.read.parquet(s"$fixture/cells").count() == 3,
       "k flip must rebuild the index under the new model")
   }

@@ -468,7 +468,7 @@ class PlanAuditSpec extends SparkSpec {
     // probe set legitimately covers all cells — the O(batch) claim is
     // about batch-sized probes, which is what this asserts.)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val fixture = SparkEntry.ensureAppendedIvfIndex(spark, dir)
+    val fixture = registry.VectorQueries.ensureAppendedIvfIndex(spark, dir)
     val df = graft.functions.Similarity.dedupAgainstIvfIndex(
       spark, fixture, emb.filter(org.apache.spark.sql.functions.col("vec_id") < 2),
       nProbe = 2, minSim = 0.95)

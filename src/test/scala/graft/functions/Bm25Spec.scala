@@ -151,6 +151,33 @@ class Bm25Spec extends SparkSpec {
     assert(ranked(Bm25.indexRoot(inc)) == ranked(indexPath))
   }
 
+  test("refresh restores a fact generation a crashed fold left parked") {
+    def grown(p: String): String = {
+      Bm25.installIndex(docs.filter(col("doc_id") < 2), "text", "doc_id", p)
+      assert(Bm25.appendDocs(docs.filter(col("doc_id").between(2, 3)), p, generation = 1L))
+      assert(Bm25.appendDocs(docs.filter(col("doc_id") >= 4), p, generation = 2L))
+      p
+    }
+    val clean = grown(s"$root/park_clean")
+    Bm25.refreshIndex(spark, clean)
+    // the state between compactGenerational's two renames: the last
+    // generation parked at <facts>__old/batch=2, its live copy gone
+    val parked = grown(s"$root/park")
+    val facts = new org.apache.hadoop.fs.Path(s"$parked/facts")
+    val trash = new org.apache.hadoop.fs.Path(s"$parked/facts__old")
+    val fs = facts.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(trash)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(facts, "batch=2"),
+      new org.apache.hadoop.fs.Path(trash, "batch=2")))
+    Bm25.refreshIndex(spark, parked)
+    def tbl(p: String, name: String) =
+      spark.read.parquet(s"${Bm25.indexRoot(p)}/$name").collect().map(_.toSeq).toSet
+    Seq("postings", "docs", "terms").foreach { t =>
+      assert(tbl(parked, t) == tbl(clean, t), s"$t differs from a clean refresh")
+    }
+    assert(Bm25.readMeta(spark, Bm25.indexRoot(parked)) == ((bigN, bigL)))
+  }
+
   test("hardNegatives: self and unembedded docs excluded BEFORE the top-n cut") {
     // unit-ish vectors with exact cosines against d0's [1,0]:
     // d1 -> 0.6, d2 -> -1.0, d4 -> 1.0; d3 has NO vector (the partial

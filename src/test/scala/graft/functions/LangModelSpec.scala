@@ -121,6 +121,33 @@ class LangModelSpec extends SparkSpec {
     assert(!LangModel.countIndexReadable(spark, s"$dir/nowhere"))
   }
 
+  test("refresh restores a count generation a crashed fold left parked") {
+    val dir = Files.createTempDirectory("lm_park").toString
+    def grown(p: String): String = {
+      LangModel.installCountIndex(Seq((1L, "a b a b c")).toDF("doc_id", "text"), "text", p)
+      assert(LangModel.appendCounts(Seq((2L, "b c b c a")).toDF("doc_id", "text"), p, 1L))
+      assert(LangModel.appendCounts(Seq((3L, "c d c d a")).toDF("doc_id", "text"), p, 2L))
+      p
+    }
+    val clean = grown(s"$dir/clean")
+    LangModel.refreshModel(spark, clean)
+    // the state between compactGenerational's two renames: the last
+    // generation parked at <counts>__old/batch=2, its live copy gone
+    val parked = grown(s"$dir/parked")
+    val counts = new org.apache.hadoop.fs.Path(s"$parked/counts")
+    val trash = new org.apache.hadoop.fs.Path(s"$parked/counts__old")
+    val fs = counts.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(trash)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(counts, "batch=2"),
+      new org.apache.hadoop.fs.Path(trash, "batch=2")))
+    LangModel.refreshModel(spark, parked)
+    for (t <- Seq("bigrams", "unigrams", "defaults")) {
+      val a = spark.read.parquet(s"${LangModel.modelRoot(parked)}/$t").collect().map(_.toSeq).toSet
+      val b = spark.read.parquet(s"${LangModel.modelRoot(clean)}/$t").collect().map(_.toSeq).toSet
+      assert(a == b, s"table $t differs from a clean refresh")
+    }
+  }
+
   test("version check refuses a future-scheme model") {
     val p = trainToy()
     IndexProtocol.writeLayoutPayload(spark, p, "v=2,lm=99,n=2")

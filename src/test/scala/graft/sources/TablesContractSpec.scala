@@ -117,9 +117,9 @@ class TablesContractSpec extends SparkSpec {
       .write.parquet(s"$dir/events.parquet")
     val s = spark.newSession()
     val before = s.conf.getOption(key)
-    Tables.events(s, dir).collect()
+    intercept[IllegalStateException](Tables.events(s, dir).collect())
     assert(s.conf.getOption(key) == before, "the inference set nanosAsLong for a plain INT64 ts")
-    Tables.events(s, dir).collect()
+    intercept[IllegalStateException](Tables.events(s, dir).collect())
     assert(s.conf.getOption(key) == before, "a memo hit set nanosAsLong for a plain INT64 ts")
   }
 
@@ -158,6 +158,29 @@ class TablesContractSpec extends SparkSpec {
     assert(inferred.map(_.getAs[java.sql.Timestamp]("ts").toInstant) ==
       nanos.map(ns => java.time.Instant.ofEpochSecond(0L, ns / 1000 * 1000)))
     assert(fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("the schema memo infers again under a different binaryAsString") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // written without Spark's schema metadata, so inference follows the
+    // session's binaryAsString instead of a stored Spark type
+    val path = s"${Files.createTempDirectory("bin-memo")}/t.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; required binary b; }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L).append("b", "x"))
+    finally writer.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val off = spark.newSession()
+    off.conf.set(key, "false")
+    assert(Tables.parquetScan(off, path).schema("b").dataType == BinaryType)
+    val on = spark.newSession()
+    on.conf.set(key, "true")
+    assert(Tables.parquetScan(on, path).schema("b").dataType == StringType,
+      "a memo entry inferred under binaryAsString=false served a binaryAsString=true session")
   }
 
   test("events loader fails with one clear message on an unknown ts physical type") {
