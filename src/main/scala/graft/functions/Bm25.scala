@@ -114,7 +114,7 @@ object Bm25 {
       .withColumn("idf_e6",
         round(log(lit(1.0) + (lit(n.toDouble) - col("df") + lit(0.5)) /
           (col("df") + lit(0.5))) * IdfScale).cast("long"))
-    IndexProtocol.stagedReplace(spark, path) { stage =>
+    graft.sinks.Sinks.replaceTable(spark, path) { stage =>
       postings.write.parquet(s"$stage/postings")
       docNorms.write.parquet(s"$stage/docs")
       terms.write.parquet(s"$stage/terms")

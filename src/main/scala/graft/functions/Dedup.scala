@@ -1184,14 +1184,14 @@ object Dedup {
   }
 
   /** [[IndexProtocol.generationalReadable]] for a [[writeEvalIndex]] layout. Runs
-    * [[recoverEvalIndex]] first: a crashed install swap parks the WHOLE
-    * live index at `<path>__old`, and without the restore every probe
-    * until the next startup would read "no index" — for a gate that fails
-    * open, a silently-disabled screen (the review's fail-open finding).
+    * [[graft.sinks.Sinks.recoverTable]] first: a crashed install swap parks
+    * the WHOLE live index at `<path>__old`, and without the restore every
+    * probe until the next startup would read "no index" — for a gate that
+    * fails open, a silently-disabled screen (the review's fail-open finding).
     */
   def evalIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    recoverEvalIndex(spark, path)
+    graft.sinks.Sinks.recoverTable(spark, path)
     IndexProtocol.generationalReadable(spark, path, Seq(""))
   }
 
@@ -1270,16 +1270,17 @@ object Dedup {
     * ingest batches never read eval TEXT again. Skew-safe via the salted
     * winnowing form (identical fingerprint set, bounded window partitions).
     *
-    * The install is STAGED then swapped ([[graft.sinks.Sinks.swapIn]]), not
-    * built in place: the documented usage is an operator refreshing the
+    * The install is STAGED then swapped ([[graft.sinks.Sinks.replaceTable]]),
+    * not built in place: the documented usage is an operator refreshing the
     * blocklist while an ingest loop keeps probing it, and a delete-then-
     * rebuild window would read as "no index installed" — the decontam gate
     * fails OPEN by design (it cannot bootstrap from ingest data), so every
     * batch landed during the rebuild would permanently commit unscreened
     * docs. With the swap, probes see the old suites until the instant the
     * new install is complete; a crash between the swap's renames parks the
-    * old index at `<path>__old`, restored by [[recoverEvalIndex]] (run on
-    * probe entry and by the ingest loop's startup recovery).
+    * old index at `<path>__old`, restored by
+    * [[graft.sinks.Sinks.recoverTable]] (run on probe entry and by the
+    * ingest loop's startup recovery).
     */
   def writeEvalIndex(
       evalDocs: DataFrame,
@@ -1290,7 +1291,7 @@ object Dedup {
       w: Int = 4,
       generation: Long = 0L): Unit = {
     val spark = evalDocs.sparkSession
-    IndexProtocol.stagedReplace(spark, path) { next =>
+    graft.sinks.Sinks.replaceTable(spark, path) { next =>
       IndexProtocol.install(spark, next, Seq("k" -> k, "w" -> w), generation,
         evalRows(evalDocs, next, textCol, idCol, k, w))
     }
@@ -1303,12 +1304,6 @@ object Dedup {
     IndexProtocol.GenerationRows(path,
       Text.winnowFingerprintsSalted(evalDocs, textCol, idCol, k, w)
         .select(col(idCol).as("eval_id"), col("fp")))
-
-  /** Restore an eval index a crashed [[writeEvalIndex]] swap left parked at
-    * `<path>__old`. No-op when the live path exists. */
-  def recoverEvalIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    IndexProtocol.recoverReplace(spark, path)
 
   /** Append a NEW eval suite to the index as its own immutable generation —
     * adding a benchmark to the blocklist without re-fingerprinting the
@@ -1359,7 +1354,7 @@ object Dedup {
       idCol: String = "doc_id",
       minSharedFps: Int = 1): DataFrame = {
     require(minSharedFps >= 1, s"minSharedFps must be >= 1, got $minSharedFps")
-    recoverEvalIndex(spark, path)
+    graft.sinks.Sinks.recoverTable(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalRows) = evalIndexRows(spark, path)
     val evalFps = evalRows.select("fp").distinct()
@@ -1389,7 +1384,7 @@ object Dedup {
       batch: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    recoverEvalIndex(spark, path)
+    graft.sinks.Sinks.recoverTable(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalFps) = evalIndexRows(spark, path)
     Text.winnowFingerprintsSalted(
@@ -1542,7 +1537,7 @@ object Dedup {
       .groupBy("h").agg(sum(col("c")).as("__total"))
       .filter(col("__total") >= minCount)
       .select("h")
-    IndexProtocol.stagedReplace(spark, hotListPath(path), "__tmp") { next =>
+    graft.sinks.Sinks.replaceTable(spark, hotListPath(path), "__tmp") { next =>
       hot.write.parquet(next)
     }
   }
@@ -1555,7 +1550,7 @@ object Dedup {
     */
   def recoverSpanIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    IndexProtocol.recoverReplace(spark, hotListPath(path))
+    graft.sinks.Sinks.recoverTable(spark, hotListPath(path))
     graft.sinks.Sinks.recoverPartitions(spark, spanCountsRoot(path))
   }
 
@@ -1565,7 +1560,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val live = hotListPath(path)
-    IndexProtocol.recoverReplace(spark, live)
+    graft.sinks.Sinks.recoverTable(spark, live)
     val fs = IndexProtocol.fileSystem(spark, live)
     if (fs.exists(new org.apache.hadoop.fs.Path(live))) graft.sources.Tables.parquetScan(spark, live)
     else {

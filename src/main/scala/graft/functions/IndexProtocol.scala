@@ -50,12 +50,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     so every duplicate a crash window can produce is row-identical;
   *     their refreshes read through [[readFacts]], whose `distinct` is the
   *     crash shield.
-  *   - '''Staged replace for whole-index rewrites.''' Installs-over-live,
-  *     migrations and derived-list refreshes build into a staging sibling
-  *     and swap with [[graft.sinks.Sinks.swapIn]]'s two-rename protocol;
-  *     a crash parks the previous generation at `<path>__old`, restored by
-  *     [[recoverReplace]] (run on loop startup and before every staged
-  *     build).
+  *   - '''Staged replace for whole-index rewrites and folds.'''
+  *     Installs-over-live, migrations and derived-list refreshes go through
+  *     [[graft.sinks.Sinks.replaceTable]], the fold through
+  *     [[graft.sinks.Sinks.replacePartitions]]; those own the staging and
+  *     trash paths and the two-rename swap. A crash parks the previous
+  *     generation, restored by [[graft.sinks.Sinks.recoverTable]] /
+  *     [[graft.sinks.Sinks.recoverPartitions]] (run on loop startup and
+  *     before every staged build).
   */
 private[graft] object IndexProtocol {
 
@@ -199,7 +201,8 @@ private[graft] object IndexProtocol {
     * before the first generation, so no readable index ever lacks one; a
     * crash before the publish leaves layout-only debris, which
     * [[generationalReadable]] reads as bootstrap. Idempotency belongs to
-    * the caller (a write-once fixture stamp, or a [[stagedReplace]]).
+    * the caller (a write-once fixture stamp, or a
+    * [[graft.sinks.Sinks.replaceTable]]).
     */
   def install(
       spark: SparkSession, path: String, layout: Seq[(String, Any)], generation: Long,
@@ -244,82 +247,45 @@ private[graft] object IndexProtocol {
     val fs = fileSystem(spark, path)
     val rootP = new Path(path)
     if (!fs.exists(rootP)) return
-    graft.sinks.Sinks.recoverPartitions(spark, path)
-    fs.delete(new Path(path + "__tmp"), true)
-    val gens = generations(fs, rootP)
-      .map(_.getPath.getName.drop(GenerationCol.length + 1).toLong)
-      .filter(_ <= upToGen).sorted
-    if (gens.size < 2) return
+    // listed once, inside the replace (after it has restored any parked
+    // generation): the originals deleted below are the ones the fold read
+    var foldable = Seq.empty[Long]
     val dirName = generationDir(upToGen)
-    // distinct restores canonical one-row-per-doc content even when a
-    // previous fold's post-swap crash left duplicate generations behind
-    val consolidated = spark.read.parquet(path)
-      .filter(col(GenerationCol).cast("long") <= upToGen)
-      .drop(GenerationCol).distinct()
-    val tmp = new Path(path + "__tmp", dirName)
-    // a partitioned subtable (the band index's bp layout) must fold into
-    // the same layout — an unpartitioned folded generation next to
-    // partitioned live ones would break partition discovery
-    val cw = consolidated.write
-    (if (partitionBy.nonEmpty) cw.partitionBy(partitionBy: _*) else cw)
-      .parquet(tmp.toString)
-    graft.sinks.Sinks.swapIn(fs, tmp, new Path(rootP, dirName),
-      trash = Some(new Path(path + graft.sinks.Sinks.OldSuffix, dirName)))
-    gens.filter(_ != upToGen).foreach { g =>
-      fs.delete(new Path(rootP, generationDir(g)), true)
+    val folded = graft.sinks.Sinks.replacePartitions(spark, path) { staging =>
+      foldable = generations(fs, rootP)
+        .map(_.getPath.getName.drop(GenerationCol.length + 1).toLong)
+        .filter(_ <= upToGen)
+      if (foldable.size < 2) Nil
+      else {
+        // distinct restores canonical one-row-per-doc content even when a
+        // previous fold's post-swap crash left duplicate generations behind
+        val consolidated = spark.read.parquet(path)
+          .filter(col(GenerationCol).cast("long") <= upToGen)
+          .drop(GenerationCol).distinct()
+        // a partitioned subtable (the band index's bp layout) must fold into
+        // the same layout — an unpartitioned folded generation next to
+        // partitioned live ones would break partition discovery
+        val cw = consolidated.write
+        (if (partitionBy.nonEmpty) cw.partitionBy(partitionBy: _*) else cw)
+          .parquet(s"$staging/$dirName")
+        Seq(dirName)
+      }
     }
-    fs.delete(new Path(path + "__tmp"), true)
-    fs.delete(new Path(path + graft.sinks.Sinks.OldSuffix), true)
-  }
-
-  // ------------------------------------------------------ staged replace
-
-  /** Restore a table a crashed [[stagedReplace]] swap left parked at
-    * `<path>__old`. No-op when the live path exists. */
-  def recoverReplace(spark: SparkSession, path: String): Unit = {
-    val fs = fileSystem(spark, path)
-    graft.sinks.Sinks.recoverSwap(fs,
-      new Path(path), new Path(path + graft.sinks.Sinks.OldSuffix))
-  }
-
-  /** Whole-table replace with the staged two-rename protocol: recover any
-    * parked previous generation (the build may READ the live table — a
-    * migration seeds from the old model), clear and hand the caller a
-    * staging path (`<path><stagingSuffix>`), then swap the staged build
-    * in. Crash windows: before the swap the live table is untouched (an
-    * orphaned staging dir is overwritten by the next attempt); between the
-    * swap's renames the table is parked at `<path>__old` — restored by
-    * [[recoverReplace]]. Single-writer contract as everywhere: no
-    * concurrent appends.
-    */
-  def stagedReplace(
-      spark: SparkSession,
-      path: String,
-      stagingSuffix: String = "__next")(build: String => Unit): Unit = {
-    val fs = fileSystem(spark, path)
-    recoverReplace(spark, path)
-    val next = path + stagingSuffix
-    fs.delete(new Path(next), true)
-    build(next)
-    graft.sinks.Sinks.swapIn(fs, new Path(next), new Path(path))
-    fs.delete(new Path(next), true)
+    if (folded.nonEmpty)
+      foldable.filter(_ != upToGen).foreach { g =>
+        fs.delete(new Path(rootP, generationDir(g)), true)
+      }
   }
 }
 
 /** Uniform maintenance handle on one persisted index family — the surface
-  * [[graft.pipeline.IngestPipeline]]'s maintenance cadence iterates
-  * (readable-detection for bootstrap-vs-probe, the bounded-file fold,
-  * post-crash recovery). Appends and probes stay family-typed on the
-  * content modules: their signatures genuinely differ (text batches vs
-  * embedding batches vs span facts), and forcing them through one
-  * interface would erase exactly the types that make them safe.
+  * [[graft.pipeline.IngestPipeline]]'s maintenance cadence iterates (the
+  * bounded-file fold, post-crash recovery). Appends and probes stay
+  * family-typed on the content modules: their signatures genuinely differ
+  * (text batches vs embedding batches vs span facts), and forcing them
+  * through one interface would erase exactly the types that make them safe.
   */
 sealed trait PersistedIndex {
-  def name: String
-
-  /** Crash-aware bootstrap-vs-probe decision — see the readable-detection
-    * contract at [[IndexProtocol]]. */
-  def readable(spark: SparkSession, path: String): Boolean
 
   /** Bounded-file maintenance fold of committed state. `upToGen` bounds
     * the fold for generational families; the in-place families (IVF's
@@ -332,38 +298,32 @@ sealed trait PersistedIndex {
 }
 
 object PersistedIndex {
+  import graft.sinks.Sinks
 
   /** Exact-dedup fingerprint index (q69). */
   case object Fingerprint extends PersistedIndex {
-    val name = "fp"
-    def readable(s: SparkSession, p: String) = Dedup.fingerprintIndexReadable(s, p)
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactFingerprintIndex(s, p, g)
-    def recover(s: SparkSession, p: String) = graft.sinks.Sinks.recoverPartitions(s, p)
+    def recover(s: SparkSession, p: String) = Sinks.recoverPartitions(s, p)
   }
 
   /** MinHash band/sig near-dup index (q78). */
   case object Band extends PersistedIndex {
-    val name = "band"
-    def readable(s: SparkSession, p: String) = Dedup.bandIndexReadable(s, p)
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactBandIndex(s, p, g)
     def recover(s: SparkSession, p: String) = {
-      graft.sinks.Sinks.recoverPartitions(s, s"$p/sigs")
-      graft.sinks.Sinks.recoverPartitions(s, s"$p/bands")
+      Sinks.recoverPartitions(s, s"$p/sigs")
+      Sinks.recoverPartitions(s, s"$p/bands")
     }
   }
 
-  /** Eval-suite decontamination index (q82). */
+  /** Eval-suite decontamination index (q82); a crashed install swap parks
+    * the whole index. */
   case object Eval extends PersistedIndex {
-    val name = "eval"
-    def readable(s: SparkSession, p: String) = Dedup.evalIndexReadable(s, p)
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactEvalIndex(s, p, g)
-    def recover(s: SparkSession, p: String) = Dedup.recoverEvalIndex(s, p)
+    def recover(s: SparkSession, p: String) = Sinks.recoverTable(s, p)
   }
 
   /** Hot-span count index (q86). */
   case object SpanCounts extends PersistedIndex {
-    val name = "span"
-    def readable(s: SparkSession, p: String) = Dedup.spanCountIndexReadable(s, p)
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactSpanCountIndex(s, p, g)
     def recover(s: SparkSession, p: String) = Dedup.recoverSpanIndex(s, p)
   }
@@ -372,15 +332,10 @@ object PersistedIndex {
     * shares the `cell_id=` list layout, so the same handle maintains both
     * paths. */
   case object Ivf extends PersistedIndex {
-    val name = "ivf"
-    def readable(s: SparkSession, p: String) = Similarity.ivfIndexReadable(s, p)
     def compact(s: SparkSession, p: String, g: Long) = Similarity.compactIvfIndex(s, p)
     def recover(s: SparkSession, p: String) = {
-      Similarity.recoverIvfIndex(s, p) // a crashed migration swap
-      graft.sinks.Sinks.recoverPartitions(s, s"$p/lists") // a crashed cell fold
+      Sinks.recoverTable(s, p) // a crashed migration swap
+      Sinks.recoverPartitions(s, s"$p/lists") // a crashed cell fold
     }
   }
-
-  /** Every family, for uniform startup recovery / maintenance sweeps. */
-  val all: Seq[PersistedIndex] = Seq(Fingerprint, Band, Eval, SpanCounts, Ivf)
 }

@@ -253,7 +253,7 @@ object LangModel {
     val order = readCountIndexOrder(spark, path)
     val counts = IndexProtocol.readFacts(spark, countsRoot(path), "w1", "w2", "src", "c")
       .groupBy("w1", "w2").agg(sum(col("c")).as("c"))
-    IndexProtocol.stagedReplace(spark, modelRoot(path)) { next =>
+    graft.sinks.Sinks.replaceTable(spark, modelRoot(path)) { next =>
       writeModel(spark, counts, order, next)
     }
   }

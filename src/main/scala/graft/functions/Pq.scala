@@ -344,8 +344,8 @@ object Pq {
       nCells: Int,
       kmIters: Int,
       pqIters: Int): Unit =
-    IndexProtocol.stagedReplace(spark, path) { next =>
-      // read the OLD model inside the staged build: stagedReplace has
+    graft.sinks.Sinks.replaceTable(spark, path) { next =>
+      // read the OLD model inside the staged build: replaceTable has
       // recovered any parked generation by now, and the live index stays
       // readable until the post-build swap
       val old = readPqModel(spark, path)

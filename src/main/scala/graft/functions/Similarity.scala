@@ -427,7 +427,7 @@ object Similarity {
     * centroids on the caller-supplied corpus (the float vectors — the index
     * stores only int8, so re-quantization must start from the source),
     * build the replacement index ALONGSIDE the serving one, and swap it in
-    * with the two-rename crash-safe [[graft.sinks.Sinks.swapIn]] protocol.
+    * with the two-rename crash-safe [[graft.sinks.Sinks.replaceTable]].
     * The old index (centroids + all lists) is discarded wholesale — frozen
     * centroids are the index's identity, so a retrain orphans every
     * existing list by definition; this is the one operation allowed to pay
@@ -437,8 +437,8 @@ object Similarity {
     * Crash windows: before the swap, the serving index is untouched (the
     * staged `__next` is orphaned and overwritten by the next attempt);
     * between the swap's renames, the index is parked at `<path>__old` —
-    * [[recoverIvfIndex]] restores it (the ingest loop runs that on
-    * startup). Single-writer contract as ever: no appends during the
+    * [[graft.sinks.Sinks.recoverTable]] restores it (the ingest loop runs
+    * that on startup). Single-writer contract as ever: no appends during the
     * migration. The caller re-stamps its fixture after success, as with
     * every persisted index.
     */
@@ -448,15 +448,9 @@ object Similarity {
       corpus: DataFrame,
       k: Int,
       iters: Int): Unit =
-    IndexProtocol.stagedReplace(spark, path) { next =>
+    graft.sinks.Sinks.replaceTable(spark, path) { next =>
       writeIvfIndex(corpus, kmeansCentroids(corpus, k = k, iters = iters), next)
     }
-
-  /** Restore an index a crashed [[migrateIvfIndex]] swap left parked at
-    * `<path>__old`. No-op when the live path exists. */
-  def recoverIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    IndexProtocol.recoverReplace(spark, path)
 
   /** SPHERICAL Lloyd's k-means over embedding vectors — the
     * trained-centroid companion to [[ivfTopK]] (whose exemplar centroids

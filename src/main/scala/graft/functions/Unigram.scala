@@ -350,7 +350,7 @@ object Unigram {
 
   /** Persist a trained model: the piece table as a versioned single-file
     * parquet plus the unknown cost in the layout sidecar. Published
-    * through [[IndexProtocol.stagedReplace]] (the BM25 artifact protocol
+    * through [[graft.sinks.Sinks.replaceTable]] (the BM25 artifact protocol
     * — r14 advice): pieces and unk cost swap in atomically, so a crash
     * mid-write over an existing model can never leave NEW pieces paired
     * with the OLD layout's unk cost (readModel would accept that pair as
@@ -358,7 +358,7 @@ object Unigram {
     */
   def writeModel(spark: SparkSession, model: Model, path: String): Unit = {
     import spark.implicits._
-    IndexProtocol.stagedReplace(spark, path) { stage =>
+    graft.sinks.Sinks.replaceTable(spark, path) { stage =>
       model.pieces.zip(model.lpE4).toSeq.toDF("piece", "lp_e4")
         .coalesce(1).write.parquet(s"$stage/pieces")
       val oov = if (model.byteFallback) "bytes" else "unkid"

@@ -243,8 +243,8 @@ object IngestPipeline {
     * the exact-deduped lake's row count measures feed redundancy without
     * ever rescanning history. O(k) state: each batch folds its own
     * k-minima into the persisted set driver-side and republishes through
-    * [[graft.functions.IndexProtocol.stagedReplace]]. Crash/replay-proof
-    * by algebra rather than protocol: the merge is a set union of minima,
+    * [[Sinks.replaceTable]]. Crash/replay-proof by algebra rather than
+    * protocol: the merge is a set union of minima,
     * so re-applying a batch's hashes is a no-op — the one index-like
     * artifact here that needs no generation machinery. `k` is part of the
     * artifact's identity ([[ingestBatch]] refuses a mismatched sketch:
@@ -581,7 +581,7 @@ object IngestPipeline {
           "under a new k")
     }
     val merged = Kmv.mergeMins(existing.map(_._2).getOrElse(Nil), batchMins, cfg.k)
-    IndexProtocol.stagedReplace(spark, paths.cardSketch) { stage =>
+    Sinks.replaceTable(spark, paths.cardSketch) { stage =>
       merged.toDF("h").coalesce(1).write.parquet(s"$stage/mins")
       IndexProtocol.writeLayout(spark, stage, "kmv" -> 1, "k" -> cfg.k)
     }
@@ -648,25 +648,22 @@ object IngestPipeline {
     read(p).orElse(read(old)).orElse(read(p)).getOrElse(-1L)
   }
 
-  /** Publish the manifest through [[Sinks.swapIn]] (the staged-generation
-    * discipline every other artifact in the loop already follows): the
-    * previous record is parked at `__old` instead of being deleted, so
-    * there is NO window in which the lake's only commit record ceases to
-    * exist — a crash at any point leaves it live, parked, or already
-    * replaced. The swap's own recovery step ([[Sinks.recoverSwap]])
-    * restores a parked record first; restoring the PARKED value, not
-    * adopting the staged `__tmp`, is always safe: the batch whose publish
-    * crashed replays from its commit gate and rewrites byte-identical
-    * content before republishing.
+  /** Publish the manifest through [[Sinks.replaceTable]] (the
+    * staged-generation discipline every other artifact in the loop already
+    * follows): the previous record is parked at `__old` instead of being
+    * deleted, so there is NO window in which the lake's only commit record
+    * ceases to exist — a crash at any point leaves it live, parked, or
+    * already replaced. The replace restores a parked record first;
+    * restoring the PARKED value, not adopting the staged `__tmp`, is always
+    * safe: the batch whose publish crashed replays from its commit gate and
+    * rewrites byte-identical content before republishing.
     */
-  private def recordApplied(spark: SparkSession, paths: IngestPaths, batchId: Long): Unit = {
-    val fs = IndexProtocol.fileSystem(spark, paths.manifest)
-    val tmp = new org.apache.hadoop.fs.Path(paths.manifest + "__tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8"))
-    finally out.close()
-    Sinks.swapIn(fs, tmp, new org.apache.hadoop.fs.Path(paths.manifest))
-  }
+  private def recordApplied(spark: SparkSession, paths: IngestPaths, batchId: Long): Unit =
+    Sinks.replaceTable(spark, paths.manifest, "__tmp") { tmp =>
+      val out = IndexProtocol.fileSystem(spark, tmp).create(new org.apache.hadoop.fs.Path(tmp))
+      try out.write(batchId.toString.getBytes("UTF-8"))
+      finally out.close()
+    }
 
   /** One ingest transaction. Returns the number of accepted (landed) docs;
     * 0 for a replayed already-committed batch.
@@ -1026,8 +1023,8 @@ object IngestPipeline {
   // consolidated partition, a `_compact_intent` marker (temp+rename, never
   // half-written) records the swap target and the directories to delete.
   // From that point the compaction is re-executable from the marker alone:
-  // [[recoverCompaction]] finishes the swap (two-rename [[Sinks.swapIn]],
-  // itself crash-recoverable) and the deletes, each step idempotent. A
+  // [[recoverCompaction]] finishes the swap ([[Sinks.swapPartitions]],
+  // itself re-runnable) and the deletes, each step idempotent. A
   // crash BEFORE the intent lands leaves only an orphaned staging dir —
   // the lake itself is untouched. The one observable window is
   // post-swap/pre-delete, where a naive reader double-counts the
@@ -1051,15 +1048,14 @@ object IngestPipeline {
 
   private def intentPath(paths: IngestPaths, lake: LakeRef) =
     new org.apache.hadoop.fs.Path(paths.root, lake.intentName)
-  private def stageRoot(lake: LakeRef) =
-    new org.apache.hadoop.fs.Path(lake.lakePath + "__compact_tmp")
-  private def trashRoot(lake: LakeRef) =
-    new org.apache.hadoop.fs.Path(lake.lakePath + Sinks.OldSuffix)
+
+  /** Staging suffix of the lake fold's per-partition replace. */
+  private val CompactStaging = "__compact_tmp"
 
   /** The re-executable compaction plan the intent marker encodes: fold the
     * `deleteDirs` partitions (and any existing target partition) into
     * `__ver=<upTo>`, whose consolidated rows are staged under
-    * [[stageRoot]].
+    * `<lake>__compact_tmp`.
     */
   private[pipeline] final case class CompactionIntent(upTo: Long, deleteDirs: Seq[String])
 
@@ -1110,24 +1106,24 @@ object IngestPipeline {
       .filter(_.drop(VerPrefix.length).toLong <= upToBatch)
       .sorted.toSeq
     if (eligible.size < 2) return None
-    // partition pruning keeps this read to the eligible directories; the
-    // partition column itself lives in the directory name, so the staged
-    // files must not carry it
-    val consolidated = spark.read.parquet(lakeRef.lakePath)
-      .filter(col("__ver").cast("long") <= upToBatch)
-      .drop("__ver")
-    fs.delete(stageRoot(lakeRef), true)
-    consolidated.write.parquet(
-      new org.apache.hadoop.fs.Path(stageRoot(lakeRef), s"$VerPrefix$upToBatch").toString)
-    val intent = CompactionIntent(
-      upToBatch, eligible.filterNot(_ == s"$VerPrefix$upToBatch"))
+    val dirName = s"$VerPrefix$upToBatch"
+    Sinks.stagePartitions(spark, lakeRef.lakePath, CompactStaging) { staging =>
+      // partition pruning keeps this read to the eligible directories; the
+      // partition column itself lives in the directory name, so the staged
+      // files must not carry it
+      spark.read.parquet(lakeRef.lakePath)
+        .filter(col("__ver").cast("long") <= upToBatch)
+        .drop("__ver")
+        .write.parquet(s"$staging/$dirName")
+    }
+    val intent = CompactionIntent(upToBatch, eligible.filterNot(_ == dirName))
     writeIntent(spark, paths, lakeRef, intent)
     Some(intent)
   }
 
   /** Execute (or re-execute — every step is idempotent) a recorded intent:
-    * swap the staged partition in, delete the folded originals, clear the
-    * marker and staging/trash dirs.
+    * swap the staged partition in and clear the staging/trash dirs, delete
+    * the folded originals, clear the marker.
     */
   private[pipeline] def finishCompaction(
       spark: SparkSession, paths: IngestPaths, intent: CompactionIntent): Unit =
@@ -1137,20 +1133,12 @@ object IngestPipeline {
       spark: SparkSession, paths: IngestPaths, lakeRef: LakeRef,
       intent: CompactionIntent): Unit = {
     val fs = lakeFs(spark, lakeRef)
-    val dirName = s"$VerPrefix${intent.upTo}"
-    val staged = new org.apache.hadoop.fs.Path(stageRoot(lakeRef), dirName)
-    val live = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(lakeRef.lakePath), dirName)
-    val trash = new org.apache.hadoop.fs.Path(trashRoot(lakeRef), dirName)
-    if (fs.exists(staged)) Sinks.swapIn(fs, staged, live, trash = Some(trash))
-    else Sinks.recoverSwap(fs, live, trash)
+    Sinks.swapPartitions(
+      spark, lakeRef.lakePath, CompactStaging, Seq(s"$VerPrefix${intent.upTo}"))
     intent.deleteDirs.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        new org.apache.hadoop.fs.Path(lakeRef.lakePath), d), true)
+      fs.delete(new org.apache.hadoop.fs.Path(lakeRef.lakePath, d), true)
     }
     fs.delete(intentPath(paths, lakeRef), false)
-    fs.delete(stageRoot(lakeRef), true)
-    fs.delete(trashRoot(lakeRef), true)
   }
 
   /** Finish any compaction a crash interrupted. A no-op without an intent
@@ -1163,7 +1151,7 @@ object IngestPipeline {
     Seq(docLakeRef(paths), embLakeRef(paths)).foreach { lakeRef =>
       readIntent(spark, paths, lakeRef) match {
         case Some(intent) => finishCompaction(spark, paths, lakeRef, intent)
-        case None => lakeFs(spark, lakeRef).delete(stageRoot(lakeRef), true)
+        case None => Sinks.swapPartitions(spark, lakeRef.lakePath, CompactStaging, Nil)
       }
     }
     // the index folds' crash windows (a swap interrupted between its two

@@ -43,6 +43,17 @@ object VectorQueries {
         emb, Similarity.kmeansCentroids(emb, k = k, iters = iters), fixture)
     }
 
+  /** Stamped build of the served IVF index fixture q67 and q100 read: the
+    * [[ensureIvfIndex]] build over the embeddings at the registry's model
+    * hyperparameters. Returns the fixture path.
+    */
+  private[graft] def ensureServedIvfIndex(s: SparkSession, dir: String): String = {
+    val fixture = Fixture.path(dir, "ivf_index")
+    ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
+      fixture, k = IvfCells, iters = IvfIters)
+    fixture
+  }
+
   /** Stamped build of the q92 IVF-PQ index fixture — the [[ensureIvfIndex]]
     * contract with the PQ model folded into the identity: both models'
     * hyperparameters AND both scheme versions (coarse kmeans + PQ trainer)
@@ -187,9 +198,7 @@ object VectorQueries {
        |FROM reach GROUP BY id ORDER BY vec_id""".stripMargin
 
   // The stamped fixtures this family's queries read.
-  private val IvfIndexFixture = Prebuild("ivf_index", (s, dir) =>
-    ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
-      Fixture.path(dir, "ivf_index"), k = IvfCells, iters = IvfIters))
+  private val IvfIndexFixture = Prebuild("ivf_index", ensureServedIvfIndex)
   private val IvfAppendFixture = Prebuild("ivf_index_append", ensureAppendedIvfIndex)
   private val IvfPqFixture = Prebuild("ivf_pq_index", ensureIvfPqIndex)
 
@@ -312,11 +321,9 @@ object VectorQueries {
     // persisted trained model, but any correct index returns the 3
     // queries' k results ranked 1..k
     Query("q67_ivf_index_serve", { (s, dir) =>
-      val emb = Tables.embeddings(s, dir)
-      val fixture = Fixture.path(dir, "ivf_index")
-      ensureIvfIndex(emb, Fixture.sourceStamp(s, dir, "embeddings"), fixture,
-        k = IvfCells, iters = IvfIters)
-      Similarity.queryIvfIndex(s, fixture, emb.filter(col("vec_id") < 3), nProbe = 3, k = 5)
+      val fixture = ensureServedIvfIndex(s, dir)
+      Similarity.queryIvfIndex(
+        s, fixture, Tables.embeddings(s, dir).filter(col("vec_id") < 3), nProbe = 3, k = 5)
         .groupBy("query_id")
         .agg(
           count(lit(1)).as("__n"),
@@ -784,9 +791,7 @@ object VectorQueries {
     // carves (shared artifact, like q70's append gate) and re-derives the
     // q96 hash-rank carve per cell — exact value oracle
     Query("q100_semantic_carve", { (s, dir) =>
-      val fixture = Fixture.path(dir, "ivf_index")
-      ensureIvfIndex(Tables.embeddings(s, dir), Fixture.sourceStamp(s, dir, "embeddings"),
-        fixture, k = IvfCells, iters = IvfIters)
+      val fixture = ensureServedIvfIndex(s, dir)
       Sampling.semanticCarve(s, fixture, n = 10, salt = "semcarve-v1")
         .orderBy("cell_id", "vec_id")
     }, oracle = dir => s"""SELECT cell_id, vec_id FROM (

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -129,7 +130,7 @@ object Sinks {
     * the plan as PartitionFilters, scanning only that directory.
     */
   def readLakePartition(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       dateCol: String,
       date: String,
@@ -178,10 +179,10 @@ object Sinks {
       partitionBy: Seq[String] = Nil): Boolean = {
     val spark = df.sparkSession
     val fs = IndexProtocol.fileSystem(spark, root)
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val target = new org.apache.hadoop.fs.Path(rootP, dirName)
+    val rootP = new Path(root)
+    val target = new Path(rootP, dirName)
     if (fs.exists(target)) return false
-    val stage = new org.apache.hadoop.fs.Path(root + "__stage", dirName)
+    val stage = new Path(root + "__stage", dirName)
     fs.delete(stage, true)
     // hive-style subdirs inside the staged generation survive the rename
     // untouched, so a partitioned generation publishes just as atomically
@@ -192,7 +193,7 @@ object Sinks {
     // Hadoop reports a failed rename by returning false (see [[swapIn]]);
     // reading it as success would record a generation that never landed
     require(fs.rename(stage, target), s"publish: failed to rename $stage to $target")
-    fs.delete(new org.apache.hadoop.fs.Path(root + "__stage"), true)
+    fs.delete(new Path(root + "__stage"), true)
     true
   }
 
@@ -201,7 +202,7 @@ object Sinks {
     * (sum_cents, n)) run on the merged states.
     */
   def readMergedPartials(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       key: Seq[String],
       sums: Seq[String]): DataFrame = {
@@ -237,15 +238,15 @@ object Sinks {
     * foreachBatch loop that owns the table.
     */
   def swapIn(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path,
-      trash: Option[org.apache.hadoop.fs.Path] = None): Unit = {
+      fs: FileSystem,
+      tmp: Path,
+      target: Path,
+      trash: Option[Path] = None): Unit = {
     // the default trash is a sibling of the target; partition-scoped swaps
     // pass an explicit trash OUTSIDE the table root, because a parked
     // `col=value__old` directory inside it would be parsed by readers as a
     // phantom partition value
-    val old = trash.getOrElse(new org.apache.hadoop.fs.Path(target.toString + OldSuffix))
+    val old = trash.getOrElse(new Path(target.toString + OldSuffix))
     recoverSwap(fs, target, old)
     if (fs.exists(old)) fs.delete(old, true)
     if (old.getParent != null && !fs.exists(old.getParent)) fs.mkdirs(old.getParent)
@@ -277,18 +278,110 @@ object Sinks {
 
   /** Recovery step of [[swapIn]]: a crash between its steps 1 and 2 left
     * the live path empty and the last good generation parked aside —
-    * rename it back. Writers that READ the table before swapping (e.g.
-    * [[upsertBatch]]'s merge, [[compactPartials]]) must run this first or
-    * they would mistake the crash window for an empty table. The rename
-    * is checked: Hadoop reports a failed rename as `false`, and a silent
-    * one would leave the table parked while the caller reads it as empty.
+    * rename it back. The rename is checked: Hadoop reports a failed rename
+    * as `false`, and a silent one would leave the table parked while the
+    * caller reads it as empty.
     */
-  def recoverSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path): Unit =
+  private def recoverSwap(fs: FileSystem, target: Path, old: Path): Unit =
     if (!fs.exists(target) && fs.exists(old))
       require(fs.rename(old, target), s"swap recovery: failed to restore $old at $target")
+
+  // ------------------------------------------------------ staged replace
+  //
+  // The two replace shapes every swap-managed table and index goes
+  // through: a whole table ([[replaceTable]]) or some of its `col=value`
+  // partition directories ([[replacePartitions]]). They own the recovery,
+  // staging cleanup, [[swapIn]] and trash cleanup around the write;
+  // callers name their staging suffix and write into it.
+
+  /** Restore a table a crashed [[replaceTable]] swap left parked at
+    * `<path>__old`. No-op when the live path exists. Writers that READ the
+    * table before replacing it run this first (as [[replaceTable]] does),
+    * or they would mistake the crash window for an empty table.
+    */
+  def recoverTable(spark: SparkSession, path: String): Unit =
+    recoverSwap(IndexProtocol.fileSystem(spark, path), new Path(path), new Path(path + OldSuffix))
+
+  /** Whole-table replace: recover a parked previous generation
+    * ([[recoverTable]] — `build` may READ the live table), clear the
+    * staging path `<path><stagingSuffix>`, let `build` write the new
+    * generation there, swap it in ([[swapIn]]) and clear the staging path.
+    * Returns what `build` returns.
+    *
+    * Crash windows: before the swap the live table is untouched (an
+    * orphaned staging dir is cleared by the next attempt); between the
+    * swap's renames the table is parked at `<path>__old`, restored by
+    * [[recoverTable]]. Single-writer contract as [[swapIn]].
+    */
+  def replaceTable[T](
+      spark: SparkSession,
+      path: String,
+      stagingSuffix: String = "__next")(build: String => T): T = {
+    val fs = IndexProtocol.fileSystem(spark, path)
+    val staged = new Path(path + stagingSuffix)
+    recoverTable(spark, path)
+    fs.delete(staged, true)
+    val out = build(staged.toString)
+    swapIn(fs, staged, new Path(path))
+    fs.delete(staged, true)
+    out
+  }
+
+  /** Per-partition replace: [[stagePartitions]] under `<path>__tmp`, then
+    * [[swapPartitions]] of the `col=value` directories `stage` returns
+    * (none: nothing to swap, only the staging and trash roots are
+    * cleared). Returns those directories. Every one of them must have been
+    * staged — a partition the staged write did not produce (e.g. a null
+    * partition value, which Spark writes under another name) fails before
+    * anything is swapped.
+    */
+  def replacePartitions(spark: SparkSession, path: String)(
+      stage: String => Seq[String]): Seq[String] = {
+    val fs = IndexProtocol.fileSystem(spark, path)
+    val dirs = stagePartitions(spark, path, "__tmp")(stage)
+    dirs.foreach { d =>
+      require(fs.exists(new Path(path + "__tmp", d)),
+        s"replace: the staged write at ${path}__tmp produced no $d")
+    }
+    swapPartitions(spark, path, "__tmp", dirs)
+    dirs
+  }
+
+  /** First step of [[replacePartitions]]: restore every partition a crash
+    * left parked ([[recoverPartitions]] — `stage` may read the table),
+    * clear the staging root `<path><stagingSuffix>` and let `stage` write
+    * `col=value` directories under it. Nothing live changes. Returns what
+    * `stage` returns.
+    */
+  def stagePartitions[T](
+      spark: SparkSession, path: String, stagingSuffix: String)(stage: String => T): T = {
+    recoverPartitions(spark, path)
+    IndexProtocol.fileSystem(spark, path).delete(new Path(path + stagingSuffix), true)
+    stage(path + stagingSuffix)
+  }
+
+  /** Second step of [[replacePartitions]]: swap each staged `dir` in over
+    * `<path>/<dir>` ([[swapIn]], its trash at `<path>__old/<dir>`, OUTSIDE
+    * the table root so readers never parse it as a partition value), then
+    * clear the staging and trash roots.
+    *
+    * Re-runnable on its own from any crash point after staging: a `dir`
+    * whose staged copy is gone was already swapped in and is skipped. The
+    * trash root is cleared through [[recoverPartitions]], which first
+    * restores any parked partition whose live directory is missing (a
+    * crash between a swap's renames) instead of deleting its only copy.
+    */
+  def swapPartitions(
+      spark: SparkSession, path: String, stagingSuffix: String, dirs: Seq[String]): Unit = {
+    val fs = IndexProtocol.fileSystem(spark, path)
+    dirs.foreach { d =>
+      val staged = new Path(path + stagingSuffix, d)
+      if (fs.exists(staged))
+        swapIn(fs, staged, new Path(path, d), trash = Some(new Path(path + OldSuffix, d)))
+    }
+    fs.delete(new Path(path + stagingSuffix), true)
+    recoverPartitions(spark, path)
+  }
 
   /** Resolve the readable generation of a swap-managed table: the live path
     * when present, else the parked `__old` generation a crashed swap left
@@ -296,10 +389,10 @@ object Sinks {
     * a complete table.
     */
   def resolveTablePath(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String): String = {
     val fs = IndexProtocol.fileSystem(spark, path)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path))) path else path + OldSuffix
+    if (fs.exists(new Path(path))) path else path + OldSuffix
   }
 
   /** Compact an [[appendVersioned]] table: merge every partial state per
@@ -312,21 +405,17 @@ object Sinks {
     * single-writer contract).
     */
   def compactPartials(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       key: Seq[String],
-      sums: Seq[String]): Unit = {
-    val fs = IndexProtocol.fileSystem(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
-    val maxVer = spark.read.parquet(path)
-      .agg(max(col("__ver").cast("long"))).head.getLong(0)
-    val merged = readMergedPartials(spark, path, key, sums)
-      .withColumn("__ver", lit(maxVer))
-    merged.write.mode("overwrite").partitionBy("__ver").parquet(tmp.toString)
-    swapIn(fs, tmp, target)
-  }
+      sums: Seq[String]): Unit =
+    replaceTable(spark, path, "__tmp") { tmp =>
+      val maxVer = spark.read.parquet(path)
+        .agg(max(col("__ver").cast("long"))).head.getLong(0)
+      readMergedPartials(spark, path, key, sums)
+        .withColumn("__ver", lit(maxVer))
+        .write.mode("overwrite").partitionBy("__ver").parquet(tmp)
+    }
 
   /** Merge a micro-batch into a keyed parquet table: newest version per key
     * wins (the file-sink equivalent of the reference's ES `es.mapping.id`
@@ -346,19 +435,17 @@ object Sinks {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
     val fs = IndexProtocol.fileSystem(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    recoverSwap(fs, target, new org.apache.hadoop.fs.Path(path + OldSuffix))
-    val merged =
-      if (fs.exists(target))
-        spark.read.parquet(path).unionByName(withVer, allowMissingColumns = true)
-      else withVer
-    val written = Observation()
-    Cleaning.dedupByKey(merged, key, Seq(col("__ver").desc))
-      .observe(written, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    swapIn(fs, tmp, target)
-    written.get("rows").asInstanceOf[Long]
+    replaceTable(spark, path, "__tmp") { tmp =>
+      val merged =
+        if (fs.exists(new Path(path)))
+          spark.read.parquet(path).unionByName(withVer, allowMissingColumns = true)
+        else withVer
+      val written = Observation()
+      Cleaning.dedupByKey(merged, key, Seq(col("__ver").desc))
+        .observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(tmp)
+      written.get("rows").asInstanceOf[Long]
+    }
   }
 
   /** Partition-scoped keyed upsert: merges the micro-batch into ONLY the
@@ -381,45 +468,29 @@ object Sinks {
     val spark = batch.sparkSession
     val withVer = batch.withColumn("__ver", lit(version))
     val fs = IndexProtocol.fileSystem(spark, path)
-    val target = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(target)) {
+    if (!fs.exists(new Path(path))) {
       withVer.write.partitionBy(partitionCol).parquet(path)
       return
     }
-    // restore any partition a PREVIOUS crash left parked-only (live dir
-    // missing) BEFORE the history read: without this, a batch touching that
-    // partition would merge against empty history and the blanket trash
-    // delete below would destroy the parked copy — permanent data loss for
-    // every key not in the current batch (review finding). After this call,
-    // every remaining trash entry has a live counterpart, which is what
-    // makes the whole-root delete below safe.
-    recoverPartitions(spark, path)
-    // BOUNDED collect (same contract as Similarity's centroid-model
-    // collects): the values fetched are PARTITION KEYS of one micro-batch —
-    // a handful of dates by construction, bounded by the table's partition
-    // count, never row data. A batch spanning unbounded distinct partition
-    // values would be mis-partitioned upstream, not a reason to
-    // distribute this list.
-    val parts = withVer.select(partitionCol).distinct().collect().map(_.get(0))
-    val existing = spark.read.parquet(path)
-      .filter(col(partitionCol).isInCollection(parts.toSeq))
-    val merged = Cleaning.dedupByKey(
-      existing.unionByName(withVer, allowMissingColumns = true),
-      key, Seq(col("__ver").desc))
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-    merged.write.mode("overwrite").partitionBy(partitionCol).parquet(tmp.toString)
-    parts.foreach { p =>
-      val dir = s"$partitionCol=$p"
-      // same crash-safe two-rename swap as the whole-table writers, scoped
-      // to the partition directory; the trash lives OUTSIDE the table root
-      // so readers never see it as a partition value
-      swapIn(fs,
-        new org.apache.hadoop.fs.Path(tmp, dir),
-        new org.apache.hadoop.fs.Path(target, dir),
-        trash = Some(new org.apache.hadoop.fs.Path(path + OldSuffix, dir)))
+    // the replace restores every parked-only partition (live dir missing)
+    // BEFORE this history read: without that, a batch touching one would
+    // merge against empty history and lose every key not in the batch
+    replacePartitions(spark, path) { tmp =>
+      // BOUNDED collect (same contract as Similarity's centroid-model
+      // collects): the values fetched are PARTITION KEYS of one micro-batch
+      // — a handful of dates by construction, bounded by the table's
+      // partition count, never row data. A batch spanning unbounded
+      // distinct partition values would be mis-partitioned upstream, not a
+      // reason to distribute this list.
+      val parts = withVer.select(partitionCol).distinct().collect().map(_.get(0)).toSeq
+      val existing = spark.read.parquet(path)
+        .filter(col(partitionCol).isInCollection(parts))
+      Cleaning.dedupByKey(
+        existing.unionByName(withVer, allowMissingColumns = true),
+        key, Seq(col("__ver").desc))
+        .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
+      parts.map(p => s"$partitionCol=$p")
     }
-    fs.delete(tmp, true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + OldSuffix), true)
   }
 
   /** Compact ONE partition of a partitioned lake into files of
@@ -433,20 +504,18 @@ object Sinks {
     * O(partition), never O(table), and the natural cadence is "compact
     * yesterday's date partition once it stops receiving appends". The
     * rewrite is `repartition(ceil(rows/target))` — one bounded shuffle of
-    * the partition's rows into evenly-sized files — staged to a temp dir
-    * and swapped in with the same two-rename crash-safe [[swapIn]] protocol
-    * as the keyed upserts, trash parked OUTSIDE the table root so readers
-    * never parse it as a partition value. A crash at any point leaves a
-    * complete generation recoverable ([[recoverSwap]] runs first, and
-    * [[recoverPartitions]] covers the read side); re-running after success
-    * is idempotent (same content, same file count).
+    * the partition's rows into evenly-sized files — replaced through the
+    * same [[replacePartitions]] as the keyed upserts. A crash at any point
+    * leaves a complete generation recoverable ([[recoverPartitions]] runs
+    * first, and covers the read side); re-running after success is
+    * idempotent (same content, same file count).
     *
     * Single-writer contract (as [[swapIn]]): do not compact a partition
     * concurrently with a writer appending to it — compact partitions that
     * have gone cold.
     */
   def compactLakePartition(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       partitionCol: String,
       partitionValue: String,
@@ -455,29 +524,26 @@ object Sinks {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be positive")
     val fs = IndexProtocol.fileSystem(spark, path)
     val dirName = s"$partitionCol=$partitionValue"
-    val live = new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), dirName)
-    val trash = new org.apache.hadoop.fs.Path(path + OldSuffix, dirName)
-    // recover ALL parked partitions, not just this one: the whole-root
-    // trash delete below would otherwise destroy another partition's
-    // parked-only copy left by a crashed upsert swap (review finding)
-    recoverPartitions(spark, path)
-    if (!fs.exists(live)) return
-    val rows = spark.read.parquet(live.toString)
-    val n = rows.count()
-    if (n == 0L) return
-    val nFiles = ((n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    val tmp = new org.apache.hadoop.fs.Path(path + "__tmp", dirName)
-    // sort-on-write enables parquet row-group min/max skipping on the
-    // sort columns (RowGroupSkipSpec measures 9.7% vs 100% decoded for a
-    // 5% predicate) — compaction rewrites the partition anyway, so the
-    // ordering is free at the one place unsorted appends accumulate
-    val shaped =
-      if (sortWithin.isEmpty) rows.repartition(nFiles)
-      else rows.repartition(nFiles).sortWithinPartitions(sortWithin.map(col): _*)
-    shaped.write.mode("overwrite").parquet(tmp.toString)
-    swapIn(fs, tmp, live, trash = Some(trash))
-    fs.delete(new org.apache.hadoop.fs.Path(path + "__tmp"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(path + OldSuffix), true)
+    val live = new Path(path, dirName)
+    replacePartitions(spark, path) { staging =>
+      if (!fs.exists(live)) Nil
+      else {
+        val rows = spark.read.parquet(live.toString)
+        val n = rows.count()
+        if (n == 0L) Nil
+        else {
+          val nFiles = ((n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
+          // sort-on-write enables parquet row-group min/max skipping on the
+          // sort columns (RowGroupSkipSpec measures 9.7% vs 100% decoded for
+          // a 5% predicate) — compaction rewrites the partition anyway, so
+          // the ordering is free at the one place unsorted appends accumulate
+          val shaped = rows.repartition(nFiles)
+          (if (sortWithin.isEmpty) shaped else shaped.sortWithinPartitions(sortWithin.map(col): _*))
+            .write.mode("overwrite").parquet(s"$staging/$dirName")
+          Seq(dirName)
+        }
+      }
+    }
   }
 
   /** Restore any partition directories a crashed [[upsertBatchPartitioned]]
@@ -486,13 +552,13 @@ object Sinks {
     * reading a partition-swapped table after an unclean shutdown.
     */
   def recoverPartitions(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String): Unit = {
     val fs = IndexProtocol.fileSystem(spark, path)
-    val trashRoot = new org.apache.hadoop.fs.Path(path + OldSuffix)
+    val trashRoot = new Path(path + OldSuffix)
     if (fs.exists(trashRoot)) {
       fs.listStatus(trashRoot).foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
+        val live = new Path(path, st.getPath.getName)
         // checked before the trash delete below: that delete would destroy
         // the only copy of a partition whose restore failed
         if (!fs.exists(live))

@@ -378,15 +378,39 @@ class SinksSpec extends SparkSpec {
 }
 
 /** The local filesystem under the `norename:` scheme, whose `rename`
-  * returns false for the sources [[RefusingRenameFileSystem.refuse]]
-  * selects — how HDFS and object stores report most failed renames. */
+  * returns false — how HDFS and object stores report most failed renames —
+  * for the sources [[RefusingRenameFileSystem.refuse]] selects, and for
+  * the [[RefusingRenameFileSystem.refuseNth]]-th protocol rename. */
 class RefusingRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("norename:///")
   override def getScheme: String = "norename"
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
-    !RefusingRenameFileSystem.refuse(src) && super.rename(src, dst)
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    val refused = RefusingRenameFileSystem.refuse(src) ||
+      (!RefusingRenameFileSystem.isCommitter(src) &&
+        RefusingRenameFileSystem.renames.incrementAndGet() == RefusingRenameFileSystem.refuseNth)
+    !refused && super.rename(src, dst)
+  }
+  // plain statuses: the raw local ones load their permissions lazily
+  // through a `file:`-only path, which a recursive `listFiles` trips over
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    super.listStatus(f).map(s => new org.apache.hadoop.fs.FileStatus(
+      s.getLen, s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
 }
 
 object RefusingRenameFileSystem {
   @volatile var refuse: org.apache.hadoop.fs.Path => Boolean = _ => false
+
+  /** Protocol renames made since the last reset: every rename except the
+    * output committer's own moves out of its `_temporary` attempt dirs and
+    * `.spark-staging-*` dynamic-overwrite dirs. */
+  val renames = new java.util.concurrent.atomic.AtomicInteger
+
+  /** The protocol rename (1-based, counted by [[renames]]) to refuse; 0
+    * refuses none. */
+  @volatile var refuseNth: Int = 0
+
+  def isCommitter(src: org.apache.hadoop.fs.Path): Boolean = {
+    val p = src.toUri.getPath
+    p.contains("/_temporary") || p.contains("/.spark-staging-")
+  }
 }
