@@ -851,18 +851,15 @@ object Dedup {
     * long before the data does (the same small-files math as the doc
     * lake's compactCommitted).
     *
-    * No intent log needed, unlike the doc lake: the index is MEMBERSHIP
-    * state, so every crash window is benign by semantics rather than by
-    * protocol — before the swap the originals are untouched (an orphaned
-    * `__tmp` is cleaned on the next run); the swap itself is the two-rename
-    * [[graft.sinks.Sinks.swapIn]] (a crash between its renames parks the
-    * target generation in `__old`, restored by
-    * [[graft.sinks.Sinks.recoverPartitions]] — run here on entry and by the
-    * ingest loop on startup); after the swap, not-yet-deleted folded
-    * originals are pure duplicates of the consolidated generation, which a
-    * semi-join probe cannot observe, and a re-run folds them away.
-    * Single-writer contract as always: don't fold concurrently with an
-    * appender.
+    * Intent-logged like the doc lake ([[graft.sinks.Sinks.foldPartitions]]):
+    * before the marker lands the originals are untouched (an orphaned
+    * `__tmp` is cleared on the next run); from then on the fold finishes
+    * from the marker ([[PersistedIndex.Fingerprint]]'s recovery, run here
+    * on entry and by the ingest loop on startup). Even an unfinished
+    * post-swap window is benign for MEMBERSHIP state: the not-yet-deleted
+    * originals duplicate the consolidated generation, which a semi-join
+    * probe cannot observe. Single-writer contract as always: don't fold
+    * concurrently with an appender.
     */
   def compactFingerprintIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -1184,14 +1181,14 @@ object Dedup {
   }
 
   /** [[IndexProtocol.generationalReadable]] for a [[writeEvalIndex]] layout. Runs
-    * [[graft.sinks.Sinks.recoverTable]] first: a crashed install swap parks
-    * the WHOLE live index at `<path>__old`, and without the restore every
-    * probe until the next startup would read "no index" — for a gate that
-    * fails open, a silently-disabled screen (the review's fail-open finding).
+    * [[PersistedIndex.Eval]]'s recovery first: a crashed install swap parks
+    * the WHOLE live index at `<path>__old`, a crashed fold one generation,
+    * and without the restore every probe until the next startup would miss
+    * it — for a gate that fails open, a silently-disabled screen.
     */
   def evalIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    graft.sinks.Sinks.recoverTable(spark, path)
+    PersistedIndex.Eval.recover(spark, path)
     IndexProtocol.generationalReadable(spark, path, Seq(""))
   }
 
@@ -1278,9 +1275,9 @@ object Dedup {
     * batch landed during the rebuild would permanently commit unscreened
     * docs. With the swap, probes see the old suites until the instant the
     * new install is complete; a crash between the swap's renames parks the
-    * old index at `<path>__old`, restored by
-    * [[graft.sinks.Sinks.recoverTable]] (run on probe entry and by the
-    * ingest loop's startup recovery).
+    * old index at `<path>__old`, restored by [[PersistedIndex.Eval]]'s
+    * recovery (run on probe entry and by the ingest loop's startup
+    * recovery).
     */
   def writeEvalIndex(
       evalDocs: DataFrame,
@@ -1330,8 +1327,12 @@ object Dedup {
   def compactEvalIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      upToGen: Long): Unit =
+      upToGen: Long): Unit = {
+    // a crashed install parks the whole index where the fold parks one
+    // generation: restore the whole table before the fold's own recovery
+    PersistedIndex.Eval.recover(spark, path)
     IndexProtocol.compactGenerational(spark, path, upToGen)
+  }
 
   /** Batch doc ids whose winnowing fingerprints collide with the indexed
     * eval suites at least `minSharedFps` times — counted against the
@@ -1354,7 +1355,7 @@ object Dedup {
       idCol: String = "doc_id",
       minSharedFps: Int = 1): DataFrame = {
     require(minSharedFps >= 1, s"minSharedFps must be >= 1, got $minSharedFps")
-    graft.sinks.Sinks.recoverTable(spark, path)
+    PersistedIndex.Eval.recover(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalRows) = evalIndexRows(spark, path)
     val evalFps = evalRows.select("fp").distinct()
@@ -1384,7 +1385,7 @@ object Dedup {
       batch: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    graft.sinks.Sinks.recoverTable(spark, path)
+    PersistedIndex.Eval.recover(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalFps) = evalIndexRows(spark, path)
     Text.winnowFingerprintsSalted(
@@ -1453,8 +1454,8 @@ object Dedup {
   /** Version tag of the span-count index scheme, for fixture stamps. */
   val SpanIndexVersion = "span-count-v1"
 
-  private def spanCountsRoot(path: String) = s"$path/counts"
-  private def hotListPath(path: String) = s"$path/hot"
+  private[functions] def spanCountsRoot(path: String) = s"$path/counts"
+  private[functions] def hotListPath(path: String) = s"$path/hot"
 
   /** The index's recorded (k, minCount). */
   def readSpanLayout(
@@ -1540,18 +1541,6 @@ object Dedup {
     graft.sinks.Sinks.replaceTable(spark, hotListPath(path), "__tmp") { next =>
       hot.write.parquet(next)
     }
-  }
-
-  /** Post-crash repair of a span index: restore a hot list a crashed
-    * [[refreshHotSpanList]] swap left parked, and any parked count-fold
-    * generation. (Readers self-heal — [[readHotSpanList]] resolves the
-    * parked swap inline — so this is the maintenance-sweep entry point,
-    * not a correctness prerequisite.)
-    */
-  def recoverSpanIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    graft.sinks.Sinks.recoverTable(spark, hotListPath(path))
-    graft.sinks.Sinks.recoverPartitions(spark, spanCountsRoot(path))
   }
 
   /** The current hot list (h: long), resolving a crashed swap's parked

@@ -42,22 +42,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     via [[publishGeneration]] ([[graft.sinks.Sinks.publishDir]]: stage +
   *     one checked rename): a replay sees either nothing (re-publishes
   *     identically) or everything (no-ops). Only this object knows the
-  *     `batch=<gen>` directory naming. The fold ([[compactGenerational]])
-  *     keeps the directory count O(1) under the membership-semantics crash
-  *     argument spelled out at [[Dedup.compactFingerprintIndex]].
+  *     `batch=<gen>` directory naming.
+  *   - '''Intent-logged fold.''' The fold ([[compactGenerational]]) keeps
+  *     the directory count O(1) through the ingest lake's own fold,
+  *     [[graft.sinks.Sinks.foldPartitions]]: once the consolidated
+  *     generation is staged, an intent marker inside the data root records
+  *     it, and [[recoverFold]] finishes the fold from any crash point — the
+  *     family handles and [[readFacts]] run it on each data root.
   *   - '''Count facts carry their origin.''' The count families (span,
   *     BM25, LM) store per-generation facts with an origin column `src`,
-  *     so every duplicate a crash window can produce is row-identical;
-  *     their refreshes read through [[readFacts]], whose `distinct` is the
-  *     crash shield.
-  *   - '''Staged replace for whole-index rewrites and folds.'''
-  *     Installs-over-live, migrations and derived-list refreshes go through
-  *     [[graft.sinks.Sinks.replaceTable]], the fold through
-  *     [[graft.sinks.Sinks.replacePartitions]]; those own the staging and
-  *     trash paths and the two-rename swap. A crash parks the previous
-  *     generation, restored by [[graft.sinks.Sinks.recoverTable]] /
-  *     [[graft.sinks.Sinks.recoverPartitions]] (run on loop startup and
-  *     before every staged build).
+  *     so every duplicate a crash window can produce is row-identical. The
+  *     `distinct` in the fold and in [[readFacts]] stays as the shield
+  *     against duplicate generations an older build's crashed fold left.
+  *   - '''Staged replace for whole-index rewrites.''' Installs-over-live,
+  *     migrations and derived-list refreshes go through
+  *     [[graft.sinks.Sinks.replaceTable]], which owns the staging and trash
+  *     paths and the two-rename swap. A crash parks the previous
+  *     generation, restored by [[graft.sinks.Sinks.recoverTable]] (run on
+  *     loop startup and before every staged build).
   */
 private[graft] object IndexProtocol {
 
@@ -215,67 +217,54 @@ private[graft] object IndexProtocol {
   }
 
   /** A count family's facts under `root`, projected to `columns` and
-    * deduplicated. Before the scan, any generation a crashed fold left
-    * parked at `<root>__old` is restored
-    * ([[graft.sinks.Sinks.recoverPartitions]]), so a refresh after the
-    * crash still counts it. The `distinct` is the other crash shield: a
-    * fold's post-swap crash can leave a generation's facts twice, and
+    * deduplicated. Before the scan, any fold a crash interrupted is
+    * finished ([[recoverFold]]), so a refresh after the crash counts every
+    * generation exactly once. The `distinct` stays as the shield against
+    * duplicate generations an older build's crashed fold left behind:
     * because every fact carries its origin generation (`src`) it drops
     * only such copies, never two real facts.
     */
   def readFacts(spark: SparkSession, root: String, columns: String*): DataFrame = {
-    graft.sinks.Sinks.recoverPartitions(spark, root)
+    recoverFold(spark, root)
     graft.sources.Tables.parquetScan(spark, root)
       .select(columns.head, columns.tail: _*).distinct()
   }
 
   // --------------------------------------------------- generational fold
 
+  /** The fold's staging suffix, an on-disk name older builds share. */
+  private val FoldStaging = "__tmp"
+
+  /** The fold's intent marker, inside the data root: no reader parses a
+    * `_`-prefixed file, and an install that wipes or swaps the root takes
+    * the marker of the generations it replaced with it. */
+  private def foldIntent(root: String): String = s"$root/_fold_intent"
+
   /** The shared fold for ANY membership-state table published as immutable
-    * generations: consolidate generations ≤ upToGen into one. See
-    * [[Dedup.compactFingerprintIndex]]'s scaladoc for the crash-window
-    * argument; it holds for every caller because it relies only on
-    * membership semantics (duplicate rows invisible to semi-join probes,
-    * distinct restoring canonical content).
+    * generations: consolidate generations ≤ upToGen into one through
+    * [[graft.sinks.Sinks.foldPartitions]] (intent-logged; staging under
+    * `<path>__tmp`). Duplicate rows are invisible to semi-join probes, and
+    * the `distinct` restores canonical content over duplicate generations
+    * an older build's crashed fold may have left.
     */
   def compactGenerational(
       spark: SparkSession,
       path: String,
       upToGen: Long,
-      partitionBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.col
-    val fs = fileSystem(spark, path)
-    val rootP = new Path(path)
-    if (!fs.exists(rootP)) return
-    // listed once, inside the replace (after it has restored any parked
-    // generation): the originals deleted below are the ones the fold read
-    var foldable = Seq.empty[Long]
-    val dirName = generationDir(upToGen)
-    val folded = graft.sinks.Sinks.replacePartitions(spark, path) { staging =>
-      foldable = generations(fs, rootP)
-        .map(_.getPath.getName.drop(GenerationCol.length + 1).toLong)
-        .filter(_ <= upToGen)
-      if (foldable.size < 2) Nil
-      else {
-        // distinct restores canonical one-row-per-doc content even when a
-        // previous fold's post-swap crash left duplicate generations behind
-        val consolidated = spark.read.parquet(path)
-          .filter(col(GenerationCol).cast("long") <= upToGen)
-          .drop(GenerationCol).distinct()
-        // a partitioned subtable (the band index's bp layout) must fold into
-        // the same layout — an unpartitioned folded generation next to
+      partitionBy: Seq[String] = Nil): Unit =
+    graft.sinks.Sinks.foldPartitions(spark, path, GenerationCol, upToGen, FoldStaging, foldIntent(path)) {
+      (rows, dir) =>
+        // a partitioned subtable (the band index's bp layout) must fold
+        // into the same layout — an unpartitioned folded generation next to
         // partitioned live ones would break partition discovery
-        val cw = consolidated.write
-        (if (partitionBy.nonEmpty) cw.partitionBy(partitionBy: _*) else cw)
-          .parquet(s"$staging/$dirName")
-        Seq(dirName)
-      }
+        val w = rows.distinct().write
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
     }
-    if (folded.nonEmpty)
-      foldable.filter(_ != upToGen).foreach { g =>
-        fs.delete(new Path(rootP, generationDir(g)), true)
-      }
-  }
+
+  /** Finish a generational fold a crash interrupted under `root`
+    * ([[graft.sinks.Sinks.recoverFold]]); no-op on a clean root. */
+  def recoverFold(spark: SparkSession, root: String): Unit =
+    graft.sinks.Sinks.recoverFold(spark, root, GenerationCol, FoldStaging, foldIntent(root))
 }
 
 /** Uniform maintenance handle on one persisted index family — the surface
@@ -303,29 +292,37 @@ object PersistedIndex {
   /** Exact-dedup fingerprint index (q69). */
   case object Fingerprint extends PersistedIndex {
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactFingerprintIndex(s, p, g)
-    def recover(s: SparkSession, p: String) = Sinks.recoverPartitions(s, p)
+    def recover(s: SparkSession, p: String) = IndexProtocol.recoverFold(s, p)
   }
 
   /** MinHash band/sig near-dup index (q78). */
   case object Band extends PersistedIndex {
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactBandIndex(s, p, g)
     def recover(s: SparkSession, p: String) = {
-      Sinks.recoverPartitions(s, s"$p/sigs")
-      Sinks.recoverPartitions(s, s"$p/bands")
+      IndexProtocol.recoverFold(s, s"$p/sigs")
+      IndexProtocol.recoverFold(s, s"$p/bands")
     }
   }
 
-  /** Eval-suite decontamination index (q82); a crashed install swap parks
-    * the whole index. */
+  /** Eval-suite decontamination index (q82): a crashed install swap parks
+    * the whole index, a crashed fold one generation — both at `<p>__old`,
+    * so the whole-table restore runs first. */
   case object Eval extends PersistedIndex {
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactEvalIndex(s, p, g)
-    def recover(s: SparkSession, p: String) = Sinks.recoverTable(s, p)
+    def recover(s: SparkSession, p: String) = {
+      Sinks.recoverTable(s, p)
+      IndexProtocol.recoverFold(s, p)
+    }
   }
 
-  /** Hot-span count index (q86). */
+  /** Hot-span count index (q86): the hot list is swapped whole, the count
+    * facts fold by generation. */
   case object SpanCounts extends PersistedIndex {
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactSpanCountIndex(s, p, g)
-    def recover(s: SparkSession, p: String) = Dedup.recoverSpanIndex(s, p)
+    def recover(s: SparkSession, p: String) = {
+      Sinks.recoverTable(s, Dedup.hotListPath(p))
+      IndexProtocol.recoverFold(s, Dedup.spanCountsRoot(p))
+    }
   }
 
   /** Trained-centroid IVF index, int8 lists (q67); the IVF-PQ index (q92)

@@ -515,11 +515,13 @@ object IngestPipeline {
     * pin excludes. So this read is repeatable across any number of
     * concurrent [[ingestBatch]] cycles, exactly a [[graft.sinks
     * .SnapshotLake]] pin. The equivalence does NOT extend to a
-    * concurrent [[compactCommitted]]/[[maintain]]: the fold's
+    * concurrent [[compactCommitted]]/[[maintain]]: while a fold runs, its
     * post-swap/pre-delete window double-counts folded rows on BOTH sides
     * of the filter (spec-pinned), so always-on readers racing
     * maintenance belong on SnapshotLake; this API serves the loop's own
-    * between-maintenance read points.
+    * between-maintenance read points. A crash inside that window does not
+    * leave it open: [[recoverCompaction]] (run on loop startup) finishes
+    * the fold from its intent marker.
     */
   def readCommitted(
       spark: SparkSession, paths: IngestPaths, upToBatch: Long = -1L): DataFrame = {
@@ -589,21 +591,20 @@ object IngestPipeline {
 
   /** (k, sorted minima) of the persisted feed sketch; None when no sketch
     * exists. HEAL-FREE like [[lastApplied]]: mid-swap the parked `__old`
-    * artifact is read in place — renames belong to the writer only.
+    * artifact is read in place ([[Sinks.readLiveOrParked]]).
     */
   private def readCardMins(
       spark: SparkSession, paths: IngestPaths): Option[(Int, Seq[Long])] = {
     import spark.implicits._
     val fs = IndexProtocol.fileSystem(spark, paths.cardSketch)
-    val live = paths.cardSketch
-    val parked = paths.cardSketch + graft.sinks.Sinks.OldSuffix
-    val at = Seq(live, parked, live) // re-check live: writer may finish mid-read
-      .find(p => fs.exists(IndexProtocol.layoutPath(p)))
-    at.map { p =>
-      val layout = IndexProtocol.readLayout(spark, p)
-      layout.requireScheme("kmv", 1, "feed sketch")
-      val mins = spark.read.parquet(s"$p/mins").orderBy("h").as[Long].collect().toSeq
-      (layout.int("k"), mins)
+    Sinks.readLiveOrParked(paths.cardSketch) { p =>
+      if (!fs.exists(IndexProtocol.layoutPath(p))) None
+      else {
+        val layout = IndexProtocol.readLayout(spark, p)
+        layout.requireScheme("kmv", 1, "feed sketch")
+        val mins = spark.read.parquet(s"$p/mins").orderBy("h").as[Long].collect().toSeq
+        Some((layout.int("k"), mins))
+      }
     }
   }
 
@@ -634,18 +635,13 @@ object IngestPipeline {
     */
   def lastApplied(spark: SparkSession, paths: IngestPaths): Long = {
     val fs = IndexProtocol.fileSystem(spark, paths.manifest)
-    val p = new org.apache.hadoop.fs.Path(paths.manifest)
-    val old = new org.apache.hadoop.fs.Path(paths.manifest + Sinks.OldSuffix)
-    def read(path: org.apache.hadoop.fs.Path): Option[Long] =
+    Sinks.readLiveOrParked(paths.manifest) { p =>
       try {
-        val in = fs.open(path)
+        val in = fs.open(new org.apache.hadoop.fs.Path(p))
         try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
         finally in.close()
       } catch { case _: java.io.FileNotFoundException => None }
-    // Final re-read of the live path covers the only doubly-absent race:
-    // the writer published (tmp -> p) and cleared the park between our
-    // two reads — by then the NEW record is live.
-    read(p).orElse(read(old)).orElse(read(p)).getOrElse(-1L)
+    }.getOrElse(-1L)
   }
 
   /** Publish the manifest through [[Sinks.replaceTable]] (the
@@ -1019,143 +1015,40 @@ object IngestPipeline {
   // no replay of a compacted batch can ever run, so losing the per-batch
   // partition boundaries loses nothing the replay protocol still needs.
   //
-  // Crash safety is an INTENT LOG, not a lock: after staging the
-  // consolidated partition, a `_compact_intent` marker (temp+rename, never
-  // half-written) records the swap target and the directories to delete.
-  // From that point the compaction is re-executable from the marker alone:
-  // [[recoverCompaction]] finishes the swap ([[Sinks.swapPartitions]],
-  // itself re-runnable) and the deletes, each step idempotent. A
-  // crash BEFORE the intent lands leaves only an orphaned staging dir —
-  // the lake itself is untouched. The one observable window is
-  // post-swap/pre-delete, where a naive reader double-counts the
-  // not-yet-deleted originals; the single-writer ingest loop owns that by
-  // running recoverCompaction on startup (and [[ingestBatch]] is unaffected
-  // — it reads only the fp index and manifest, never the lake).
+  // Crash safety is the intent log of [[Sinks.foldPartitions]]: once the
+  // consolidated partition is staged, a `_compact_intent` marker records
+  // the swap target and the directories to delete, and from then on the
+  // fold is finished from the marker alone ([[recoverCompaction]]). A crash
+  // before the marker lands leaves only an orphaned staging dir — the lake
+  // itself is untouched. The post-swap/pre-delete window, where a naive
+  // reader double-counts the not-yet-deleted originals, is closed by the
+  // single-writer ingest loop running recoverCompaction on startup (and
+  // [[ingestBatch]] is unaffected — it reads only the fp index and
+  // manifest, never the lake).
   // ---------------------------------------------------------------------
 
-  private val VerPrefix = "__ver="
-
-  /** One versioned lake the compaction protocol manages: the doc lake and
-    * the float-embedding lake share the identical `__ver=` layout and fold
-    * contract, differing only in location and intent-marker name (each lake
-    * owns its own marker so their crash recoveries are independent). */
-  private[pipeline] final case class LakeRef(lakePath: String, intentName: String)
-  private def docLakeRef(paths: IngestPaths) = LakeRef(paths.docLake, "_compact_intent")
-  private def embLakeRef(paths: IngestPaths) = LakeRef(paths.embLake, "_compact_intent_emb")
-
-  private def lakeFs(spark: SparkSession, lake: LakeRef) =
-    IndexProtocol.fileSystem(spark, lake.lakePath)
-
-  private def intentPath(paths: IngestPaths, lake: LakeRef) =
-    new org.apache.hadoop.fs.Path(paths.root, lake.intentName)
-
-  /** Staging suffix of the lake fold's per-partition replace. */
+  /** Staging suffix of the lake fold. */
   private val CompactStaging = "__compact_tmp"
 
-  /** The re-executable compaction plan the intent marker encodes: fold the
-    * `deleteDirs` partitions (and any existing target partition) into
-    * `__ver=<upTo>`, whose consolidated rows are staged under
-    * `<lake>__compact_tmp`.
-    */
-  private[pipeline] final case class CompactionIntent(upTo: Long, deleteDirs: Seq[String])
+  /** The versioned lakes the fold manages, each with its intent marker:
+    * the doc lake and the float-embedding lake share the `__ver=` layout
+    * and fold contract, and each owns its marker so their crash recoveries
+    * are independent. */
+  private def lakes(paths: IngestPaths): Seq[(String, String)] = Seq(
+    paths.docLake -> s"${paths.root}/_compact_intent",
+    paths.embLake -> s"${paths.root}/_compact_intent_emb")
 
-  private def writeIntent(
-      spark: SparkSession, paths: IngestPaths, lake: LakeRef,
-      intent: CompactionIntent): Unit = {
-    val fs = lakeFs(spark, lake)
-    val marker = intentPath(paths, lake)
-    val tmp = new org.apache.hadoop.fs.Path(marker.toString + "__tmp")
-    val out = fs.create(tmp, true)
-    try out.write((intent.upTo.toString +: intent.deleteDirs).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(marker)) fs.delete(marker, false)
-    require(fs.rename(tmp, marker), s"compaction intent: failed to publish $tmp at $marker")
-  }
-
-  private def readIntent(
-      spark: SparkSession, paths: IngestPaths, lake: LakeRef): Option[CompactionIntent] = {
-    val fs = lakeFs(spark, lake)
-    val marker = intentPath(paths, lake)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val lines =
-        try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-        finally in.close()
-      Some(CompactionIntent(lines.head.trim.toLong, lines.tail.filter(_.nonEmpty)))
-    }
-  }
-
-  /** Stage the consolidated partition and record the intent marker. Returns
-    * None when fewer than two partitions are eligible (nothing to fold).
-    * Split from [[finishCompaction]] so the spec can exercise each crash
-    * window; production callers use [[compactCommitted]].
-    */
-  private[pipeline] def stageCompaction(
-      spark: SparkSession, paths: IngestPaths, upToBatch: Long): Option[CompactionIntent] =
-    stageCompaction(spark, paths, docLakeRef(paths), upToBatch)
-
-  private def stageCompaction(
-      spark: SparkSession, paths: IngestPaths, lakeRef: LakeRef,
-      upToBatch: Long): Option[CompactionIntent] = {
-    val fs = lakeFs(spark, lakeRef)
-    val lake = new org.apache.hadoop.fs.Path(lakeRef.lakePath)
-    if (!fs.exists(lake)) return None
-    val eligible = fs.listStatus(lake).map(_.getPath.getName)
-      .filter(_.startsWith(VerPrefix))
-      .filter(_.drop(VerPrefix.length).toLong <= upToBatch)
-      .sorted.toSeq
-    if (eligible.size < 2) return None
-    val dirName = s"$VerPrefix$upToBatch"
-    Sinks.stagePartitions(spark, lakeRef.lakePath, CompactStaging) { staging =>
-      // partition pruning keeps this read to the eligible directories; the
-      // partition column itself lives in the directory name, so the staged
-      // files must not carry it
-      spark.read.parquet(lakeRef.lakePath)
-        .filter(col("__ver").cast("long") <= upToBatch)
-        .drop("__ver")
-        .write.parquet(s"$staging/$dirName")
-    }
-    val intent = CompactionIntent(upToBatch, eligible.filterNot(_ == dirName))
-    writeIntent(spark, paths, lakeRef, intent)
-    Some(intent)
-  }
-
-  /** Execute (or re-execute — every step is idempotent) a recorded intent:
-    * swap the staged partition in and clear the staging/trash dirs, delete
-    * the folded originals, clear the marker.
-    */
-  private[pipeline] def finishCompaction(
-      spark: SparkSession, paths: IngestPaths, intent: CompactionIntent): Unit =
-    finishCompaction(spark, paths, docLakeRef(paths), intent)
-
-  private def finishCompaction(
-      spark: SparkSession, paths: IngestPaths, lakeRef: LakeRef,
-      intent: CompactionIntent): Unit = {
-    val fs = lakeFs(spark, lakeRef)
-    Sinks.swapPartitions(
-      spark, lakeRef.lakePath, CompactStaging, Seq(s"$VerPrefix${intent.upTo}"))
-    intent.deleteDirs.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(lakeRef.lakePath, d), true)
-    }
-    fs.delete(intentPath(paths, lakeRef), false)
-  }
-
-  /** Finish any compaction a crash interrupted. A no-op without an intent
-    * marker (an orphaned staging dir from a pre-intent crash is cleaned).
-    * The ingest loop calls this on startup; ad-hoc readers of the doc lake
-    * should call it after an unclean shutdown (same contract as
-    * [[Sinks.recoverPartitions]]).
+  /** Finish any lake fold a crash interrupted (an orphaned staging dir
+    * from a pre-intent crash is cleared), then recover every persisted
+    * index family. The ingest loop calls this on startup; ad-hoc readers
+    * of the doc lake should call it after an unclean shutdown (same
+    * contract as [[Sinks.recoverPartitions]]).
     */
   def recoverCompaction(spark: SparkSession, paths: IngestPaths): Unit = {
-    Seq(docLakeRef(paths), embLakeRef(paths)).foreach { lakeRef =>
-      readIntent(spark, paths, lakeRef) match {
-        case Some(intent) => finishCompaction(spark, paths, lakeRef, intent)
-        case None => Sinks.swapPartitions(spark, lakeRef.lakePath, CompactStaging, Nil)
-      }
+    lakes(paths).foreach { case (lake, intent) =>
+      Sinks.recoverFold(spark, lake, "__ver", CompactStaging, intent)
     }
-    // the index folds' crash windows (a swap interrupted between its two
-    // renames parks the live generation dir in __old): restore on startup,
+    // the index folds' and swaps' crash windows: restore on startup,
     // BEFORE any probe reads the index — a probe that misses a parked
     // generation would accept duplicates. One uniform sweep over every
     // persisted family ([[graft.functions.PersistedIndex]]); the IVF
@@ -1212,9 +1105,10 @@ object IngestPipeline {
     require(upToBatch <= lastApplied(spark, paths),
       s"compaction of uncommitted batches (upTo=$upToBatch > manifest=${lastApplied(spark, paths)})")
     recoverCompaction(spark, paths)
-    Seq(docLakeRef(paths), embLakeRef(paths)).foreach { lakeRef =>
-      stageCompaction(spark, paths, lakeRef, upToBatch)
-        .foreach(finishCompaction(spark, paths, lakeRef, _))
+    lakes(paths).foreach { case (lake, intent) =>
+      Sinks.foldPartitions(spark, lake, "__ver", upToBatch, CompactStaging, intent) {
+        (rows, dir) => rows.write.parquet(dir)
+      }
     }
   }
 

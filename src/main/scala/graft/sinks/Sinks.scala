@@ -212,7 +212,7 @@ object Sinks {
 
   /** Suffix of the rename-aside trash directory a crash-safe swap parks the
     * previous table generation in. Readers fall back to it when the live
-    * path is mid-swap (see [[resolveTablePath]]).
+    * path is mid-swap (see [[readLiveOrParked]]).
     */
   val OldSuffix = "__old"
 
@@ -225,7 +225,7 @@ object Sinks {
     *
     * A crash at ANY point leaves a complete table generation on disk:
     * before 1 → old table at `target`; between 1 and 2 → old table at
-    * `target__old` (found by [[resolveTablePath]], restored by the next
+    * `target__old` (read by [[readLiveOrParked]], restored by the next
     * swap's recovery step); between 2 and 3 → new table at `target`, stale
     * trash cleaned on the next swap. Contrast with delete-then-rename,
     * whose crash window strands the only copy in `tmp`.
@@ -290,9 +290,10 @@ object Sinks {
   //
   // The two replace shapes every swap-managed table and index goes
   // through: a whole table ([[replaceTable]]) or some of its `col=value`
-  // partition directories ([[replacePartitions]]). They own the recovery,
-  // staging cleanup, [[swapIn]] and trash cleanup around the write;
-  // callers name their staging suffix and write into it.
+  // partition directories ([[replacePartitions]]; the generation fold
+  // [[foldPartitions]] uses the same two steps around its intent marker).
+  // They own the recovery, staging cleanup, [[swapIn]] and trash cleanup
+  // around the write; callers name their staging suffix and write into it.
 
   /** Restore a table a crashed [[replaceTable]] swap left parked at
     * `<path>__old`. No-op when the live path exists. Writers that READ the
@@ -347,23 +348,23 @@ object Sinks {
     dirs
   }
 
-  /** First step of [[replacePartitions]]: restore every partition a crash
-    * left parked ([[recoverPartitions]] — `stage` may read the table),
-    * clear the staging root `<path><stagingSuffix>` and let `stage` write
-    * `col=value` directories under it. Nothing live changes. Returns what
-    * `stage` returns.
+  /** First step of [[replacePartitions]] and [[foldPartitions]]: restore
+    * every partition a crash left parked ([[recoverPartitions]] — `stage`
+    * may read the table), clear the staging root `<path><stagingSuffix>`
+    * and let `stage` write `col=value` directories under it. Nothing live
+    * changes. Returns what `stage` returns.
     */
-  def stagePartitions[T](
+  private def stagePartitions[T](
       spark: SparkSession, path: String, stagingSuffix: String)(stage: String => T): T = {
     recoverPartitions(spark, path)
     IndexProtocol.fileSystem(spark, path).delete(new Path(path + stagingSuffix), true)
     stage(path + stagingSuffix)
   }
 
-  /** Second step of [[replacePartitions]]: swap each staged `dir` in over
-    * `<path>/<dir>` ([[swapIn]], its trash at `<path>__old/<dir>`, OUTSIDE
-    * the table root so readers never parse it as a partition value), then
-    * clear the staging and trash roots.
+  /** Second step of [[replacePartitions]] and [[foldPartitions]]: swap
+    * each staged `dir` in over `<path>/<dir>` ([[swapIn]], its trash at
+    * `<path>__old/<dir>`, OUTSIDE the table root so readers never parse it
+    * as a partition value), then clear the staging and trash roots.
     *
     * Re-runnable on its own from any crash point after staging: a `dir`
     * whose staged copy is gone was already swapped in and is skipped. The
@@ -371,7 +372,7 @@ object Sinks {
     * restores any parked partition whose live directory is missing (a
     * crash between a swap's renames) instead of deleting its only copy.
     */
-  def swapPartitions(
+  private def swapPartitions(
       spark: SparkSession, path: String, stagingSuffix: String, dirs: Seq[String]): Unit = {
     val fs = IndexProtocol.fileSystem(spark, path)
     dirs.foreach { d =>
@@ -383,17 +384,107 @@ object Sinks {
     recoverPartitions(spark, path)
   }
 
-  /** Resolve the readable generation of a swap-managed table: the live path
-    * when present, else the parked `__old` generation a crashed swap left
-    * behind. Readers composed with [[swapIn]] writers therefore always see
-    * a complete table.
+  // ------------------------------------------------------ generation fold
+  //
+  // Append-structured tables grow one `col=<v>` partition per batch: the
+  // ingest lake's `__ver=<batch>` partitions and each index family's
+  // `batch=<gen>` generations. Folding every partition up to a bound into
+  // one is the maintenance step they share, and it runs under an intent
+  // log so that recovery finishes a fold from any crash point.
+
+  /** Fold every `<partCol>=<v>` partition of `path` with v ≤ `upTo` into
+    * one `<partCol>=<upTo>` partition, in this order:
+    *
+    *   1. finish any fold a previous run recorded ([[recoverFold]]);
+    *   2. list the eligible partitions — fewer than two: nothing to fold;
+    *   3. stage the consolidated partition under `<path><stagingSuffix>`:
+    *      `write` gets the eligible rows (the partition column dropped —
+    *      it lives in the directory name) and the directory to write;
+    *   4. publish the intent marker at `intent`: `upTo`, then each folded
+    *      directory other than the target, one per line (temp file plus a
+    *      checked rename, never half-written);
+    *   5. re-execute the fold from the marker ([[recoverFold]]): swap the
+    *      staged partition in, delete the folded originals, delete the
+    *      marker.
+    *
+    * Crash windows: before 4 the table is untouched and only staging
+    * debris exists (recovery clears it); from 4 on the fold is finished
+    * from the marker alone, every step idempotent — recovery also closes
+    * the post-swap window in which the folded rows are visible twice.
+    * Single-writer contract as [[swapIn]].
     */
-  def resolveTablePath(
-      spark: SparkSession,
-      path: String): String = {
+  def foldPartitions(
+      spark: SparkSession, path: String, partCol: String, upTo: Long,
+      stagingSuffix: String, intent: String)(write: (DataFrame, String) => Unit): Unit = {
+    recoverFold(spark, path, partCol, stagingSuffix, intent)
     val fs = IndexProtocol.fileSystem(spark, path)
-    if (fs.exists(new Path(path))) path else path + OldSuffix
+    val prefix = s"$partCol="
+    val eligible =
+      if (!fs.exists(new Path(path))) Nil
+      else fs.listStatus(new Path(path)).map(_.getPath.getName)
+        .filter(n => n.startsWith(prefix) && n.drop(prefix.length).toLong <= upTo)
+        .sorted.toSeq
+    if (eligible.size < 2) return
+    val target = s"$prefix$upTo"
+    stagePartitions(spark, path, stagingSuffix) { staging =>
+      // partition pruning keeps this read to the eligible directories
+      write(spark.read.parquet(path).filter(col(partCol).cast("long") <= upTo).drop(partCol),
+        s"$staging/$target")
+    }
+    require(fs.exists(new Path(path + stagingSuffix, target)),
+      s"fold: the staged write at $path$stagingSuffix produced no $target")
+    val marker = new Path(intent)
+    val tmp = new Path(intent + "__tmp")
+    val out = fs.create(tmp, true)
+    try out.write((upTo.toString +: eligible.filterNot(_ == target)).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    require(fs.rename(tmp, marker), s"fold intent: failed to publish $tmp at $marker")
+    recoverFold(spark, path, partCol, stagingSuffix, intent)
   }
+
+  /** Finish the fold the marker at `intent` records ([[foldPartitions]]):
+    * swap the staged `<partCol>=<upTo>` partition in ([[swapPartitions]],
+    * which skips a partition already swapped), delete the folded
+    * originals the marker names, delete the marker. Without a marker,
+    * clear what a fold that crashed before its marker left: the staging
+    * root, the marker's temp file, and any parked partition
+    * ([[recoverPartitions]]). No-op on a clean table.
+    */
+  def recoverFold(
+      spark: SparkSession, path: String, partCol: String, stagingSuffix: String,
+      intent: String): Unit = {
+    val fs = IndexProtocol.fileSystem(spark, path)
+    val marker = new Path(intent)
+    if (!fs.exists(marker)) {
+      swapPartitions(spark, path, stagingSuffix, Nil)
+      fs.delete(new Path(intent + "__tmp"), false)
+      return
+    }
+    val in = fs.open(marker)
+    val lines =
+      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
+      finally in.close()
+    val target = s"$partCol=${lines.head.trim.toLong}"
+    swapPartitions(spark, path, stagingSuffix, Seq(target))
+    // no staged copy means it was swapped in already; a missing target
+    // too would leave the originals as the only copy of the folded rows
+    require(fs.exists(new Path(path, target)),
+      s"fold recovery: $path/$target is missing; the folded partitions are kept")
+    lines.tail.filter(_.nonEmpty).foreach(d => fs.delete(new Path(path, d), true))
+    fs.delete(marker, false)
+  }
+
+  /** Read a swap-managed artifact without renaming anything: `read` the
+    * live path, else the generation a crashed or in-flight [[swapIn]] left
+    * parked at `<path>__old`, else the live path once more — the writer
+    * may have installed the new generation and cleared the park between
+    * the first two reads. `read` answers None for a path it finds absent;
+    * the result is None only when all three reads are. Renames belong to
+    * the writer: a reader restoring the park mid-swap would break the
+    * writer's install rename.
+    */
+  def readLiveOrParked[T](path: String)(read: String => Option[T]): Option[T] =
+    Iterator(path, path + OldSuffix, path).map(read).collectFirst { case Some(v) => v }
 
   /** Compact an [[appendVersioned]] table: merge every partial state per
     * key and rewrite the table as one `__ver=<maxVer>` partition, bounding

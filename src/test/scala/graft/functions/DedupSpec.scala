@@ -793,6 +793,30 @@ class DedupSpec extends SparkSpec {
     assert(after == Seq(1L), s"reinstalled blocklist must gate (and only it): $after")
   }
 
+  test("eval index: a generation a crashed fold left parked still gates the probe") {
+    val root = java.nio.file.Files.createTempDirectory("graft-eval-fold").toString
+    val idx = s"$root/eval"
+    Dedup.writeEvalIndex(docs(
+      100L -> "the quick brown fox jumps over the lazy dog tonight"), idx)
+    assert(Dedup.appendEvalIndex(docs(
+      200L -> "pack my box with five dozen liquor jugs again today"), idx, generation = 1L))
+    // the state between a fold's park and install renames: generation 1
+    // parked at <eval>__old/batch=1 — the trash root a crashed install
+    // parks the whole index at — while <eval> itself still exists
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(idx), spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(idx + "__old"))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(idx, "batch=1"),
+      new org.apache.hadoop.fs.Path(idx + "__old", "batch=1")))
+    val batch = docs(
+      1L -> "he would pack my box with five dozen liquor jugs again today he said",
+      2L -> "nothing shared with the suite here at all today")
+    assert(Dedup.dedupAgainstEvalIndex(spark, idx, batch)
+      .select("doc_id").as[Long].collect().toSeq == Seq(2L),
+      "a doc copying the parked generation's suite must be flagged")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(idx, "batch=1")))
+  }
+
   test("eval index: an over-ceiling blocklist degrades to the distributed probe, same answer") {
     // a suite too big to collect + broadcast must not OOM — the probe falls
     // back to a shuffle semi-join against the index table and the gate's

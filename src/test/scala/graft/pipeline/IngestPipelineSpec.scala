@@ -341,11 +341,24 @@ class IngestPipelineSpec extends SparkSpec with org.scalatest.LoneElement {
     assert(e.getMessage.contains(s"ingest lake at ${p.docLake} is missing"), e.getMessage)
   }
 
+  /** The `_compact_intent` of a doc-lake fold of `__ver` ≤ 1 over three
+    * batches, byte for byte as every build has written it. */
+  private val foldIntentBytes = "1\n__ver=0"
+
   test("compaction crash BEFORE the swap recovers to the compacted state") {
     val p = tmpRoot()
     ingestThree(p)
-    // crash point: staged + intent recorded, swap never ran
-    assert(IngestPipeline.stageCompaction(spark, p, 1L).isDefined)
+    // crash point: staged + intent recorded, swap never ran — the fold runs
+    // on a view of the same root whose park rename of __ver=1 is refused
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.norename.impl", classOf[graft.sinks.RefusingRenameFileSystem].getName)
+    graft.sinks.RefusingRenameFileSystem.refuse =
+      src => src.getName == "__ver=1" && src.getParent.getName == "doc_lake"
+    try intercept[IllegalArgumentException](
+      IngestPipeline.compactCommitted(spark, IngestPaths("norename://" + p.root), 1L))
+    finally graft.sinks.RefusingRenameFileSystem.refuse = _ => false
+    assert(new String(Files.readAllBytes(java.nio.file.Paths.get(p.root, "_compact_intent")),
+      "UTF-8") == foldIntentBytes)
     assert(verDirs(p) == Seq("__ver=0", "__ver=1", "__ver=2"), "lake untouched pre-swap")
     IngestPipeline.recoverCompaction(spark, p)
     assert(verDirs(p) == Seq("__ver=1", "__ver=2"))
@@ -355,11 +368,15 @@ class IngestPipelineSpec extends SparkSpec with org.scalatest.LoneElement {
   test("compaction crash AFTER the swap (duplicate window) recovers") {
     val p = tmpRoot()
     ingestThree(p)
-    val intent = IngestPipeline.stageCompaction(spark, p, 1L).get
-    // manually perform ONLY the swap, leaving the folded originals behind —
-    // the post-swap/pre-delete window where a naive reader double-counts
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(p.docLake), spark.sparkContext.hadoopConfiguration)
+    // the fold's state once its intent landed, laid down by hand: the
+    // consolidated partition staged, the marker in its on-disk format
+    spark.read.parquet(p.docLake).filter(col("__ver") <= 1).drop("__ver")
+      .write.parquet(p.docLake + "__compact_tmp/__ver=1")
+    Files.write(java.nio.file.Paths.get(p.root, "_compact_intent"), foldIntentBytes.getBytes("UTF-8"))
+    // manually perform ONLY the swap, leaving the folded originals behind —
+    // the post-swap/pre-delete window where a naive reader double-counts
     graft.sinks.Sinks.swapIn(fs,
       new org.apache.hadoop.fs.Path(p.docLake + "__compact_tmp/__ver=1"),
       new org.apache.hadoop.fs.Path(p.docLake + "/__ver=1"),

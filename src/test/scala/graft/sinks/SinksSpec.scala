@@ -142,8 +142,8 @@ class SinksSpec extends SparkSpec {
     val target = new org.apache.hadoop.fs.Path(dir)
     val old = new org.apache.hadoop.fs.Path(dir + Sinks.OldSuffix)
     fs.rename(target, old)
-    // readers still see the last complete generation via the resolver
-    val readable = Sinks.resolveTablePath(spark, dir)
+    // readers still see the last complete generation, read in place
+    val readable = Sinks.readLiveOrParked(dir)(p => Option.when(fs.exists(new org.apache.hadoop.fs.Path(p)))(p)).get
     assert(spark.read.parquet(readable).select("k", "v").as[(String, Double)]
       .collect().toMap == Map("a" -> 1.0))
     // the next writer recovers the parked generation, merges, and swaps in
@@ -358,6 +358,22 @@ class SinksSpec extends SparkSpec {
       assert(Files.exists(parked.resolve("part-0.parquet")),
         "the trash delete destroyed the only copy of an unrestored partition")
     } finally RefusingRenameFileSystem.refuse = _ => false
+  }
+
+  test("recoverFold keeps the folded partitions when the recorded target is missing") {
+    val dir = tmpDir() + "/fold"
+    Sinks.appendVersioned(Seq(("a", 1L)).toDF("k", "n"), dir, 0L)
+    Sinks.appendVersioned(Seq(("b", 2L)).toDF("k", "n"), dir, 1L)
+    // a marker naming a consolidated partition that was never staged:
+    // deleting the originals it names would destroy the only copy
+    val intent = dir + "_intent"
+    Files.writeString(java.nio.file.Paths.get(intent), "5\n__ver=0\n__ver=1")
+    val e = intercept[IllegalArgumentException](
+      Sinks.recoverFold(spark, dir, "__ver", "__tmp", intent))
+    assert(e.getMessage.contains("__ver=5 is missing"), e.getMessage)
+    assert(new java.io.File(dir).list().filter(_.startsWith("__ver=")).sorted.toSeq ==
+      Seq("__ver=0", "__ver=1"))
+    assert(spark.read.parquet(dir).count() == 2)
   }
 
   test("ES/Cassandra sink configs build the reference's option surfaces") {

@@ -8,16 +8,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{Dedup, PersistedIndex}
+import graft.functions.{Bm25, Dedup, IndexProtocol, LangModel, PersistedIndex}
 import graft.pipeline.IngestPipeline
 import graft.pipeline.IngestPipeline.IngestPaths
 
 /** The rename-failure matrix of the staged-swap protocol: for every
   * operation built on [[Sinks.replaceTable]] / [[Sinks.replacePartitions]]
-  * and every protocol rename N it makes, refusing rename N must fail the
-  * operation; the operation's documented recovery followed by a re-run
-  * must then reach exactly a clean run's state and leave no staging or
-  * trash directory behind.
+  * / [[Sinks.foldPartitions]] and every protocol rename N it makes,
+  * refusing rename N must fail the operation; the operation's documented
+  * recovery followed by a re-run must then reach exactly a clean run's
+  * state and leave no staging or trash directory behind.
   */
 class SwapMatrixSpec extends SparkSpec {
   import spark.implicits._
@@ -55,9 +55,10 @@ class SwapMatrixSpec extends SparkSpec {
     Files.list(Paths.get(localPath(dir))).iterator().asScala
       .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq.sorted
 
-  /** Every staging or trash path left anywhere under `root`. */
+  /** Every staging or trash path or fold intent marker left anywhere
+    * under `root`. */
   private def leftovers(root: String): Seq[String] = {
-    val staged = ".*__(tmp|next|compact_tmp|old|stage)$".r
+    val staged = ".*__(tmp|next|compact_tmp|old|stage)$|_fold_intent|_compact_intent(_emb)?".r
     Files.walk(Paths.get(localPath(root))).iterator().asScala
       .map(_.getFileName.toString).filter(n => staged.matches(n)).toSeq
   }
@@ -133,8 +134,9 @@ class SwapMatrixSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*): DataFrame = rows.toDF("doc_id", "text")
 
-  // the fold replaces generation 1 (park + install)
-  private val fpFold = Op("fp-index fold (compactGenerational)", 2,
+  // the fold publishes its intent marker, then replaces generation 1
+  // (park + install); every generational fold below does the same
+  private val fpFold = Op("fp-index fold (compactGenerational)", 3,
     setup = { r =>
       Dedup.writeFingerprintIndex(docs(1L -> "alpha beta gamma"), table(r))
       Dedup.appendFingerprintIndex(docs(2L -> "delta epsilon zeta"), table(r), generation = 1L)
@@ -149,6 +151,57 @@ class SwapMatrixSpec extends SparkSpec {
     run = r => Dedup.writeEvalIndex(docs(7L -> "seven eight nine ten eleven"), table(r)),
     recover = r => PersistedIndex.Eval.recover(spark, table(r)),
     state = r => rows(spark.read.parquet(table(r))) ++ dirNames(table(r)))
+
+  private def generationalState(roots: String*): Seq[String] =
+    roots.flatMap(t => rows(spark.read.parquet(t)) ++ dirNames(t))
+
+  // two folds of three renames: sigs, then bands
+  private val bandFold = Op("band-index fold (sigs, then bands)", 6,
+    setup = { r =>
+      Dedup.writeBandIndex(docs(1L -> "alpha beta gamma delta epsilon"), table(r))
+      Dedup.appendBandIndex(docs(2L -> "zeta eta theta iota kappa"), table(r), generation = 1L)
+    },
+    run = r => Dedup.compactBandIndex(spark, table(r), 1L),
+    recover = r => PersistedIndex.Band.recover(spark, table(r)),
+    state = r => generationalState(s"${table(r)}/sigs", s"${table(r)}/bands"))
+
+  private val spanFold = Op("span-count fold", 3,
+    setup = { r =>
+      Dedup.writeSpanCountIndex(docs(1L -> "one two three four five six"), table(r))
+      Dedup.appendSpanCounts(docs(2L -> "one two three four nine ten"), table(r), generation = 1L)
+    },
+    run = r => Dedup.compactSpanCountIndex(spark, table(r), 1L),
+    recover = r => PersistedIndex.SpanCounts.recover(spark, table(r)),
+    state = r => generationalState(s"${table(r)}/counts"))
+
+  private val evalFold = Op("eval-index fold", 3,
+    setup = { r =>
+      Dedup.writeEvalIndex(docs(1L -> "one two three four five six"), table(r))
+      Dedup.appendEvalIndex(docs(7L -> "seven eight nine ten eleven"), table(r), generation = 1L)
+    },
+    run = r => Dedup.compactEvalIndex(spark, table(r), 1L),
+    recover = r => PersistedIndex.Eval.recover(spark, table(r)),
+    state = r => generationalState(table(r)))
+
+  // the count families have no maintenance handle: their refreshes
+  // recover through readFacts, which runs the fold recovery on the root
+  private val bm25Fold = Op("BM25 fact fold (compactFacts)", 3,
+    setup = { r =>
+      Bm25.installIndex(docs(1L -> "alpha beta gamma"), "text", "doc_id", table(r))
+      Bm25.appendDocs(docs(2L -> "beta gamma delta"), table(r), generation = 1L)
+    },
+    run = r => Bm25.compactFacts(spark, table(r), 1L),
+    recover = r => IndexProtocol.recoverFold(spark, s"${table(r)}/facts"),
+    state = r => generationalState(s"${table(r)}/facts"))
+
+  private val lmFold = Op("LM count fold (compactCountIndex)", 3,
+    setup = { r =>
+      LangModel.installCountIndex(docs(1L -> "a b c a b"), "text", table(r))
+      LangModel.appendCounts(docs(2L -> "b c d b c"), table(r), generation = 1L)
+    },
+    run = r => LangModel.compactCountIndex(spark, table(r), 1L),
+    recover = r => IndexProtocol.recoverFold(spark, s"${table(r)}/counts"),
+    state = r => generationalState(s"${table(r)}/counts"))
 
   private val ingestBatches = Seq(
     docs(1L -> "alpha beta gamma delta epsilon zeta", 2L -> "the quick brown fox jumps over"),
@@ -173,6 +226,22 @@ class SwapMatrixSpec extends SparkSpec {
     recover = r => IngestPipeline.recoverCompaction(spark, IngestPaths(r)),
     state = ingestState)
 
+  private def vectors(ids: Long*): DataFrame =
+    ids.map(i => (i, Seq(1f / i, 1f - 1f / i))).toDF("vec_id", "embedding")
+
+  private def ingestedWithVectors(r: String): Unit =
+    ingestBatches.zipWithIndex.foreach { case (b, i) =>
+      val ids = b.select("doc_id").as[Long].collect().toSeq
+      IngestPipeline.ingestBatch(spark, IngestPaths(r), b, i.toLong, embedBatch = Some(vectors(ids: _*)))
+    }
+
+  // two folds of three renames: the doc lake, then the embedding lake
+  private val lakeFoldWithVectors = Op("ingest lake fold over doc and embedding lakes", 6,
+    setup = ingestedWithVectors,
+    run = r => IngestPipeline.compactCommitted(spark, IngestPaths(r), 1L),
+    recover = r => IngestPipeline.recoverCompaction(spark, IngestPaths(r)),
+    state = r => ingestState(r) ++ generationalState(IngestPaths(r).embLake))
+
   // the fp generation publish, then park + install of the manifest
   private val manifestPublish = Op("manifest publish (ingestBatch)", 3,
     setup = r => ingested(r, 1),
@@ -181,7 +250,8 @@ class SwapMatrixSpec extends SparkSpec {
     state = r => ingestState(r) ++ rows(spark.read.parquet(IngestPaths(r).fpIndex).select("fp")))
 
   Seq(upsertBatch, compactPartials, upsertBatchPartitioned, compactLakePartition,
-    fpFold, evalInstall, lakeFold, manifestPublish).foreach { op =>
+    fpFold, evalInstall, lakeFold, manifestPublish, bandFold, spanFold, evalFold, bm25Fold,
+    lmFold, lakeFoldWithVectors).foreach { op =>
     test(s"${op.name}: each refused rename fails, then recovery and a re-run match a clean run") {
       check(op)
     }
