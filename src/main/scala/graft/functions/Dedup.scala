@@ -1181,15 +1181,31 @@ object Dedup {
   }
 
   /** [[IndexProtocol.generationalReadable]] for a [[writeEvalIndex]] layout. Runs
-    * [[PersistedIndex.Eval]]'s recovery first: a crashed install swap parks
-    * the WHOLE live index at `<path>__old`, a crashed fold one generation,
-    * and without the restore every probe until the next startup would miss
+    * [[restoreParkedEval]] first: a crashed install swap parks the WHOLE
+    * live index at `<path>__old`, a crashed fold one generation, and
+    * without the restore every probe until the next startup would miss
     * it — for a gate that fails open, a silently-disabled screen.
     */
   def evalIndexReadable(
       spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    PersistedIndex.Eval.recover(spark, path)
+    restoreParkedEval(spark, path)
     IndexProtocol.generationalReadable(spark, path, Seq(""))
+  }
+
+  /** The eval probes' repair: restore a whole index a crashed install left
+    * parked, else any generation a crashed fold left parked, else collect
+    * a finished install's trash ([[graft.sinks.Sinks.recoverPartitions]]).
+    * It stops short of [[PersistedIndex.Eval]]'s fold recovery, which
+    * clears the fold's staging and finishes its marker: the ingest loop
+    * probes while an operator may fold the index, and a probe clearing
+    * `<path>__tmp` in the fold's staging window would let the fold drop
+    * its originals with no consolidated copy. An unfinished marker leaves
+    * duplicate generations, which the semi-join probe cannot see.
+    */
+  private def restoreParkedEval(
+      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    graft.sinks.Sinks.recoverTable(spark, path)
+    graft.sinks.Sinks.recoverPartitions(spark, path)
   }
 
   /** Ceiling on the eval-index rows the probe will collect + broadcast —
@@ -1275,9 +1291,9 @@ object Dedup {
     * batch landed during the rebuild would permanently commit unscreened
     * docs. With the swap, probes see the old suites until the instant the
     * new install is complete; a crash between the swap's renames parks the
-    * old index at `<path>__old`, restored by [[PersistedIndex.Eval]]'s
-    * recovery (run on probe entry and by the ingest loop's startup
-    * recovery).
+    * old index at `<path>__old`, restored on probe entry
+    * ([[restoreParkedEval]]) and by the ingest loop's startup recovery
+    * ([[PersistedIndex.Eval]]).
     */
   def writeEvalIndex(
       evalDocs: DataFrame,
@@ -1330,7 +1346,7 @@ object Dedup {
       upToGen: Long): Unit = {
     // a crashed install parks the whole index where the fold parks one
     // generation: restore the whole table before the fold's own recovery
-    PersistedIndex.Eval.recover(spark, path)
+    graft.sinks.Sinks.recoverTable(spark, path)
     IndexProtocol.compactGenerational(spark, path, upToGen)
   }
 
@@ -1355,7 +1371,7 @@ object Dedup {
       idCol: String = "doc_id",
       minSharedFps: Int = 1): DataFrame = {
     require(minSharedFps >= 1, s"minSharedFps must be >= 1, got $minSharedFps")
-    PersistedIndex.Eval.recover(spark, path)
+    restoreParkedEval(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalRows) = evalIndexRows(spark, path)
     val evalFps = evalRows.select("fp").distinct()
@@ -1385,7 +1401,7 @@ object Dedup {
       batch: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    PersistedIndex.Eval.recover(spark, path)
+    restoreParkedEval(spark, path)
     val (k, w) = readEvalLayout(spark, path)
     val (local, evalFps) = evalIndexRows(spark, path)
     Text.winnowFingerprintsSalted(

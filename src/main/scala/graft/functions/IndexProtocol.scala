@@ -306,7 +306,12 @@ object PersistedIndex {
 
   /** Eval-suite decontamination index (q82): a crashed install swap parks
     * the whole index, a crashed fold one generation — both at `<p>__old`,
-    * so the whole-table restore runs first. */
+    * so the whole-table restore runs first, and the fold's recovery
+    * collects a finished install's trash instead of restoring the replaced
+    * suites' generations ([[Sinks.recoverPartitions]]). The probes run a
+    * narrower repair that leaves the fold's staging and marker alone
+    * (`Dedup.restoreParkedEval`): an operator may fold the index while the
+    * ingest loop probes it. */
   case object Eval extends PersistedIndex {
     def compact(s: SparkSession, p: String, g: Long) = Dedup.compactEvalIndex(s, p, g)
     def recover(s: SparkSession, p: String) = {

@@ -449,6 +449,13 @@ object Sinks {
     * clear what a fold that crashed before its marker left: the staging
     * root, the marker's temp file, and any parked partition
     * ([[recoverPartitions]]). No-op on a clean table.
+    *
+    * Runs only where [[foldPartitions]] could run: it renames and deletes
+    * what an in-flight fold owns, and the marker alone cannot tell a
+    * consolidated partition already swapped in from the original one a
+    * lost staged copy left behind (the target check below catches only a
+    * target that never existed). A reader alongside the table's writer
+    * restores parked partitions with [[recoverPartitions]] instead.
     */
   def recoverFold(
       spark: SparkSession, path: String, partCol: String, stagingSuffix: String,
@@ -637,10 +644,21 @@ object Sinks {
     }
   }
 
-  /** Restore any partition directories a crashed [[upsertBatchPartitioned]]
-    * swap left parked in the table's `__old` trash: each parked partition
-    * whose live directory is missing is renamed back in. Call before
-    * reading a partition-swapped table after an unclean shutdown.
+  /** Restore any partition directories a crashed partition swap
+    * ([[replacePartitions]], [[foldPartitions]]) left parked in the
+    * table's `__old` trash: each parked partition whose live directory is
+    * missing is renamed back in. Call before reading a partition-swapped
+    * table after an unclean shutdown.
+    *
+    * A table that is also replaced whole ([[replaceTable]]; the eval
+    * index) shares that trash root with the whole-table park. The two are
+    * told apart by what they hold: a partition swap parks only `col=value`
+    * directories, a whole-table swap the table root with its files
+    * (`_SUCCESS`, `_GRAFT_LAYOUT`). A parked table is restored when the
+    * live path is missing ([[recoverTable]]); otherwise it is the trash of
+    * a swap that installed its new generation, deleted as [[swapIn]]'s
+    * step 3 would have — its partitions belong to the replaced generation,
+    * and restoring them would mix it into the live one.
     */
   def recoverPartitions(
       spark: SparkSession,
@@ -648,7 +666,9 @@ object Sinks {
     val fs = IndexProtocol.fileSystem(spark, path)
     val trashRoot = new Path(path + OldSuffix)
     if (fs.exists(trashRoot)) {
-      fs.listStatus(trashRoot).foreach { st =>
+      val parked = fs.listStatus(trashRoot)
+      if (parked.exists(_.isFile)) recoverSwap(fs, new Path(path), trashRoot)
+      else parked.foreach { st =>
         val live = new Path(path, st.getPath.getName)
         // checked before the trash delete below: that delete would destroy
         // the only copy of a partition whose restore failed

@@ -817,6 +817,62 @@ class DedupSpec extends SparkSpec {
     assert(fs.exists(new org.apache.hadoop.fs.Path(idx, "batch=1")))
   }
 
+  test("eval index: a reinstall's uncollected trash does not leak the old suites into the blocklist") {
+    val root = java.nio.file.Files.createTempDirectory("graft-eval-trash").toString
+    val idx = s"$root/eval"
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(idx), spark.sparkContext.hadoopConfiguration)
+    // suite A: generations 0 and 1
+    Dedup.writeEvalIndex(docs(
+      100L -> "the quick brown fox jumps over the lazy dog tonight"), idx)
+    assert(Dedup.appendEvalIndex(docs(
+      200L -> "pack my box with five dozen liquor jugs again today"), idx, generation = 1L))
+    val suiteA = new org.apache.hadoop.fs.Path(s"$root/suite_a")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(idx),
+      fs, suiteA, false, spark.sparkContext.hadoopConfiguration))
+    // suite B reinstalls generation 0 only; then the state a crash leaves
+    // between swapIn's install rename and its trash delete: B live, the
+    // whole of A parked at <eval>__old
+    Dedup.writeEvalIndex(docs(
+      300L -> "sphinx of black quartz judge my vow before the dawn"), idx)
+    def parkA(): Unit = assert(org.apache.hadoop.fs.FileUtil.copy(fs, suiteA,
+      fs, new org.apache.hadoop.fs.Path(idx + "__old"), false,
+      spark.sparkContext.hadoopConfiguration))
+    val batch = docs(
+      1L -> "report says the quick brown fox jumps over the lazy dog tonight indeed",
+      2L -> "he would pack my box with five dozen liquor jugs again today he said",
+      3L -> "they cried sphinx of black quartz judge my vow before the dawn came")
+    def flagged = Dedup.contaminatedIds(spark, idx, batch)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    parkA()
+    assert(flagged == Seq(3L), s"only the reinstalled suite may gate: $flagged")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + "__old")))
+    // the startup sweep sees the same trash the same way
+    parkA()
+    PersistedIndex.Eval.recover(spark, idx)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(idx)).map(_.getPath.getName)
+      .filter(_.startsWith("batch=")).toSeq == Seq("batch=0"))
+    assert(flagged == Seq(3L), s"only the reinstalled suite may gate after recovery: $flagged")
+  }
+
+  test("eval index: a probe leaves an in-flight fold's staging to the fold") {
+    val root = java.nio.file.Files.createTempDirectory("graft-eval-stage").toString
+    val idx = s"$root/eval"
+    Dedup.writeEvalIndex(docs(
+      100L -> "the quick brown fox jumps over the lazy dog tonight"), idx)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(idx), spark.sparkContext.hadoopConfiguration)
+    // a fold staging its consolidated generation, its marker not yet written
+    val staged = new org.apache.hadoop.fs.Path(idx + "__tmp", "batch=1")
+    fs.mkdirs(staged)
+    assert(Dedup.evalIndexReadable(spark, idx))
+    assert(fs.exists(staged), "a probe cleared the fold's staged generation")
+    // the writer-side recovery (startup sweep, the fold's own first step)
+    // clears staging an aborted fold left
+    PersistedIndex.Eval.recover(spark, idx)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx + "__tmp")))
+  }
+
   test("eval index: an over-ceiling blocklist degrades to the distributed probe, same answer") {
     // a suite too big to collect + broadcast must not OOM — the probe falls
     // back to a shuffle semi-join against the index table and the gate's

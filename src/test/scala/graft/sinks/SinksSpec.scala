@@ -360,6 +360,27 @@ class SinksSpec extends SparkSpec {
     } finally RefusingRenameFileSystem.refuse = _ => false
   }
 
+  test("recoverPartitions: a whole table parked in the trash root is restored or collected, never split") {
+    val dir = tmpDir() + "/mixed"
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val live = new org.apache.hadoop.fs.Path(dir)
+    val trash = new org.apache.hadoop.fs.Path(dir + Sinks.OldSuffix)
+    def ids = spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq
+    // the previous generation has d=1 and d=2, the installed one d=1 only:
+    // a swap that installed and then lost its trash delete
+    Seq((1L, 1), (2L, 2)).toDF("id", "d").write.partitionBy("d").parquet(dir + Sinks.OldSuffix)
+    Seq((3L, 1)).toDF("id", "d").write.partitionBy("d").parquet(dir)
+    Sinks.recoverPartitions(spark, dir)
+    assert(ids == Seq(3L), "the replaced generation's partitions leaked into the live table")
+    assert(!fs.exists(trash))
+    // the window between the park and install renames: the live path is
+    // gone and the whole table sits in the trash root
+    assert(fs.rename(live, trash))
+    Sinks.recoverPartitions(spark, dir)
+    assert(ids == Seq(3L) && !fs.exists(trash))
+  }
+
   test("recoverFold keeps the folded partitions when the recorded target is missing") {
     val dir = tmpDir() + "/fold"
     Sinks.appendVersioned(Seq(("a", 1L)).toDF("k", "n"), dir, 0L)
